@@ -7,6 +7,7 @@ import graft.index.{DocIds, TermFreqs}
 import graft.io.Catalog
 import graft.operators.{Curation, Dedup, Embeddings, EsAggs, Hygiene, Multimodal, Phrase, Relational, TextAnalysis}
 import graft.search.{Aggregations, Booleans, BruteForce, FunctionScore, MoreLikeThis, Percolator, QueryString, SearchEngine, TermQueries}
+import graft.search.SearchEngine.{rounded, topKWand}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -26,8 +27,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val idx = IndexCache.documentsIndex(spark, "/root/testdata/sf0.001")
-    SearchEngine.topKWandRounded(spark, idx.paths.root,
-      Seq("join", "window", "vector"), K)
+    rounded(topKWand(spark, idx.paths.root, Seq("join", "window", "vector"), K))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -35,34 +35,35 @@ object SparkEntry {
     // --- BM25 top-k: engine (index) path -----------------------------------
     "bm25_topk" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("join", "window", "vector"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("join", "window", "vector"), K))
     }),
     "bm25_single_term" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("join"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("join"), K))
     }),
     "bm25_partial_miss" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("join", "zebra"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("join", "zebra"), K))
     }),
     "bm25_empty" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("zebra"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("zebra"), K))
     }),
     // scored conjunction / minimum_should_match / pagination (ES match
     // operator=and, bool should + mmm, from/size)
     "bm25_match_and" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKMinShouldMatch(s, idx.paths.root, Seq("join", "hash"), K, 2)
+      rounded(topKWand(s, idx.paths.root, Seq("join", "hash"), K, minMatch = 2))
     }),
     "bm25_should_mm" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKMinShouldMatch(s, idx.paths.root,
-        Seq("join", "window", "vector"), K, 2)
+      rounded(topKWand(s, idx.paths.root,
+        Seq("join", "window", "vector"), K, minMatch = 2))
     }),
     "bm25_from_size" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKFromSize(s, idx.paths.root, Seq("join", "window", "vector"), K, K)
+      rounded(topKWand(s, idx.paths.root,
+        Seq("join", "window", "vector"), K + K).offset(K))
     }),
     // keyset deep pagination (ES search_after): page 2 fetched via the
     // (score, doc_id) cursor of page 1's last hit — O(k) per page at any
@@ -71,10 +72,10 @@ object SparkEntry {
       import s.implicits._
       val idx = IndexCache.documentsIndex(s, dir)
       val q = Seq("join", "window", "vector")
-      SearchEngine.topKWand(s, idx.paths.root, q, K)
+      topKWand(s, idx.paths.root, q, K)
         .as[graft.model.Hit].collect().lastOption match {
-        case Some(cursor) => SearchEngine.topKSearchAfterRounded(
-          s, idx.paths.root, q, K, cursor.score, cursor.doc_id)
+        case Some(cursor) => rounded(topKWand(
+          s, idx.paths.root, q, K, after = Some((cursor.score, cursor.doc_id))))
         case None => s.emptyDataset[(Long, Double)].toDF("doc_id", "score_r4")
       }
     }),
@@ -82,16 +83,16 @@ object SparkEntry {
     // through WAND bounds rank-safely
     "bm25_boosted" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKWandRounded(s, idx.paths.root,
-        Seq("join^3.0", "window", "vector^0.5"), K)
+      rounded(topKWand(s, idx.paths.root,
+        Seq("join^3.0", "window", "vector^0.5"), K))
     }),
     // hydration join (§2 row 18): top-k hits joined back to doc metadata —
     // broadcast-hash join, k rows on the build side
     "bm25_topk_hydrated" -> ((s, dir) => {
       import s.implicits._
       val idx = IndexCache.documentsIndex(s, dir)
-      val hits = SearchEngine.topKWandRounded(s, idx.paths.root,
-        Seq("join", "window", "vector"), K)
+      val hits = rounded(topKWand(s, idx.paths.root,
+        Seq("join", "window", "vector"), K))
       broadcast(hits)
         .join(Catalog.readTable(s, dir, "documents")
           .select($"doc_id", $"source", $"n_chars"), "doc_id")
@@ -104,8 +105,8 @@ object SparkEntry {
     "bm25_filtered" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
       IndexCache.keywordField(s, dir, "source")
-      SearchEngine.topKFiltered(s, idx.paths.root,
-        Seq("join", "window", "vector"), K, Seq("source:src3"))
+      rounded(topKWand(s, idx.paths.root,
+        Seq("join", "window", "vector"), K, filters = Seq("source:src3")))
     }),
     // ES function_score/field_value_factor: bm25 * log10(1 + 0.01*n_chars)
     // over EVERY matching doc (pruned-exhaustive + metadata join)
@@ -141,8 +142,8 @@ object SparkEntry {
         .readDictionary(s, docIdx.paths).collect().map(_.term).sorted
       lastEnglishVocab = Some(vocab.toSeq.map(w =>
         (w, graft.core.En.Stopwords.contains(w), graft.core.En.stem(w))))
-      SearchEngine.topKWandRounded(s, idx.paths.root,
-        Seq("joins", "windows", "vectors"), K)
+      rounded(topKWand(s, idx.paths.root,
+        Seq("joins", "windows", "vectors"), K))
     }),
     // INDEX-TIME synonyms (Lucene contraction `merge => join` during
     // analysis): df/cf/stats reflect the merged group — semantics
@@ -151,7 +152,7 @@ object SparkEntry {
     // same stored map (meta.synonyms), so querying 'merge' ≡ 'join'.
     "bm25_synonyms_indexed" -> ((s, dir) => {
       val idx = IndexCache.synonymsIndex(s, dir)
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("merge", "window"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("merge", "window"), K))
     }),
     // query-time synonyms (Lucene SynonymQuery): {join, merge} as one
     // pseudo-term (max df, summed tf) + plain 'window'
@@ -176,8 +177,9 @@ object SparkEntry {
     // the must_not terms' pruned postings ride the tombstone aux cogroup
     "bm25_must_not" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      SearchEngine.topKMustNot(s, idx.paths.root,
-        Seq("join", "window", "vector"), K, Seq("stream"))
+      rounded(topKWand(s, idx.paths.root,
+        Seq("join", "window", "vector"), K,
+        excludedDocs = SearchEngine.mustNotDocs(s, idx.paths.root, Seq("stream"))))
     }),
     // ES terms query in filter context (OR within the field): allowed set =
     // union of the values' keyword postings, fed as the range-filter path
@@ -186,8 +188,8 @@ object SparkEntry {
       IndexCache.keywordField(s, dir, "source")
       val allowed = graft.search.Booleans.or(s, idx.paths.root,
         Seq("source:src1", "source:src2"))
-      SearchEngine.topKRangeFiltered(s, idx.paths.root,
-        Seq("join", "window", "vector"), K, allowed)
+      rounded(topKWand(s, idx.paths.root,
+        Seq("join", "window", "vector"), K, allowedDocs = Some(allowed)))
     }),
     // ES bool.filter.range over a numeric metadata field composed with the
     // scored query: allowed docIDs from a range-pruned metadata scan feed
@@ -197,8 +199,8 @@ object SparkEntry {
       val idx = IndexCache.documentsIndex(s, dir)
       val allowed = Catalog.readTable(s, dir, "documents")
         .filter($"n_chars".between(250L, 330L)).select($"doc_id")
-      SearchEngine.topKRangeFiltered(s, idx.paths.root,
-        Seq("join", "window", "vector"), K, allowed)
+      rounded(topKWand(s, idx.paths.root,
+        Seq("join", "window", "vector"), K, allowedDocs = Some(allowed)))
     }),
     // ES significant_terms (JLH): terms overrepresented in 'join' docs
     "sig_terms" -> ((s, dir) => {
@@ -284,13 +286,13 @@ object SparkEntry {
     // until merge)
     "bm25_deleted" -> ((s, dir) => {
       val idx = IndexCache.deletedIndex(s, dir, Seq("stream"))
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("join", "window", "vector"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("join", "window", "vector"), K))
     }),
     // after the expunge merge: stats recomputed over live docs only —
     // query-identical to an index freshly built over the live corpus
     "bm25_purged" -> ((s, dir) => {
       val idx = IndexCache.purgedIndex(s, dir, Seq("stream"))
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("join", "window", "vector"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("join", "window", "vector"), K))
     }),
     // ES _explain analog: per-term score breakdown for every top-k doc
     "bm25_explain" -> ((s, dir) => {
@@ -610,7 +612,7 @@ object SparkEntry {
     // postings with the gram field's own BM25 stats
     "bm25_sayt" -> ((s, dir) => {
       val idx = IndexCache.edgeNgramIndex(s, dir)
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("wi", "vec"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("wi", "vec"), K))
     }),
     // ES simple_query_string: term + quoted-phrase + prefix + must_not
     // clauses in one mini-language string, over the text + positional index
@@ -773,7 +775,7 @@ object SparkEntry {
     // ES _reindex with a source query: stats reflect only surviving docs
     "reindex_filtered" -> ((s, dir) => {
       val idx = IndexCache.reindexedSource(s, dir, "src2")
-      SearchEngine.topKWandRounded(s, idx.paths.root, Seq("join", "window"), K)
+      rounded(topKWand(s, idx.paths.root, Seq("join", "window"), K))
     }),
     // DSIR importance-resampling weights vs the src1 target domain
     "dsir_weights" -> ((s, dir) =>

@@ -627,12 +627,11 @@ object PositionalIndex {
     */
   def phraseTopK(spark: SparkSession, root: String, phrase: Seq[String],
       k: Int, buckets: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     phraseScores(spark, root, phrase, buckets)
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+      .transform(graft.search.SearchEngine.rounded)
   }
 
   /** Un-truncated phrase scores `(doc_id, score)` — the composable form

@@ -233,6 +233,23 @@ object Catalog {
       spark.read.parquet(p).as[DictEntry].collect()).toSeq)
   }
 
+  /** Document frequency of each of `terms` found in the dictionary. The
+    * lookup costs zero Spark jobs when the byte gate admits the dictionary
+    * ([[dictEntriesCached]]); above it, one filtered parquet scan.
+    */
+  def docFreqs(spark: SparkSession, paths: IndexPaths,
+      terms: Seq[String]): Map[String, Long] = {
+    import spark.implicits._
+    val termSet = terms.toSet
+    dictEntriesCached(spark, paths) match {
+      case Some(entries) =>
+        entries.iterator.filter(e => termSet(e.term)).map(e => e.term -> e.df).toMap
+      case None => spark.read.parquet(paths.dictionary).as[DictEntry]
+        .filter($"term".isin(terms: _*))
+        .collect().map(d => d.term -> d.df).toMap
+    }
+  }
+
   def readDictionary(spark: SparkSession, paths: IndexPaths): Dataset[DictEntry] = {
     import spark.implicits._
     dictEntriesCached(spark, paths) match {

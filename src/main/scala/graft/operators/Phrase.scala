@@ -68,6 +68,6 @@ object Phrase {
           .as("score"))
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+      .transform(graft.search.SearchEngine.rounded)
   }
 }

@@ -82,8 +82,7 @@ object Aggregations {
   def topHitsByFacet(spark: SparkSession, root: String, sfDir: String,
       rawTerms: Seq[String], perBucket: Int): DataFrame = {
     import spark.implicits._
-    val scored = SearchEngine.scoreAllDocs(spark, root, rawTerms)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+    val scored = SearchEngine.rounded(SearchEngine.scoreAllDocs(spark, root, rawTerms))
     val docs = Catalog.readTable(spark, sfDir, "documents")
       .select($"doc_id", $"source")
     scored.join(docs, "doc_id")

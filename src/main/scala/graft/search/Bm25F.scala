@@ -34,15 +34,13 @@ object Bm25F {
     import spark.implicits._
     val terms = graft.core.QueryModel.analyzedTerms(rawTerms)
     if (terms.isEmpty)
-      return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score_r4")
+      return SearchEngine.rounded(SearchEngine.emptyHits(spark))
     val sortedTerms = terms.sorted.toArray
 
     val txPaths = IndexPaths(textRoot)
     val txStats = Catalog.readCorpusStats(spark, txPaths)
     val tiStats = Catalog.readCorpusStats(spark, IndexPaths(titleRoot))
-    val dfByTerm = Catalog.readDictionary(spark, txPaths)
-      .filter($"term".isin(terms: _*))
-      .collect().map(d => d.term -> d.df).toMap
+    val dfByTerm = Catalog.docFreqs(spark, txPaths, terms)
     val idfs = sortedTerms.map(t =>
       dfByTerm.get(t).map(df => Bm25.idf(txStats.n_docs, df)).getOrElse(0.0))
     val bcIdfs = spark.sparkContext.broadcast((sortedTerms, idfs))
@@ -93,6 +91,6 @@ object Bm25F {
       .transform(graft.index.Deletes.filterLive(_, textRoot))
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+      .transform(SearchEngine.rounded)
   }
 }

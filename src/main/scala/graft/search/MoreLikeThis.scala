@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.core.{Analyzer, Bm25}
 import graft.io.Catalog
@@ -40,12 +39,10 @@ object MoreLikeThis {
     val tf = Analyzer.tokenize(seedText)
       .groupBy(identity).view.mapValues(_.size).toMap
       .filter(_._2 >= minTermFreq)
-    if (tf.isEmpty) return SearchEngine.emptyRounded(spark)
+    if (tf.isEmpty) return SearchEngine.rounded(SearchEngine.emptyHits(spark))
 
     val stats = Catalog.readCorpusStats(spark, paths)
-    val dfByTerm = Catalog.readDictionary(spark, paths)
-      .filter($"term".isin(tf.keys.toSeq: _*))
-      .collect().map(d => d.term -> d.df).toMap
+    val dfByTerm = Catalog.docFreqs(spark, paths, tf.keys.toSeq)
     val selected = tf.toSeq
       .flatMap { case (t, f) =>
         dfByTerm.get(t).filter(_ >= minDocFreq)
@@ -54,13 +51,13 @@ object MoreLikeThis {
       .sortBy { case (t, w) => (-w, t) }
       .take(maxQueryTerms)
       .map(_._1)
-    if (selected.isEmpty) return SearchEngine.emptyRounded(spark)
+    if (selected.isEmpty) return SearchEngine.rounded(SearchEngine.emptyHits(spark))
 
     // k+1 then drop the seed: removing one doc promotes at most one
     SearchEngine.topKWand(spark, root, selected, k + 1)
       .filter($"doc_id" =!= seedDoc)
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+      .transform(SearchEngine.rounded)
   }
 }

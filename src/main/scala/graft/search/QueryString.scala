@@ -18,7 +18,7 @@ import graft.index.{Indexer, PositionalIndex}
   *
   * Default operator OR; a doc's score is the sum of its matching positive
   * clauses; clauses that analyze to nothing are dropped (the ES leniency
-  * rule — same guard as SearchEngine.topKMustNot). Not supported (rarely
+  * rule — same guard as SearchEngine.mustNotDocs). Not supported (rarely
   * hit, documented): `|`/`+` explicit operators (OR is the default anyway),
   * parentheses, `~N` fuzziness, negated phrases.
   *
@@ -85,7 +85,7 @@ object QueryString {
         p.phrases.map(ph =>
           PositionalIndex.phraseScores(spark, posRoot, ph, posBuckets)
             .select($"doc_id", $"score"))
-    if (clauseFrames.isEmpty) return SearchEngine.emptyRounded(spark)
+    if (clauseFrames.isEmpty) return SearchEngine.rounded(SearchEngine.emptyHits(spark))
 
     val summed = clauseFrames.reduce(_.unionByName(_))
       .groupBy($"doc_id")
@@ -98,6 +98,6 @@ object QueryString {
     filtered
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+      .transform(SearchEngine.rounded)
   }
 }

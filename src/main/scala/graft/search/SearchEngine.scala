@@ -1,5 +1,6 @@
 package graft.search
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,6 @@ object SearchEngine {
   def queryModel(spark: SparkSession, paths: IndexPaths, rawTerms: Seq[String],
       k: Int, analyzer: String = "standard",
       useSynonyms: Boolean = false): QueryModel = {
-    import spark.implicits._
     // index-time synonym map (meta.synonyms): query tokens canonicalize
     // through the SAME map the build applied — index/query analysis parity
     val syn = if (useSynonyms) Catalog.readSynonyms(spark, paths) else Map.empty[String, String]
@@ -42,19 +42,7 @@ object SearchEngine {
     val terms = QueryModel.analyzedTerms(rawTerms, qAnalyzer, syn)
     if (terms.isEmpty) return QueryModel(Array.empty, Array.empty, 0.0, k)
     val stats = Catalog.readCorpusStats(spark, paths)
-    // byte-gated dictionary memo (Catalog.dictEntriesCached): the per-term
-    // df lookup costs zero Spark jobs when the dictionary fits the gate;
-    // above it, the old filtered parquet scan
-    val termSet = terms.toSet
-    val dfByTerm = Catalog.dictEntriesCached(spark, paths) match {
-      case Some(entries) =>
-        entries.iterator.filter(e => termSet(e.term)).map(e => e.term -> e.df).toMap
-      case None => Catalog.readDictionary(spark, paths)
-        .filter($"term".isin(terms: _*))
-        .collect()
-        .map(d => d.term -> d.df)
-        .toMap
-    }
+    val dfByTerm = Catalog.docFreqs(spark, paths, terms)
     // build from the RAW terms: boost suffixes must reach the weight parser
     QueryModel.build(rawTerms, stats.n_docs, dfByTerm, stats.avgdl, k, qAnalyzer, syn)
   }
@@ -70,145 +58,111 @@ object SearchEngine {
       .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
   }
 
-  /** Exhaustive index scorer: decode every matching block, shuffle
-    * (doc_id, term, contribution) and sum per doc in sorted-term order
-    * (fixed summation order ⇒ bit-deterministic across parallelism).
+  /** Exhaustive index scorer: [[scoreAllDocs]] cut to the global top-k.
     * The WAND path beats this by skipping blocks; this one is its always-on
-    * correctness shadow (SURVEY.md §7.3-7).
+    * correctness shadow (SURVEY.md §7.3-7) — for `minimum_should_match` too,
+    * with `minMatch = _ => mm` (WandSpec asserts bit-identity across query
+    * shapes × mm × k).
     */
   def topKExhaustive(spark: SparkSession, root: String, rawTerms: Seq[String],
-      k: Int): DataFrame = {
+      k: Int, minMatch: Long => Int = _ => 1): DataFrame = {
     import spark.implicits._
-    scoreAllDocs(spark, root, rawTerms)
+    scoreAllDocs(spark, root, rawTerms, minMatch)
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
   }
 
-  /** Per-doc BM25 score for EVERY doc matching any query term — no top-k
-    * cut. Feeds the exhaustive shadow and per-bucket aggregations
+  /** Per-doc BM25 score for EVERY live doc containing at least
+    * `minMatch(doc_id)` distinct query terms — no top-k cut. Feeds the
+    * exhaustive shadow and per-bucket aggregations
     * (Aggregations.topHitsByFacet), where the cut happens per group.
+    */
+  def scoreAllDocs(spark: SparkSession, root: String, rawTerms: Seq[String],
+      minMatch: Long => Int = _ => 1): DataFrame =
+    scoreDocs(spark, root, rawTerms, minMatch, None)
+
+  /** The exhaustive scorers' decode step: the query model under the index's
+    * own analyzer and synonyms, and one (doc_id, ti, tf, dl) row per posting
+    * of query term `ti` — restricted to the sorted `docs` when given. None
+    * when no query term survives analysis.
+    */
+  private def decodedPostings(spark: SparkSession, root: String,
+      rawTerms: Seq[String], docs: Option[Array[Long]])
+      : Option[(Broadcast[QueryModel], DataFrame)] = {
+    import spark.implicits._
+    val paths = IndexPaths(root)
+    val meta = Indexer.readMeta(spark, root)
+    val qm = queryModel(spark, paths, rawTerms, 1, meta.analyzer, meta.synonyms)
+    if (qm.isEmpty) return None
+    val bcQm = spark.sparkContext.broadcast(qm)
+    val bcDocs = docs.map(spark.sparkContext.broadcast(_))
+    val rows = queryPostings(spark, paths, qm.terms.toSeq, meta.buckets)
+      .flatMap { b =>
+        val qmv = bcQm.value
+        val ti = java.util.Arrays.binarySearch(qmv.terms.asInstanceOf[Array[AnyRef]], b.term)
+        if (ti < 0) Iterator.empty
+        else {
+          val d = Blocks.decode(b)
+          val idx = (0 until d.docs.length).iterator
+          (bcDocs match {
+            case None => idx
+            case Some(bc) =>
+              idx.filter(i => java.util.Arrays.binarySearch(bc.value, d.docs(i)) >= 0)
+          }).map(i => (d.docs(i), ti, d.tfs(i), d.dls(i)))
+        }
+      }
+      .toDF("doc_id", "ti", "tf", "dl")
+    Some((bcQm, rows))
+  }
+
+  /** The one exhaustive BM25 kernel: [[scoreAllDocs]], [[topKExhaustive]],
+    * [[termsSetTopK]] and the multi_match exact fill (restricted to `docs`).
     *
     * Plan: one pruned postings scan (bucket pruning + term pushdown), then
     * the per-term pivot `groupBy(doc_id).agg(sum(when(ti===i, tf))…)` — a
     * codegen'd HashAggregate whose MAP-SIDE PARTIALS absorb a doc's
     * per-term hits before the exchange, so ONE row per doc crosses instead
-    * of one per posting (VERDICT r5: the old groupByKey.mapGroups shape
-    * shipped df-proportional rows through a combiner-less exchange — this
-    * is the synonymTopK/crossFields rewrite applied to the generic scorer
-    * all 12 exhaustive-family riders share). Each (doc, term) cell holds at
-    * most one posting (a (term, doc) pair lives in exactly one block), so
-    * the Int tf partials are single-addend — exact under any combine order;
-    * the BM25 math runs in one narrow typed map per doc in fixed ascending
-    * term order, reusing the exact [[Bm25.tfNorm]] scalar ops — scores stay
-    * bit-identical to the old shape (WandSpec's shadow equality pins it).
+    * of one per posting (a groupByKey shape has no combiner and ships
+    * df-proportional rows). Each (doc, term) cell holds at most one
+    * posting (a (term, doc) pair lives in exactly one block), so the Int tf
+    * partials are single-addend — exact under any combine order; the BM25
+    * math runs in one narrow typed map per doc in fixed ascending term
+    * order, reusing the exact [[Bm25.tfNorm]] scalar ops — scores are
+    * bit-identical to the WAND path's (WandSpec's shadow equality pins it).
+    * A doc is admitted when its non-null tf columns (its distinct matching
+    * terms) reach `minMatch(doc_id)`; tombstoned docs never leave.
     */
-  def scoreAllDocs(spark: SparkSession, root: String,
-      rawTerms: Seq[String]): DataFrame = {
+  private def scoreDocs(spark: SparkSession, root: String, rawTerms: Seq[String],
+      minMatch: Long => Int, docs: Option[Array[Long]]): DataFrame = {
     import spark.implicits._
-    val paths = IndexPaths(root)
-    val meta = Indexer.readMeta(spark, root)
-    val qm = queryModel(spark, paths, rawTerms, 1, meta.analyzer, meta.synonyms)
-    if (qm.isEmpty) return emptyHits(spark)
-    val bcQm = spark.sparkContext.broadcast(qm)
-
-    val n = qm.terms.length
-    // one Long tf column per query term; dl is constant per doc (max = value)
-    val tfCols = (0 until n).map(i => sum(when($"ti" === i, $"tf")).as(s"tf$i"))
-    queryPostings(spark, paths, qm.terms.toSeq, meta.buckets)
-      .flatMap { b =>
-        val qmv = bcQm.value
-        val ti = java.util.Arrays.binarySearch(qmv.terms.asInstanceOf[Array[AnyRef]], b.term)
-        if (ti < 0) Iterator.empty
-        else {
-          val d = Blocks.decode(b)
-          (0 until d.docs.length).iterator
-            .map(i => (d.docs(i), ti, d.tfs(i), d.dls(i)))
-        }
-      }
-      .toDF("doc_id", "ti", "tf", "dl")
-      .groupBy($"doc_id")
-      .agg(max($"dl").as("dl"), tfCols: _*)
-      .map { r => // one row per doc; exact scalar BM25 in ascending term order
-        val qmv = bcQm.value
-        val dl = r.getInt(1).toLong
-        var s = 0.0
-        var ti = 0
-        while (ti < qmv.terms.length) {
-          if (!r.isNullAt(2 + ti)) {
-            val tf = r.getLong(2 + ti).toInt
-            if (tf > 0) s += qmv.idfs(ti) * Bm25.tfNorm(tf, dl, qmv.avgdl)
+    decodedPostings(spark, root, rawTerms, docs) match {
+      case None => emptyHits(spark)
+      case Some((bcQm, rows)) =>
+        val n = bcQm.value.terms.length
+        // one Long tf column per query term; dl is constant per doc (max = value)
+        val tfCols = (0 until n).map(i => sum(when($"ti" === i, $"tf")).as(s"tf$i"))
+        rows.groupBy($"doc_id")
+          .agg(max($"dl").as("dl"), tfCols: _*)
+          .flatMap { r => // one row per doc; exact scalar BM25 in ascending term order
+            val qmv = bcQm.value
+            val doc = r.getLong(0)
+            val dl = r.getInt(1).toLong
+            var s = 0.0
+            var matched = 0
+            var ti = 0
+            while (ti < n) {
+              if (!r.isNullAt(2 + ti)) {
+                val tf = r.getLong(2 + ti).toInt
+                if (tf > 0) s += qmv.idfs(ti) * Bm25.tfNorm(tf, dl, qmv.avgdl)
+                matched += 1
+              }
+              ti += 1
+            }
+            if (matched < minMatch(doc)) Iterator.empty else Iterator.single(Hit(doc, s))
           }
-          ti += 1
-        }
-        Hit(r.getLong(0), s)
-      }
-      .toDF()
-      .transform(graft.index.Deletes.filterLive(_, root))
-  }
-
-  /** Driver-contract shape: rounded scores (see BruteForce.topKRounded). */
-  def topKExhaustiveRounded(spark: SparkSession, root: String,
-      rawTerms: Seq[String], k: Int): DataFrame = {
-    import spark.implicits._
-    topKExhaustive(spark, root, rawTerms, k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
-
-  /** Scored BM25 top-k with `minimum_should_match` (ES bool/should + mmm;
-    * minMatch = #terms is the ES `match` operator=and form): only docs
-    * containing at least `minMatch` distinct query terms qualify; the score
-    * is the usual sum over present terms. Production path is WAND-native
-    * (Wand.scoreShard's mm-raised pivot): head-term posting lists are
-    * skipped, never decoded in full — only compressed blocks cross the one
-    * shard exchange, same as plain `match`.
-    */
-  def topKMinShouldMatch(spark: SparkSession, root: String,
-      rawTerms: Seq[String], k: Int, minMatch: Int): DataFrame = {
-    import spark.implicits._
-    topKWand(spark, root, rawTerms, k, minMatch = minMatch)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
-
-  /** Decode-everything mm scorer — the correctness shadow for the WAND-mm
-    * path (WandSpec asserts bit-identity across query shapes × mm × k).
-    * NOT the production path: it shuffles one row per (doc, term) of every
-    * posting of every query term, exactly what WAND skipping avoids.
-    */
-  def topKMinShouldMatchExhaustive(spark: SparkSession, root: String,
-      rawTerms: Seq[String], k: Int, minMatch: Int): DataFrame = {
-    import spark.implicits._
-    val paths = IndexPaths(root)
-    val meta = Indexer.readMeta(spark, root)
-    val qm = queryModel(spark, paths, rawTerms, k, meta.analyzer, meta.synonyms)
-    if (qm.isEmpty) return emptyHits(spark)
-    val bcQm = spark.sparkContext.broadcast(qm)
-
-    queryPostings(spark, paths, qm.terms.toSeq, meta.buckets)
-      .flatMap { b =>
-        val qmv = bcQm.value
-        val ti = java.util.Arrays.binarySearch(qmv.terms.asInstanceOf[Array[AnyRef]], b.term)
-        if (ti < 0) Iterator.empty
-        else {
-          val idf = qmv.idfs(ti)
-          val d = Blocks.decode(b)
-          (0 until d.docs.length).iterator.map(i =>
-            (d.docs(i), ti, idf * Bm25.tfNorm(d.tfs(i), d.dls(i).toLong, qmv.avgdl)))
-        }
-      }
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, it) =>
-        val arr = it.toArray.sortBy(_._2) // fixed summation order
-        if (arr.length < minMatch) Iterator.empty
-        else {
-          var s = 0.0
-          var i = 0
-          while (i < arr.length) { s += arr(i)._3; i += 1 }
-          Iterator.single(Hit(docId, s))
-        }
-      }
-      .toDF()
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
+          .toDF()
+          .transform(graft.index.Deletes.filterLive(_, root))
+    }
   }
 
   /** ES `terms_set` query: a term disjunction whose minimum-should-match is
@@ -222,85 +176,12 @@ object SearchEngine {
     * A per-doc threshold breaks WAND's global mm-pivot (the pivot needs one
     * corpus-wide mm), so this is the exhaustive-pruned family by necessity —
     * Lucene's CoveringQuery scores exhaustively for the same reason. The
-    * scan is still bucket-pruned + term-pushed-down; only (doc, term)
-    * contribution rows of the QUERY terms shuffle.
+    * scan is still bucket-pruned + term-pushed-down; only the QUERY terms'
+    * postings are decoded, one row per doc crosses the exchange.
     */
   def termsSetTopK(spark: SparkSession, root: String, rawTerms: Seq[String],
-      k: Int): DataFrame = {
-    import spark.implicits._
-    val paths = IndexPaths(root)
-    val meta = Indexer.readMeta(spark, root)
-    val qm = queryModel(spark, paths, rawTerms, k, meta.analyzer, meta.synonyms)
-    if (qm.isEmpty) return emptyHits(spark)
-    val bcQm = spark.sparkContext.broadcast(qm)
-
-    queryPostings(spark, paths, qm.terms.toSeq, meta.buckets)
-      .flatMap { b =>
-        val qmv = bcQm.value
-        val ti = java.util.Arrays.binarySearch(qmv.terms.asInstanceOf[Array[AnyRef]], b.term)
-        if (ti < 0) Iterator.empty
-        else {
-          val idf = qmv.idfs(ti)
-          val d = Blocks.decode(b)
-          (0 until d.docs.length).iterator.map(i =>
-            (d.docs(i), ti, idf * Bm25.tfNorm(d.tfs(i), d.dls(i).toLong, qmv.avgdl)))
-        }
-      }
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, it) =>
-        val arr = it.toArray.sortBy(_._2) // fixed summation order
-        val required = 1 + (docId % 3).toInt
-        if (arr.length < required) Iterator.empty
-        else {
-          var s = 0.0
-          var i = 0
-          while (i < arr.length) { s += arr(i)._3; i += 1 }
-          Iterator.single(Hit(docId, s))
-        }
-      }
-      .toDF()
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
-
-  /** ES from/size pagination: rows (from, from+size] of the ranking. The
-    * WAND pass retrieves the top from+size (inherently O(from+size), like
-    * ES's from/size — capped there at 10k); the page slice is taken on the
-    * driver (≤ from+size Hit rows — already the TakeOrderedAndProject
-    * result set). The scale answer for deep paging is [[topKSearchAfter]].
-    */
-  def topKFromSize(spark: SparkSession, root: String, rawTerms: Seq[String],
-      from: Int, size: Int, minMatch: Int = 1,
-      robustBounds: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val page = topKWand(spark, root, rawTerms, from + size,
-        robustBounds = robustBounds, minMatch = minMatch)
-      .as[Hit].collect().drop(from)
-    spark.createDataset(page.toSeq).toDF()
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
-
-  /** ES search_after keyset pagination — the scale-safe deep-paging cursor:
-    * the caller passes the last hit of the previous page (its UNROUNDED
-    * score + doc_id; scores are bit-deterministic across runs and
-    * parallelism, so cursors are stable), and only docs strictly after it
-    * under (score DESC, doc_id ASC) are ranked. Each page costs one O(k)
-    * WAND pass regardless of depth — no O(from+size) growth.
-    */
-  def topKSearchAfter(spark: SparkSession, root: String, rawTerms: Seq[String],
-      k: Int, afterScore: Double, afterDoc: Long,
-      minMatch: Int = 1, robustBounds: Boolean = false): DataFrame =
-    topKWand(spark, root, rawTerms, k, robustBounds = robustBounds,
-      minMatch = minMatch, after = Some((afterScore, afterDoc)))
-
-  /** Driver-contract shape for search_after. */
-  def topKSearchAfterRounded(spark: SparkSession, root: String,
-      rawTerms: Seq[String], k: Int, afterScore: Double, afterDoc: Long): DataFrame = {
-    import spark.implicits._
-    topKSearchAfter(spark, root, rawTerms, k, afterScore, afterDoc)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
+      k: Int): DataFrame =
+    rounded(topKExhaustive(spark, root, rawTerms, k, d => 1 + (d % 3).toInt))
 
   /** Block-Max WAND top-k (SURVEY.md §3.2) — the production query path.
     *
@@ -313,6 +194,23 @@ object SearchEngine {
     * salted runs are already range-disjoint so per-shard block lists stay
     * sorted-by-first_doc after a local sort. Shard count scales with
     * parallelism, independent of k and corpus size.
+    *
+    * Every ES query shape on this path is a parameter of this one call:
+    *  - `minMatch`: `minimum_should_match` (= #terms is `match`
+    *    operator=and) — only docs with ≥ minMatch distinct query terms
+    *    qualify; Wand.scoreShard's mm-raised pivot skips head-term lists
+    *    instead of decoding them in full.
+    *  - `after`: `search_after` keyset paging — the previous page's last
+    *    hit (UNROUNDED score, doc_id; scores are bit-deterministic across
+    *    runs and parallelism, so cursors are stable). O(k) per page at any
+    *    depth, unlike from/size: `topKWand(k = from + size).offset(from)`.
+    *  - `filters`: bool `filter: term` — `field:value` keyword postings
+    *    (KeywordIndex.add) as required non-scoring cursors.
+    *  - `allowedDocs`: bool `filter: range` — docIDs from a range-pruned
+    *    metadata scan, cogrouped into the scorer's own shards.
+    *  - `excludedDocs`: bool `must_not` ([[mustNotDocs]]), rejected at
+    *    eval time like tombstones.
+    * Filter context never changes scoring: BM25 stats stay full-corpus.
     */
   def topKWand(spark: SparkSession, root: String, rawTerms: Seq[String],
       k: Int, shardsOpt: Option[Int] = None, robustBounds: Boolean = false,
@@ -428,50 +326,23 @@ object SearchEngine {
       .limit(k)
   }
 
-  /** ES bool `must: match` + `filter: term` — scored top-k restricted to
-    * docs carrying the keyword-field values, with FULL-corpus BM25 stats
-    * (filter context never changes scoring, per ES). `filters` are
-    * `field:value` terms previously indexed by KeywordIndex.add.
+  /** ES `bool: {must_not: …}` doc set: every doc matching any of the
+    * must_not terms, analyzed like the query terms (the index's analyzer and
+    * synonyms), from their pruned postings (never a corpus scan). Pass it to
+    * [[topKWand]] as `excludedDocs`: it rides the same per-shard aux
+    * cogroup as tombstones — exact eval-time rejection, θ-driven skips stay
+    * rank-safe, scoring stats untouched (ES must_not never scores). Terms
+    * analyzing to nothing exclude nothing (ES drops empty clauses): None.
     */
-  def topKFiltered(spark: SparkSession, root: String, rawTerms: Seq[String],
-      k: Int, filters: Seq[String], minMatch: Int = 1): DataFrame = {
-    import spark.implicits._
-    topKWand(spark, root, rawTerms, k, minMatch = minMatch, filters = filters)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
-
-  /** ES bool `must: match` + `filter: {range: …}` — scored top-k restricted
-    * to an allowed docID set built from a range-pruned METADATA scan (the
-    * predicate pushes to the metadata table's parquet scan; only the
-    * qualifying docIDs travel, cogrouped into the scorer's own docID-range
-    * shards — no broadcast, no postings for the filter). Scoring stats stay
-    * full-corpus: ES filter context never changes scores.
-    */
-  def topKRangeFiltered(spark: SparkSession, root: String,
-      rawTerms: Seq[String], k: Int,
-      allowedDocs: org.apache.spark.sql.DataFrame): DataFrame = {
-    import spark.implicits._
-    topKWand(spark, root, rawTerms, k, allowedDocs = Some(allowedDocs))
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
-
-  /** ES `bool: {must: match, must_not: …}` — scored top-k excluding every
-    * doc matched by the must_not terms. The excluded docID set comes from
-    * the must_not terms' pruned postings (never a corpus scan) and rides
-    * the same per-shard aux cogroup as tombstones: exact eval-time
-    * rejection, θ-driven skips stay rank-safe, scoring stats untouched
-    * (ES must_not never contributes to scoring).
-    */
-  def topKMustNot(spark: SparkSession, root: String, rawTerms: Seq[String],
-      k: Int, mustNotTerms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    // terms analyzing to nothing exclude nothing (ES drops empty clauses;
-    // Booleans.or would otherwise throw on the empty list)
-    val terms = graft.core.QueryModel.analyzedTerms(mustNotTerms)
-    val excluded =
-      if (terms.isEmpty) None else Some(Booleans.or(spark, root, terms))
-    topKWand(spark, root, rawTerms, k, excludedDocs = excluded)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+  def mustNotDocs(spark: SparkSession, root: String,
+      mustNotTerms: Seq[String]): Option[DataFrame] = {
+    val meta = Indexer.readMeta(spark, root)
+    val syn =
+      if (meta.synonyms) Catalog.readSynonyms(spark, IndexPaths(root))
+      else Map.empty[String, String]
+    val terms = QueryModel.analyzedTerms(mustNotTerms,
+      Analyzer.searchForm(meta.analyzer), syn)
+    if (terms.isEmpty) None else Some(Booleans.or(spark, root, terms))
   }
 
   /** ES field-sorted search (`sort: [{field: desc}]`): the matched doc set
@@ -494,14 +365,6 @@ object SearchEngine {
       .orderBy(sortCol, $"doc_id".asc)
       .limit(k)
       .select($"doc_id", col(field))
-  }
-
-  /** Driver-contract shape for the WAND path. */
-  def topKWandRounded(spark: SparkSession, root: String,
-      rawTerms: Seq[String], k: Int): DataFrame = {
-    import spark.implicits._
-    topKWand(spark, root, rawTerms, k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
   }
 
   /** ES `multi_match` (best_fields / dis_max, with `tie_breaker`): per-field
@@ -584,17 +447,16 @@ object SearchEngine {
         // unknown (nonzero!) score there; a zero-fill understates it (the
         // dis_max case is immune: max only needs the ranking field). Fill
         // the missing side with a targeted exact lookup over the candidate
-        // docID set (the explainTopK shape: pruned scan ∩ broadcast set).
+        // docID set (the exhaustive kernel restricted to a broadcast set:
+        // pruned scan ∩ set, only the set's rows leave).
+        def exact(root: String, docs: Set[Long]): Map[Long, Double] =
+          if (docs.isEmpty) Map.empty
+          else scoreDocs(spark, root, rawTerms, _ => 1, Some(docs.toArray.sorted))
+            .as[Hit].collect().map(h => h.doc_id -> h.score).toMap
         val union = txtByDoc.keySet ++ ttlByDoc.keySet
-        val missTxt = (union -- txtByDoc.keySet).toArray
-        val missTtl = (union -- ttlByDoc.keySet).toArray
-        val fillTxtF = inSession(
-          if (missTxt.isEmpty) Map.empty[Long, Double]
-          else scoreDocsExact(spark, textRoot, rawTerms, missTxt))
-        val fillTtlF = inSession(
-          if (missTtl.isEmpty) Map.empty[Long, Double]
-          else scoreDocsExact(spark, titleRoot, rawTerms, missTtl)
-            .view.mapValues(_ * titleBoost).toMap)
+        val fillTxtF = inSession(exact(textRoot, union -- txtByDoc.keySet))
+        val fillTtlF = inSession(exact(titleRoot, union -- ttlByDoc.keySet)
+          .view.mapValues(_ * titleBoost).toMap)
         txtByDoc ++= Await.result(fillTxtF, Duration.Inf)
         ttlByDoc ++= Await.result(fillTtlF, Duration.Inf)
       }
@@ -611,8 +473,7 @@ object SearchEngine {
       val effTtl = if (ttl.length < w) 0.0 else ttl.last.score
       if (combine(effTxt, effTtl) < thetaC || fused.size < k ||
           (txt.length < w && ttl.length < w))
-        return spark.createDataset(fused).toDF("doc_id", "score")
-          .select($"doc_id", round($"score", 4).as("score_r4"))
+        return rounded(spark.createDataset(fused).toDF("doc_id", "score"))
           .orderBy($"score_r4".desc, $"doc_id".asc)
       w *= 4
     }
@@ -650,21 +511,11 @@ object SearchEngine {
     val pathsTx = IndexPaths(textRoot)
     val pathsTi = IndexPaths(titleRoot)
     val terms = QueryModel.analyzedTerms(rawTerms).toArray
-    if (terms.isEmpty)
-      return emptyHits(spark).select($"doc_id", round($"score", 4).as("score_r4"))
+    if (terms.isEmpty) return rounded(emptyHits(spark))
     val stTx = Catalog.readCorpusStats(spark, pathsTx)
     val stTi = Catalog.readCorpusStats(spark, pathsTi)
-    def dfs(paths: IndexPaths): Map[String, Long] = {
-      val termSet = terms.toSet
-      Catalog.dictEntriesCached(spark, paths) match {
-        case Some(entries) =>
-          entries.iterator.filter(e => termSet(e.term)).map(e => e.term -> e.df).toMap
-        case None => Catalog.readDictionary(spark, paths)
-          .filter($"term".isin(terms.toSeq: _*))
-          .collect().map(d => d.term -> d.df).toMap
-      }
-    }
-    val (dfTx, dfTi) = (dfs(pathsTx), dfs(pathsTi))
+    val dfTx = Catalog.docFreqs(spark, pathsTx, terms.toSeq)
+    val dfTi = Catalog.docFreqs(spark, pathsTi, terms.toSeq)
     val idfBlend = terms.map(t =>
       Bm25.idf(stTx.n_docs, math.max(dfTx.getOrElse(t, 0L), dfTi.getOrElse(t, 0L))))
     val bcIdf = spark.sparkContext.broadcast(idfBlend)
@@ -715,7 +566,7 @@ object SearchEngine {
       .transform(df => graft.index.Deletes.filterLive(df, textRoot))
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
+      .transform(rounded)
   }
 
   /** Query-time synonyms — the public Lucene SynonymQuery semantics ES
@@ -746,12 +597,9 @@ object SearchEngine {
       graft.core.QueryModel.analyzedTerms(g)).filter(_.nonEmpty)
     require(analyzed.flatten.distinct.length == analyzed.flatten.length,
       "synonym groups must be disjoint")
-    if (analyzed.isEmpty)
-      return emptyHits(spark).select($"doc_id", round($"score", 4).as("score_r4"))
+    if (analyzed.isEmpty) return rounded(emptyHits(spark))
     val stats = Catalog.readCorpusStats(spark, paths)
-    val dfByTerm = Catalog.readDictionary(spark, paths)
-      .filter($"term".isin(analyzed.flatten: _*))
-      .collect().map(d => d.term -> d.df).toMap
+    val dfByTerm = Catalog.docFreqs(spark, paths, analyzed.flatten)
     val idfs = analyzed.map(g =>
       Bm25.idf(stats.n_docs, g.map(dfByTerm.getOrElse(_, 0L)).max)).toArray
     val groupOf = analyzed.zipWithIndex
@@ -796,47 +644,7 @@ object SearchEngine {
       .transform(df => graft.index.Deletes.filterLive(df, root))
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .select($"doc_id", round($"score", 4).as("score_r4"))
-  }
-
-  /** Exact BM25 scores for a specific (small, broadcast) docID set — the
-    * targeted-lookup shape shared with explainTopK: the pruned postings
-    * scan with per-posting membership filtering; only |docIds| rows leave.
-    */
-  private def scoreDocsExact(spark: SparkSession, root: String,
-      rawTerms: Seq[String], docIds: Array[Long]): Map[Long, Double] = {
-    import spark.implicits._
-    val paths = IndexPaths(root)
-    val meta = Indexer.readMeta(spark, root)
-    val qm = queryModel(spark, paths, rawTerms, 1)
-    if (qm.isEmpty || docIds.isEmpty) return Map.empty
-    val sorted = docIds.sorted
-    val bcQm = spark.sparkContext.broadcast(qm)
-    val bcDocs = spark.sparkContext.broadcast(sorted)
-    queryPostings(spark, paths, qm.terms.toSeq, meta.buckets)
-      .flatMap { b =>
-        val qmv = bcQm.value
-        val docs = bcDocs.value
-        val ti = java.util.Arrays.binarySearch(qmv.terms.asInstanceOf[Array[AnyRef]], b.term)
-        if (ti < 0) Iterator.empty
-        else {
-          val idf = qmv.idfs(ti)
-          val d = Blocks.decode(b)
-          (0 until d.docs.length).iterator
-            .filter(i => java.util.Arrays.binarySearch(docs, d.docs(i)) >= 0)
-            .map(i => (d.docs(i), ti,
-              idf * Bm25.tfNorm(d.tfs(i), d.dls(i).toLong, qmv.avgdl)))
-        }
-      }
-      .groupByKey(_._1)
-      .mapGroups { (doc, it) =>
-        val arr = it.toArray.sortBy(_._2) // fixed summation order
-        var s = 0.0
-        var i = 0
-        while (i < arr.length) { s += arr(i)._3; i += 1 }
-        (doc, s)
-      }
-      .collect().toMap
+      .transform(rounded)
   }
 
   /** ES `rescore`: re-rank the top-`window` WAND candidates with a secondary
@@ -865,48 +673,36 @@ object SearchEngine {
   }
 
   /** ES `_explain` analog: per-term score breakdown for every top-k doc —
-    * (doc_id, term, contribution). The same pruned scan as the scorer,
-    * restricted to the top-k docIDs (broadcast); contributions re-derived
-    * from the postings exactly as the scorer computes them, so the rows sum
-    * to the hit scores bit-for-bit.
+    * (doc_id, term, contribution). The exhaustive kernel's query model and
+    * decode step, restricted to the top-k docIDs (broadcast); contributions
+    * re-derived from the postings exactly as the scorer computes them, so
+    * the rows sum to the hit scores bit-for-bit.
     */
   def explainTopK(spark: SparkSession, root: String, rawTerms: Seq[String],
       k: Int): DataFrame = {
     import spark.implicits._
-    val paths = IndexPaths(root)
-    val meta = Indexer.readMeta(spark, root)
-    val qm = queryModel(spark, paths, rawTerms, k)
-    if (qm.isEmpty) return spark.emptyDataset[(Long, String, Double)]
-      .toDF("doc_id", "term", "contrib_r6")
-    val bcQm = spark.sparkContext.broadcast(qm)
     val topDocs = topKWand(spark, root, rawTerms, k)
-      .select($"doc_id").as[Long].collect().toSet
-    val bcDocs = spark.sparkContext.broadcast(topDocs)
-
-    queryPostings(spark, paths, qm.terms.toSeq, meta.buckets)
-      .flatMap { b =>
-        val qmv = bcQm.value
-        val docs = bcDocs.value
-        val ti = java.util.Arrays.binarySearch(qmv.terms.asInstanceOf[Array[AnyRef]], b.term)
-        if (ti < 0) Iterator.empty
-        else {
-          val idf = qmv.idfs(ti)
-          val d = Blocks.decode(b)
-          (0 until d.docs.length).iterator
-            .filter(i => docs.contains(d.docs(i)))
-            .map(i => (d.docs(i), b.term,
-              idf * Bm25.tfNorm(d.tfs(i), d.dls(i).toLong, qmv.avgdl)))
-        }
-      }
-      .toDF("doc_id", "term", "contrib")
-      .select($"doc_id", $"term", round($"contrib", 6).as("contrib_r6"))
-      .orderBy($"doc_id", $"term")
+      .select($"doc_id").as[Long].collect().sorted
+    decodedPostings(spark, root, rawTerms, Some(topDocs)) match {
+      case None => spark.emptyDataset[(Long, String, Double)]
+        .toDF("doc_id", "term", "contrib_r6")
+      case Some((bcQm, rows)) =>
+        rows.as[(Long, Int, Int, Int)]
+          .map { case (doc, ti, tf, dl) =>
+            val qmv = bcQm.value
+            (doc, qmv.terms(ti), qmv.idfs(ti) * Bm25.tfNorm(tf, dl.toLong, qmv.avgdl))
+          }
+          .toDF("doc_id", "term", "contrib")
+          .select($"doc_id", $"term", round($"contrib", 6).as("contrib_r6"))
+          .orderBy($"doc_id", $"term")
+    }
   }
 
-  private[search] def emptyRounded(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[(Long, Double)].toDF("doc_id", "score_r4")
-  }
+  /** The driver-contract projection: `(doc_id, score_r4)`, the score
+    * rounded to 4 decimals (see BruteForce.topKRounded).
+    */
+  def rounded(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), round(col("score"), 4).as("score_r4"))
 
   private[search] def emptyHits(spark: SparkSession): DataFrame = {
     import spark.implicits._

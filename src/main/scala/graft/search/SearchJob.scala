@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** spark-submit entry #2: query a built index.
   *
@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
   *   --index <index root> --query "join window vector" [--k 10] \
   *   [--mode wand|exhaustive] [--hydrate] [--robust-bounds]
   *   [--min-match M] [--from N] [--after SCORE:DOC_ID]
+  *   [--filter FIELD:VALUE]... [--range FIELD:LO..HI] [--must-not TERM]...
+  *   [--explain] [--group-by-conv max|sum]
   *
   * `--robust-bounds` forces WAND block bounds recomputed against the current
   * avgdl; indexes marked incremental (streaming-grown) use them automatically.
@@ -18,14 +20,16 @@ import org.apache.spark.sql.SparkSession
   * pagination (ES search_after): the page strictly after cursor (score=S,
   * doc_id=D) — O(k) at any depth; the cursor is the previous page's last hit.
   * Query terms accept ES boost syntax (`join^2.5`). All flags compose on the
-  * wand path; exhaustive mode rejects wand-only flags instead of dropping
-  * them silently.
+  * wand path, which is one [[SearchEngine.topKWand]] call (`--from` is its
+  * `offset`, `--must-not` its [[SearchEngine.mustNotDocs]] set); other modes
+  * reject flags they cannot honor instead of dropping them silently.
   *
   * Round-3 modes: `--mode wildcard` treats --query as an ES `*`/`?` pattern
   * (unscored doc set); `--mode mlt` runs more_like_this for seed doc
   * `--seed ID` read from `--corpus DIR` (the hydration corpus); `--explain`
-  * (wand only) prints the per-term score breakdown of the top-k instead of
-  * the hits (ES `_explain`).
+  * (plain wand top-k only: no paging, filter, must-not, min-match or robust
+  * bounds) prints the per-term score breakdown of the top-k instead of the
+  * hits (ES `_explain`).
   * }}}
   */
 object SearchJob {
@@ -94,8 +98,10 @@ object SearchJob {
       "--from/--after/--min-match/--robust-bounds/--filter/--range/--must-not/--explain require --mode wand")
     require(a.mode != "mlt" || a.seed >= 0,
       "--mode mlt requires --seed (--corpus optional: defaults to the index's own corpus)")
-    require(!a.explain || (a.from == 0 && a.after.isEmpty),
-      "--explain reports the plain top-k; drop --from/--after")
+    require(!a.explain || (a.from == 0 && a.after.isEmpty && a.minMatch <= 1 &&
+      !a.robustBounds && a.filters.isEmpty && a.range.isEmpty && a.mustNot.isEmpty),
+      "--explain reports the plain top-k; drop --from/--after/--min-match/" +
+        "--robust-bounds/--filter/--range/--must-not")
     require(a.groupByConv.isEmpty || Set("max", "sum")(a.groupByConv),
       "--group-by-conv takes max or sum")
     require(a.groupByConv.isEmpty || (a.mode == "wand" && !a.explain &&
@@ -104,12 +110,10 @@ object SearchJob {
     a
   }
 
-  def main(argv: Array[String]): Unit = {
-    val a = parse(argv)
-    val b = SparkSession.builder().appName("graft-search")
-    if (!sys.props.contains("spark.master")) b.master("local[*]")
-    val spark = b.config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The rows `a` asks for: hits (hydrated with `--hydrate`), an explain
+    * breakdown, or conversations.
+    */
+  def hits(spark: SparkSession, a: Args): DataFrame = {
     val terms = a.query.split("\\s+").toSeq.filter(_.nonEmpty)
     val hits = a.mode match {
       case "wand" if a.groupByConv == "max" =>
@@ -118,9 +122,6 @@ object SearchJob {
         Conversations.topBySum(spark, a.index, terms, a.k)
       case "wand" if a.explain =>
         SearchEngine.explainTopK(spark, a.index, terms, a.k)
-      case "wand" if a.from > 0 =>
-        SearchEngine.topKFromSize(spark, a.index, terms, a.from, a.k,
-          minMatch = a.minMatch, robustBounds = a.robustBounds)
       case "wand" =>
         // range filter: allowed docIDs from a range-pruned scan of the
         // index's own stored corpus metadata (corpus_sorted)
@@ -141,23 +142,27 @@ object SearchJob {
           corpus.filter(col(f) >= lit(lo).cast(dt) && col(f) <= lit(hi).cast(dt))
             .select(col("doc_id"))
         }
-        // analyze FIRST: terms that analyze to nothing (e.g. '!!!') must drop
-        // the clause (ES semantics), not crash Booleans.or's nonEmpty require —
-        // mirrors SearchEngine.topKMustNot's guard
-        val mustNotTerms = graft.core.QueryModel.analyzedTerms(a.mustNot)
-        val excluded =
-          if (mustNotTerms.isEmpty) None
-          else Some(Booleans.or(spark, a.index, mustNotTerms))
-        SearchEngine.topKWand(spark, a.index, terms, a.k,
+        // ES from/size: the top from+k, ranks (from, from+k] kept
+        SearchEngine.topKWand(spark, a.index, terms, a.from + a.k,
           robustBounds = a.robustBounds, minMatch = a.minMatch, after = a.after,
-          filters = a.filters, allowedDocs = allowed, excludedDocs = excluded)
+          filters = a.filters, allowedDocs = allowed,
+          excludedDocs = SearchEngine.mustNotDocs(spark, a.index, a.mustNot))
+          .offset(a.from)
       case "exhaustive" => SearchEngine.topKExhaustive(spark, a.index, terms, a.k)
       case "wildcard" => TermQueries.wildcard(spark, a.index, a.query.trim)
       case "mlt" => MoreLikeThis.topK(spark, a.index, a.corpus, a.seed, a.k)
       case m => throw new IllegalArgumentException(s"unknown mode $m")
     }
-    val out = if (a.hydrate) SearchEngine.hydrate(spark, a.index, hits) else hits
-    out.collect().foreach { r =>
+    if (a.hydrate) SearchEngine.hydrate(spark, a.index, hits) else hits
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val a = parse(argv)
+    val b = SparkSession.builder().appName("graft-search")
+    if (!sys.props.contains("spark.master")) b.master("local[*]")
+    val spark = b.config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    hits(spark, a).collect().foreach { r =>
       println(r.schema.fieldNames.zip(r.toSeq)
         .map { case (n, v) => s""""$n":${format(v)}""" }
         .mkString("{", ",", "}"))

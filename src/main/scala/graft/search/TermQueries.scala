@@ -127,7 +127,7 @@ object TermQueries {
       .orderBy($"term")
       .limit(maxExpansions)
       .collect().map(_.getString(0)).toSeq
-    graft.search.SearchEngine.topKWandRounded(spark, root, expanded, k)
+    SearchEngine.rounded(SearchEngine.topKWand(spark, root, expanded, k))
   }
 
   /** ES `regexp` query: dictionary terms matching the (anchored, as ES)
@@ -173,7 +173,7 @@ object TermQueries {
       prefix: String, k: Int, maxExpansions: Int = 50): DataFrame = {
     val expanded = prefixExpansions(spark, root, prefix, maxExpansions)
     val all = (terms ++ expanded).distinct
-    graft.search.SearchEngine.topKWandRounded(spark, root, all, k)
+    SearchEngine.rounded(SearchEngine.topKWand(spark, root, all, k))
   }
 
   def fuzzy(spark: SparkSession, root: String, term: String,

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Stati
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.search.SearchEngine
+
 /** `match()` SQL pushdown (SURVEY.md §4.2-A; VERDICT r1 item 10): a logical
   * node for index-backed BM25 top-k, planned by a custom strategy injected
   * via `spark.experimental.extraStrategies` (the public extension point —
@@ -43,7 +45,7 @@ final case class FullTextMatchExec(output: Seq[Attribute], root: String,
     terms: Seq[String], k: Int) extends LeafExecNode {
   override protected def doExecute(): RDD[InternalRow] = {
     val spark = SparkSession.active
-    graft.search.SearchEngine.topKWandRounded(spark, root, terms, k)
+    SearchEngine.rounded(SearchEngine.topKWand(spark, root, terms, k))
       .queryExecution.toRdd
   }
 }

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
 import graft.search.SearchEngine
+import graft.search.SearchEngine.rounded
 
 /** Physical-plan audit: the plans we designed for are the plans Catalyst
   * actually produces (pushdown, pruning, broadcast, top-k operator).
@@ -99,8 +100,8 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val allowed = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("n_chars").between(250L, 330L)).select(col("doc_id"))
-    val p1 = plan(SearchEngine.topKRangeFiltered(
-      spark, idx.paths.root, Seq("join", "window"), 10, allowed))
+    val p1 = plan(rounded(SearchEngine.topKWand(
+      spark, idx.paths.root, Seq("join", "window"), 10, allowedDocs = Some(allowed))))
     assert(p1.contains("PushedFilters: [IsNotNull(n_chars), GreaterThanOrEqual(n_chars,250)"),
       s"range predicate must reach the parquet scan:\n$p1")
     val p2 = plan(SearchEngine.topKByField(

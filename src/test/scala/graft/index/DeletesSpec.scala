@@ -7,6 +7,7 @@ import graft.{IndexCache, TestSpark}
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
 import graft.search.SearchEngine
+import graft.search.SearchEngine.rounded
 
 /** Delete-by-query semantics pins (ES/Lucene parity).
   *
@@ -35,15 +36,32 @@ class DeletesSpec extends AnyFunSuite {
     // reference: top-(k+D) of the clean index minus tombstones, truncated —
     // exact because removing D docs promotes at most D
     val k = 10
-    val ref = hits(SearchEngine.topKWandRounded(
-        spark, clean.paths.root, q, k + tombstones.length))
+    val ref = hits(rounded(SearchEngine.topKWand(
+        spark, clean.paths.root, q, k + tombstones.length)))
       .filterNot { case (d, _) => tombstones.contains(d) }
       .take(k)
-    val got = hits(SearchEngine.topKWandRounded(spark, paths.root, q, k))
+    val got = hits(rounded(SearchEngine.topKWand(spark, paths.root, q, k)))
     assert(got == ref, "soft-deleted ranking must equal clean ranking minus tombstones")
     assert(got.map(_._1).toSet.intersect(tombstones.toSet).isEmpty)
     // stats untouched during the soft phase
     assert(Catalog.readCorpusStats(spark, paths) == clean.stats)
+  }
+
+  test("exhaustive mm and terms_set exclude tombstones, as WAND-mm does") {
+    val root = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm)).paths.root
+    val tombstones = Deletes.read(spark, IndexPaths(root)).toSet
+    // every doc containing the deleted term is a tombstone
+    for (q <- Seq(Seq("stream", "hash"), Seq("join", "window", "stream"),
+        Seq("hash", "stream", "sort"))) {
+      val w = hits(SearchEngine.topKWand(spark, root, q, 10, minMatch = 2))
+      val e = hits(SearchEngine.topKExhaustive(spark, root, q, 10, _ => 2))
+      assert(w == e, s"WAND-mm != exhaustive-mm on the deleted index for q=$q")
+    }
+    val termsSet = hits(SearchEngine.termsSetTopK(spark, root,
+      Seq("hash", "stream", "sort"), 10))
+    assert(termsSet.nonEmpty)
+    assert(termsSet.forall { case (d, _) => !tombstones(d) },
+      "terms_set returned a tombstoned doc")
   }
 
   test("deleteByQuery is idempotent (tombstone set union)") {
@@ -94,7 +112,7 @@ class DeletesSpec extends AnyFunSuite {
       val reader = new Thread(() => {
         while (!stop.get()) {
           try {
-            val got = SearchEngine.topKWandRounded(spark, root, q, 10)
+            val got = rounded(SearchEngine.topKWand(spark, root, q, 10))
               .collect().map(_.getLong(0))
             if (got.exists(dead.contains)) leaked.incrementAndGet()
           } catch { case t: Throwable => errors.add(t) }
@@ -119,14 +137,14 @@ class DeletesSpec extends AnyFunSuite {
       Indexer.buildFromDocs(Catalog.readDocuments(spark, sfDir), root,
         buckets = IndexCache.Buckets, targetRun = IndexCache.TargetRun)
       Deletes.deleteByQuery(spark, root, Seq(delTerm))
-      val before = hits(SearchEngine.topKWandRounded(spark, root, q, 10))
+      val before = hits(rounded(SearchEngine.topKWand(spark, root, q, 10)))
       Compaction.compact(spark, root)
-      val after = hits(SearchEngine.topKWandRounded(spark, root, q, 10))
+      val after = hits(rounded(SearchEngine.topKWand(spark, root, q, 10)))
       assert(after == before, "compact must keep excluding tombstoned docs")
       assert(Deletes.read(spark, IndexPaths(root)).nonEmpty,
         "compact must not clear tombstones — purge does")
       // sanity: the exclusion is real (clean index ranks differently)
-      assert(after != hits(SearchEngine.topKWandRounded(spark, clean.paths.root, q, 10)))
+      assert(after != hits(rounded(SearchEngine.topKWand(spark, clean.paths.root, q, 10))))
     } finally Fs.delete(root)
   }
 
@@ -158,8 +176,8 @@ class DeletesSpec extends AnyFunSuite {
         "keyword rows must not inflate the deleted-doc count in purge pass A")
       assert(ps.total_tokens == fresh.stats.total_tokens)
       assert(math.abs(ps.avgdl - fresh.stats.avgdl) < 1e-12)
-      assert(hits(SearchEngine.topKWandRounded(spark, root, q, 10)) ==
-        hits(SearchEngine.topKWandRounded(spark, freshRoot, q, 10)),
+      assert(hits(rounded(SearchEngine.topKWand(spark, root, q, 10))) ==
+        hits(rounded(SearchEngine.topKWand(spark, freshRoot, q, 10))),
         "post-purge scores must equal a live-only rebuild's")
       // keyword postings survived the rewrite and still filter
       val kwDocs = graft.search.Booleans
@@ -207,8 +225,8 @@ class DeletesSpec extends AnyFunSuite {
       val da = Catalog.readDictionary(spark, IndexPaths(rootA)).collect().sortBy(_.term).toSeq
       val db = Catalog.readDictionary(spark, IndexPaths(rootB)).collect().sortBy(_.term).toSeq
       assert(da == db)
-      assert(hits(SearchEngine.topKWandRounded(spark, rootA, q, 10)) ==
-        hits(SearchEngine.topKWandRounded(spark, rootB, q, 10)))
+      assert(hits(rounded(SearchEngine.topKWand(spark, rootA, q, 10))) ==
+        hits(rounded(SearchEngine.topKWand(spark, rootB, q, 10))))
     } finally { Fs.delete(rootA); Fs.delete(rootB) }
   }
 
@@ -259,8 +277,8 @@ class DeletesSpec extends AnyFunSuite {
           }.sorted
       assert(decoded(rootA) == decoded(rootB),
         "cell-keyed purge must keep the same logical postings")
-      assert(hits(SearchEngine.topKWandRounded(spark, rootA, q, 10)) ==
-        hits(SearchEngine.topKWandRounded(spark, rootB, q, 10)))
+      assert(hits(rounded(SearchEngine.topKWand(spark, rootA, q, 10))) ==
+        hits(rounded(SearchEngine.topKWand(spark, rootB, q, 10))))
     } finally { Fs.delete(rootA); Fs.delete(rootB) }
   }
 
@@ -278,8 +296,8 @@ class DeletesSpec extends AnyFunSuite {
     val fresh = Indexer.buildFromDocs(live, freshRoot,
       buckets = IndexCache.Buckets, targetRun = IndexCache.TargetRun)
     try {
-      val got = hits(SearchEngine.topKWandRounded(spark, paths.root, q, 10))
-      val want = hits(SearchEngine.topKWandRounded(spark, fresh.paths.root, q, 10))
+      val got = hits(rounded(SearchEngine.topKWand(spark, paths.root, q, 10)))
+      val want = hits(rounded(SearchEngine.topKWand(spark, fresh.paths.root, q, 10)))
       assert(got == want, "purged index must score exactly like a live-only rebuild")
 
       // stats recomputed over live docs (doc_id_space unchanged by design)
@@ -293,7 +311,7 @@ class DeletesSpec extends AnyFunSuite {
       val dictTerms = Catalog.readDictionary(spark, paths)
         .filter($"term" === delTerm).count()
       assert(dictTerms == 0, "fully-deleted term must leave the dictionary")
-      assert(SearchEngine.topKWandRounded(spark, paths.root, Seq(delTerm), 10).isEmpty)
+      assert(rounded(SearchEngine.topKWand(spark, paths.root, Seq(delTerm), 10)).isEmpty)
 
       // tombstones cleared; exact bounds trusted again
       assert(Deletes.read(spark, paths).isEmpty)

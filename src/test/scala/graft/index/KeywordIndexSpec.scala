@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{IndexCache, TestSpark}
 import graft.io.{Catalog, Fs}
 import graft.search.SearchEngine
+import graft.search.SearchEngine.rounded
 
 /** Keyword-field postings lifecycle: the idempotency marker must track the
   * postings GENERATION, not the index root — a rebuilt index re-indexes its
@@ -20,7 +21,7 @@ class KeywordIndexSpec extends AnyFunSuite {
   private val q = Seq("join", "window")
 
   private def filteredHits(root: String): Seq[Long] =
-    SearchEngine.topKFiltered(spark, root, q, 10, Seq("source:src3"))
+    rounded(SearchEngine.topKWand(spark, root, q, 10, filters = Seq("source:src3")))
       .collect().map(_.getLong(0)).toSeq
 
   test("postings rebuild invalidates the marker: filters re-index, not vanish") {

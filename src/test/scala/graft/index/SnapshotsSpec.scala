@@ -7,6 +7,7 @@ import graft.{IndexCache, TestSpark}
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
 import graft.search.SearchEngine
+import graft.search.SearchEngine.rounded
 
 class SnapshotsSpec extends AnyFunSuite {
 
@@ -15,7 +16,7 @@ class SnapshotsSpec extends AnyFunSuite {
   private val q = Seq("join", "window", "vector")
 
   private def hits(root: String): Seq[(Long, Double)] =
-    SearchEngine.topKWandRounded(spark, root, q, 10)
+    rounded(SearchEngine.topKWand(spark, root, q, 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   test("snapshot -> destructive mutate -> restore reproduces the original index") {

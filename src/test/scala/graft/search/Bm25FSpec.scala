@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.search.SearchEngine.rounded
 
 class Bm25FSpec extends AnyFunSuite {
 
@@ -21,7 +22,7 @@ class Bm25FSpec extends AnyFunSuite {
     for (q <- Seq(Seq("join", "window", "vector"), Seq("join"), Seq("join", "zebra"))) {
       val f = hits(Bm25F.topK(spark, tx.paths.root, ti.paths.root, q, 10,
         wText = 1.0, wTitle = 0.0))
-      val plain = hits(SearchEngine.topKWandRounded(spark, tx.paths.root, q, 10))
+      val plain = hits(rounded(SearchEngine.topKWand(spark, tx.paths.root, q, 10)))
       assert(f == plain, s"q=$q")
     }
   }

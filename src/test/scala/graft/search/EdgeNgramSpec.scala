@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{IndexCache, TestSpark}
 import graft.core.Analyzer
 import graft.io.Catalog
+import graft.search.SearchEngine.rounded
 
 /** search_as_you_type: edge_ngram index analysis + standard search analysis. */
 class EdgeNgramSpec extends AnyFunSuite {
@@ -28,9 +29,9 @@ class EdgeNgramSpec extends AnyFunSuite {
 
   test("over-long typed term matches via its EdgeMax prefix gram") {
     val idx = IndexCache.edgeNgramIndex(spark, sfDir)
-    val full = SearchEngine.topKWandRounded(spark, idx.paths.root, Seq("windowing"), 10)
+    val full = rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("windowing"), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val pfx = SearchEngine.topKWandRounded(spark, idx.paths.root, Seq("windo"), 10)
+    val pfx = rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("windo"), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(full == pfx, "a >EdgeMax query term must behave as its EdgeMax prefix")
     assert(full.nonEmpty)
@@ -40,9 +41,9 @@ class EdgeNgramSpec extends AnyFunSuite {
     val idx = IndexCache.edgeNgramIndex(spark, sfDir)
     assert(idx.meta.analyzer == "edge_ngram")
     for (q <- Seq(Seq("wi"), Seq("wi", "vec"), Seq("wind"))) {
-      val wand = SearchEngine.topKWandRounded(spark, idx.paths.root, q, 10)
+      val wand = rounded(SearchEngine.topKWand(spark, idx.paths.root, q, 10))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val exh = SearchEngine.topKExhaustiveRounded(spark, idx.paths.root, q, 10)
+      val exh = rounded(SearchEngine.topKExhaustive(spark, idx.paths.root, q, 10))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(wand == exh, s"q=$q")
       assert(wand.nonEmpty, s"q=$q")
@@ -51,7 +52,7 @@ class EdgeNgramSpec extends AnyFunSuite {
     val texts = Catalog.readTable(spark, sfDir, "documents")
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    SearchEngine.topKWandRounded(spark, idx.paths.root, Seq("wind"), 10)
+    rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("wind"), 10))
       .collect().map(_.getLong(0)).foreach { d =>
         assert(Analyzer.tokenize(texts(d)).exists(_.startsWith("wind")), d)
       }

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{IndexCache, TestSpark}
 import graft.index.Indexer
 import graft.io.Catalog
+import graft.search.SearchEngine.rounded
 
 /** English-analyzed index: the IndexMeta analyzer pin means query-time
   * analysis always equals index-time analysis, and the WAND path over the
@@ -27,7 +28,7 @@ class EnglishIndexSpec extends AnyFunSuite {
     val docs = Catalog.readDocuments(spark, sfDir).toDF()
     for (q <- Seq(Seq("joins", "windows"), Seq("vector", "merging"),
         Seq("the", "join"), Seq("running"))) {
-      val wand = hits(SearchEngine.topKWandRounded(spark, idx.paths.root, q, 10))
+      val wand = hits(rounded(SearchEngine.topKWand(spark, idx.paths.root, q, 10)))
       val brute = hits(BruteForce.topKAnalyzed(docs, q, 10, "english")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.round(
@@ -36,10 +37,25 @@ class EnglishIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("must_not analyzes like the index: 'streams' excludes every doc stemming to 'stream'") {
+    import spark.implicits._
+    val root = IndexCache.englishIndex(spark, sfDir).paths.root
+    val streamDocs = Catalog.readDocuments(spark, sfDir)
+      .filter(d => graft.core.Analyzer.analyze(d.text, "english").contains("stream"))
+      .map(_.doc_id).collect().toSet
+    assert(streamDocs.nonEmpty, "fixture corpus must contain 'stream' docs")
+    val excluded = SearchEngine.mustNotDocs(spark, root, Seq("streams"))
+    assert(excluded.map(_.as[Long].collect().toSet).contains(streamDocs))
+    val got = hits(rounded(SearchEngine.topKWand(spark, root, Seq("streams", "join"),
+      1000, excludedDocs = excluded)))
+    assert(got.nonEmpty, "'join' docs without 'stream' must remain")
+    assert(got.forall { case (d, _) => !streamDocs(d) }, "a 'stream' doc survived must_not")
+  }
+
   test("surface forms conflate: inflected query equals stemmed query") {
     val idx = IndexCache.englishIndex(spark, sfDir)
-    val a = hits(SearchEngine.topKWandRounded(spark, idx.paths.root, Seq("joins"), 10))
-    val b = hits(SearchEngine.topKWandRounded(spark, idx.paths.root, Seq("join"), 10))
+    val a = hits(rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("joins"), 10)))
+    val b = hits(rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("join"), 10)))
     assert(a == b, "'joins' and 'join' must hit the same stemmed postings")
     assert(a.nonEmpty, "'join' must match documents in the fixture corpus")
   }
@@ -53,7 +69,7 @@ class EnglishIndexSpec extends AnyFunSuite {
     assert(graft.core.En.Stopwords.intersect(dictTerms).isEmpty,
       "no stopword may appear in the english dictionary")
     // a pure-stopword query is empty, not an error
-    assert(SearchEngine.topKWandRounded(spark, idx.paths.root, Seq("the", "and"), 10)
+    assert(rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("the", "and"), 10))
       .count() == 0L)
     // dl excludes stopwords: english avgdl strictly below standard avgdl
     val std = IndexCache.documentsIndex(spark, sfDir)
@@ -73,7 +89,7 @@ class EnglishIndexSpec extends AnyFunSuite {
     try {
       Indexer.buildFromDocs(docs, root, buckets = 4, targetRun = 16,
         analyzer = "english")
-      val got = SearchEngine.topKWandRounded(spark, root, Seq("run"), 10)
+      val got = rounded(SearchEngine.topKWand(spark, root, Seq("run"), 10))
         .select($"doc_id").as[Long].collect().toSet
       assert(got == Set(0L, 1L, 2L),
         "stemming must conflate running/runs/run into one posting list")

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{IndexCache, TestSpark}
 import graft.io.Catalog
 import graft.io.Catalog.IndexPaths
+import graft.search.SearchEngine.rounded
 
 /** Semantics pins for the round-3 ES-surface additions: wildcard,
   * more_like_this, significant_terms, top_hits. (DuckDB parity is the
@@ -74,15 +75,15 @@ class EsSurfaceSpec extends AnyFunSuite {
     val q = Seq("join", "window", "vector")
     val single = SearchEngine.synonymTopK(spark, root, q.map(Seq(_)), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val plain = SearchEngine.topKWandRounded(spark, root, q, 10)
+    val plain = rounded(SearchEngine.topKWand(spark, root, q, 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(single == plain, "singleton synonym groups must equal plain BM25")
     // a real group blends: must differ from treating members as independent
     val grouped = SearchEngine.synonymTopK(spark, root,
       Seq(Seq("join", "merge"), Seq("window")), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val independent = SearchEngine.topKWandRounded(spark, root,
-      Seq("join", "merge", "window"), 10)
+    val independent = rounded(SearchEngine.topKWand(spark, root,
+      Seq("join", "merge", "window"), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(grouped != independent,
       "blended df + summed tf must differ from independent terms")
@@ -98,7 +99,7 @@ class EsSurfaceSpec extends AnyFunSuite {
       val scores = rs.sortBy(_.getLong(1)).map(_.getDouble(3)).toSeq
       assert(scores == scores.sorted.reverse)
     }
-    val top = SearchEngine.topKWandRounded(spark, root, q, 1).head()
+    val top = rounded(SearchEngine.topKWand(spark, root, q, 1)).head()
     val topSource = Catalog.readTable(spark, sfDir, "documents")
       .filter($"doc_id" === top.getLong(0)).select($"source").as[String].head()
     val bucketTop = rows.filter(r => r.getString(0) == topSource && r.getLong(1) == 1L).head

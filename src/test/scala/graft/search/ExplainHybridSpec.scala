@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.index.Indexer
+import graft.io.Catalog.IndexPaths
 import graft.operators.Embeddings
+import graft.search.SearchEngine.rounded
 
 class ExplainHybridSpec extends AnyFunSuite {
 
@@ -13,17 +16,25 @@ class ExplainHybridSpec extends AnyFunSuite {
   private lazy val root = IndexCache.documentsIndex(spark, sfDir).paths.root
 
   test("explain rows cover exactly the top-k docs and sum to their scores") {
-    val q = Seq("join", "window", "vector")
-    val hits = SearchEngine.topKWandRounded(spark, root, q, 10)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val rows = SearchEngine.explainTopK(spark, root, q, 10).collect()
-    assert(rows.map(_.getLong(0)).toSet == hits.keySet)
-    rows.groupBy(_.getLong(0)).foreach { case (d, rs) =>
-      val sum = rs.map(_.getDouble(2)).sum
-      assert(math.abs(sum - hits(d)) < 1e-4,
-        s"doc $d: contributions sum $sum != score ${hits(d)}")
-      assert(rs.map(_.getString(1)).distinct.length == rs.length, "dup terms")
-      assert(rs.forall(r => q.contains(r.getString(1))), "non-query term")
+    // the english index: explain must analyze the query as the index does
+    val english = IndexCache.englishIndex(spark, sfDir).paths.root
+    for ((idx, q) <- Seq((root, Seq("join", "window", "vector")),
+        (english, Seq("joins", "windows")))) {
+      val hits = rounded(SearchEngine.topKWand(spark, idx, q, 10))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val meta = Indexer.readMeta(spark, idx)
+      val terms = SearchEngine.queryModel(spark, IndexPaths(idx), q, 10,
+        meta.analyzer, meta.synonyms).terms.toSet
+      val rows = SearchEngine.explainTopK(spark, idx, q, 10).collect()
+      assert(hits.nonEmpty, s"q=$q")
+      assert(rows.map(_.getLong(0)).toSet == hits.keySet, s"q=$q")
+      rows.groupBy(_.getLong(0)).foreach { case (d, rs) =>
+        val sum = rs.map(_.getDouble(2)).sum
+        assert(math.abs(sum - hits(d)) < 1e-4,
+          s"doc $d: contributions sum $sum != score ${hits(d)}")
+        assert(rs.map(_.getString(1)).distinct.length == rs.length, "dup terms")
+        assert(rs.forall(r => terms.contains(r.getString(1))), "non-query term")
+      }
     }
   }
 

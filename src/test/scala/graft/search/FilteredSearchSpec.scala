@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
 import graft.io.Catalog
+import graft.search.SearchEngine.rounded
 
 /** ES bool filter context (must: match + filter: term): the WAND path with
   * required non-scoring cursors must equal the exhaustive shadow — score the
@@ -32,9 +33,7 @@ class FilteredSearchSpec extends AnyFunSuite {
       mm: Int = 1): Seq[(Long, Double)] = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val scored =
-      if (mm <= 1) SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue)
-      else SearchEngine.topKMinShouldMatchExhaustive(spark, root, q, Int.MaxValue, mm)
+    val scored = SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue, _ => mm)
     val docs = preds.foldLeft(Catalog.readTable(spark, sfDir, "documents")) {
       case (d, (f, v)) => d.filter(col(f) === v)
     }.select($"doc_id")
@@ -49,7 +48,8 @@ class FilteredSearchSpec extends AnyFunSuite {
       (field, value) <- Seq(("source", "src3"), ("source", "src0"), ("lang", "en"))
       k <- Seq(3, 10, 100)
     } {
-      val w = hits(SearchEngine.topKFiltered(spark, root, q, k, Seq(s"$field:$value")))
+      val w = hits(rounded(SearchEngine.topKWand(spark, root, q, k,
+        filters = Seq(s"$field:$value"))))
       val e = shadow(q, Seq((field, value)), k)
       assert(w == e, s"filtered WAND != shadow for q=$q $field=$value k=$k")
       assert(w.nonEmpty, s"fixture should match something for $field=$value")
@@ -58,18 +58,18 @@ class FilteredSearchSpec extends AnyFunSuite {
 
   test("multiple filters AND together; unknown values yield empty") {
     val q = Seq("join", "window", "vector")
-    val w = hits(SearchEngine.topKFiltered(spark, root, q, 10,
-      Seq("source:src3", "lang:en")))
+    val w = hits(rounded(SearchEngine.topKWand(spark, root, q, 10,
+      filters = Seq("source:src3", "lang:en"))))
     assert(w == shadow(q, Seq(("source", "src3"), ("lang", "en")), 10))
-    assert(hits(SearchEngine.topKFiltered(spark, root, q, 10,
-      Seq("source:nope"))).isEmpty)
+    assert(hits(rounded(SearchEngine.topKWand(spark, root, q, 10,
+      filters = Seq("source:nope")))).isEmpty)
   }
 
   test("filters compose with minimum_should_match") {
     import spark.implicits._
     val q = Seq("join", "hash")
-    val w = SearchEngine.topKFiltered(spark, root, q, 10,
-      Seq("source:src3"), minMatch = 2)
+    val w = rounded(SearchEngine.topKWand(spark, root, q, 10,
+      filters = Seq("source:src3"), minMatch = 2))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val e = shadow(q, Seq(("source", "src3")), 10, mm = 2)
     assert(w == e, s"filtered mm-WAND != shadow")
@@ -91,13 +91,13 @@ class FilteredSearchSpec extends AnyFunSuite {
 
     for ((lo, hi, k) <- Seq((250L, 330L, 10), (0L, 10000L, 10), (200L, 260L, 3))) {
       val allowed = docs.filter($"n_chars".between(lo, hi)).select($"doc_id")
-      val w = hits(SearchEngine.topKRangeFiltered(spark, root, q, k, allowed))
+      val w = hits(rounded(SearchEngine.topKWand(spark, root, q, k, allowedDocs = Some(allowed))))
       assert(w == rangeShadow(lo, hi, k), s"range WAND != shadow for [$lo,$hi] k=$k")
       assert(w.nonEmpty)
     }
     // empty range → empty result (rangeActive with empty allowed slices)
-    assert(hits(SearchEngine.topKRangeFiltered(spark, root, q, 10,
-      docs.filter($"n_chars" < 0).select($"doc_id"))).isEmpty)
+    assert(hits(rounded(SearchEngine.topKWand(spark, root, q, 10,
+      allowedDocs = Some(docs.filter($"n_chars" < 0).select($"doc_id"))))).isEmpty)
 
     // range ∧ keyword filter: both contexts applied
     val allowed = docs.filter($"n_chars".between(250L, 330L)).select($"doc_id")
@@ -118,8 +118,8 @@ class FilteredSearchSpec extends AnyFunSuite {
     val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
     val dead = graft.index.Deletes.read(spark,
       graft.io.Catalog.IndexPaths(del.paths.root)).toSet
-    val rangeDel = hits(SearchEngine.topKRangeFiltered(spark, del.paths.root,
-      q, 10, allowed))
+    val rangeDel = hits(rounded(SearchEngine.topKWand(spark, del.paths.root,
+      q, 10, allowedDocs = Some(allowed))))
     val shadowDel = hits(SearchEngine.topKExhaustive(spark, del.paths.root, q, Int.MaxValue)
       .join(allowed, "doc_id")
       .filter(!$"doc_id".isin(dead.toSeq: _*))
@@ -137,7 +137,8 @@ class FilteredSearchSpec extends AnyFunSuite {
 
     // bool.must_not: scored ranking minus docs containing the excluded term
     for (mn <- Seq("stream", "join", "zebra")) {
-      val got = hits(SearchEngine.topKMustNot(spark, root, q, 10, Seq(mn)))
+      val got = hits(rounded(SearchEngine.topKWand(spark, root, q, 10,
+        excludedDocs = SearchEngine.mustNotDocs(spark, root, Seq(mn)))))
       val mnTok = mn
       val excluded = Catalog.readDocuments(spark, sfDir)
         .filter(d => graft.core.Analyzer.tokenize(d.text).contains(mnTok))
@@ -149,12 +150,12 @@ class FilteredSearchSpec extends AnyFunSuite {
       assert(got == want, s"must_not '$mn' != shadow")
     }
     // must_not of a query term drops every doc scoring on it
-    assert(hits(SearchEngine.topKMustNot(spark, root, Seq("join"), 10,
-      Seq("join"))).isEmpty)
+    assert(hits(rounded(SearchEngine.topKWand(spark, root, Seq("join"), 10,
+      excludedDocs = SearchEngine.mustNotDocs(spark, root, Seq("join"))))).isEmpty)
 
     // terms filter (OR within field) via the allowed-set path
     val allowed = Booleans.or(spark, root, Seq("source:src1", "source:src2"))
-    val got = hits(SearchEngine.topKRangeFiltered(spark, root, q, 10, allowed))
+    val got = hits(rounded(SearchEngine.topKWand(spark, root, q, 10, allowedDocs = Some(allowed))))
     val want = hits(SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue)
       .join(docs.filter($"source".isin("src1", "src2")).select($"doc_id"), "doc_id")
       .orderBy($"score".desc, $"doc_id".asc).limit(10)
@@ -164,8 +165,9 @@ class FilteredSearchSpec extends AnyFunSuite {
 
   test("filter context never changes scores") {
     val q = Seq("join", "window", "vector")
-    val filtered = hits(SearchEngine.topKFiltered(spark, root, q, 100, Seq("source:src3"))).toMap
-    val plain = hits(SearchEngine.topKExhaustiveRounded(spark, root, q, Int.MaxValue)).toMap
+    val filtered = hits(rounded(SearchEngine.topKWand(spark, root, q, 100,
+      filters = Seq("source:src3")))).toMap
+    val plain = hits(rounded(SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue))).toMap
     filtered.foreach { case (d, s) =>
       assert(plain(d) == s, s"doc $d scored differently under a filter")
     }

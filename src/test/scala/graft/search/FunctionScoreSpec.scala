@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.search.SearchEngine.rounded
 
 /** function_score semantics pinned to the ES definition: application order
   * (factor before modifier), boost modes, and the decay shape parameters
@@ -84,7 +85,7 @@ class FunctionScoreSpec extends AnyFunSuite {
 
   test("function_score reorders vs plain bm25 (the function is load-bearing)") {
     val idx = IndexCache.documentsIndex(spark, sfDir)
-    val plain = rows(SearchEngine.topKWandRounded(spark, idx.paths.root, q, 10)).map(_._1)
+    val plain = rows(rounded(SearchEngine.topKWand(spark, idx.paths.root, q, 10))).map(_._1)
     val fvf = rows(FunctionScore.fieldValueFactor(spark, idx.paths.root, sfDir,
       q, 10, factor = 0.01, modifier = "sqrt")).map(_._1)
     assert(plain != fvf, "sqrt(0.01*n_chars) should reorder the top-10")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.search.SearchEngine.rounded
 
 class HighlightSpec extends AnyFunSuite {
 
@@ -35,7 +36,7 @@ class HighlightSpec extends AnyFunSuite {
       .collect()
     // highlight orders by ROUNDED score (the oracle-comparable shape), so
     // compare in that order — rounding can reorder unrounded near-ties
-    val ranked = SearchEngine.topKWandRounded(spark, idx.paths.root, q, 10)
+    val ranked = rounded(SearchEngine.topKWand(spark, idx.paths.root, q, 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy { case (d, s) => (-s, d) }
     assert(hl.map(r => (r.getLong(0), r.getDouble(1))).toSeq == ranked.toSeq)

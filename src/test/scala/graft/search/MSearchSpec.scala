@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.search.SearchEngine.rounded
 
 /** Round-5 scored-query additions: msearch (batched one-pass), terms_set
   * (per-doc minimum_should_match), rank_feature (saturation).
@@ -31,7 +32,7 @@ class MSearchSpec extends AnyFunSuite {
       for ((qid, raw) <- queries) {
         // msearch presents ties in ROUNDED-score order (matching its oracle);
         // re-sort the single-query ranking the same way before comparing
-        val single = SearchEngine.topKWandRounded(spark, idx.paths.root, raw, k)
+        val single = rounded(SearchEngine.topKWand(spark, idx.paths.root, raw, k))
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
           .sortBy { case (doc, s) => (-s, doc) }
         assert(batch.getOrElse(qid, Nil) == single, s"qid=$qid k=$k")
@@ -51,8 +52,7 @@ class MSearchSpec extends AnyFunSuite {
     // reconstruct: docs with doc_id % 3 == m-1 qualify iff they'd survive a
     // GLOBAL minimum_should_match of m
     val want = (1 to 3).flatMap { m =>
-      SearchEngine.topKMinShouldMatchExhaustive(spark, idx.paths.root, terms,
-          all, m)
+      SearchEngine.topKExhaustive(spark, idx.paths.root, terms, all, _ => m)
         .filter($"doc_id" % 3 === (m - 1))
         .select($"doc_id", round($"score", 4))
         .collect().map(r => (r.getLong(0), r.getDouble(1)))

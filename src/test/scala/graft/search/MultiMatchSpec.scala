@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.search.SearchEngine.rounded
 
 /** multi_match best_fields: the union-of-per-field-windows candidate set
   * must reproduce the EXHAUSTIVE dis_max ranking (the exactness claim in
@@ -137,7 +138,7 @@ class MultiMatchSpec extends AnyFunSuite {
     val ti = IndexCache.titleIndex(spark, sfDir)
     // with a large title boost the ranking must differ from text-only
     val q = Seq("join", "window", "vector")
-    val plain = SearchEngine.topKWandRounded(spark, tx.paths.root, q, 10)
+    val plain = rounded(SearchEngine.topKWand(spark, tx.paths.root, q, 10))
       .select($"doc_id").as[Long].collect().toSeq
     val multi = SearchEngine.multiMatchTopK(spark, tx.paths.root, ti.paths.root,
         q, 10, titleBoost = 5.0)

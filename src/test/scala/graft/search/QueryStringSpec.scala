@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.search.SearchEngine.rounded
 
 /** simple_query_string semantics: the parse (clause extraction + ES
   * leniency rules) and the composition contract — the executed query
@@ -79,8 +80,8 @@ class QueryStringSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toSeq
     val expanded = TermQueries.prefixExpansions(spark, root, "h", 50)
     assert(expanded.nonEmpty && expanded.forall(_.startsWith("h")))
-    val want = SearchEngine.topKWandRounded(spark, root,
-      ("window" +: expanded).distinct, 10)
+    val want = rounded(SearchEngine.topKWand(spark, root,
+      ("window" +: expanded).distinct, 10))
       .as[(Long, Double)].collect().toSeq
     assert(got == want)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
+import graft.search.SearchEngine.rounded
 
 /** _reindex-with-query and _analyze surface semantics. */
 class ReindexAnalyzeSpec extends AnyFunSuite {
@@ -21,8 +22,8 @@ class ReindexAnalyzeSpec extends AnyFunSuite {
     assert(re.stats.n_docs < full.stats.n_docs)
     // scoring uses the REINDEXED stats: results differ from filtering the
     // full index's results (idf/avgdl change — the whole point of _reindex)
-    val reTop = SearchEngine.topKWandRounded(spark, re.paths.root,
-      Seq("join", "window"), 5).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val reTop = rounded(SearchEngine.topKWand(spark, re.paths.root,
+      Seq("join", "window"), 5)).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(reTop.nonEmpty)
     val brute = BruteForce.topK(
       graft.io.Catalog.readTable(spark, dir, "documents")

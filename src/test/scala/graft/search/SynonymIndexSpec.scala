@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.index.Indexer
 import graft.io.Catalog
+import graft.search.SearchEngine.rounded
 
 /** Index-time synonyms (contraction during analysis) vs query-time
   * SynonymQuery: the two halves of the ES synonym story score DIFFERENTLY
@@ -39,9 +40,9 @@ class SynonymIndexSpec extends AnyFunSuite {
       assert(dict("alpha") == ((3L, 4L)),
         "group df = union docs (3), cf = total occurrences (4)")
       // query terms canonicalize through the stored map: 'beta' ≡ 'alpha'
-      val viaBeta = SearchEngine.topKWandRounded(spark, root, Seq("beta"), 10)
+      val viaBeta = rounded(SearchEngine.topKWand(spark, root, Seq("beta"), 10))
         .as[(Long, Double)].collect().toSeq
-      val viaAlpha = SearchEngine.topKWandRounded(spark, root, Seq("alpha"), 10)
+      val viaAlpha = rounded(SearchEngine.topKWand(spark, root, Seq("alpha"), 10))
         .as[(Long, Double)].collect().toSeq
       assert(viaBeta == viaAlpha && viaBeta.map(_._1).toSet == Set(0L, 1L, 2L))
       assert(Indexer.readMeta(spark, root).synonyms)
@@ -57,7 +58,7 @@ class SynonymIndexSpec extends AnyFunSuite {
       Indexer.buildFromDocs(fixture, rootSyn, buckets = 4, targetRun = 16,
         synonyms = Map("beta" -> "alpha"))
       Indexer.buildFromDocs(fixture, rootStd, buckets = 4, targetRun = 16)
-      val indexed = SearchEngine.topKWandRounded(spark, rootSyn, Seq("alpha"), 10)
+      val indexed = rounded(SearchEngine.topKWand(spark, rootSyn, Seq("alpha"), 10))
         .as[(Long, Double)].collect().toMap
       val queryTime = SearchEngine.synonymTopK(spark, rootStd,
         Seq(Seq("alpha", "beta")), 10)
@@ -83,7 +84,7 @@ class SynonymIndexSpec extends AnyFunSuite {
       // post-stem tokens: merging->merg, joined->join; map merg->join
       Indexer.buildFromDocs(docs, root, buckets = 4, targetRun = 16,
         analyzer = "english", synonyms = Map("merg" -> "join"))
-      val hits = SearchEngine.topKWandRounded(spark, root, Seq("merges"), 10)
+      val hits = rounded(SearchEngine.topKWand(spark, root, Seq("merges"), 10))
         .as[(Long, Double)].collect().map(_._1).toSet
       assert(hits == Set(0L, 1L),
         "'merges' -> stem 'merg' -> canonical 'join' must hit both docs")

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{Fixtures, IndexCache, TestSpark}
 import graft.index.Indexer
 import graft.io.Catalog
+import graft.search.SearchEngine.rounded
 
 /** WAND must EQUAL the exhaustive scorer — never approximate it
   * (SURVEY.md §7.3-7). Shadow-tested on the real documents corpus and on the
@@ -22,10 +23,11 @@ class WandSpec extends AnyFunSuite {
   test("minimum_should_match: m=1 equals plain ranking; m=n equals AND-filtered") {
     val idx = IndexCache.documentsIndex(spark, "/root/testdata/sf0.001")
     val terms = Seq("join", "window", "vector")
-    val m1 = hits(SearchEngine.topKMinShouldMatch(spark, idx.paths.root, terms, 10, 1))
-    val plain = hits(SearchEngine.topKWandRounded(spark, idx.paths.root, terms, 10))
+    val m1 = hits(rounded(SearchEngine.topKWand(spark, idx.paths.root, terms, 10, minMatch = 1)))
+    val plain = hits(rounded(SearchEngine.topKWand(spark, idx.paths.root, terms, 10)))
     assert(m1 == plain)
-    val mAll = SearchEngine.topKMinShouldMatch(spark, idx.paths.root, terms, 500, terms.size)
+    val mAll = rounded(SearchEngine.topKWand(spark, idx.paths.root, terms, 500,
+        minMatch = terms.size))
       .collect().map(_.getLong(0)).toSet
     val andSet = Booleans.and(spark, idx.paths.root, terms)
       .collect().map(_.getLong(0)).toSet
@@ -41,7 +43,7 @@ class WandSpec extends AnyFunSuite {
     for (q <- queries; mm <- 1 to (q.size + 1); k <- Seq(1, 10, 100)) {
       // unrounded on both sides: bit-identity, not 4-decimal identity
       val w = hits(SearchEngine.topKWand(spark, idx.paths.root, q, k, minMatch = mm))
-      val e = hits(SearchEngine.topKMinShouldMatchExhaustive(spark, idx.paths.root, q, k, mm))
+      val e = hits(SearchEngine.topKExhaustive(spark, idx.paths.root, q, k, _ => mm))
       assert(w == e, s"WAND-mm != exhaustive-mm for q=$q mm=$mm k=$k")
     }
   }
@@ -54,7 +56,7 @@ class WandSpec extends AnyFunSuite {
     assert(res.stats.n_docs == 5000)
     for (q <- Fixtures.refQueries.filter(_.size >= 2); mm <- 2 to 3) {
       val w = hits(SearchEngine.topKWand(spark, root, q, 10, minMatch = mm))
-      val e = hits(SearchEngine.topKMinShouldMatchExhaustive(spark, root, q, 10, mm))
+      val e = hits(SearchEngine.topKExhaustive(spark, root, q, 10, _ => mm))
       assert(w == e, s"WAND-mm != exhaustive-mm for q=$q mm=$mm")
     }
   }
@@ -69,7 +71,7 @@ class WandSpec extends AnyFunSuite {
         val page = cursor match {
           case None => hits(SearchEngine.topKWand(spark, idx.paths.root, q, 10))
           case Some((s, d)) =>
-            hits(SearchEngine.topKSearchAfter(spark, idx.paths.root, q, 10, s, d))
+            hits(SearchEngine.topKWand(spark, idx.paths.root, q, 10, after = Some((s, d))))
         }
         page.lastOption.foreach { case (d, s) => cursor = Some((s, d)) }
         page

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
 import graft.search.SearchEngine
+import graft.search.SearchEngine.rounded
 
 /** The match() SQL surface: a SQL query over the registered view must plan
   * to the index-backed physical node and return exactly the engine's top-k.
@@ -24,8 +25,8 @@ class MatchSqlSpec extends AnyFunSuite {
     // SparkPlan display strips the "Exec" suffix from node names
     assert(sql.queryExecution.executedPlan.toString.contains("FullTextMatch"),
       s"expected the custom scan in:\n${sql.queryExecution.executedPlan.toString.take(1500)}")
-    val direct = SearchEngine.topKWandRounded(spark, idx.paths.root,
-      Seq("join", "window", "vector"), 10)
+    val direct = rounded(SearchEngine.topKWand(spark, idx.paths.root,
+      Seq("join", "window", "vector"), 10))
     assert(hits(sql.orderBy(sql("score_r4").desc, sql("doc_id"))) ==
       hits(direct.orderBy(direct("score_r4").desc, direct("doc_id"))))
   }
