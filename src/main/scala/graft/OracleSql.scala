@@ -311,8 +311,8 @@ object OracleSql {
        |SELECT DISTINCT doc_id FROM tok JOIN exp USING (term) ORDER BY doc_id""".stripMargin
   }
 
-  /** Ordered sloppy-phrase twin (semantics pinned in
-    * index/PositionalIndex.phraseMatchSloppy): an increasing position chain,
+  /** Ordered sloppy-phrase twin (semantics pinned in index/Intervals, an
+    * ordered IMatch with max_gaps = slop): an increasing position chain,
     * one position per phrase term in order, span ≤ (n−1)+slop.
     */
   def phraseMatchSloppy(phrase: Seq[String], slop: Int): String = {

@@ -464,8 +464,9 @@ object SparkEntry {
     // any order (the unordered complement of phrase_slop)
     "phrase_near_unordered" -> ((s, dir) => {
       val idx = IndexCache.positionalIndex(s, dir)
-      graft.index.PositionalIndex.spanNearUnordered(s, idx.paths.root,
-        Seq("join", "hash"), 2, idx.meta.buckets)
+      graft.index.Intervals.filterDocs(s, idx.paths.root,
+        graft.index.Intervals.IMatch("join hash", maxGaps = 2, ordered = false),
+        idx.meta.buckets)
     }),
     // Lucene span_first: 'join hash' matching entirely inside the first 12
     // token positions (leading-content restriction)
@@ -484,14 +485,18 @@ object SparkEntry {
     // ES match_phrase slop (ordered): "join ... hash" within 2 intervening
     "phrase_slop" -> ((s, dir) => {
       val idx = IndexCache.positionalIndex(s, dir)
-      graft.index.PositionalIndex.phraseMatchSloppy(s, idx.paths.root,
-        Seq("join", "hash"), 2, idx.meta.buckets)
+      graft.index.Intervals.filterDocs(s, idx.paths.root,
+        graft.index.Intervals.IMatch("join hash", maxGaps = 2, ordered = true),
+        idx.meta.buckets)
     }),
     // Lucene span_or: 'join hash' OR 'merge sort' (union clause, one scan)
     "span_or" -> ((s, dir) => {
       val idx = IndexCache.positionalIndex(s, dir)
-      graft.index.PositionalIndex.spanOr(s, idx.paths.root,
-        Seq(Seq("join", "hash"), Seq("merge", "sort")), idx.meta.buckets)
+      import graft.index.Intervals._
+      graft.index.Intervals.filterDocs(s, idx.paths.root,
+        IAnyOf(Seq(IMatch("join hash", maxGaps = 0, ordered = true),
+          IMatch("merge sort", maxGaps = 0, ordered = true))),
+        idx.meta.buckets)
     }),
     // Lucene span_within: 'hash' inside a span_near(join, scan, slop=6) window
     "span_within" -> ((s, dir) => {

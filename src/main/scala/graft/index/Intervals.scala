@@ -1,9 +1,8 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.core.{Analyzer, Blocks}
+import graft.core.Analyzer
 
 /** ES `intervals` query — the modern proximity surface (Lucene's
   * IntervalsSource algebra over MINIMAL intervals, Clarke & Cormack's GC-list
@@ -18,12 +17,19 @@ import graft.core.{Analyzer, Blocks}
   *                    when `ordered`, `max_gaps` counting only the positions
   *                    BETWEEN consecutive sub-intervals (the ES contract)
   *
-  * Evaluation is per doc over the same pruned positional scan every other
-  * positional operator uses: postings filtered to the expression's terms
-  * (bucket + term pushdown), one groupBy(doc) shuffle of those terms'
-  * position lists, then a purely local combinator walk — O(Σ positions ·
-  * sources) per doc, output only matching doc_ids. Filter context, like the
-  * span family ES builds on the same machinery.
+  * The sloppy-phrase family is expressed in these sources: ES `match_phrase`
+  * with slop is `IMatch(phrase, maxGaps = slop, ordered = true)` (span
+  * pn − p1 ≤ (n−1) + slop ⇔ width − n ≤ slop), Lucene `span_near` with
+  * `in_order: false` is the same with `ordered = false` (distinct terms),
+  * and `span_or` of exact phrases is an [[IAnyOf]] of `maxGaps = 0` ordered
+  * matches.
+  *
+  * Evaluation is per doc in the one positional kernel every other
+  * positional operator uses (PositionalIndex.perDoc): postings filtered to
+  * the expression's terms (bucket + term pushdown), one groupBy(doc)
+  * shuffle of those terms' position lists, then a purely local combinator
+  * walk — O(Σ positions · sources) per doc, output only matching doc_ids.
+  * Filter context, like the span family ES builds on the same machinery.
   */
 object Intervals {
 
@@ -198,30 +204,13 @@ object Intervals {
     val terms: Seq[String] = Nil
   }
 
-  /** Filter-context evaluation: doc_ids with ≥ 1 interval, ordered. Same
-    * pruned-scan + doc-keyed group shape as PositionalIndex.phraseTf.
+  /** Filter-context evaluation: live doc_ids with ≥ 1 interval, ordered —
+    * the [[PositionalIndex.docsWhere]] kernel with [[eval]] per doc.
     */
   def filterDocs(spark: SparkSession, root: String, src: Source,
       buckets: Int): DataFrame = {
-    import spark.implicits._
-    val terms = src.terms.distinct
-    val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct
     val bcSrc = spark.sparkContext.broadcast(src)
-    PositionalIndex.readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
-      .as[PosBlock]
-      .flatMap(b => PositionalIndex.decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        if (eval(bcSrc.value, byTerm).nonEmpty) Iterator.single(doc)
-        else Iterator.empty
-      }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
+    PositionalIndex.docsWhere(spark, root, src.terms, buckets)(
+      eval(bcSrc.value, _).nonEmpty)
   }
 }

@@ -28,6 +28,12 @@ final case class PosBlock(
 /** Positional index build + index-backed phrase matching (SURVEY.md §2
   * row 25 — the index-side `match_phrase`; the relational twin is
   * operators/Phrase).
+  *
+  * Every positional query — phrase, span and [[Intervals]] — runs through
+  * one kernel, [[perDoc]] (scan, decode, group by doc, per-doc function over
+  * the position map); an operator is only its query analysis, its
+  * `require`s and that per-doc function. [[docsWhere]] is the kernel's
+  * filter-context form.
   */
 object PositionalIndex {
 
@@ -40,7 +46,7 @@ object PositionalIndex {
   private lazy val posSchema =
     org.apache.spark.sql.Encoders.product[PosBlock].schema
 
-  private[index] def readRaw(spark: SparkSession,
+  private def readRaw(spark: SparkSession,
       root: String): org.apache.spark.sql.DataFrame =
     spark.read.schema(posSchema).parquet(pathOf(root))
 
@@ -183,80 +189,22 @@ object PositionalIndex {
     }
   }
 
-  /** Per-doc phrase term frequency: the number of positions p0 at which the
-    * whole phrase matches consecutively (ES/Lucene's phrase freq — what a
-    * scored `match_phrase` uses as tf). Docs with zero matches are absent.
+  /** The one positional pipeline every phrase, span and intervals operator
+    * runs: positional postings scan pruned to the buckets of `terms` with
+    * `term ∈ terms` pushdown, decode, one groupBy(doc) shuffle of only those
+    * terms' (doc, positions) rows, then `f` over the doc's term → ascending
+    * positions map (absent = term not in doc). Emits `(doc_id, n)` for each
+    * doc where `n = f(positions) > 0` — output is tiny (matching docs only).
     *
-    * Plan shape: positional postings scan pruned to the phrase terms'
-    * buckets + `term ∈ terms` pushdown, decode, one groupBy(doc) shuffle of
-    * only the phrase terms' (doc, positions) rows, position intersection
-    * per doc. Output is tiny (matching docs only).
+    * Tombstones are NOT removed here: phrase df counts deleted docs like
+    * every other df (see [[Deletes]]); [[docsWhere]] and [[phraseScores]]
+    * drop them from their results.
     */
-  def phraseTf(spark: SparkSession, root: String, phrase: Seq[String],
-      buckets: Int): DataFrame = {
+  private def perDoc(spark: SparkSession, root: String, terms: Seq[String],
+      buckets: Int)(f: collection.Map[String, Array[Int]] => Int): DataFrame = {
     import spark.implicits._
-    val terms = phrase.flatMap(Analyzer.tokenize(_))
-    require(terms.nonEmpty, "empty phrase")
     val distinctTerms = terms.distinct
     val qBuckets = distinctTerms.map(Blocks.bucketOf(_, buckets)).distinct
-    val termIdx = terms.zipWithIndex // term -> offset(s) in the phrase
-
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(distinctTerms: _*))
-      .as[PosBlock]
-      .flatMap { b =>
-        decode(b).map { case (doc, ps) => (doc, b.term, ps) }
-      }
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        if (!termIdx.forall { case (t, _) => byTerm.contains(t) }) Iterator.empty
-        else {
-          val ptf = byTerm(terms.head).count { p0 =>
-            termIdx.forall { case (t, i) =>
-              java.util.Arrays.binarySearch(byTerm(t), p0 + i) >= 0
-            }
-          }
-          if (ptf > 0) Iterator.single((doc, ptf)) else Iterator.empty
-        }
-      }
-      .toDF("doc_id", "ptf")
-      .transform(Deletes.filterLive(_, root))
-  }
-
-  /** Index-backed phrase match (unscored filter context): matching doc_ids,
-    * ordered.
-    */
-  def phraseMatch(spark: SparkSession, root: String, phrase: Seq[String],
-      buckets: Int): DataFrame = {
-    import spark.implicits._
-    phraseTf(spark, root, phrase, buckets).select($"doc_id").orderBy($"doc_id")
-  }
-
-  /** Sloppy phrase match (ES `match_phrase` slop, ordered form): a doc
-    * matches when an increasing position chain p1 < p2 < … < pn exists —
-    * one position per phrase term, in phrase order — with span
-    * pn − p1 ≤ (n−1) + slop. slop = 0 is exact adjacency ([[phraseMatch]]).
-    *
-    * Existence is decided by the greedy chain: for each start p1 ascending,
-    * chain each next term to its smallest position > previous — greedy
-    * minimizes pn for a given p1, so it finds a qualifying chain iff one
-    * exists. One pass over the first term's positions with monotone
-    * pointers per term: O(Σ positions) per doc. Same scan/shuffle shape as
-    * [[phraseTf]].
-    */
-  def phraseMatchSloppy(spark: SparkSession, root: String, phrase: Seq[String],
-      slop: Int, buckets: Int): DataFrame = {
-    import spark.implicits._
-    val terms = phrase.flatMap(Analyzer.tokenize(_))
-    require(terms.length >= 2, "sloppy phrase needs >= 2 terms")
-    val distinctTerms = terms.distinct
-    val qBuckets = distinctTerms.map(Blocks.bucketOf(_, buckets)).distinct
-    val maxSpan = (terms.length - 1) + slop
-
     readRaw(spark, root)
       .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
         "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
@@ -267,35 +215,22 @@ object PositionalIndex {
       .flatMapGroups { (doc, it) =>
         val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
         it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        if (!distinctTerms.forall(byTerm.contains)) Iterator.empty
-        else {
-          val lists = terms.map(byTerm).toArray
-          val ptrs = new Array[Int](lists.length)
-          var found = false
-          val firsts = lists(0)
-          var i = 0
-          while (!found && i < firsts.length) {
-            var prev = firsts(i)
-            var ok = true
-            var t = 1
-            while (ok && t < lists.length) {
-              val l = lists(t)
-              // monotone pointer: first position strictly after prev
-              while (ptrs(t) < l.length && l(ptrs(t)) <= prev) ptrs(t) += 1
-              if (ptrs(t) >= l.length) { ok = false; i = firsts.length }
-              else prev = l(ptrs(t))
-              t += 1
-            }
-            if (ok && prev - firsts(i) <= maxSpan) found = true
-            i += 1
-          }
-          if (found) Iterator.single(doc) else Iterator.empty
-        }
+        val n = f(byTerm)
+        if (n > 0) Iterator.single((doc, n)) else Iterator.empty
       }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
+      .toDF("doc_id", "n")
   }
+
+  /** Filter context over [[perDoc]]: live doc_ids whose positions satisfy
+    * `pred`, ordered.
+    */
+  private[index] def docsWhere(spark: SparkSession, root: String,
+      terms: Seq[String], buckets: Int)(
+      pred: collection.Map[String, Array[Int]] => Boolean): DataFrame =
+    perDoc(spark, root, terms, buckets)(m => if (pred(m)) 1 else 0)
+      .select("doc_id")
+      .transform(Deletes.filterLive(_, root))
+      .orderBy("doc_id")
 
   /** Shared per-doc exact-phrase span starts: positions p0 where the whole
     * (analyzed) phrase matches consecutively. `byTerm` maps term → sorted
@@ -312,38 +247,45 @@ object PositionalIndex {
     }
   }
 
+  /** Per-doc phrase term frequency `(doc_id, ptf)` of the analyzed `terms`:
+    * the number of positions p0 at which the whole phrase matches
+    * consecutively (ES/Lucene's phrase freq — what a scored `match_phrase`
+    * uses as tf). Docs with zero matches are absent; tombstoned docs are
+    * present (they count in df).
+    */
+  private def phraseTf(spark: SparkSession, root: String, terms: Seq[String],
+      buckets: Int): DataFrame =
+    perDoc(spark, root, terms, buckets)(phraseStarts(terms, _).length)
+      .toDF("doc_id", "ptf")
+
+  /** Index-backed phrase match (unscored filter context): matching doc_ids,
+    * ordered. Sloppy and unordered phrases (ES `match_phrase` slop, Lucene
+    * `span_near`) and `span_or` are [[Intervals]] sources: an ordered or
+    * unordered `IMatch` with `maxGaps = slop`, and an `IAnyOf` of exact
+    * `IMatch`es.
+    */
+  def phraseMatch(spark: SparkSession, root: String, phrase: Seq[String],
+      buckets: Int): DataFrame = {
+    val terms = phrase.flatMap(Analyzer.tokenize(_))
+    require(terms.nonEmpty, "empty phrase")
+    docsWhere(spark, root, terms, buckets)(phraseStarts(terms, _).nonEmpty)
+  }
+
   /** Lucene `span_first`: the phrase must match with span END (exclusive,
     * 0-based) ≤ `end` — the whole occurrence lies inside the first `end`
-    * token positions. Filter context: matching doc_ids, ordered. Same
-    * pruned positional scan + doc-keyed group shape as [[phraseTf]].
+    * token positions. Filter context: matching doc_ids, ordered.
     */
   def spanFirst(spark: SparkSession, root: String, phrase: Seq[String],
       end: Int, buckets: Int): DataFrame = {
-    import spark.implicits._
     val terms = phrase.flatMap(Analyzer.tokenize(_))
     require(terms.nonEmpty, "empty span_first phrase")
     require(end >= terms.length, "end must cover the phrase length")
-    val distinctTerms = terms.distinct
-    val qBuckets = distinctTerms.map(Blocks.bucketOf(_, buckets)).distinct
     val n = terms.length
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(distinctTerms: _*))
-      .as[PosBlock]
-      .flatMap(b => decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        // earliest start suffices: starts are sorted ascending
-        val starts = phraseStarts(terms, byTerm)
-        if (starts.nonEmpty && starts(0) + n <= end) Iterator.single(doc)
-        else Iterator.empty
-      }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
+    docsWhere(spark, root, terms, buckets) { m =>
+      // earliest start suffices: starts are sorted ascending
+      val starts = phraseStarts(terms, m)
+      starts.nonEmpty && starts(0) + n <= end
+    }
   }
 
   /** Lucene `span_not`: docs with an include-phrase span that does NOT
@@ -355,69 +297,18 @@ object PositionalIndex {
   def spanNot(spark: SparkSession, root: String, includePhrase: Seq[String],
       excludePhrase: Seq[String], pre: Int, post: Int,
       buckets: Int): DataFrame = {
-    import spark.implicits._
     val inc = includePhrase.flatMap(Analyzer.tokenize(_))
     val exc = excludePhrase.flatMap(Analyzer.tokenize(_))
     require(inc.nonEmpty && exc.nonEmpty, "span_not needs both phrases")
-    val allTerms = (inc ++ exc).distinct
-    val qBuckets = allTerms.map(Blocks.bucketOf(_, buckets)).distinct
     val (li, le) = (inc.length, exc.length)
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(allTerms: _*))
-      .as[PosBlock]
-      .flatMap(b => decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        val incStarts = phraseStarts(inc, byTerm)
-        if (incStarts.isEmpty) Iterator.empty
-        else {
-          val excStarts = phraseStarts(exc, byTerm)
-          // include span [s, s+li-1] survives unless an exclude span
-          // [t, t+le-1] intersects the widened zone [s-pre, s+li-1+post]
-          val survives = incStarts.exists { s =>
-            !excStarts.exists(t => t + le - 1 >= s - pre && t <= s + li - 1 + post)
-          }
-          if (survives) Iterator.single(doc) else Iterator.empty
-        }
+    docsWhere(spark, root, inc ++ exc, buckets) { m =>
+      lazy val excStarts = phraseStarts(exc, m)
+      // include span [s, s+li-1] survives unless an exclude span
+      // [t, t+le-1] intersects the widened zone [s-pre, s+li-1+post]
+      phraseStarts(inc, m).exists { s =>
+        !excStarts.exists(t => t + le - 1 >= s - pre && t <= s + li - 1 + post)
       }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
-  }
-
-  /** Lucene `span_or`: docs where ANY of the phrases matches exactly —
-    * the union clause of the span family. ONE pruned positional scan over
-    * all phrases' terms (not a scan per phrase), per-doc check of each
-    * phrase against the same position map. Filter context, ordered.
-    */
-  def spanOr(spark: SparkSession, root: String, phrases: Seq[Seq[String]],
-      buckets: Int): DataFrame = {
-    import spark.implicits._
-    val analyzed = phrases.map(_.flatMap(Analyzer.tokenize(_)))
-    require(analyzed.nonEmpty && analyzed.forall(_.nonEmpty), "empty span_or")
-    val allTerms = analyzed.flatten.distinct
-    val qBuckets = allTerms.map(Blocks.bucketOf(_, buckets)).distinct
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(allTerms: _*))
-      .as[PosBlock]
-      .flatMap(b => decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        if (analyzed.exists(p => phraseStarts(p, byTerm).nonEmpty))
-          Iterator.single(doc)
-        else Iterator.empty
-      }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
+    }
   }
 
   /** Shared predicate of [[spanWithin]] / [[spanContaining]] (the doc-level
@@ -426,48 +317,35 @@ object PositionalIndex {
     * span [s, e] lies inside a big two-term window — one position a of
     * `bigA`, one b of `bigB`, window [min(a,b), max(a,b)] of span
     * ≤ 1 + slop (the span_near convention for two clauses), with
-    * min ≤ s and e ≤ max. Exact per doc: two-pointer-free pairwise check
-    * over the (doc-length-bounded) position lists, after the same pruned
-    * scan + doc-keyed group as every positional operator.
+    * min ≤ s and e ≤ max. Exact per doc: pairwise check over the
+    * (doc-length-bounded) position lists. Each big clause is one term: a
+    * `bigA`/`bigB` that analyzes to zero or several tokens is rejected.
     */
   private def spanContainment(spark: SparkSession, root: String,
       little: Seq[String], bigA: String, bigB: String, slop: Int,
       buckets: Int): DataFrame = {
-    import spark.implicits._
+    def oneTerm(clause: String): String = {
+      val toks = Analyzer.tokenize(clause)
+      require(toks.length == 1,
+        s"span containment big clause '$clause' must analyze to exactly one term")
+      toks.head
+    }
+    val (ta, tb) = (oneTerm(bigA), oneTerm(bigB))
     val lit = little.flatMap(Analyzer.tokenize(_))
-    val ta = Analyzer.tokenize(bigA).head
-    val tb = Analyzer.tokenize(bigB).head
     require(lit.nonEmpty, "span containment needs a little phrase")
     val ll = lit.length
     val maxSpan = 1 + slop
-    val allTerms = (lit :+ ta :+ tb).distinct
-    val qBuckets = allTerms.map(Blocks.bucketOf(_, buckets)).distinct
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(allTerms: _*))
-      .as[PosBlock]
-      .flatMap(b => decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        val starts = phraseStarts(lit, byTerm)
-        val as = byTerm.getOrElse(ta, Array.emptyIntArray)
-        val bs = byTerm.getOrElse(tb, Array.emptyIntArray)
-        val ok = starts.nonEmpty && as.nonEmpty && bs.nonEmpty &&
-          starts.exists { s =>
-            val e = s + ll - 1
-            as.exists(a => bs.exists { b =>
-              val lo = math.min(a, b); val hi = math.max(a, b)
-              hi - lo <= maxSpan && lo <= s && e <= hi
-            })
-          }
-        if (ok) Iterator.single(doc) else Iterator.empty
+    docsWhere(spark, root, lit :+ ta :+ tb, buckets) { m =>
+      val as = m.getOrElse(ta, Array.emptyIntArray)
+      val bs = m.getOrElse(tb, Array.emptyIntArray)
+      phraseStarts(lit, m).exists { s =>
+        val e = s + ll - 1
+        as.exists(a => bs.exists { b =>
+          val lo = math.min(a, b); val hi = math.max(a, b)
+          hi - lo <= maxSpan && lo <= s && e <= hi
+        })
       }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
+    }
   }
 
   /** Lucene `span_within`: the little (exact-phrase) span must lie entirely
@@ -486,134 +364,34 @@ object PositionalIndex {
       bigB: String, slop: Int, little: Seq[String], buckets: Int): DataFrame =
     spanContainment(spark, root, little, bigA, bigB, slop, buckets)
 
-  /** ES/Lucene `span_near` with `in_order: false`: the doc matches when one
-    * position per term (all distinct) fits inside a window of span
-    * ≤ (n−1) + slop, in ANY order — the unordered complement of
-    * [[phraseMatchSloppy]]. Decision per doc is a sliding window over the
-    * merged position stream: advance the right edge, count distinct terms
-    * covered with multiplicity, shrink from the left while all terms stay
-    * covered — O(Σ positions) per doc, same scan/shuffle shape as
-    * [[phraseTf]]. Exactness: a qualifying window exists iff some minimal
-    * window covering all terms has span ≤ maxSpan, and the sweep visits
-    * every minimal window.
-    */
-  def spanNearUnordered(spark: SparkSession, root: String, phrase: Seq[String],
-      slop: Int, buckets: Int): DataFrame = {
-    import spark.implicits._
-    val terms = phrase.flatMap(Analyzer.tokenize(_)).distinct
-    require(terms.length >= 2, "span_near needs >= 2 distinct terms")
-    val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct
-    val maxSpan = (terms.length - 1) + slop
-    val termIdx = terms.zipWithIndex.toMap
-    val bcIdx = spark.sparkContext.broadcast(termIdx)
-
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
-      .as[PosBlock]
-      .flatMap(b => decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val idx = bcIdx.value
-        val n = idx.size
-        val events = scala.collection.mutable.ArrayBuffer[(Int, Int)]() // (pos, term)
-        val seen = new Array[Boolean](n)
-        it.foreach { case (_, t, ps) =>
-          val ti = idx(t)
-          seen(ti) = true
-          ps.foreach(p => events += ((p, ti)))
-        }
-        if (!seen.forall(identity)) Iterator.empty
-        else {
-          val ev = events.sortBy(_._1).toArray
-          val counts = new Array[Int](n)
-          var covered = 0
-          var lo = 0
-          var found = false
-          var hi = 0
-          while (!found && hi < ev.length) {
-            val (p, t) = ev(hi)
-            if (counts(t) == 0) covered += 1
-            counts(t) += 1
-            while (covered == n && ev(lo)._1 < p - maxSpan) {
-              val (_, lt) = ev(lo)
-              counts(lt) -= 1
-              if (counts(lt) == 0) covered -= 1
-              lo += 1
-            }
-            if (covered == n && p - ev(lo)._1 <= maxSpan) found = true
-            hi += 1
-          }
-          if (found) Iterator.single(doc) else Iterator.empty
-        }
-      }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
-  }
-
-  /** ES `match_phrase_prefix` (search-as-you-type): the leading terms match
-    * as an exact adjacent phrase; the LAST position may hold ANY indexed
-    * term starting with `prefix`, expanded from the dictionary in term
-    * order, capped at `maxExpansions` (the ES max_expansions contract —
-    * ES defaults to 50). An empty expansion set matches nothing (no term
-    * can occupy the final slot), as in ES.
+  /** ES `match_phrase_prefix` (search-as-you-type): `phrase :+ prefix` is
+    * analyzed as one text and its LAST token is the prefix, as in ES. The
+    * leading terms match as an exact adjacent phrase; the last position may
+    * hold ANY indexed term starting with the prefix, expanded from the
+    * dictionary in term order, capped at `maxExpansions` (the ES
+    * max_expansions contract — ES defaults to 50). An empty expansion set
+    * matches nothing (no term can occupy the final slot), as in ES.
     *
-    * Plan shape = [[phraseTf]]: ONE positional scan pruned to the buckets of
-    * phrase terms + expansions with full term pushdown, one groupBy(doc)
-    * shuffle of only those terms' position lists, chain check per doc. The
-    * dictionary expansion is the same driver-side ≤maxExpansions read the
-    * prefix/wildcard term queries use.
+    * One positional scan over the leading terms + expansions; the expansion
+    * is the driver-side ≤maxExpansions dictionary read the prefix term
+    * queries use.
     */
   def phrasePrefixMatch(spark: SparkSession, root: String, phrase: Seq[String],
       prefix: String, buckets: Int, maxExpansions: Int = 50): DataFrame = {
     import spark.implicits._
-    val lead = phrase.flatMap(Analyzer.tokenize(_))
-    require(lead.nonEmpty, "match_phrase_prefix needs at least one full term")
-    val expansions = graft.io.Catalog
-      .readDictionary(spark, graft.io.Catalog.IndexPaths(root))
-      .toDF()
-      .filter($"term".startsWith(prefix))
-      .orderBy($"term")
-      .limit(maxExpansions)
-      .collect().map(_.getString(0))
+    val toks = (phrase :+ prefix).flatMap(Analyzer.tokenize(_))
+    require(toks.length >= 2, "match_phrase_prefix needs at least one full term")
+    val (lead, pfx) = (toks.init, toks.last)
+    val expansions = graft.search.TermQueries
+      .prefixExpansions(spark, root, pfx, maxExpansions)
     if (expansions.isEmpty)
       return spark.emptyDataset[Long].toDF("doc_id")
     val lastSlot = lead.length // expansion position offset from p0
-    val distinctTerms = (lead ++ expansions).distinct
-    val qBuckets = distinctTerms.map(Blocks.bucketOf(_, buckets)).distinct
-    val leadIdx = lead.zipWithIndex
-    val expSet = expansions.toSet
-
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(distinctTerms.toSeq: _*))
-      .as[PosBlock]
-      .flatMap(b => decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        val expLists = scala.collection.mutable.ArrayBuffer[Array[Int]]()
-        it.foreach { case (_, t, ps) =>
-          byTerm(t) = ps
-          if (expSet.contains(t)) expLists += ps
-        }
-        val ok = leadIdx.forall { case (t, _) => byTerm.contains(t) } &&
-          expLists.nonEmpty &&
-          byTerm(lead.head).exists { p0 =>
-            leadIdx.forall { case (t, i) =>
-              java.util.Arrays.binarySearch(byTerm(t), p0 + i) >= 0
-            } &&
-            expLists.exists(l =>
-              java.util.Arrays.binarySearch(l, p0 + lastSlot) >= 0)
-          }
-        if (ok) Iterator.single(doc) else Iterator.empty
-      }
-      .toDF("doc_id")
-      .transform(Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
+    docsWhere(spark, root, lead ++ expansions, buckets) { m =>
+      val expLists = expansions.flatMap(m.get)
+      expLists.nonEmpty && phraseStarts(lead, m).exists(p0 =>
+        expLists.exists(java.util.Arrays.binarySearch(_, p0 + lastSlot) >= 0))
+    }
   }
 
   /** Scored `match_phrase` (ES analog): BM25 top-k treating the phrase as a
@@ -637,15 +415,16 @@ object PositionalIndex {
   /** Un-truncated phrase scores `(doc_id, score)` — the composable form
     * [[phraseTopK]] cuts to k, and what a compound query (e.g.
     * search.QueryString) sums with its other clauses BEFORE any truncation.
+    * df counts tombstoned docs (N does too), so surviving scores do not move
+    * after a delete; the tombstones leave only the scored rows.
     */
   def phraseScores(spark: SparkSession, root: String, phrase: Seq[String],
       buckets: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val terms = phrase.flatMap(Analyzer.tokenize(_))
     require(terms.nonEmpty, "empty phrase")
     val stats = graft.io.Catalog.readCorpusStats(spark, graft.io.Catalog.IndexPaths(root))
-    val ptf = phraseTf(spark, root, phrase, buckets)
+    val ptf = phraseTf(spark, root, terms, buckets)
     val dfp = ptf.agg(count(lit(1)).as("dfp"))
 
     // (doc_id, dl) for all candidate docs from the first term's scored
@@ -661,7 +440,7 @@ object PositionalIndex {
       }
       .toDF("doc_id", "dl")
 
-    ptf.join(dls, "doc_id")
+    Deletes.filterLive(ptf, root).join(dls, "doc_id")
       .crossJoin(broadcast(dfp))
       .select($"doc_id",
         (log(lit(1.0) + (lit(stats.n_docs.toDouble) - $"dfp" + lit(0.5)) / ($"dfp" + lit(0.5))) *

@@ -49,16 +49,8 @@ object TermQueries {
     * item 7).
     */
   def prefix(spark: SparkSession, root: String, p: String,
-      maxExpansions: Int = 1000): DataFrame = {
-    import spark.implicits._
-    val expanded = Catalog.readDictionary(spark, IndexPaths(root))
-      .toDF()
-      .filter($"term".startsWith(p))
-      .orderBy($"term")
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
-    docsOfAny(spark, root, expanded)
-  }
+      maxExpansions: Int = 1000): DataFrame =
+    docsOfAny(spark, root, prefixExpansions(spark, root, p, maxExpansions))
 
   /** ES wildcard query: `*` = any sequence, `?` = one char, matched against
     * the dictionary (all other characters literal), then the single
@@ -147,11 +139,13 @@ object TermQueries {
     docsOfAny(spark, root, expanded)
   }
 
-  /** Capped, term-ordered dictionary expansion of a prefix — the shared
-    * building block of the scored prefix rewrites (`match_bool_prefix`,
-    * `simple_query_string`'s trailing `*`).
+  /** Capped, term-ordered dictionary expansion of a prefix — the one
+    * dictionary prefix read: `prefix`, the scored prefix rewrites
+    * (`match_bool_prefix`, `simple_query_string`'s trailing `*`) and
+    * `match_phrase_prefix` all expand through it. The prefix is used as
+    * given (callers analyze it first where ES does).
     */
-  private[search] def prefixExpansions(spark: SparkSession, root: String,
+  private[graft] def prefixExpansions(spark: SparkSession, root: String,
       p: String, maxExpansions: Int): Seq[String] = {
     import spark.implicits._
     Catalog.readDictionary(spark, IndexPaths(root))

@@ -26,6 +26,20 @@ class DeletesSpec extends AnyFunSuite {
   private def hits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  /** The tombstoned index with its positional index built over the whole
+    * corpus (positions, like postings, keep deleted docs until purge).
+    */
+  private lazy val delWithPositions: Indexer.BuildResult = {
+    val del = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm))
+    val parts = spark.sessionState.conf.numShufflePartitions
+    PositionalIndex.build(Catalog.readDocuments(spark, sfDir), del.paths.root,
+      del.meta.buckets, parts * 2, del.meta.doc_id_space, parts)
+    del
+  }
+
   test("soft delete: tombstoned docs excluded, surviving scores unchanged") {
     val clean = IndexCache.documentsIndex(spark, sfDir)
     val del = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm))
@@ -72,13 +86,9 @@ class DeletesSpec extends AnyFunSuite {
   }
 
   test("unscored paths exclude tombstones: boolean, wildcard, phrase") {
-    import spark.implicits._
     val clean = IndexCache.documentsIndex(spark, sfDir)
-    val del = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm))
+    val del = delWithPositions
     val dead = Deletes.read(spark, IndexPaths(del.paths.root)).toSet
-
-    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.select($"doc_id").as[Long].collect().toSet
 
     val orClean = ids(graft.search.Booleans.or(spark, clean.paths.root, Seq("join", "hash")))
     val orDel = ids(graft.search.Booleans.or(spark, del.paths.root, Seq("join", "hash")))
@@ -88,14 +98,53 @@ class DeletesSpec extends AnyFunSuite {
     val wcDel = ids(graft.search.TermQueries.wildcard(spark, del.paths.root, "*or*"))
     assert(wcDel == wcClean -- dead, "wildcard must exclude tombstones")
 
-    // positional index on the tombstoned root
-    val parts = spark.sessionState.conf.numShufflePartitions
-    PositionalIndex.build(Catalog.readDocuments(spark, sfDir), del.paths.root,
-      del.meta.buckets, parts * 2, del.meta.doc_id_space, parts)
     val phClean = ids(graft.operators.Phrase.phraseMatch(spark, sfDir, Seq("join", "hash")))
     val phDel = ids(PositionalIndex.phraseMatch(spark, del.paths.root,
       Seq("join", "hash"), del.meta.buckets))
     assert(phDel == phClean -- dead, "phrase match must exclude tombstones")
+
+    // every other positional filter, against the clean positional index
+    import Intervals.{IAnyOf, IMatch}
+    val pos = IndexCache.positionalIndex(spark, sfDir)
+    val ops: Seq[(String, (String, Int) => org.apache.spark.sql.DataFrame)] = Seq(
+      "span_first" -> ((r, b) =>
+        PositionalIndex.spanFirst(spark, r, Seq("join", "hash"), 40, b)),
+      "span_not" -> ((r, b) =>
+        PositionalIndex.spanNot(spark, r, Seq("join"), Seq("hash"), 1, 1, b)),
+      "span_within" -> ((r, b) =>
+        PositionalIndex.spanWithin(spark, r, Seq("hash"), "join", "scan", 6, b)),
+      "phrase_prefix" -> ((r, b) =>
+        PositionalIndex.phrasePrefixMatch(spark, r, Seq("join"), "h", b)),
+      "slop" -> ((r, b) => Intervals.filterDocs(spark, r,
+        IMatch("join hash", maxGaps = 2, ordered = true), b)),
+      "span_near" -> ((r, b) => Intervals.filterDocs(spark, r,
+        IMatch("join hash", maxGaps = 2, ordered = false), b)),
+      "span_or" -> ((r, b) => Intervals.filterDocs(spark, r,
+        IAnyOf(Seq(IMatch("join hash", maxGaps = 0, ordered = true),
+          IMatch("merge sort", maxGaps = 0, ordered = true))), b)))
+    var tombstonedMatches = 0
+    for ((name, op) <- ops) {
+      val c = ids(op(pos.paths.root, pos.meta.buckets))
+      val d = ids(op(del.paths.root, del.meta.buckets))
+      assert(d == c -- dead, s"$name must exclude tombstones")
+      tombstonedMatches += c.count(dead)
+    }
+    assert(tombstonedMatches > 0, "some clean match must be tombstoned")
+  }
+
+  test("phrase scores: df counts tombstones, so surviving scores do not move") {
+    val clean = IndexCache.positionalIndex(spark, sfDir)
+    val del = delWithPositions
+    val dead = Deletes.read(spark, IndexPaths(del.paths.root)).toSet
+    for (p <- Seq(Seq("join", "hash"), Seq("join"))) {
+      val cleanScores = hits(PositionalIndex.phraseScores(spark,
+        clean.paths.root, p, clean.meta.buckets)).toMap
+      assert(cleanScores.keys.exists(dead), s"phrase $p must match a tombstoned doc")
+      val got = hits(PositionalIndex.phraseScores(spark,
+        del.paths.root, p, del.meta.buckets)).toMap
+      assert(got == cleanScores.filter { case (d, _) => !dead(d) },
+        s"phrase $p: surviving docs' scores must equal the clean index's")
+    }
   }
 
   test("queries running concurrently with a purge never fail or surface tombstoned docs") {

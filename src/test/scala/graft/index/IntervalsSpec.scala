@@ -124,8 +124,9 @@ class IntervalsSpec extends AnyFunSuite {
           ((t(i) == "join" && t(i + 1) == "hash") ||
             (t(i) == "merge" && t(i + 1) == "sort")))
       }.map(_.doc_id).sorted.toSeq
-    val gotOr = PositionalIndex.spanOr(spark, idx.paths.root,
-      Seq(Seq("join", "hash"), Seq("merge", "sort")), idx.meta.buckets)
+    val gotOr = Intervals.filterDocs(spark, idx.paths.root,
+      IAnyOf(Seq(IMatch("join hash", maxGaps = 0, ordered = true),
+        IMatch("merge sort", maxGaps = 0, ordered = true))), idx.meta.buckets)
       .collect().map(_.getLong(0)).toSeq
     assert(gotOr == bruteOr() && gotOr.nonEmpty)
 
@@ -149,5 +150,13 @@ class IntervalsSpec extends AnyFunSuite {
       "join", "window", 8, Seq("hash"), idx.meta.buckets)
       .collect().map(_.getLong(0)).toSeq
     assert(gotC == bruteWithin("hash", "join", "window", 8) && gotC.nonEmpty)
+
+    // each big clause is one term: none (crash) or two (truncation) reject
+    for (bad <- Seq("!!", "join window")) {
+      intercept[IllegalArgumentException](PositionalIndex.spanWithin(spark,
+        idx.paths.root, Seq("hash"), bad, "scan", 6, idx.meta.buckets))
+      intercept[IllegalArgumentException](PositionalIndex.spanContaining(spark,
+        idx.paths.root, "join", bad, 8, Seq("hash"), idx.meta.buckets))
+    }
   }
 }

@@ -64,12 +64,14 @@ class PositionalIndexSpec extends AnyFunSuite {
           t(i + lead.length).startsWith(prefix) && allowed(t(i + lead.length))
         }
       }.map(_.doc_id).sorted.toSeq
-    for ((lead, pre) <- Seq((Seq("join"), "h"), (Seq("join", "hash"), "s"),
-        (Seq("window"), "a"), (Seq("join"), "zzz"))) {
+    // the prefix is analyzed with the phrase: "H" matches like "h"
+    for ((lead, pre, brutePre) <- Seq((Seq("join"), "h", "h"),
+        (Seq("join", "hash"), "s", "s"), (Seq("window"), "a", "a"),
+        (Seq("join"), "zzz", "zzz"), (Seq("join"), "H", "h"))) {
       val got = graft.index.PositionalIndex.phrasePrefixMatch(
         spark, idx.paths.root, lead, pre, idx.meta.buckets)
         .as[Long].collect().toSeq
-      assert(got == brute(lead, pre), s"phrase_prefix lead=$lead pre=$pre")
+      assert(got == brute(lead, brutePre), s"phrase_prefix lead=$lead pre=$pre")
     }
     // cap: maxExpansions=1 keeps only the lexicographically first expansion
     val firstH = graft.io.Catalog
@@ -122,16 +124,18 @@ class PositionalIndexSpec extends AnyFunSuite {
       }.map(_.doc_id).sorted.toSeq
     for ((terms, slop) <- Seq((Seq("join", "hash"), 2), (Seq("window", "join"), 0),
         (Seq("join", "hash", "window"), 3))) {
-      val got = graft.index.PositionalIndex.spanNearUnordered(
-        spark, idx.paths.root, terms, slop, idx.meta.buckets)
+      val got = Intervals.filterDocs(spark, idx.paths.root,
+        Intervals.IMatch(terms.mkString(" "), maxGaps = slop, ordered = false),
+        idx.meta.buckets)
         .as[Long].collect().toSeq
       assert(got == brute(terms, slop), s"span_near $terms slop=$slop")
       if (terms.length == 2)
         assert(got == brutePairs(terms(0), terms(1), slop))
       // unordered accepts every ordered match
       if (terms.length == 2) {
-        val ordered = graft.index.PositionalIndex.phraseMatchSloppy(
-          spark, idx.paths.root, terms, slop, idx.meta.buckets)
+        val ordered = Intervals.filterDocs(spark, idx.paths.root,
+          Intervals.IMatch(terms.mkString(" "), maxGaps = slop, ordered = true),
+          idx.meta.buckets)
           .as[Long].collect().toSet
         assert(ordered.subsetOf(got.toSet),
           "ordered slop matches must be a subset of unordered span_near")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{IndexCache, TestSpark}
-import graft.index.PositionalIndex
+import graft.index.{Intervals, PositionalIndex}
+import graft.index.Intervals.IMatch
 import graft.io.Catalog
 
 class SlopRescoreSpec extends AnyFunSuite {
@@ -17,7 +18,8 @@ class SlopRescoreSpec extends AnyFunSuite {
     val idx = IndexCache.positionalIndex(spark, sfDir)
     val phrase = Seq("join", "hash")
     def docs(slop: Int): Set[Long] =
-      PositionalIndex.phraseMatchSloppy(spark, idx.paths.root, phrase, slop, idx.meta.buckets)
+      Intervals.filterDocs(spark, idx.paths.root,
+        IMatch(phrase.mkString(" "), maxGaps = slop, ordered = true), idx.meta.buckets)
         .as[Long].collect().toSet
     val exact = PositionalIndex.phraseMatch(spark, idx.paths.root, phrase, idx.meta.buckets)
       .as[Long].collect().toSet
@@ -32,7 +34,8 @@ class SlopRescoreSpec extends AnyFunSuite {
     val idx = IndexCache.positionalIndex(spark, sfDir)
     val phrase = Seq("join", "hash")
     val slop = 2
-    val got = PositionalIndex.phraseMatchSloppy(spark, idx.paths.root, phrase, slop, idx.meta.buckets)
+    val got = Intervals.filterDocs(spark, idx.paths.root,
+      IMatch(phrase.mkString(" "), maxGaps = slop, ordered = true), idx.meta.buckets)
       .as[Long].collect().toSet
     val want = Catalog.readDocuments(spark, sfDir).collect()
       .filter { d =>
