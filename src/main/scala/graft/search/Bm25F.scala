@@ -47,12 +47,9 @@ object Bm25F {
 
     // one pruned scan per field; each row emits its field-normalized,
     // field-weighted pseudo-tf share — row-local, no join
-    def fieldRows(root: String, w: Double, avgdl: Double) = {
-      val paths = IndexPaths(root)
-      val meta = Indexer.readMeta(spark, root)
-      val qBuckets = terms.map(Blocks.bucketOf(_, meta.buckets)).distinct
-      Catalog.readPostings(spark, paths)
-        .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
+    def fieldRows(root: String, w: Double, avgdl: Double) =
+      SearchEngine.queryPostings(spark, IndexPaths(root), terms,
+          Indexer.readMeta(spark, root).buckets)
         .flatMap { blk =>
           val (ts, _) = bcIdfs.value
           val ti = java.util.Arrays.binarySearch(ts.asInstanceOf[Array[AnyRef]], blk.term)
@@ -65,7 +62,6 @@ object Bm25F {
             }
           }
         }
-    }
 
     fieldRows(textRoot, wText, txStats.avgdl)
       .union(fieldRows(titleRoot, wTitle, tiStats.avgdl))

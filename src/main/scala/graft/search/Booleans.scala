@@ -3,6 +3,8 @@ package graft.search
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import org.roaringbitmap.longlong.Roaring64NavigableMap
+
 import graft.core.{Blocks, Codec}
 import graft.index.Indexer
 import graft.io.Catalog
@@ -18,12 +20,19 @@ import graft.io.Catalog.IndexPaths
 object Booleans {
 
   /** DocIDs containing `term` — bucket-pruned, term-pushed-down scan. */
-  def docsOf(spark: SparkSession, root: String, term: String): DataFrame = {
+  def docsOf(spark: SparkSession, root: String, term: String): DataFrame =
+    liveDocs(spark, root, Seq(term))
+
+  /** Live docIDs of every posting of `terms` (one per posting): ONE
+    * bucket-pruned, term-pushed-down scan decoding only the docID payloads.
+    */
+  private def liveDocs(spark: SparkSession, root: String,
+      terms: Seq[String]): DataFrame = {
     import spark.implicits._
     val meta = Indexer.readMeta(spark, root)
-    val b = Blocks.bucketOf(term, meta.buckets)
+    val qBuckets = terms.map(Blocks.bucketOf(_, meta.buckets)).distinct
     Catalog.readParquet(spark, IndexPaths(root).postings)
-      .filter($"bucket" === b && $"term" === term)
+      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
       .select($"n_docs", $"doc_deltas_vb")
       .as[(Int, Array[Byte])]
       .flatMap { case (n, deltas) => Codec.decodeDeltas(deltas, n) }
@@ -40,14 +49,14 @@ object Booleans {
       .orderBy($"doc_id")
   }
 
-  /** Docs containing ANY term (disjunction, unscored): union + distinct. */
+  /** Docs containing ANY term (disjunction, unscored): one scan for all
+    * the terms (dictionary expansions reach dozens), distinct. No terms
+    * match no docs.
+    */
   def or(spark: SparkSession, root: String, terms: Seq[String]): DataFrame = {
-    require(terms.nonEmpty)
     import spark.implicits._
-    terms.map(docsOf(spark, root, _))
-      .reduce(_ union _)
-      .distinct()
-      .orderBy($"doc_id")
+    if (terms.isEmpty) spark.emptyDataset[Long].toDF("doc_id")
+    else liveDocs(spark, root, terms).distinct().orderBy($"doc_id")
   }
 
   /** Docs containing `pos` but not `neg` (left-anti). */
@@ -58,11 +67,12 @@ object Booleans {
       .orderBy($"doc_id")
   }
 
-  /** Bitmap conjunction: per docID-range shard, decode each term's blocks
-    * into a Roaring64 bitmap and intersect — the scale path for boolean
-    * filters (RoaringBitmap ships with Spark). Equivalent to [[and]]; the
-    * set ops run partition-local at bitmap speed and only the surviving
-    * docIDs leave the shard, instead of shuffling full docID sets through
+  /** Bitmap conjunction: per docID-range shard ([[SearchEngine.perShard]]),
+    * decode each term's blocks into a Roaring64 bitmap, intersect, and drop
+    * the shard's tombstones — the scale path for boolean filters
+    * (RoaringBitmap ships with Spark). Equivalent to [[and]]; the set ops
+    * run partition-local at bitmap speed and only the surviving docIDs
+    * leave the shard, instead of shuffling full docID sets through
     * semi-joins.
     */
   def andBitmap(spark: SparkSession, root: String, terms: Seq[String],
@@ -70,43 +80,20 @@ object Booleans {
     require(terms.nonEmpty)
     import spark.implicits._
     val meta = Indexer.readMeta(spark, root)
-    val shards = shardsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
-    val qBuckets = terms.map(Blocks.bucketOf(_, meta.buckets)).distinct
-    val nTerms = terms.size
-    val termSet = terms.toSet
-
-    Catalog.readPostings(spark, Catalog.IndexPaths(root))
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
-      .flatMap(b => ((b.first_doc / width) to (b.last_doc / width)).iterator.map(s => (s.toInt, b)))
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val lo = shard.toLong * width
-        val hi = lo + width
-        val maps = scala.collection.mutable.Map[String, org.roaringbitmap.longlong.Roaring64NavigableMap]()
-        it.foreach { case (_, b) =>
-          if (termSet.contains(b.term)) {
-            val bm = maps.getOrElseUpdate(b.term, new org.roaringbitmap.longlong.Roaring64NavigableMap())
-            val docs = Codec.decodeDeltas(b.doc_deltas_vb, b.n_docs)
-            var i = 0
-            while (i < docs.length) {
-              if (docs(i) >= lo && docs(i) < hi) bm.addLong(docs(i))
-              i += 1
-            }
-          }
-        }
-        if (maps.size < nTerms) Iterator.empty
-        else {
-          val result = maps(terms.head)
-          terms.tail.foreach(t => result.and(maps(t)))
-          val out = new scala.collection.mutable.ArrayBuffer[Long](result.getIntCardinality)
-          val li = result.getLongIterator
-          while (li.hasNext) out += li.next()
-          out.iterator
-        }
+    SearchEngine.perShard(spark, root, meta, terms, shardsOpt) { sh =>
+      if (!terms.forall(sh.byTerm.contains)) Iterator.empty
+      else {
+        val result = terms.map { t =>
+          val bm = new Roaring64NavigableMap()
+          sh.byTerm(t).foreach(b => Codec.decodeDeltas(b.doc_deltas_vb, b.n_docs)
+            .foreach(d => if (d >= sh.lo && d < sh.hi) bm.addLong(d)))
+          bm
+        }.reduce { (a, b) => a.and(b); a }
+        if (sh.deleted != null) sh.deleted.foreach(result.removeLong)
+        result.toArray.iterator
       }
+    }
       .toDF("doc_id")
-      .transform(graft.index.Deletes.filterLive(_, root))
       .orderBy($"doc_id")
   }
 }

@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Blocks, QueryModel}
 import graft.index.Indexer
-import graft.io.Catalog
 import graft.io.Catalog.IndexPaths
 
 /** ES `_msearch`: a BATCH of queries answered in one index pass.
@@ -34,64 +32,31 @@ import graft.io.Catalog.IndexPaths
 object MSearch {
 
   /** Run `queries` (id → raw terms) as one batch; returns one row per
-    * (query_id, hit) with rounded scores, top-k per query.
+    * (query_id, hit) with rounded scores, top-k per query. Each query is
+    * modelled exactly as [[SearchEngine.topKWand]] models it, and
+    * tombstoned docs never score.
     */
   def msearch(spark: SparkSession, root: String,
       queries: Seq[(String, Seq[String])], k: Int,
       shardsOpt: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val paths = IndexPaths(root)
     val meta = Indexer.readMeta(spark, root)
-    val syn =
-      if (meta.synonyms) Catalog.readSynonyms(spark, paths)
-      else Map.empty[String, String]
-
-    // one dictionary lookup for the union of all queries' analyzed terms
-    val allTerms = queries
-      .flatMap { case (_, raw) => QueryModel.analyzedTerms(raw, meta.analyzer, syn) }
-      .distinct.sorted
-    if (allTerms.isEmpty) return emptyResult(spark)
-    val stats = Catalog.readCorpusStats(spark, paths)
-    val dfByTerm = Catalog.readDictionary(spark, paths)
-      .filter($"term".isin(allTerms: _*))
-      .collect().map(d => d.term -> d.df).toMap
-    val models: Seq[(String, QueryModel)] = queries.map { case (qid, raw) =>
-      qid -> QueryModel.build(raw, stats.n_docs, dfByTerm, stats.avgdl, k,
-        meta.analyzer, syn)
-    }.filter(!_._2.isEmpty)
+    val models = queries.map(_._1)
+      .zip(SearchEngine.queryModels(spark, IndexPaths(root), queries.map(_._2), k,
+        meta.analyzer, meta.synonyms))
+      .filter(!_._2.isEmpty)
     if (models.isEmpty) return emptyResult(spark)
     val bcModels = spark.sparkContext.broadcast(models)
-
-    val shards = shardsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
     val robust = meta.incremental
-    val qBuckets = allTerms.map(Blocks.bucketOf(_, meta.buckets)).distinct
 
-    val candidates = Catalog.readPostings(spark, paths)
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(allTerms: _*))
-      .flatMap { b =>
-        ((b.first_doc / width) to (b.last_doc / width)).iterator
-          .map(s => (s.toInt, b))
+    // one scan + one shard exchange for the union of all queries' terms
+    val allTerms = models.flatMap(_._2.terms).distinct.sorted
+    val candidates = SearchEngine.perShard(spark, root, meta, allTerms, shardsOpt) { sh =>
+      bcModels.value.iterator.flatMap { case (qid, qm) =>
+        Wand.scoreShard(sh.cursors(qm, robust), sh.lo, k, deleted = sh.deleted)
+          .iterator.map(h => (qid, h.doc_id, h.score))
       }
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val byTerm = it.map(_._2).toArray.groupBy(_.term)
-        val lo = shard.toLong * width
-        val hi = lo + width
-        bcModels.value.iterator.flatMap { case (qid, qm) =>
-          val cursors = Array.newBuilder[Wand.TermCursor]
-          var ti = 0
-          while (ti < qm.terms.length) {
-            byTerm.get(qm.terms(ti)).foreach { bs =>
-              cursors += new Wand.TermCursor(qm.idfs(ti), bs.sortBy(_.first_doc),
-                qm.avgdl, hi, robust)
-            }
-            ti += 1
-          }
-          Wand.scoreShard(cursors.result(), lo, k)
-            .iterator.map(h => (qid, h.doc_id, h.score))
-        }
-      }
+    }
       .toDF("query_id", "doc_id", "score")
 
     // ≤ shards·k rows per query reach this window — a candidate cut, not a

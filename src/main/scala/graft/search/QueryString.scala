@@ -93,7 +93,7 @@ object QueryString {
     val filtered =
       if (p.mustNot.isEmpty) summed
       else summed.join(
-        TermQueries.docsOfAny(spark, textRoot, p.mustNot),
+        Booleans.or(spark, textRoot, p.mustNot),
         Seq("doc_id"), "left_anti")
     filtered
       .orderBy($"score".desc, $"doc_id".asc)

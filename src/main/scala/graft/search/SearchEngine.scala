@@ -1,11 +1,11 @@
 package graft.search
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.index.Indexer
+import graft.index.{IndexMeta, Indexer}
 import graft.io.Catalog
 import graft.io.Catalog.IndexPaths
 import graft.model.Hit
@@ -33,29 +33,129 @@ object SearchEngine {
     */
   def queryModel(spark: SparkSession, paths: IndexPaths, rawTerms: Seq[String],
       k: Int, analyzer: String = "standard",
-      useSynonyms: Boolean = false): QueryModel = {
+      useSynonyms: Boolean = false): QueryModel =
+    queryModels(spark, paths, Seq(rawTerms), k, analyzer, useSynonyms).head
+
+  /** [[queryModel]] for a batch of queries, in input order: one synonym,
+    * corpus-stats and dictionary lookup for the whole batch.
+    */
+  private[search] def queryModels(spark: SparkSession, paths: IndexPaths,
+      queries: Seq[Seq[String]], k: Int, analyzer: String,
+      useSynonyms: Boolean): Seq[QueryModel] = {
     // index-time synonym map (meta.synonyms): query tokens canonicalize
     // through the SAME map the build applied — index/query analysis parity
     val syn = if (useSynonyms) Catalog.readSynonyms(spark, paths) else Map.empty[String, String]
     // ES search_analyzer convention: identity except edge_ngram -> standard
-    val qAnalyzer = graft.core.Analyzer.searchForm(analyzer)
-    val terms = QueryModel.analyzedTerms(rawTerms, qAnalyzer, syn)
-    if (terms.isEmpty) return QueryModel(Array.empty, Array.empty, 0.0, k)
+    val qAnalyzer = Analyzer.searchForm(analyzer)
+    val terms = queries.flatMap(QueryModel.analyzedTerms(_, qAnalyzer, syn)).distinct
+    if (terms.isEmpty) return queries.map(_ => QueryModel(Array.empty, Array.empty, 0.0, k))
     val stats = Catalog.readCorpusStats(spark, paths)
     val dfByTerm = Catalog.docFreqs(spark, paths, terms)
     // build from the RAW terms: boost suffixes must reach the weight parser
-    QueryModel.build(rawTerms, stats.n_docs, dfByTerm, stats.avgdl, k, qAnalyzer, syn)
+    queries.map(QueryModel.build(_, stats.n_docs, dfByTerm, stats.avgdl, k, qAnalyzer, syn))
   }
 
   /** Postings scan restricted to the given terms (bucket pruning + term
     * pushdown).
     */
-  private def queryPostings(spark: SparkSession, paths: IndexPaths,
-      terms: Seq[String], buckets: Int) = {
+  private[search] def queryPostings(spark: SparkSession, paths: IndexPaths,
+      terms: Seq[String], buckets: Int): Dataset[PostingBlock] = {
     import spark.implicits._
     val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct
     Catalog.readPostings(spark, paths)
       .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
+  }
+
+  /** One docID-range shard of a [[perShard]] scan: the shard's posting
+    * blocks by term, each term's sorted by first_doc, and its sorted slices
+    * of the excluded docs (tombstones ∪ `excludedDocs`) and of the allowed
+    * docs — null when the slice is empty or no range filter is active, as
+    * [[Wand.scoreShard]] expects.
+    */
+  private[search] final case class Shard(lo: Long, hi: Long,
+      byTerm: Map[String, Array[PostingBlock]], deleted: Array[Long],
+      allowed: Array[Long]) {
+
+    /** Scoring cursors for the query terms with postings in this shard, in
+      * the model's (sorted) term order.
+      */
+    def cursors(qm: QueryModel, robust: Boolean): Array[Wand.TermCursor] =
+      qm.terms.indices.flatMap(ti => byTerm.get(qm.terms(ti)).map(bs =>
+        new Wand.TermCursor(qm.idfs(ti), bs, qm.avgdl, hi, robust))).toArray
+  }
+
+  /** The docID-shard executor under [[topKWand]], [[MSearch.msearch]] and
+    * [[Booleans.andBitmap]]. The index is term-bucketed on disk (scan
+    * pruning) but these run document-at-a-time, so the `terms`' matching
+    * blocks are re-grouped into docID-range shards: every term's postings
+    * for shard s meet in one group and `f` runs once per shard holding
+    * blocks. Only the terms' (compressed) blocks cross this shuffle; the
+    * salted runs are already range-disjoint so per-shard block lists stay
+    * sorted-by-first_doc after a local sort. Shard count scales with
+    * parallelism (`shardsOpt`, default the shuffle partitions).
+    */
+  private[search] def perShard[T: Encoder](spark: SparkSession, root: String,
+      meta: IndexMeta, terms: Seq[String], shardsOpt: Option[Int],
+      excludedDocs: Option[DataFrame] = None,
+      allowedDocs: Option[DataFrame] = None)(f: Shard => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    val paths = IndexPaths(root)
+    val shards = shardsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
+    val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
+    val run: (Int, Iterator[PostingBlock], Array[Long], Array[Long]) => Iterator[T] =
+      (shard, blocks, deleted, allowed) => {
+        val lo = shard.toLong * width
+        val byTerm = blocks.toArray.groupBy(_.term)
+          .view.mapValues(_.sortBy(_.first_doc)).toMap
+        f(Shard(lo, lo + width, byTerm, deleted, allowed))
+      }
+
+    val blocksByShard = queryPostings(spark, paths, terms, meta.buckets)
+      .flatMap { b =>
+        // a ≤128-doc block rarely spans more than one width-sized shard
+        ((b.first_doc / width) to (b.last_doc / width)).iterator
+          .map(s => (s.toInt, b))
+      }
+      .groupByKey(_._1)
+
+    // per-shard auxiliary docID sets, shuffled into the SAME docID-range
+    // shards as the blocks (cogroup) — each shard filters against its own
+    // slice, no global broadcast: tombstones (tag=false) and, when a range
+    // filter is active, the allowed set from the range-pruned metadata scan
+    // (tag=true)
+    val rangeActive = allowedDocs.isDefined
+    val aux: Option[Dataset[(Int, Long, Boolean)]] = {
+      def tagged(df: DataFrame, tag: Boolean) =
+        df.select($"doc_id".cast("long")).as[Long]
+          .map(d => ((d / width).toInt, d, tag))
+      // exclusions (tag=false): live tombstones ∪ ES bool.must_not doc sets
+      // — the scorer treats both identically (exact eval-time rejection)
+      val dels =
+        (if (!graft.index.Deletes.hasDeletes(paths)) None
+         else Some(tagged(Catalog.readParquet(spark, paths.deletes), false))) ++
+          excludedDocs.map(tagged(_, false))
+      val allow = allowedDocs.map(tagged(_, true))
+      (dels ++ allow).reduceOption(_ union _)
+    }
+    aux match {
+      case None =>
+        blocksByShard.flatMapGroups((shard, it) => run(shard, it.map(_._2), null, null))
+      case Some(auxDs) =>
+        blocksByShard.cogroup(auxDs.groupByKey(_._1)) { (shard, blockIt, auxIt) =>
+          val del = scala.collection.mutable.ArrayBuffer[Long]()
+          val allow = scala.collection.mutable.ArrayBuffer[Long]()
+          auxIt.foreach { case (_, d, isAllow) =>
+            (if (isAllow) allow else del) += d
+          }
+          // a shard with no blocks, or a range filter allowing nothing in
+          // this shard: no doc qualifies
+          if (!blockIt.hasNext || (rangeActive && allow.isEmpty)) Iterator.empty
+          else {
+            run(shard, blockIt.map(_._2), if (del.isEmpty) null else del.toArray.sorted,
+              if (rangeActive) allow.toArray.sorted else null)
+          }
+        }
+    }
   }
 
   /** Exhaustive index scorer: [[scoreAllDocs]] cut to the global top-k.
@@ -185,15 +285,9 @@ object SearchEngine {
 
   /** Block-Max WAND top-k (SURVEY.md §3.2) — the production query path.
     *
-    * The index is term-bucketed on disk (scan pruning) but scoring is
-    * document-at-a-time, so the matching blocks are re-grouped into docID
-    * range shards: every query term's postings for shard s meet in one group,
-    * Wand.scoreShard runs per shard with exact block-max skipping, and only
-    * ≤ shards·k candidate rows reach the global TakeOrderedAndProject.
-    * Only the query terms' (compressed) blocks ever cross this shuffle; the
-    * salted runs are already range-disjoint so per-shard block lists stay
-    * sorted-by-first_doc after a local sort. Shard count scales with
-    * parallelism, independent of k and corpus size.
+    * Runs on the docID-shard executor ([[perShard]]): Wand.scoreShard runs
+    * per shard with exact block-max skipping, and only ≤ shards·k candidate
+    * rows reach the global TakeOrderedAndProject.
     *
     * Every ES query shape on this path is a parameter of this one call:
     *  - `minMatch`: `minimum_should_match` (= #terms is `match`
@@ -219,9 +313,8 @@ object SearchEngine {
       allowedDocs: Option[org.apache.spark.sql.DataFrame] = None,
       excludedDocs: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val paths = IndexPaths(root)
     val meta = Indexer.readMeta(spark, root)
-    val qm = queryModel(spark, paths, rawTerms, k, meta.analyzer, meta.synonyms)
+    val qm = queryModel(spark, IndexPaths(root), rawTerms, k, meta.analyzer, meta.synonyms)
     if (qm.isEmpty || qm.terms.length < minMatch) return emptyHits(spark)
     val (afterScore, afterDoc) = after.getOrElse((Double.PositiveInfinity, -1L))
     val bcQm = spark.sparkContext.broadcast(qm)
@@ -230,97 +323,24 @@ object SearchEngine {
     // NON-SCORING cursors (idf 0 ⇒ zero bounds and zero contributions);
     // disjoint from analyzed terms by the ':' construction
     val filterTerms = filters.distinct.sorted.toArray
-    val shards = shardsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
     // incrementally-grown indexes carry stale stored bounds (avgdl drift) —
     // robust bounds are mandatory there, independent of the caller's flag
     val robust = robustBounds || meta.incremental
 
-    // per-shard scorer, shared by the plain and aux-aware plans below
-    val scoreGroup: (Int, Iterator[PostingBlock], Array[Long], Array[Long]) => Iterator[Hit] =
-      (shard, it, deleted, allowed) => {
+    perShard(spark, root, meta, qm.terms.toSeq ++ filterTerms, shardsOpt,
+        excludedDocs, allowedDocs) { sh =>
+      // a shard missing any filter term's postings holds no matching docs
+      if (!filterTerms.forall(sh.byTerm.contains)) Iterator.empty
+      else {
         val qmv = bcQm.value
-        val byTerm = it.toArray.groupBy(_.term)
-        // a shard missing any filter term's postings holds no matching docs
-        if (!filterTerms.forall(byTerm.contains)) Iterator.empty
-        else {
-          val lo = shard.toLong * width
-          val hi = lo + width
-          val cursors = new scala.collection.mutable.ArrayBuffer[Wand.TermCursor](
-            qmv.terms.length + filterTerms.length)
-          val req = new scala.collection.mutable.ArrayBuffer[Boolean](
-            qmv.terms.length + filterTerms.length)
-          var ti = 0
-          while (ti < qmv.terms.length) {
-            byTerm.get(qmv.terms(ti)).foreach { bs =>
-              cursors += new Wand.TermCursor(qmv.idfs(ti), bs.sortBy(_.first_doc),
-                qmv.avgdl, hi, robust)
-              req += false
-            }
-            ti += 1
-          }
-          ti = 0
-          while (ti < filterTerms.length) {
-            cursors += new Wand.TermCursor(0.0,
-              byTerm(filterTerms(ti)).sortBy(_.first_doc), qmv.avgdl, hi, robust)
-            req += true
-            ti += 1
-          }
-          Wand.scoreShard(cursors.toArray, lo, qmv.k, minMatch, afterScore,
-            afterDoc, req.toArray, deleted, allowed).iterator
-        }
+        val scoring = sh.cursors(qmv, robust)
+        val filtering = filterTerms.map(t =>
+          new Wand.TermCursor(0.0, sh.byTerm(t), qmv.avgdl, sh.hi, robust))
+        val required = scoring.map(_ => false) ++ filtering.map(_ => true)
+        Wand.scoreShard(scoring ++ filtering, sh.lo, qmv.k, minMatch, afterScore,
+          afterDoc, required, sh.deleted, sh.allowed).iterator
       }
-
-    val blocksByShard = queryPostings(spark, paths,
-        qm.terms.toSeq ++ filterTerms, meta.buckets)
-      .flatMap { b =>
-        // a ≤128-doc block rarely spans more than one width-sized shard
-        ((b.first_doc / width) to (b.last_doc / width)).iterator
-          .map(s => (s.toInt, b))
-      }
-      .groupByKey(_._1)
-
-    // per-shard auxiliary docID sets, shuffled into the SAME docID-range
-    // shards as the blocks (cogroup) — each shard filters against its own
-    // slice, no global broadcast: tombstones (tag=false) and, when a range
-    // filter is active, the allowed set from the range-pruned metadata scan
-    // (tag=true)
-    val rangeActive = allowedDocs.isDefined
-    val aux: Option[org.apache.spark.sql.Dataset[(Int, Long, Boolean)]] = {
-      def tagged(df: org.apache.spark.sql.DataFrame, tag: Boolean) =
-        df.select($"doc_id".cast("long")).as[Long]
-          .map(d => ((d / width).toInt, d, tag))
-      // exclusions (tag=false): live tombstones ∪ ES bool.must_not doc sets
-      // — the scorer treats both identically (exact eval-time rejection)
-      val dels =
-        (if (!graft.index.Deletes.hasDeletes(paths)) None
-         else Some(tagged(Catalog.readParquet(spark, paths.deletes), false))) ++
-          excludedDocs.map(tagged(_, false))
-      val allow = allowedDocs.map(tagged(_, true))
-      (dels ++ allow).reduceOption(_ union _)
     }
-    val hits = aux match {
-      case None =>
-        blocksByShard.flatMapGroups((shard, it) =>
-          scoreGroup(shard, it.map(_._2), null, null))
-      case Some(auxDs) =>
-        blocksByShard.cogroup(auxDs.groupByKey(_._1)) { (shard, blockIt, auxIt) =>
-          val del = scala.collection.mutable.ArrayBuffer[Long]()
-          val allow = scala.collection.mutable.ArrayBuffer[Long]()
-          auxIt.foreach { case (_, d, isAllow) =>
-            (if (isAllow) allow else del) += d
-          }
-          // a range filter allowing nothing in this shard: no doc qualifies
-          if (rangeActive && allow.isEmpty) Iterator.empty
-          else {
-            val deleted = if (del.isEmpty) null else { val a = del.toArray; java.util.Arrays.sort(a); a }
-            val allowed = if (!rangeActive) null else { val a = allow.toArray; java.util.Arrays.sort(a); a }
-            scoreGroup(shard, blockIt.map(_._2), deleted, allowed)
-          }
-        }
-    }
-
-    hits
       .toDF()
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
@@ -573,7 +593,8 @@ object SearchEngine {
     * applies to synonym-expanded positions: each synonym GROUP scores as a
     * single pseudo-term with df = max of the member terms' dfs (blended
     * rarity) and tf = SUM of the member tfs in the doc, then groups sum
-    * like ordinary query terms. Groups must be disjoint.
+    * like ordinary query terms. Groups analyze under the index's search
+    * analyzer and must be disjoint (after analysis).
     *
     * Plan: one pruned postings scan over all member terms (bucket pruning +
     * term pushdown), then a codegen'd pivot `groupBy(doc_id).agg(sum(when(
@@ -594,7 +615,7 @@ object SearchEngine {
     val paths = IndexPaths(root)
     val meta = Indexer.readMeta(spark, root)
     val analyzed = groups.map(g =>
-      graft.core.QueryModel.analyzedTerms(g)).filter(_.nonEmpty)
+      QueryModel.analyzedTerms(g, Analyzer.searchForm(meta.analyzer))).filter(_.nonEmpty)
     require(analyzed.flatten.distinct.length == analyzed.flatten.length,
       "synonym groups must be disjoint")
     if (analyzed.isEmpty) return rounded(emptyHits(spark))

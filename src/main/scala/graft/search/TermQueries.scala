@@ -1,10 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Blocks, Codec}
-import graft.index.Indexer
 import graft.io.Catalog
 import graft.io.Catalog.IndexPaths
 
@@ -19,27 +17,25 @@ import graft.io.Catalog.IndexPaths
   */
 object TermQueries {
 
-  /** One bucket-pruned, term-pushed-down scan for a term disjunction:
-    * decode docID payloads, distinct. (Booleans.or is per-term scans — fine
-    * for 2-3 explicit terms; expansions can reach dozens, so they get a
-    * single scan.)
+  /** Capped, term-ordered dictionary expansion: the dictionary terms
+    * matching `cond`, the first `maxExpansions` in term order (ES
+    * max_expansions).
     */
-  private[search] def docsOfAny(spark: SparkSession, root: String,
-      terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    if (terms.isEmpty) return spark.emptyDataset[Long].toDF("doc_id")
-    val meta = Indexer.readMeta(spark, root)
-    val qBuckets = terms.map(Blocks.bucketOf(_, meta.buckets)).distinct
-    Catalog.readParquet(spark, IndexPaths(root).postings)
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
-      .select($"n_docs", $"doc_deltas_vb")
-      .as[(Int, Array[Byte])]
-      .flatMap { case (n, deltas) => Codec.decodeDeltas(deltas, n) }
-      .toDF("doc_id")
-      .distinct()
-      .transform(graft.index.Deletes.filterLive(_, root))
-      .orderBy($"doc_id")
-  }
+  private def expansions(spark: SparkSession, root: String, cond: Column,
+      maxExpansions: Int): Seq[String] =
+    Catalog.readDictionary(spark, IndexPaths(root))
+      .toDF()
+      .filter(cond)
+      .orderBy(col("term"))
+      .limit(maxExpansions)
+      .collect().map(_.getString(0)).toSeq
+
+  /** Dictionary terms within `maxDist` edits of `term`, behind the same
+    * lossless length prune as [[suggest]].
+    */
+  private def withinEdits(term: String, maxDist: Int): Column =
+    abs(length(col("term")) - lit(term.length)) <= maxDist &&
+      levenshtein(col("term"), lit(term)) <= maxDist
 
   /** ES prefix query: docs containing any indexed term with the prefix.
     * Dictionary expansion (term-ordered, capped — the ES max-clause guard)
@@ -50,7 +46,7 @@ object TermQueries {
     */
   def prefix(spark: SparkSession, root: String, p: String,
       maxExpansions: Int = 1000): DataFrame =
-    docsOfAny(spark, root, prefixExpansions(spark, root, p, maxExpansions))
+    Booleans.or(spark, root, prefixExpansions(spark, root, p, maxExpansions))
 
   /** ES wildcard query: `*` = any sequence, `?` = one char, matched against
     * the dictionary (all other characters literal), then the single
@@ -59,20 +55,13 @@ object TermQueries {
     */
   def wildcard(spark: SparkSession, root: String, pattern: String,
       maxExpansions: Int = 1000): DataFrame = {
-    import spark.implicits._
     val rx = pattern.map {
       case '*' => ".*"
       case '?' => "."
       case c if "\\.[]{}()<>+-=!$^|".contains(c) => "\\" + c
       case c => c.toString
     }.mkString("^", "", "$")
-    val expanded = Catalog.readDictionary(spark, IndexPaths(root))
-      .toDF()
-      .filter($"term".rlike(rx))
-      .orderBy($"term")
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
-    docsOfAny(spark, root, expanded)
+    Booleans.or(spark, root, expansions(spark, root, col("term").rlike(rx), maxExpansions))
   }
 
   /** ES term suggester: spelling corrections for a (possibly misspelled)
@@ -97,10 +86,6 @@ object TermQueries {
       .select($"term", $"dist", $"df")
   }
 
-  /** ES fuzzy query: dictionary term expansion within `maxDist` edits
-    * (capped at `maxExpansions`, term-ordered — ES's max_expansions), then
-    * the single bucket-pruned disjunction scan.
-    */
   /** SCORED fuzzy query — the ES `fuzzy`/`match`-fuzziness shape with
     * `rewrite: scoring_boolean` (public ES rewrite mode): the dictionary
     * expansion becomes a bool-should of term queries, each expansion
@@ -111,14 +96,7 @@ object TermQueries {
     */
   def fuzzyScored(spark: SparkSession, root: String, term: String, k: Int,
       maxDist: Int = 1, maxExpansions: Int = 50): DataFrame = {
-    import spark.implicits._
-    val expanded = Catalog.readDictionary(spark, IndexPaths(root))
-      .toDF()
-      .filter(abs(length($"term") - lit(term.length)) <= maxDist &&
-        levenshtein($"term", lit(term)) <= maxDist)
-      .orderBy($"term")
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
+    val expanded = expansions(spark, root, withinEdits(term, maxDist), maxExpansions)
     SearchEngine.rounded(SearchEngine.topKWand(spark, root, expanded, k))
   }
 
@@ -128,16 +106,9 @@ object TermQueries {
     * `?`) — ES's Lucene regex dialect, Java's, and RE2 agree there.
     */
   def regexp(spark: SparkSession, root: String, pattern: String,
-      maxExpansions: Int = 1000): DataFrame = {
-    import spark.implicits._
-    val expanded = Catalog.readDictionary(spark, IndexPaths(root))
-      .toDF()
-      .filter($"term".rlike(s"^(?:$pattern)$$"))
-      .orderBy($"term")
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
-    docsOfAny(spark, root, expanded)
-  }
+      maxExpansions: Int = 1000): DataFrame =
+    Booleans.or(spark, root,
+      expansions(spark, root, col("term").rlike(s"^(?:$pattern)$$"), maxExpansions))
 
   /** Capped, term-ordered dictionary expansion of a prefix — the one
     * dictionary prefix read: `prefix`, the scored prefix rewrites
@@ -146,15 +117,8 @@ object TermQueries {
     * given (callers analyze it first where ES does).
     */
   private[graft] def prefixExpansions(spark: SparkSession, root: String,
-      p: String, maxExpansions: Int): Seq[String] = {
-    import spark.implicits._
-    Catalog.readDictionary(spark, IndexPaths(root))
-      .toDF()
-      .filter($"term".startsWith(p))
-      .orderBy($"term")
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
-  }
+      p: String, maxExpansions: Int): Seq[String] =
+    expansions(spark, root, col("term").startsWith(p), maxExpansions)
 
   /** ES `match_bool_prefix`: every term but the last is an ordinary scored
     * should-clause; the last is a prefix, rewritten scoring_boolean
@@ -170,19 +134,14 @@ object TermQueries {
     SearchEngine.rounded(SearchEngine.topKWand(spark, root, all, k))
   }
 
+  /** ES fuzzy query: dictionary term expansion within `maxDist` edits
+    * (capped at `maxExpansions`, term-ordered — ES's max_expansions), then
+    * the single bucket-pruned disjunction scan.
+    */
   def fuzzy(spark: SparkSession, root: String, term: String,
-      maxDist: Int = 1, maxExpansions: Int = 50): DataFrame = {
-    import spark.implicits._
-    val expanded = Catalog.readDictionary(spark, IndexPaths(root))
-      .toDF()
-      // same lossless length prune as [[suggest]]
-      .filter(abs(length($"term") - lit(term.length)) <= maxDist &&
-        levenshtein($"term", lit(term)) <= maxDist)
-      .orderBy($"term")
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
-    docsOfAny(spark, root, expanded)
-  }
+      maxDist: Int = 1, maxExpansions: Int = 50): DataFrame =
+    Booleans.or(spark, root,
+      expansions(spark, root, withinEdits(term, maxDist), maxExpansions))
 
   /** ES `_termvectors` API: one document's term vector — per-term tf in the
     * doc plus corpus-wide df and total term frequency (ES `term_statistics:

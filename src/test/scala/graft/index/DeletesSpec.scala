@@ -78,6 +78,20 @@ class DeletesSpec extends AnyFunSuite {
       "terms_set returned a tombstoned doc")
   }
 
+  test("msearch excludes tombstones, query by query as topKWand") {
+    val root = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm)).paths.root
+    val queries = Seq("a" -> q, "b" -> Seq("hash", "stream"), "c" -> Seq(delTerm))
+    val batch = graft.search.MSearch.msearch(spark, root, queries, 10).collect()
+    for ((qid, raw) <- queries) {
+      val got = batch.filter(_.getString(0) == qid)
+        .map(r => (r.getLong(1), r.getDouble(2))).toSeq
+      // msearch presents ties in rounded-score order; re-sort the same way
+      val want = hits(rounded(SearchEngine.topKWand(spark, root, raw, 10)))
+        .sortBy { case (doc, s) => (-s, doc) }
+      assert(got == want, s"msearch != topKWand on the deleted index for $qid")
+    }
+  }
+
   test("deleteByQuery is idempotent (tombstone set union)") {
     val del = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm))
     val n1 = Deletes.read(spark, IndexPaths(del.paths.root)).length
@@ -93,6 +107,12 @@ class DeletesSpec extends AnyFunSuite {
     val orClean = ids(graft.search.Booleans.or(spark, clean.paths.root, Seq("join", "hash")))
     val orDel = ids(graft.search.Booleans.or(spark, del.paths.root, Seq("join", "hash")))
     assert(orDel == orClean -- dead, "boolean OR must exclude tombstones")
+    for (terms <- Seq(Seq("join", "hash"), Seq("window", "vector"))) {
+      val and = graft.search.Booleans.and(spark, del.paths.root, terms)
+      val bitmap = graft.search.Booleans.andBitmap(spark, del.paths.root, terms)
+      assert(ids(bitmap) == ids(and) && ids(and).nonEmpty,
+        s"bitmap AND must drop tombstones like AND for $terms")
+    }
 
     val wcClean = ids(graft.search.TermQueries.wildcard(spark, clean.paths.root, "*or*"))
     val wcDel = ids(graft.search.TermQueries.wildcard(spark, del.paths.root, "*or*"))

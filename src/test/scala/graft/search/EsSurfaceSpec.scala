@@ -72,12 +72,17 @@ class EsSurfaceSpec extends AnyFunSuite {
   test("synonym query: singleton groups reduce to plain BM25; grouping changes scoring") {
     // Lucene SynonymQuery with every group a single term is algebraically
     // plain BM25 (max df over one term = its df; summed tf = its tf)
-    val q = Seq("join", "window", "vector")
-    val single = SearchEngine.synonymTopK(spark, root, q.map(Seq(_)), 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val plain = rounded(SearchEngine.topKWand(spark, root, q, 10))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(single == plain, "singleton synonym groups must equal plain BM25")
+    // the english index analyzes the groups with its own analyzer, as topKWand
+    val english = IndexCache.englishIndex(spark, sfDir).paths.root
+    for ((ix, q) <- Seq(root -> Seq("join", "window", "vector"),
+        english -> Seq("joins", "windows", "vector"))) {
+      val single = SearchEngine.synonymTopK(spark, ix, q.map(Seq(_)), 10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val plain = rounded(SearchEngine.topKWand(spark, ix, q, 10))
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(single.nonEmpty && single == plain,
+        s"singleton synonym groups must equal plain BM25 on $ix")
+    }
     // a real group blends: must differ from treating members as independent
     val grouped = SearchEngine.synonymTopK(spark, root,
       Seq(Seq("join", "merge"), Seq("window")), 10)

@@ -16,14 +16,15 @@ class MSearchSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("msearch equals the per-query single-search path, query by query") {
-    val idx = IndexCache.documentsIndex(spark, sfDir)
     val queries = Seq(
       "a" -> Seq("join", "window", "vector"),
       "b" -> Seq("hash", "stream"),
       "c" -> Seq("the", "a", "join"),
       "d" -> Seq("zebra"), // no postings: contributes no rows
       "e" -> Seq("scan", "filter", "sort", "merge", "group"))
-    for (k <- Seq(3, 10, 50)) {
+    // the edge_ngram index analyzes queries with its search form, as topKWand
+    for (idx <- Seq(IndexCache.documentsIndex(spark, sfDir),
+        IndexCache.edgeNgramIndex(spark, sfDir)); k <- Seq(3, 10, 50)) {
       val batch = MSearch.msearch(spark, idx.paths.root, queries, k)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -35,7 +36,8 @@ class MSearchSpec extends AnyFunSuite {
         val single = rounded(SearchEngine.topKWand(spark, idx.paths.root, raw, k))
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
           .sortBy { case (doc, s) => (-s, doc) }
-        assert(batch.getOrElse(qid, Nil) == single, s"qid=$qid k=$k")
+        assert(batch.getOrElse(qid, Nil) == single,
+          s"qid=$qid k=$k analyzer=${idx.meta.analyzer}")
       }
       // no rows from queries outside the batch
       assert(batch.keySet.subsetOf(queries.map(_._1).toSet))
