@@ -71,14 +71,15 @@ object Deletes {
       Seq("doc_id"), "left_anti")
   }
 
-  /** ES `_delete_by_query` with a match-any (OR) query over the analyzed
-    * terms: tombstone every doc containing any of them. Idempotent (set
-    * union); returns the live tombstone count after the merge.
+  /** ES `_delete_by_query` with a match-any (OR) query over the terms
+    * analyzed like the index (its analyzer and synonyms): tombstone every
+    * doc containing any of them. Idempotent (set union); returns the live
+    * tombstone count after the merge.
     */
   def deleteByQuery(spark: SparkSession, root: String, rawTerms: Seq[String]): Long = {
     import spark.implicits._
     val paths = IndexPaths(root)
-    val terms = graft.core.QueryModel.analyzedTerms(rawTerms)
+    val terms = graft.search.SearchEngine.analyzeLikeIndex(spark, root, rawTerms)
     if (terms.isEmpty) return if (hasDeletes(paths)) spark.read.parquet(paths.deletes).count() else 0L
     val matched = Booleans.or(spark, root, terms)
     val merged =

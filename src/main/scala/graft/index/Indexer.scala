@@ -141,12 +141,12 @@ object Indexer {
   // per-JVM memo keyed by (resolved path, fingerprint) — published meta
   // generations are immutable (Catalog's artifact-memo contract); before
   // this every indexed query paid a one-row parquet job for the meta read
-  private val metaMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), IndexMeta]
+  private[graft] val metaMemo = new graft.io.GenerationMemo[IndexMeta]
 
   def readMeta(spark: SparkSession, root: String): IndexMeta = {
-    val p = IndexPaths(root).meta
-    metaMemo.getOrElseUpdate((p, graft.io.Catalog.fingerprint(p)),
+    val paths = IndexPaths(root)
+    val p = paths.meta
+    metaMemo(paths.metaBase, (p, graft.io.Catalog.fingerprint(p)))(
       readMetaUncached(spark, p))
   }
 

@@ -103,14 +103,14 @@ object Catalog {
   // (path, file fingerprint): schema inference reads parquet footers on
   // the driver per read (~30–80 ms here), and every query re-reads the
   // same immutable tables/artifacts. A changed file set re-infers.
-  private val schemaMemo = new scala.collection.concurrent.TrieMap[
-    (String, String), org.apache.spark.sql.types.StructType]
+  private[graft] val schemaMemo =
+    new GenerationMemo[org.apache.spark.sql.types.StructType]
 
   /** `spark.read.parquet(path)` with the schema served from the per-JVM
     * memo — footer inference runs once per (path, fingerprint).
     */
   def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val sch = schemaMemo.getOrElseUpdate((path, fingerprint(path)),
+    val sch = schemaMemo(GenerationMemo.baseOf(path), (path, fingerprint(path)))(
       spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
@@ -183,12 +183,22 @@ object Catalog {
   private lazy val postingsSchema =
     org.apache.spark.sql.Encoders.product[PostingBlock].schema
 
+  // per-JVM memo of the resolved postings relation, keyed by (session,
+  // resolved path, fingerprint): resolving it lists the bucket directories
+  // and builds Spark's file index (~30 ms of a warm query's driver time).
+  // A generation's files never change, so the resolved relation is reused;
+  // each query still adds its own bucket/term filter and scans parquet.
+  private[graft] val postingsMemo = new GenerationMemo[Dataset[PostingBlock]]
+
   def readPostings(spark: SparkSession, paths: IndexPaths): Dataset[PostingBlock] = {
     import spark.implicits._
-    spark.read.schema(postingsSchema).parquet(paths.postings)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "max_tf", "min_dl", "sum_tf", "max_tf_norm", "doc_deltas_vb", "tfs_vb", "dls_vb")
-      .as[PostingBlock]
+    val p = paths.postings
+    postingsMemo(paths.postingsBase, (spark, p, fingerprint(p))) {
+      spark.read.schema(postingsSchema).parquet(p)
+        .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
+          "n_docs", "max_tf", "min_dl", "sum_tf", "max_tf_norm", "doc_deltas_vb", "tfs_vb", "dls_vb")
+        .as[PostingBlock]
+    }
   }
 
   def writeDictionary(dict: Dataset[DictEntry], paths: IndexPaths): Unit =
@@ -207,10 +217,9 @@ object Catalog {
   // (an ES node holds exactly this state — segment dictionaries and
   // stats — resident per segment for the same reason). Query RESULTS are
   // never cached: postings scans and scoring run from parquet per query.
-  private val statsMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), CorpusStats]
-  private val dictMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), Array[DictEntry]]
+  // Each memo keeps the current and previous generation per artifact base.
+  private[graft] val statsMemo = new GenerationMemo[CorpusStats]
+  private[graft] val dictMemo = new GenerationMemo[Array[DictEntry]]
 
   /** Dictionaries at or under this many parquet bytes are served from the
     * per-JVM memo (as a driver-local relation — lookups and expansions scan
@@ -229,7 +238,7 @@ object Catalog {
       .map(_.toLong).getOrElse(DefaultDictCacheMaxBytes)
     val bytes = Fs.listDataFiles(p).map(_._2).sum
     if (bytes > gate) None
-    else Some(dictMemo.getOrElseUpdate((p, fingerprint(p)),
+    else Some(dictMemo(paths.dictionaryBase, (p, fingerprint(p)))(
       spark.read.parquet(p).as[DictEntry].collect()).toSeq)
   }
 
@@ -264,7 +273,7 @@ object Catalog {
   def readCorpusStats(spark: SparkSession, paths: IndexPaths): CorpusStats = {
     import spark.implicits._
     val p = paths.corpusStats
-    statsMemo.getOrElseUpdate((p, fingerprint(p)),
+    statsMemo(paths.corpusStatsBase, (p, fingerprint(p)))(
       spark.read.parquet(p).as[CorpusStats].head())
   }
 

@@ -58,24 +58,31 @@ object Fs {
   // dangling _v<N> dir that the next publish overwrites.
 
   /** Resolve an artifact base path through its version pointer (the plain
-    * path when no pointer exists — the never-swapped fast path).
+    * path when no pointer exists — the never-swapped fast path). A pointer
+    * that exists but cannot be opened is re-resolved at most
+    * [[ResolveAttempts]] times; then the pointer path is reported.
     */
   def resolveVersioned(base: String): String = {
     val (fs, _) = fsOf(base)
     val ptr = new Path(s"$base.ptr")
-    if (!fs.exists(ptr)) base
-    else {
+    var attempt = 0
+    while (attempt < ResolveAttempts) {
+      if (!fs.exists(ptr)) return base
       // exists→open race belt: with the ATOMIC_MOVE pointer flip the file
       // never vanishes, but a remote FS could still surface a transient
-      // not-found between the two calls — one re-resolve covers it
-      val in =
-        try fs.open(ptr)
-        catch { case _: java.io.FileNotFoundException => return resolveVersioned(base) }
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      base + v
+      // not-found between the two calls — a re-resolve covers it
+      try {
+        val in = fs.open(ptr)
+        val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+          finally in.close()
+        return base + v
+      } catch { case _: java.io.FileNotFoundException => attempt += 1 }
     }
+    throw new java.io.FileNotFoundException(
+      s"version pointer $ptr exists but could not be opened in $ResolveAttempts attempts")
   }
+
+  val ResolveAttempts = 3
 
   /** Publish `stagingDir` as the next version of `base` and atomically
     * flip the pointer. Single-writer (compaction / streaming refresh are
@@ -156,18 +163,32 @@ object Fs {
   }
 
   /** Recursive data-file listing: (path, length, mtime) for every file not
-    * starting with `_` or `.` (Spark markers/hidden), sorted by path.
+    * starting with `_` or `.` (Spark markers/hidden), sorted by path. Every
+    * directory is descended, `_temporary` included.
+    *
+    * On `file://` the tree is walked with `listStatus`: the local
+    * `listFiles(recursive)` builds a `LocatedFileStatus` per file, which
+    * loads the file's permissions by forking a shell — milliseconds per
+    * file, paid by every memo-key fingerprint of every query. Other
+    * schemes keep `listFiles(recursive)`, the cheap call on object stores.
     */
   def listDataFiles(path: String): Seq[(String, Long, Long)] = {
     val (fs, p) = fsOf(path)
-    if (!fs.exists(p)) return Seq.empty
     val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
+    def add(s: org.apache.hadoop.fs.FileStatus): Unit = {
       val name = s.getPath.getName
       if (!name.startsWith("_") && !name.startsWith("."))
         out += ((s.getPath.toUri.getPath, s.getLen, s.getModificationTime))
+    }
+    if (fs.getUri.getScheme == "file") {
+      def walk(s: org.apache.hadoop.fs.FileStatus): Unit =
+        if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk) else add(s)
+      try walk(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => return Seq.empty }
+    } else {
+      if (!fs.exists(p)) return Seq.empty
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) add(it.next())
     }
     out.sortBy(_._1).toSeq
   }

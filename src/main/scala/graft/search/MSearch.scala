@@ -46,13 +46,12 @@ object MSearch {
         meta.analyzer, meta.synonyms))
       .filter(!_._2.isEmpty)
     if (models.isEmpty) return emptyResult(spark)
-    val bcModels = spark.sparkContext.broadcast(models)
     val robust = meta.incremental
 
     // one scan + one shard exchange for the union of all queries' terms
     val allTerms = models.flatMap(_._2.terms).distinct.sorted
     val candidates = SearchEngine.perShard(spark, root, meta, allTerms, shardsOpt) { sh =>
-      bcModels.value.iterator.flatMap { case (qid, qm) =>
+      models.iterator.flatMap { case (qid, qm) =>
         Wand.scoreShard(sh.cursors(qm, robust), sh.lo, k, deleted = sh.deleted)
           .iterator.map(h => (qid, h.doc_id, h.score))
       }

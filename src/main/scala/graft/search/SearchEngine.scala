@@ -15,7 +15,7 @@ import graft.model.Hit
   * Query path:
   *   1. driver: analyze query (same Analyzer as indexing), load dictionary
   *      rows for the query terms + corpus stats (a few rows), compute idf,
-  *      broadcast the QueryModel;
+  *      ship the QueryModel with the tasks;
   *   2. executors: postings scan pruned to the query terms' buckets
   *      (partition pruning on the `bucket` dir column) and `term ∈ terms`
   *      (predicate pushdown to Parquet row groups — postings are written
@@ -61,9 +61,17 @@ object SearchEngine {
   private[search] def queryPostings(spark: SparkSession, paths: IndexPaths,
       terms: Seq[String], buckets: Int): Dataset[PostingBlock] = {
     import spark.implicits._
+    postingsOf(spark, paths, terms, buckets).as[PostingBlock]
+  }
+
+  /** [[queryPostings]] as rows: the untyped filter skips a typed Dataset's
+    * encoder resolution, which the shard operator does not need.
+    */
+  private def postingsOf(spark: SparkSession, paths: IndexPaths,
+      terms: Seq[String], buckets: Int): DataFrame = {
     val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct
-    Catalog.readPostings(spark, paths)
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
+    Catalog.readPostings(spark, paths).toDF()
+      .filter(col("bucket").isin(qBuckets: _*) && col("term").isin(terms: _*))
   }
 
   /** One docID-range shard of a [[perShard]] scan: the shard's posting
@@ -72,7 +80,7 @@ object SearchEngine {
     * docs — null when the slice is empty or no range filter is active, as
     * [[Wand.scoreShard]] expects.
     */
-  private[search] final case class Shard(lo: Long, hi: Long,
+  private[graft] final case class Shard(lo: Long, hi: Long,
       byTerm: Map[String, Array[PostingBlock]], deleted: Array[Long],
       allowed: Array[Long]) {
 
@@ -88,9 +96,13 @@ object SearchEngine {
     * [[Booleans.andBitmap]]. The index is term-bucketed on disk (scan
     * pruning) but these run document-at-a-time, so the `terms`' matching
     * blocks are re-grouped into docID-range shards: every term's postings
-    * for shard s meet in one group and `f` runs once per shard holding
-    * blocks. Only the terms' (compressed) blocks cross this shuffle; the
-    * salted runs are already range-disjoint so per-shard block lists stay
+    * for shard s meet in one task and `f` runs once per shard holding
+    * blocks. One Catalyst operator ([[graft.sql.PerShard]]) does it: the
+    * pruned postings scan and each aux docID set (tombstones,
+    * `excludedDocs`, `allowedDocs`) are its children, each moved into the
+    * shards by its own exchange inside the operator. Only the terms'
+    * (compressed) blocks and the aux doc_ids are shuffled; the salted runs
+    * are already range-disjoint so per-shard block lists stay
     * sorted-by-first_doc after a local sort. Shard count scales with
     * parallelism (`shardsOpt`, default the shuffle partitions).
     */
@@ -98,64 +110,18 @@ object SearchEngine {
       meta: IndexMeta, terms: Seq[String], shardsOpt: Option[Int],
       excludedDocs: Option[DataFrame] = None,
       allowedDocs: Option[DataFrame] = None)(f: Shard => Iterator[T]): Dataset[T] = {
-    import spark.implicits._
     val paths = IndexPaths(root)
     val shards = shardsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
     val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
-    val run: (Int, Iterator[PostingBlock], Array[Long], Array[Long]) => Iterator[T] =
-      (shard, blocks, deleted, allowed) => {
-        val lo = shard.toLong * width
-        val byTerm = blocks.toArray.groupBy(_.term)
-          .view.mapValues(_.sortBy(_.first_doc)).toMap
-        f(Shard(lo, lo + width, byTerm, deleted, allowed))
-      }
-
-    val blocksByShard = queryPostings(spark, paths, terms, meta.buckets)
-      .flatMap { b =>
-        // a ≤128-doc block rarely spans more than one width-sized shard
-        ((b.first_doc / width) to (b.last_doc / width)).iterator
-          .map(s => (s.toInt, b))
-      }
-      .groupByKey(_._1)
-
-    // per-shard auxiliary docID sets, shuffled into the SAME docID-range
-    // shards as the blocks (cogroup) — each shard filters against its own
-    // slice, no global broadcast: tombstones (tag=false) and, when a range
-    // filter is active, the allowed set from the range-pruned metadata scan
-    // (tag=true)
-    val rangeActive = allowedDocs.isDefined
-    val aux: Option[Dataset[(Int, Long, Boolean)]] = {
-      def tagged(df: DataFrame, tag: Boolean) =
-        df.select($"doc_id".cast("long")).as[Long]
-          .map(d => ((d / width).toInt, d, tag))
-      // exclusions (tag=false): live tombstones ∪ ES bool.must_not doc sets
-      // — the scorer treats both identically (exact eval-time rejection)
-      val dels =
-        (if (!graft.index.Deletes.hasDeletes(paths)) None
-         else Some(tagged(Catalog.readParquet(spark, paths.deletes), false))) ++
-          excludedDocs.map(tagged(_, false))
-      val allow = allowedDocs.map(tagged(_, true))
-      (dels ++ allow).reduceOption(_ union _)
-    }
-    aux match {
-      case None =>
-        blocksByShard.flatMapGroups((shard, it) => run(shard, it.map(_._2), null, null))
-      case Some(auxDs) =>
-        blocksByShard.cogroup(auxDs.groupByKey(_._1)) { (shard, blockIt, auxIt) =>
-          val del = scala.collection.mutable.ArrayBuffer[Long]()
-          val allow = scala.collection.mutable.ArrayBuffer[Long]()
-          auxIt.foreach { case (_, d, isAllow) =>
-            (if (isAllow) allow else del) += d
-          }
-          // a shard with no blocks, or a range filter allowing nothing in
-          // this shard: no doc qualifies
-          if (!blockIt.hasNext || (rangeActive && allow.isEmpty)) Iterator.empty
-          else {
-            run(shard, blockIt.map(_._2), if (del.isEmpty) null else del.toArray.sorted,
-              if (rangeActive) allow.toArray.sorted else null)
-          }
-        }
-    }
+    def docIds(df: DataFrame) = df.select(col("doc_id").cast("long"))
+    // exclusions: live tombstones ∪ ES bool.must_not doc sets — the scorer
+    // treats both identically (exact eval-time rejection)
+    val excluded =
+      (if (!graft.index.Deletes.hasDeletes(paths)) None
+       else Some(Catalog.readParquet(spark, paths.deletes))) ++ excludedDocs
+    graft.sql.PerShard.dataset(spark, shards, width,
+      postingsOf(spark, paths, terms, meta.buckets),
+      excluded.map(docIds).toSeq, allowedDocs.map(docIds))(f)
   }
 
   /** Exhaustive index scorer: [[scoreAllDocs]] cut to the global top-k.
@@ -317,7 +283,6 @@ object SearchEngine {
     val qm = queryModel(spark, IndexPaths(root), rawTerms, k, meta.analyzer, meta.synonyms)
     if (qm.isEmpty || qm.terms.length < minMatch) return emptyHits(spark)
     val (afterScore, afterDoc) = after.getOrElse((Double.PositiveInfinity, -1L))
-    val bcQm = spark.sparkContext.broadcast(qm)
     // filter terms (ES filter context): synthetic `field:value` posting
     // lists (KeywordIndex) joined into the same scan as required,
     // NON-SCORING cursors (idf 0 ⇒ zero bounds and zero contributions);
@@ -332,12 +297,11 @@ object SearchEngine {
       // a shard missing any filter term's postings holds no matching docs
       if (!filterTerms.forall(sh.byTerm.contains)) Iterator.empty
       else {
-        val qmv = bcQm.value
-        val scoring = sh.cursors(qmv, robust)
+        val scoring = sh.cursors(qm, robust)
         val filtering = filterTerms.map(t =>
-          new Wand.TermCursor(0.0, sh.byTerm(t), qmv.avgdl, sh.hi, robust))
+          new Wand.TermCursor(0.0, sh.byTerm(t), qm.avgdl, sh.hi, robust))
         val required = scoring.map(_ => false) ++ filtering.map(_ => true)
-        Wand.scoreShard(scoring ++ filtering, sh.lo, qmv.k, minMatch, afterScore,
+        Wand.scoreShard(scoring ++ filtering, sh.lo, qm.k, minMatch, afterScore,
           afterDoc, required, sh.deleted, sh.allowed).iterator
       }
     }
@@ -356,18 +320,27 @@ object SearchEngine {
     */
   def mustNotDocs(spark: SparkSession, root: String,
       mustNotTerms: Seq[String]): Option[DataFrame] = {
+    val terms = analyzeLikeIndex(spark, root, mustNotTerms)
+    if (terms.isEmpty) None else Some(Booleans.or(spark, root, terms))
+  }
+
+  /** `rawTerms` analyzed as the index at `root` analyzes queries: its
+    * search analyzer plus its index-time synonyms when it records them —
+    * for the unscored term paths (must_not, field sort, delete-by-query).
+    */
+  private[graft] def analyzeLikeIndex(spark: SparkSession, root: String,
+      rawTerms: Seq[String]): Seq[String] = {
     val meta = Indexer.readMeta(spark, root)
     val syn =
       if (meta.synonyms) Catalog.readSynonyms(spark, IndexPaths(root))
       else Map.empty[String, String]
-    val terms = QueryModel.analyzedTerms(mustNotTerms,
-      Analyzer.searchForm(meta.analyzer), syn)
-    if (terms.isEmpty) None else Some(Booleans.or(spark, root, terms))
+    QueryModel.analyzedTerms(rawTerms, Analyzer.searchForm(meta.analyzer), syn)
   }
 
   /** ES field-sorted search (`sort: [{field: desc}]`): the matched doc set
     * (filter context — sorting never scores, so the match is the unscored
-    * index path) joined to the metadata column, top-k by the field. Plan:
+    * index path, over the terms analyzed like the index) joined to the
+    * metadata column, top-k by the field. Plan:
     * pruned postings decode → broadcast-ready semi-join against the
     * column-pruned metadata scan → TakeOrderedAndProject — no corpus sort,
     * no score computation (ES skips scoring for field sorts too).
@@ -376,8 +349,7 @@ object SearchEngine {
       rawTerms: Seq[String], field: String, k: Int,
       asc: Boolean = false): DataFrame = {
     import spark.implicits._
-    val matched = Booleans.or(spark, root,
-      graft.core.QueryModel.analyzedTerms(rawTerms))
+    val matched = Booleans.or(spark, root, analyzeLikeIndex(spark, root, rawTerms))
     val meta = Catalog.readTable(spark, sfDir, "documents")
       .select($"doc_id", col(field))
     val sortCol = if (asc) col(field).asc else col(field).desc

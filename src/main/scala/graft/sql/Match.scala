@@ -87,10 +87,7 @@ object MatchStrategy extends SparkStrategy {
 object Match {
 
   /** Idempotently inject the strategy into the session. */
-  def setup(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(MatchStrategy))
-      spark.experimental.extraStrategies =
-        MatchStrategy +: spark.experimental.extraStrategies
+  def setup(spark: SparkSession): Unit = PerShard.inject(spark, MatchStrategy)
 
   /** DataFrame over the logical match node (planned by MatchStrategy). */
   def topK(spark: SparkSession, root: String, query: String, k: Int): DataFrame = {

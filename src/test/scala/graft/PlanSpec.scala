@@ -192,6 +192,38 @@ class PlanSpec extends AnyFunSuite {
       s"expected exactly one extra (tiny tombstone) exchange:\n${p.take(2000)}")
   }
 
+  test("a warm plain topKWand runs as one Spark job, with no adaptive re-planning") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def query() = SearchEngine.topKWand(spark, idx.paths.root, Seq("join", "window"), 10)
+    query().collect() // warm: metadata memos and the resolved postings relation
+    val group = s"plan-spec-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val df = query()
+      sc.setJobGroup(group, "warm topKWand")
+      try df.collect() finally sc.clearJobGroup()
+      // the listener bus delivers in order: once a later job's start is
+      // seen, every job of the query has been counted
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains(sentinel), "listener bus did not deliver the sentinel job")
+      val n = jobs.toArray.count(_ == group)
+      assert(n == 1, s"expected one Spark job per warm query, saw $n")
+      assert(!plan(df).contains("AdaptiveSparkPlan"),
+        s"no exchange may be left for adaptive execution to split:\n${plan(df)}")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("wildcard expansion scan is bucket-pruned with term pushdown") {
     val p = plan(graft.search.TermQueries.wildcard(spark, idx.paths.root, "*or*"))
     assert(p.contains("PushedFilters") && p.contains("term"),

@@ -52,6 +52,27 @@ class EnglishIndexSpec extends AnyFunSuite {
     assert(got.forall { case (d, _) => !streamDocs(d) }, "a 'stream' doc survived must_not")
   }
 
+  test("field sort and delete_by_query analyze like the index: 'joins' reaches the 'join' docs") {
+    import spark.implicits._
+    val root = IndexCache.englishIndex(spark, sfDir).paths.root
+    val joinDocs = Catalog.readDocuments(spark, sfDir)
+      .filter(d => graft.core.Analyzer.analyze(d.text, "english").contains("join"))
+      .map(_.doc_id).collect().toSet
+    assert(joinDocs.nonEmpty, "fixture corpus must contain 'join' docs")
+    def bySize(term: String) = SearchEngine.topKByField(spark, root, sfDir, Seq(term),
+      "n_chars", joinDocs.size + 10).select($"doc_id").as[Long].collect().toSeq
+    val sorted = bySize("joins")
+    assert(sorted.toSet == joinDocs, "field sort must match the stemmed posting list")
+    assert(sorted == bySize("join"))
+    val copy = s"/tmp/graft-en-dbq-${System.nanoTime()}/idx"
+    try {
+      graft.io.Fs.copyDir(root, copy)
+      assert(graft.index.Deletes.deleteByQuery(spark, copy, Seq("joins")) == joinDocs.size.toLong,
+        "delete_by_query must tombstone every doc stemming to 'join'")
+      assert(SearchEngine.topKWand(spark, copy, Seq("join"), 10).count() == 0L)
+    } finally graft.io.Fs.delete(new java.io.File(copy).getParent)
+  }
+
   test("surface forms conflate: inflected query equals stemmed query") {
     val idx = IndexCache.englishIndex(spark, sfDir)
     val a = hits(rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("joins"), 10)))
