@@ -164,32 +164,29 @@ object Fs {
 
   /** Recursive data-file listing: (path, length, mtime) for every file not
     * starting with `_` or `.` (Spark markers/hidden), sorted by path. Every
-    * directory is descended, `_temporary` included.
+    * directory is descended, `_temporary` included; a missing path lists
+    * empty.
     *
-    * On `file://` the tree is walked with `listStatus`: the local
-    * `listFiles(recursive)` builds a `LocatedFileStatus` per file, which
-    * loads the file's permissions by forking a shell — milliseconds per
-    * file, paid by every memo-key fingerprint of every query. Other
-    * schemes keep `listFiles(recursive)`, the cheap call on object stores.
+    * The tree is walked with `listStatus` rather than `listFiles(recursive)`:
+    * on the local filesystem the latter builds a `LocatedFileStatus` per
+    * file, which loads the file's permissions by forking a shell —
+    * milliseconds per file, paid by every memo-key fingerprint of every
+    * query.
     */
   def listDataFiles(path: String): Seq[(String, Long, Long)] = {
     val (fs, p) = fsOf(path)
-    val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-    def add(s: org.apache.hadoop.fs.FileStatus): Unit = {
-      val name = s.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith("."))
-        out += ((s.getPath.toUri.getPath, s.getLen, s.getModificationTime))
-    }
-    if (fs.getUri.getScheme == "file") {
-      def walk(s: org.apache.hadoop.fs.FileStatus): Unit =
-        if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk) else add(s)
-      try walk(fs.getFileStatus(p))
+    val root =
+      try fs.getFileStatus(p)
       catch { case _: java.io.FileNotFoundException => return Seq.empty }
-    } else {
-      if (!fs.exists(p)) return Seq.empty
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) add(it.next())
-    }
+    val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
+    def walk(s: org.apache.hadoop.fs.FileStatus): Unit =
+      if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk)
+      else {
+        val name = s.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith("."))
+          out += ((s.getPath.toUri.getPath, s.getLen, s.getModificationTime))
+      }
+    walk(root)
     out.sortBy(_._1).toSeq
   }
 }

@@ -98,9 +98,9 @@ object SearchEngine {
     * blocks are re-grouped into docID-range shards: every term's postings
     * for shard s meet in one task and `f` runs once per shard holding
     * blocks. One Catalyst operator ([[graft.sql.PerShard]]) does it: the
-    * pruned postings scan and each aux docID set (tombstones,
-    * `excludedDocs`, `allowedDocs`) are its children, each moved into the
-    * shards by its own exchange inside the operator. Only the terms'
+    * pruned postings scan, the excluded docIDs (tombstones ∪
+    * `excludedDocs`) and the `allowedDocs` are its children, each moved into
+    * the shards by its own exchange inside the operator. Only the terms'
     * (compressed) blocks and the aux doc_ids are shuffled; the salted runs
     * are already range-disjoint so per-shard block lists stay
     * sorted-by-first_doc after a local sort. Shard count scales with
@@ -115,13 +115,14 @@ object SearchEngine {
     val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
     def docIds(df: DataFrame) = df.select(col("doc_id").cast("long"))
     // exclusions: live tombstones ∪ ES bool.must_not doc sets — the scorer
-    // treats both identically (exact eval-time rejection)
+    // treats both identically (exact eval-time rejection), so they are one
+    // input and one exchange
     val excluded =
-      (if (!graft.index.Deletes.hasDeletes(paths)) None
-       else Some(Catalog.readParquet(spark, paths.deletes))) ++ excludedDocs
+      ((if (!graft.index.Deletes.hasDeletes(paths)) None
+        else Some(Catalog.readParquet(spark, paths.deletes))) ++ excludedDocs)
+        .map(docIds).reduceOption(_ union _)
     graft.sql.PerShard.dataset(spark, shards, width,
-      postingsOf(spark, paths, terms, meta.buckets),
-      excluded.map(docIds).toSeq, allowedDocs.map(docIds))(f)
+      postingsOf(spark, paths, terms, meta.buckets), excluded, allowedDocs.map(docIds))(f)
   }
 
   /** Exhaustive index scorer: [[scoreAllDocs]] cut to the global top-k.

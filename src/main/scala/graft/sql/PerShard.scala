@@ -17,9 +17,9 @@ import graft.search.SearchEngine.Shard
 /** The docID-shard executor as one Catalyst operator
   * ([[graft.search.SearchEngine.perShard]] builds it).
   *
-  * Children: the pruned postings scan first, then `nExcluded` docID sets
-  * (tombstones, must_not) and, when `rangeActive`, the allowed docID set
-  * last — every aux child is one long `doc_id` column. [[PerShardStrategy]]
+  * Children: the pruned postings scan, then the excluded docID set
+  * (tombstones ∪ must_not) and the allowed docID set (a range filter) when
+  * present — each aux child is one long `doc_id` column. [[PerShardStrategy]]
   * plans each child under its own [[ShardExchangeExec]], which moves the
   * child's rows into docID shard partitions, and [[PerShardExec]] zips the
   * shard partitions of all children and runs `f` once per shard holding
@@ -30,16 +30,20 @@ import graft.search.SearchEngine.Shard
   * `f`'s output rows are serialized by `encoder`, whose attributes are the
   * node's output — held in the constructor like [[FullTextMatch]]'s.
   */
-final case class PerShard(shards: Int, width: Long, nExcluded: Int,
-    rangeActive: Boolean, f: Shard => Iterator[Any], encoder: ExpressionEncoder[Any],
-    override val output: Seq[Attribute], override val children: Seq[LogicalPlan])
+final case class PerShard(shards: Int, width: Long, f: Shard => Iterator[Any],
+    encoder: ExpressionEncoder[Any], override val output: Seq[Attribute],
+    postings: LogicalPlan, excluded: Option[LogicalPlan], allowed: Option[LogicalPlan])
     extends LogicalPlan {
+  override def children: Seq[LogicalPlan] = postings +: (excluded.toSeq ++ allowed)
   // every input column feeds the shard function: none may be pruned
   override def references: AttributeSet = AttributeSet(children.flatMap(_.output))
   override def producedAttributes: AttributeSet = outputSet
   override protected def stringArgs: Iterator[Any] = Iterator(shards, width)
   override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[LogicalPlan]): PerShard = copy(children = newChildren)
+      newChildren: IndexedSeq[LogicalPlan]): PerShard = {
+    val (p, ex, al) = PerShard.unzip(newChildren, excluded.isDefined, allowed.isDefined)
+    copy(postings = p, excluded = ex, allowed = al)
+  }
 }
 
 object PerShard {
@@ -49,15 +53,26 @@ object PerShard {
     * last shard is open-ended.
     */
   def dataset[T: Encoder](spark: SparkSession, shards: Int, width: Long,
-      postings: DataFrame, excluded: Seq[DataFrame],
+      postings: DataFrame, excluded: Option[DataFrame],
       allowed: Option[DataFrame])(f: Shard => Iterator[T]): Dataset[T] = {
     inject(spark, PerShardStrategy)
     val enc = encoderFor[T].asInstanceOf[ExpressionEncoder[Any]]
-    val inputs = postings +: (excluded ++ allowed)
+    def analyzed(df: DataFrame) = df.queryExecution.analyzed
     GraftDatasetFactory.ofRows(spark,
-      PerShard(shards, width, excluded.length, allowed.isDefined, f,
-        enc, DataTypeUtils.toAttributes(enc.schema), inputs.map(_.queryExecution.analyzed)))
+      PerShard(shards, width, f, enc, DataTypeUtils.toAttributes(enc.schema),
+        analyzed(postings), excluded.map(analyzed), allowed.map(analyzed)))
       .as[T]
+  }
+
+  /** Splits `children` (postings, then the present aux sets) back into the
+    * postings child and the optional excluded and allowed children.
+    */
+  private[sql] def unzip[P](children: Seq[P], hasExcluded: Boolean,
+      hasAllowed: Boolean): (P, Option[P], Option[P]) = {
+    val it = children.iterator
+    val postings = it.next()
+    val excluded = if (hasExcluded) Some(it.next()) else None
+    (postings, excluded, if (hasAllowed) Some(it.next()) else None)
   }
 
   /** Idempotently put `strategy` first in the session's planner. Safe
@@ -117,21 +132,23 @@ object ShardExchangeExec {
   * the shard function once per shard holding posting blocks (see
   * [[PerShard]] for the child order).
   */
-final case class PerShardExec(shards: Int, width: Long, nExcluded: Int,
-    rangeActive: Boolean, f: Shard => Iterator[Any], encoder: ExpressionEncoder[Any],
-    output: Seq[Attribute], children: Seq[SparkPlan]) extends SparkPlan {
+final case class PerShardExec(shards: Int, width: Long, f: Shard => Iterator[Any],
+    encoder: ExpressionEncoder[Any], output: Seq[Attribute], postings: SparkPlan,
+    excluded: Option[SparkPlan], allowed: Option[SparkPlan]) extends SparkPlan {
+  override def children: Seq[SparkPlan] = postings +: (excluded.toSeq ++ allowed)
   override def outputPartitioning: Partitioning = UnknownPartitioning(shards)
   override protected def stringArgs: Iterator[Any] = Iterator(shards, width)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val toBlock = PerShardExec.blockReader(children.head.output)
+    val toBlock = PerShardExec.blockReader(postings.output)
     // each task deserializes its own copy of the (stateful) serializer
-    val (w, last, nEx, range, fn, toRow) =
-      (width, shards - 1, nExcluded, rangeActive, f, encoder.createSerializer())
+    val (w, last, hasEx, range, fn, toRow) = (width, shards - 1, excluded.isDefined,
+      allowed.isDefined, f, encoder.createSerializer())
     new ZipShardsRDD(sparkContext, children.map(_.execute()), (shard, inputs) => {
-      val blocks = inputs.head.map(toBlock).toArray
-      val excluded = inputs.slice(1, 1 + nEx).flatMap(_.map(_.getLong(0))).toArray.sorted
-      val allowed = if (range) inputs.last.map(_.getLong(0)).toArray.sorted else null
+      val (blockRows, exRows, alRows) = PerShard.unzip(inputs, hasEx, range)
+      val blocks = blockRows.map(toBlock).toArray
+      val excluded = exRows.map(_.map(_.getLong(0)).toArray.sorted).filter(_.nonEmpty).orNull
+      val allowed = alRows.map(_.map(_.getLong(0)).toArray.sorted).orNull
       // a shard with no blocks, or a range filter allowing nothing in this
       // shard: no doc qualifies
       if (blocks.isEmpty || (range && allowed.isEmpty)) Iterator.empty
@@ -139,13 +156,16 @@ final case class PerShardExec(shards: Int, width: Long, nExcluded: Int,
         val lo = shard * w
         val byTerm = blocks.groupBy(_.term).view.mapValues(_.sortBy(_.first_doc)).toMap
         fn(Shard(lo, if (shard == last) Long.MaxValue else lo + w, byTerm,
-          if (excluded.isEmpty) null else excluded, allowed)).map(toRow)
+          excluded, allowed)).map(toRow)
       }
     })
   }
 
   override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[SparkPlan]): PerShardExec = copy(children = newChildren)
+      newChildren: IndexedSeq[SparkPlan]): PerShardExec = {
+    val (p, ex, al) = PerShard.unzip(newChildren, excluded.isDefined, allowed.isDefined)
+    copy(postings = p, excluded = ex, allowed = al)
+  }
 }
 
 object PerShardExec {
@@ -196,12 +216,11 @@ object PerShardStrategy extends SparkStrategy {
     case p: PerShard =>
       def exchange(c: LogicalPlan, lo: Attribute, hi: Attribute) =
         ShardExchangeExec(lo, hi, p.shards, p.width, planLater(c))
-      val postings = p.children.head
-      def col(name: String) = postings.output.find(_.name == name).get
-      val inputs = exchange(postings, col("first_doc"), col("last_doc")) +:
-        p.children.tail.map(c => exchange(c, c.output.head, c.output.head))
-      PerShardExec(p.shards, p.width, p.nExcluded, p.rangeActive, p.f, p.encoder,
-        p.output, inputs) :: Nil
+      def byDoc(c: LogicalPlan) = exchange(c, c.output.head, c.output.head)
+      def col(name: String) = p.postings.output.find(_.name == name).get
+      PerShardExec(p.shards, p.width, p.f, p.encoder, p.output,
+        exchange(p.postings, col("first_doc"), col("last_doc")),
+        p.excluded.map(byDoc), p.allowed.map(byDoc)) :: Nil
     case _ => Nil
   }
 }

@@ -192,6 +192,19 @@ class PlanSpec extends AnyFunSuite {
       s"expected exactly one extra (tiny tombstone) exchange:\n${p.take(2000)}")
   }
 
+  test("tombstones and must_not docs share one excluded input and one shard exchange") {
+    val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
+    val q = Seq("join", "window")
+    def shardExchanges(df: org.apache.spark.sql.DataFrame) =
+      plan(df).linesIterator.count(_.contains("ShardExchange"))
+    val deleted = SearchEngine.topKWand(spark, del.paths.root, q, 10)
+    val both = SearchEngine.topKWand(spark, del.paths.root, q, 10,
+      excludedDocs = SearchEngine.mustNotDocs(spark, del.paths.root, Seq("vector")))
+    assert(shardExchanges(deleted) == 2, s"postings + tombstones:\n${plan(deleted)}")
+    assert(shardExchanges(both) == 2,
+      s"tombstones ∪ must_not must be one shard input:\n${plan(both)}")
+  }
+
   test("a warm plain topKWand runs as one Spark job, with no adaptive re-planning") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext

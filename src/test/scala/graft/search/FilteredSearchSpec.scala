@@ -163,6 +163,26 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(got == want, "terms-OR filter != shadow")
   }
 
+  test("must_not composes with tombstones: both exclusions apply") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val q = Seq("join", "window", "vector")
+    val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
+    val dead = graft.index.Deletes.read(spark, Catalog.IndexPaths(del.paths.root)).toSet
+    val got = hits(rounded(SearchEngine.topKWand(spark, del.paths.root, q, 10,
+      excludedDocs = SearchEngine.mustNotDocs(spark, del.paths.root, Seq("window")))))
+    val excluded = Catalog.readDocuments(spark, sfDir)
+      .filter(d => graft.core.Analyzer.tokenize(d.text).contains("window"))
+      .select($"doc_id")
+    val want = hits(SearchEngine.topKExhaustive(spark, del.paths.root, q, Int.MaxValue)
+      .join(excluded, Seq("doc_id"), "left_anti")
+      .filter(!$"doc_id".isin(dead.toSeq: _*))
+      .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      .select($"doc_id", round($"score", 4).as("score_r4")))
+    assert(got == want, "must_not over a tombstoned index != shadow")
+    assert(got.nonEmpty && got.map(_._1).toSet.intersect(dead).isEmpty)
+  }
+
   test("filter context never changes scores") {
     val q = Seq("join", "window", "vector")
     val filtered = hits(rounded(SearchEngine.topKWand(spark, root, q, 100,
