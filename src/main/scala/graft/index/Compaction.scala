@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.core.{Blocks, PostingBlock}
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
-import graft.model.DictEntry
 
 /** Segment compaction for incrementally-grown indexes (VERDICT r1 item 5 —
   * the Lucene segment-merge analog).
@@ -67,15 +66,7 @@ object Compaction {
     // dictionary from the fresh block headers (df/cf exact: one run per term
     // now, each doc once per term; max_tf_norm freshly recomputed)
     val dictNew = s"${paths.dictionaryBase}_staging"
-    spark.read.parquet(paths.postings)
-      // keyword-field postings (KeywordIndex `field:value` terms — ':' can
-      // never appear in an analyzed token) stay out of the dictionary: they
-      // carry no idf and the dictionary doubles as the text-term stats table
-      .filter(!$"term".contains(":"))
-      .groupBy($"term")
-      .agg(sum($"n_docs").as("df"), sum($"sum_tf").as("cf"),
-        max($"max_tf_norm").as("max_tf_norm"))
-      .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry]
+    Indexer.dictionaryOf(spark, paths.postings)
       .write.mode(SaveMode.Overwrite).parquet(dictNew)
     Fs.publishVersion(paths.dictionaryBase, dictNew)
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.core.Blocks
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
-import graft.model.DictEntry
 import graft.search.Booleans
 
 /** ES `_delete_by_query` + Lucene soft-deletes for the inverted index.
@@ -241,15 +240,9 @@ object Deletes {
       .write.mode(SaveMode.Overwrite).parquet(statsNew)
     Fs.publishVersion(paths.corpusStatsBase, statsNew)
 
-    // dictionary over live postings only (terms whose docs all died vanish);
-    // keyword `field:value` postings stay out, as in Compaction
+    // dictionary over live postings only (terms whose docs all died vanish)
     val dictNew = s"${paths.dictionaryBase}_staging"
-    spark.read.parquet(paths.postings)
-      .filter(!$"term".contains(":"))
-      .groupBy($"term")
-      .agg(sum($"n_docs").as("df"), sum($"sum_tf").as("cf"),
-        max($"max_tf_norm").as("max_tf_norm"))
-      .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry]
+    Indexer.dictionaryOf(spark, paths.postings)
       .write.mode(SaveMode.Overwrite).parquet(dictNew)
     Fs.publishVersion(paths.dictionaryBase, dictNew)
 

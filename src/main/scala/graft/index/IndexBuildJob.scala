@@ -234,16 +234,9 @@ object IndexBuildJob {
     // ---- S3: dictionary + meta — the term-keyed merge, metadata-only -------
     val s3Fp = Catalog.fingerprint(paths.postings)
     stage("finalize", s3Fp, paths.dictionary) {
-      spark.read.parquet(paths.postings)
-        // a --resume rerun can see keyword `field:value` postings appended
-        // by a previous run's kw stage — they carry no idf and must not
-        // enter the dictionary (same exclusion as Compaction/Deletes.purge)
-        .filter(!$"term".contains(":"))
-        .groupBy($"term")
-        .agg(sum($"n_docs").as("df"), sum($"sum_tf").as("cf"),
-          max($"max_tf_norm").as("max_tf_norm"))
-        .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry]
-        .write.mode(SaveMode.Overwrite).parquet(paths.dictionary)
+      // a --resume rerun can see keyword `field:value` postings appended by
+      // a previous run's kw stage — dictionaryOf keeps them out
+      Catalog.writeDictionary(Indexer.dictionaryOf(spark, paths.postings), paths)
       Seq(IndexMeta(a.buckets, a.targetRun, docIdSpace, analyzer = a.analyzer))
         .toDS().write.mode(SaveMode.Overwrite).parquet(paths.meta)
     }

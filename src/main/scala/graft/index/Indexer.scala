@@ -97,18 +97,32 @@ object Indexer {
       docIdSpace: Long, analyzer: String = "standard",
       synonyms: Boolean = false): BuildResult = {
     import spark.implicits._
-    val dict = spark.read.parquet(paths.postings)
-      .groupBy($"term")
-      .agg(sum($"n_docs").as("df"), sum($"sum_tf").as("cf"),
-        max($"max_tf_norm").as("max_tf_norm"))
-      .select($"term", $"df", $"cf", $"max_tf_norm")
-      .as[DictEntry]
-    Catalog.writeDictionary(dict, paths)
+    Catalog.writeDictionary(dictionaryOf(spark, paths.postings), paths)
     Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(paths.corpusStats)
     val meta = IndexMeta(buckets, targetRun, docIdSpace, analyzer = analyzer,
       synonyms = synonyms)
     Seq(meta).toDS().write.mode(SaveMode.Overwrite).parquet(paths.meta)
     BuildResult(paths, stats, meta)
+  }
+
+  /** The dictionary from the postings at `postings`: per term df = Σ n_docs,
+    * cf = Σ sum_tf and the max max_tf_norm, from the block headers alone
+    * (payloads pruned at the scan). Keyword-field postings (KeywordIndex
+    * `field:value` terms — ':' never appears in an analyzed token) stay
+    * out: they carry no idf and the dictionary doubles as the text-term
+    * stats table. The one derivation under every build, compaction and
+    * purge.
+    */
+  private[index] def dictionaryOf(spark: SparkSession,
+      postings: String): Dataset[DictEntry] = {
+    import spark.implicits._
+    spark.read.parquet(postings)
+      .filter(!$"term".contains(":"))
+      .groupBy($"term")
+      .agg(sum($"n_docs").as("df"), sum($"sum_tf").as("cf"),
+        max($"max_tf_norm").as("max_tf_norm"))
+      .select($"term", $"df", $"cf", $"max_tf_norm")
+      .as[DictEntry]
   }
 
   /** Transcript-corpus build: S1 docID assignment first, docid_map written

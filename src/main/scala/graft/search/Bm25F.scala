@@ -1,12 +1,11 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.core.{Blocks, Bm25}
-import graft.index.Indexer
+import graft.core.Bm25
 import graft.io.Catalog
 import graft.io.Catalog.IndexPaths
+import graft.search.SearchEngine.{Source, cut, exhaustive, rounded}
 
 /** BM25F (Robertson & Zaragoza, "The Probabilistic Relevance Framework"):
   * the principled multi-field similarity — per-field term frequencies are
@@ -19,74 +18,48 @@ import graft.io.Catalog.IndexPaths
   *
   * idf uses the document frequency of "t in any field"; with the title a
   * PREFIX subfield of text (first 8 tokens), that is exactly the text df.
+  * Terms analyze like the text index.
   *
-  * Shape: each posting row's contribution to s(t,d) is row-local (its own
-  * tf, its own field's dl and avgdl), so no cross-field join is needed —
-  * the two pruned postings scans union and aggregate by (doc, term), then
-  * by doc. An aggregation-class computation over the query terms' postings
-  * (the cross-field saturation makes per-field WAND bounds non-trivial;
-  * a bound-safe BM25F WAND is future work, as in the literature).
+  * Shape: each posting's share of s(t,d) is row-local (its own tf, its own
+  * field's dl and avgdl), so no cross-field join is needed — the
+  * [[SearchEngine.exhaustive]] kernel over both fields' pruned scans, one
+  * cell per term holding the two field shares. An aggregation-class
+  * computation over the query terms' postings (the cross-field saturation
+  * makes per-field WAND bounds non-trivial; a bound-safe BM25F WAND is
+  * future work, as in the literature).
   */
 object Bm25F {
 
   def topK(spark: SparkSession, textRoot: String, titleRoot: String,
       rawTerms: Seq[String], k: Int, wText: Double = 1.0, wTitle: Double = 3.0): DataFrame = {
-    import spark.implicits._
-    val terms = graft.core.QueryModel.analyzedTerms(rawTerms)
+    val terms = SearchEngine.analyzeLikeIndex(spark, textRoot, rawTerms)
     if (terms.isEmpty)
-      return SearchEngine.rounded(SearchEngine.emptyHits(spark))
-    val sortedTerms = terms.sorted.toArray
+      return rounded(SearchEngine.emptyHits(spark))
 
     val txPaths = IndexPaths(textRoot)
     val txStats = Catalog.readCorpusStats(spark, txPaths)
     val tiStats = Catalog.readCorpusStats(spark, IndexPaths(titleRoot))
     val dfByTerm = Catalog.docFreqs(spark, txPaths, terms)
-    val idfs = sortedTerms.map(t =>
-      dfByTerm.get(t).map(df => Bm25.idf(txStats.n_docs, df)).getOrElse(0.0))
-    val bcIdfs = spark.sparkContext.broadcast((sortedTerms, idfs))
+    val idfs = terms.map(t =>
+      dfByTerm.get(t).map(df => Bm25.idf(txStats.n_docs, df)).getOrElse(0.0)).toArray
 
-    // one pruned scan per field; each row emits its field-normalized,
-    // field-weighted pseudo-tf share — row-local, no join
-    def fieldRows(root: String, w: Double, avgdl: Double) =
-      SearchEngine.queryPostings(spark, IndexPaths(root), terms,
-          Indexer.readMeta(spark, root).buckets)
-        .flatMap { blk =>
-          val (ts, _) = bcIdfs.value
-          val ti = java.util.Arrays.binarySearch(ts.asInstanceOf[Array[AnyRef]], blk.term)
-          if (ti < 0) Iterator.empty
-          else {
-            val d = Blocks.decode(blk)
-            (0 until d.docs.length).iterator.map { i =>
-              val bNorm = 1.0 - Bm25.B + Bm25.B * d.dls(i) / avgdl
-              (d.docs(i), ti, w * d.tfs(i) / bNorm)
-            }
-          }
-        }
+    // a posting's field-normalized, field-weighted pseudo-tf share
+    def field(root: String, w: Double, avgdl: Double) =
+      Source(root, terms.zipWithIndex.toMap, (_, tf, dl) => {
+        val bNorm = 1.0 - Bm25.B + Bm25.B * dl / avgdl
+        w * tf / bNorm
+      })
 
-    fieldRows(textRoot, wText, txStats.avgdl)
-      .union(fieldRows(titleRoot, wTitle, tiStats.avgdl))
-      .toDF("doc_id", "ti", "share")
-      .groupBy($"doc_id", $"ti")
-      .agg(sum($"share").as("s"))
-      .as[(Long, Int, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (doc, it) =>
-        val (_, idfArr) = bcIdfs.value
-        // fixed summation order over term index for bit-determinism
-        val arr = it.toArray.sortBy(_._2)
-        var score = 0.0
-        var i = 0
-        while (i < arr.length) {
-          val s = arr(i)._3
-          score += idfArr(arr(i)._2) * s / (Bm25.K1 + s)
-          i += 1
-        }
-        (doc, score)
+    val scored = exhaustive(spark, Seq(field(textRoot, wText, txStats.avgdl),
+        field(titleRoot, wTitle, tiStats.avgdl))) { (_, s) =>
+      var score = 0.0
+      var i = 0
+      while (i < s.length) {
+        score += idfs(i) * s(i) / (Bm25.K1 + s(i))
+        i += 1
       }
-      .toDF("doc_id", "score")
-      .transform(graft.index.Deletes.filterLive(_, textRoot))
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
-      .transform(SearchEngine.rounded)
+      score
+    }
+    rounded(cut(scored, k))
   }
 }

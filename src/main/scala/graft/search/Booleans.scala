@@ -23,10 +23,11 @@ object Booleans {
   def docsOf(spark: SparkSession, root: String, term: String): DataFrame =
     liveDocs(spark, root, Seq(term))
 
-  /** Live docIDs of every posting of `terms` (one per posting): ONE
-    * bucket-pruned, term-pushed-down scan decoding only the docID payloads.
+  /** DocIDs of every posting of `terms` (one per posting, tombstoned docs
+    * included): ONE bucket-pruned, term-pushed-down scan decoding only the
+    * docID payloads.
     */
-  private def liveDocs(spark: SparkSession, root: String,
+  private[search] def postingDocs(spark: SparkSession, root: String,
       terms: Seq[String]): DataFrame = {
     import spark.implicits._
     val meta = Indexer.readMeta(spark, root)
@@ -37,8 +38,12 @@ object Booleans {
       .as[(Int, Array[Byte])]
       .flatMap { case (n, deltas) => Codec.decodeDeltas(deltas, n) }
       .toDF("doc_id")
-      .transform(graft.index.Deletes.filterLive(_, root))
   }
+
+  /** [[postingDocs]] without the tombstoned docs. */
+  private def liveDocs(spark: SparkSession, root: String,
+      terms: Seq[String]): DataFrame =
+    postingDocs(spark, root, terms).transform(graft.index.Deletes.filterLive(_, root))
 
   /** Docs containing ALL terms (conjunction): left-semi chain. */
   def and(spark: SparkSession, root: String, terms: Seq[String]): DataFrame = {

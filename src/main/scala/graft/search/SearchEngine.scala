@@ -1,6 +1,5 @@
 package graft.search
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,16 +55,8 @@ object SearchEngine {
   }
 
   /** Postings scan restricted to the given terms (bucket pruning + term
-    * pushdown).
-    */
-  private[search] def queryPostings(spark: SparkSession, paths: IndexPaths,
-      terms: Seq[String], buckets: Int): Dataset[PostingBlock] = {
-    import spark.implicits._
-    postingsOf(spark, paths, terms, buckets).as[PostingBlock]
-  }
-
-  /** [[queryPostings]] as rows: the untyped filter skips a typed Dataset's
-    * encoder resolution, which the shard operator does not need.
+    * pushdown), as untyped rows: the shard operator needs no typed
+    * Dataset's encoder resolution.
     */
   private def postingsOf(spark: SparkSession, paths: IndexPaths,
       terms: Seq[String], buckets: Int): DataFrame = {
@@ -132,12 +123,8 @@ object SearchEngine {
     * shapes × mm × k).
     */
   def topKExhaustive(spark: SparkSession, root: String, rawTerms: Seq[String],
-      k: Int, minMatch: Long => Int = _ => 1): DataFrame = {
-    import spark.implicits._
-    scoreAllDocs(spark, root, rawTerms, minMatch)
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
-  }
+      k: Int, minMatch: Long => Int = _ => 1): DataFrame =
+    cut(scoreAllDocs(spark, root, rawTerms, minMatch), k)
 
   /** Per-doc BM25 score for EVERY live doc containing at least
     * `minMatch(doc_id)` distinct query terms — no top-k cut. Feeds the
@@ -148,88 +135,115 @@ object SearchEngine {
       minMatch: Long => Int = _ => 1): DataFrame =
     scoreDocs(spark, root, rawTerms, minMatch, None)
 
-  /** The exhaustive scorers' decode step: the query model under the index's
-    * own analyzer and synonyms, and one (doc_id, ti, tf, dl) row per posting
-    * of query term `ti` — restricted to the sorted `docs` when given. None
-    * when no query term survives analysis.
-    */
-  private def decodedPostings(spark: SparkSession, root: String,
-      rawTerms: Seq[String], docs: Option[Array[Long]])
-      : Option[(Broadcast[QueryModel], DataFrame)] = {
-    import spark.implicits._
-    val paths = IndexPaths(root)
+  /** Global top-k by (score DESC, doc_id ASC): TakeOrderedAndProject. */
+  private[search] def cut(df: DataFrame, k: Int): DataFrame =
+    df.orderBy(col("score").desc, col("doc_id").asc).limit(k)
+
+  /** The query model under the index's own analyzer and synonyms. */
+  private def indexQueryModel(spark: SparkSession, root: String,
+      rawTerms: Seq[String]): QueryModel = {
     val meta = Indexer.readMeta(spark, root)
-    val qm = queryModel(spark, paths, rawTerms, 1, meta.analyzer, meta.synonyms)
-    if (qm.isEmpty) return None
-    val bcQm = spark.sparkContext.broadcast(qm)
-    val bcDocs = docs.map(spark.sparkContext.broadcast(_))
-    val rows = queryPostings(spark, paths, qm.terms.toSeq, meta.buckets)
-      .flatMap { b =>
-        val qmv = bcQm.value
-        val ti = java.util.Arrays.binarySearch(qmv.terms.asInstanceOf[Array[AnyRef]], b.term)
-        if (ti < 0) Iterator.empty
-        else {
-          val d = Blocks.decode(b)
-          val idx = (0 until d.docs.length).iterator
-          (bcDocs match {
-            case None => idx
-            case Some(bc) =>
-              idx.filter(i => java.util.Arrays.binarySearch(bc.value, d.docs(i)) >= 0)
-          }).map(i => (d.docs(i), ti, d.tfs(i), d.dls(i)))
-        }
-      }
-      .toDF("doc_id", "ti", "tf", "dl")
-    Some((bcQm, rows))
+    queryModel(spark, IndexPaths(root), rawTerms, 1, meta.analyzer, meta.synonyms)
   }
 
-  /** The one exhaustive BM25 kernel: [[scoreAllDocs]], [[topKExhaustive]],
-    * [[termsSetTopK]] and the multi_match exact fill (restricted to `docs`).
+  /** One input of the [[exhaustive]] kernel: an index root, the cell each
+    * term it reads fills (cells count from 0; the kernel pivots every cell
+    * up to the largest of any source), and a posting's value in its cell
+    * from (cell, tf, dl).
+    */
+  private[search] final case class Source(root: String, cellOf: Map[String, Int],
+      value: (Int, Int, Int) => Double)
+
+  /** The kernel's decode step: per source, one bucket-pruned,
+    * term-pushed-down postings scan and one [[Blocks.decode]] per block,
+    * giving one (doc_id, cell, v, dl) row per posting — restricted to the
+    * sorted `docs` when given.
+    */
+  private def decode(spark: SparkSession, sources: Seq[Source],
+      docs: Option[Array[Long]]): DataFrame = {
+    import spark.implicits._
+    sources.map { case Source(root, cellOf, value) =>
+      postingsOf(spark, IndexPaths(root), cellOf.keys.toSeq,
+          Indexer.readMeta(spark, root).buckets).as[PostingBlock]
+        .flatMap { b =>
+          val c = cellOf(b.term)
+          val d = Blocks.decode(b)
+          val idx = (0 until d.docs.length).iterator
+          docs.fold(idx)(ds =>
+            idx.filter(i => java.util.Arrays.binarySearch(ds, d.docs(i)) >= 0))
+            .map(i => (d.docs(i), c, value(c, d.tfs(i), d.dls(i)), d.dls(i)))
+        }
+    }.reduce(_ union _).toDF("doc_id", "cell", "v", "dl")
+  }
+
+  /** The one exhaustive BM25 kernel, under [[scoreAllDocs]],
+    * [[topKExhaustive]], [[termsSetTopK]], [[synonymTopK]],
+    * [[multiMatchCrossFields]], [[Bm25F.topK]] and the multi_match exact
+    * fill: one (doc_id, score) row per live doc of the first source's index
+    * with at least `minMatch(doc_id)` non-empty cells.
     *
-    * Plan: one pruned postings scan (bucket pruning + term pushdown), then
-    * the per-term pivot `groupBy(doc_id).agg(sum(when(ti===i, tf))…)` — a
-    * codegen'd HashAggregate whose MAP-SIDE PARTIALS absorb a doc's
-    * per-term hits before the exchange, so ONE row per doc crosses instead
-    * of one per posting (a groupByKey shape has no combiner and ships
-    * df-proportional rows). Each (doc, term) cell holds at most one
-    * posting (a (term, doc) pair lives in exactly one block), so the Int tf
-    * partials are single-addend — exact under any combine order; the BM25
-    * math runs in one narrow typed map per doc in fixed ascending term
-    * order, reusing the exact [[Bm25.tfNorm]] scalar ops — scores are
-    * bit-identical to the WAND path's (WandSpec's shadow equality pins it).
-    * A doc is admitted when its non-null tf columns (its distinct matching
-    * terms) reach `minMatch(doc_id)`; tombstoned docs never leave.
+    * Plan: the [[decode]] step, then the pivot
+    * `groupBy(doc_id).agg(max(dl), sum(when(cell === c, v))…)` — a codegen'd
+    * HashAggregate whose MAP-SIDE PARTIALS absorb a doc's postings before
+    * the exchange, so ONE row per doc crosses instead of one per posting (a
+    * groupByKey shape has no combiner and ships df-proportional rows). A
+    * (term, doc) pair lives in exactly one block per index, so a cell sums
+    * one posting per (term, source) it holds: integer tfs (exact in a
+    * Double) or at most two Double addends (commutative) — one sum under any
+    * combine order. Then `combine(dl, cells)` runs once per doc over the
+    * cells in ascending order, a cell the doc has no posting in being 0.0;
+    * dl is the max over sources, constant per doc within one index.
+    */
+  private[search] def exhaustive(spark: SparkSession, sources: Seq[Source],
+      minMatch: Long => Int = _ => 1, docs: Option[Array[Long]] = None)(
+      combine: (Long, Array[Double]) => Double): DataFrame = {
+    import spark.implicits._
+    val nCells = sources.flatMap(_.cellOf.values).max + 1
+    val cellCols = (0 until nCells).map(c => sum(when($"cell" === c, $"v")).as(s"c$c"))
+    decode(spark, sources, docs)
+      .groupBy($"doc_id")
+      .agg(max($"dl").as("dl"), cellCols: _*)
+      .flatMap { r =>
+        val doc = r.getLong(0)
+        val cells = new Array[Double](nCells)
+        var matched = 0
+        var c = 0
+        while (c < nCells) {
+          if (!r.isNullAt(2 + c)) { cells(c) = r.getDouble(2 + c); matched += 1 }
+          c += 1
+        }
+        if (matched < minMatch(doc)) Iterator.empty
+        else Iterator.single(Hit(doc, combine(r.getInt(1).toLong, cells)))
+      }
+      .toDF()
+      .transform(graft.index.Deletes.filterLive(_, sources.head.root))
+  }
+
+  /** BM25 over tf cells: Σ idf·[[Bm25.tfNorm]] in ascending cell order —
+    * the exact scalar ops of the WAND path, so scores are bit-identical to
+    * it (WandSpec's shadow equality pins it).
+    */
+  private def bm25(idfs: Array[Double], avgdl: Double): (Long, Array[Double]) => Double =
+    (dl, tfs) => {
+      var s = 0.0
+      var c = 0
+      while (c < tfs.length) {
+        val tf = tfs(c).toInt
+        if (tf > 0) s += idfs(c) * Bm25.tfNorm(tf, dl, avgdl)
+        c += 1
+      }
+      s
+    }
+
+  /** The kernel with the query terms as cells and v = tf: plain BM25,
+    * restricted to `docs` when given.
     */
   private def scoreDocs(spark: SparkSession, root: String, rawTerms: Seq[String],
       minMatch: Long => Int, docs: Option[Array[Long]]): DataFrame = {
-    import spark.implicits._
-    decodedPostings(spark, root, rawTerms, docs) match {
-      case None => emptyHits(spark)
-      case Some((bcQm, rows)) =>
-        val n = bcQm.value.terms.length
-        // one Long tf column per query term; dl is constant per doc (max = value)
-        val tfCols = (0 until n).map(i => sum(when($"ti" === i, $"tf")).as(s"tf$i"))
-        rows.groupBy($"doc_id")
-          .agg(max($"dl").as("dl"), tfCols: _*)
-          .flatMap { r => // one row per doc; exact scalar BM25 in ascending term order
-            val qmv = bcQm.value
-            val doc = r.getLong(0)
-            val dl = r.getInt(1).toLong
-            var s = 0.0
-            var matched = 0
-            var ti = 0
-            while (ti < n) {
-              if (!r.isNullAt(2 + ti)) {
-                val tf = r.getLong(2 + ti).toInt
-                if (tf > 0) s += qmv.idfs(ti) * Bm25.tfNorm(tf, dl, qmv.avgdl)
-                matched += 1
-              }
-              ti += 1
-            }
-            if (matched < minMatch(doc)) Iterator.empty else Iterator.single(Hit(doc, s))
-          }
-          .toDF()
-          .transform(graft.index.Deletes.filterLive(_, root))
-    }
+    val qm = indexQueryModel(spark, root, rawTerms)
+    if (qm.isEmpty) emptyHits(spark)
+    else exhaustive(spark, Seq(Source(root, qm.terms.zipWithIndex.toMap, (_, tf, _) => tf)),
+      minMatch, docs)(bm25(qm.idfs, qm.avgdl))
   }
 
   /** ES `terms_set` query: a term disjunction whose minimum-should-match is
@@ -311,18 +325,21 @@ object SearchEngine {
       .limit(k)
   }
 
-  /** ES `bool: {must_not: …}` doc set: every doc matching any of the
+  /** ES `bool: {must_not: …}` doc set: the docID of every posting of the
     * must_not terms, analyzed like the query terms (the index's analyzer and
     * synonyms), from their pruned postings (never a corpus scan). Pass it to
-    * [[topKWand]] as `excludedDocs`: it rides the same per-shard aux
-    * cogroup as tombstones — exact eval-time rejection, θ-driven skips stay
-    * rank-safe, scoring stats untouched (ES must_not never scores). Terms
-    * analyzing to nothing exclude nothing (ES drops empty clauses): None.
+    * [[topKWand]] as `excludedDocs`: it is the same shard input as
+    * tombstones — exact eval-time rejection, θ-driven skips stay rank-safe,
+    * scoring stats untouched (ES must_not never scores). The set is neither
+    * deduplicated, sorted nor tombstone-filtered: each shard sorts its slice,
+    * the scorer's binary-search exclusion tolerates duplicates, and
+    * tombstones join the same input. Terms analyzing to nothing exclude
+    * nothing (ES drops empty clauses): None.
     */
   def mustNotDocs(spark: SparkSession, root: String,
       mustNotTerms: Seq[String]): Option[DataFrame] = {
     val terms = analyzeLikeIndex(spark, root, mustNotTerms)
-    if (terms.isEmpty) None else Some(Booleans.or(spark, root, terms))
+    if (terms.isEmpty) None else Some(Booleans.postingDocs(spark, root, terms))
   }
 
   /** `rawTerms` analyzed as the index at `root` analyzes queries: its
@@ -481,85 +498,44 @@ object SearchEngine {
     * own tf/dl/avgdl), summed over terms. This treats the field set as one
     * big field for rarity while keeping per-field length normalization —
     * exactly why ES recommends it for first_name/last_name-style splits.
+    * Terms analyze like the text index.
     *
-    * Cost and scale: the two fields' PRUNED query-term postings scans
-    * (bucket pruning + term pushdown — never a corpus scan) feeding one
-    * doc-keyed pivot `groupBy(doc_id).agg(sum(when(t===i && f===j, c)))` —
-    * a codegen'd HashAggregate whose MAP-SIDE PARTIALS absorb a doc's
-    * per-term/per-field contributions before the exchange (one row per doc
-    * crosses, not one per posting; VERDICT r4 flagged the previous
-    * groupByKey.mapGroups shape, which cannot partial-aggregate). Each
-    * (doc, term, field) cell holds exactly one contribution row, so the
-    * Double sums are single-addend and exact; the max/min/tie_breaker
-    * combine runs in one narrow typed map per doc in fixed term order —
-    * scores bit-identical to the old shape. Term-centric blending couples
-    * the fields per term, so per-field WAND windows cannot bound the
-    * combined score; the doc key is uniform, skew-free.
+    * The [[exhaustive]] kernel over both fields' pruned scans, one cell per
+    * (term, field). Term-centric blending couples the fields per term, so
+    * per-field WAND windows cannot bound the combined score.
     */
   def multiMatchCrossFields(spark: SparkSession, textRoot: String,
       titleRoot: String, rawTerms: Seq[String], k: Int,
       tieBreaker: Double = 0.0, titleBoost: Double = 1.0): DataFrame = {
-    import spark.implicits._
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tie_breaker in [0,1], as ES")
     val pathsTx = IndexPaths(textRoot)
     val pathsTi = IndexPaths(titleRoot)
-    val terms = QueryModel.analyzedTerms(rawTerms).toArray
+    val terms = analyzeLikeIndex(spark, textRoot, rawTerms)
     if (terms.isEmpty) return rounded(emptyHits(spark))
     val stTx = Catalog.readCorpusStats(spark, pathsTx)
     val stTi = Catalog.readCorpusStats(spark, pathsTi)
-    val dfTx = Catalog.docFreqs(spark, pathsTx, terms.toSeq)
-    val dfTi = Catalog.docFreqs(spark, pathsTi, terms.toSeq)
+    val dfTx = Catalog.docFreqs(spark, pathsTx, terms)
+    val dfTi = Catalog.docFreqs(spark, pathsTi, terms)
     val idfBlend = terms.map(t =>
-      Bm25.idf(stTx.n_docs, math.max(dfTx.getOrElse(t, 0L), dfTi.getOrElse(t, 0L))))
-    val bcIdf = spark.sparkContext.broadcast(idfBlend)
-    val bcTerms = spark.sparkContext.broadcast(terms)
-
-    // (doc, term_idx, field, contribution) from one field's pruned scan
-    def contribs(paths: IndexPaths, buckets: Int, avgdl: Double, field: Int,
-        weight: Double) =
-      queryPostings(spark, paths, terms.toSeq, buckets)
-        .flatMap { b =>
-          val ti = java.util.Arrays.binarySearch(
-            bcTerms.value.asInstanceOf[Array[AnyRef]], b.term)
-          if (ti < 0) Iterator.empty
-          else {
-            val idf = bcIdf.value(ti)
-            val d = Blocks.decode(b)
-            (0 until d.docs.length).iterator.map(i => (d.docs(i), ti, field,
-              weight * idf * Bm25.tfNorm(d.tfs(i), d.dls(i).toLong, avgdl)))
-          }
-        }
-    val metaTx = Indexer.readMeta(spark, textRoot)
-    val metaTi = Indexer.readMeta(spark, titleRoot)
+      Bm25.idf(stTx.n_docs, math.max(dfTx.getOrElse(t, 0L), dfTi.getOrElse(t, 0L)))).toArray
+    // cell 2t + f holds term t's contribution in field f (0 text, 1 title)
+    def field(root: String, f: Int, avgdl: Double, weight: Double) =
+      Source(root, terms.zipWithIndex.map { case (t, i) => t -> (2 * i + f) }.toMap,
+        (c, tf, dl) => weight * idfBlend(c / 2) * Bm25.tfNorm(tf, dl.toLong, avgdl))
     val n = terms.length
-    // one Double column per (term, field) cell; each cell has at most one
-    // contribution row (a (term, doc) pair lives in exactly one block), so
-    // the sum is single-addend — exact under any partial combine order
-    val cellCols = (0 until n).flatMap(t => Seq(
-      sum(when($"t" === t && $"f" === 0, $"c")).as(s"tx$t"),
-      sum(when($"t" === t && $"f" === 1, $"c")).as(s"ti$t")))
-    contribs(pathsTx, metaTx.buckets, stTx.avgdl, 0, 1.0)
-      .union(contribs(pathsTi, metaTi.buckets, stTi.avgdl, 1, titleBoost))
-      .toDF("doc_id", "t", "f", "c")
-      .groupBy($"doc_id")
-      .agg(cellCols.head, cellCols.tail: _*)
-      .map { r => // one row per doc; fixed term order: deterministic sums
-        var sc = 0.0
-        var t = 0
-        while (t < n) {
-          val tx = if (r.isNullAt(1 + 2 * t)) 0.0 else r.getDouble(1 + 2 * t)
-          val ti = if (r.isNullAt(2 + 2 * t)) 0.0 else r.getDouble(2 + 2 * t)
-          sc += math.max(tx, ti) + tieBreaker * math.min(tx, ti)
-          t += 1
-        }
-        (r.getLong(0), sc)
+    val scored = exhaustive(spark, Seq(field(textRoot, 0, stTx.avgdl, 1.0),
+        field(titleRoot, 1, stTi.avgdl, titleBoost))) { (_, cells) =>
+      var sc = 0.0
+      var t = 0
+      while (t < n) {
+        val tx = cells(2 * t)
+        val ti = cells(2 * t + 1)
+        sc += math.max(tx, ti) + tieBreaker * math.min(tx, ti)
+        t += 1
       }
-      .toDF("doc_id", "score")
-      // live soft-deletes on the text (primary) root exclude as everywhere
-      .transform(df => graft.index.Deletes.filterLive(df, textRoot))
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
-      .transform(rounded)
+      sc
+    }
+    rounded(cut(scored, k))
   }
 
   /** Query-time synonyms — the public Lucene SynonymQuery semantics ES
@@ -569,22 +545,12 @@ object SearchEngine {
     * like ordinary query terms. Groups analyze under the index's search
     * analyzer and must be disjoint (after analysis).
     *
-    * Plan: one pruned postings scan over all member terms (bucket pruning +
-    * term pushdown), then a codegen'd pivot `groupBy(doc_id).agg(sum(when(
-    * g===i, tf)))` — a real HashAggregate whose MAP-SIDE PARTIALS absorb a
-    * doc's multiple member-term hits before the exchange (one row per doc
-    * crosses, not one row per posting; VERDICT r4 flagged the previous
-    * groupByKey.mapGroups shape, which cannot partial-aggregate). The Int
-    * tf partials are exact under any combine order; the final BM25 math
-    * runs in one narrow typed map per doc reusing the exact [[Bm25.tfNorm]]
-    * scalar ops in fixed group order, so scores stay bit-identical to the
-    * old shape. Group-summed tf has no per-term upper bound, so this is
-    * the exhaustive-pruned family, not WAND — same as cross_fields, and
-    * still never a corpus scan.
+    * The [[exhaustive]] kernel's BM25 with the groups as cells, so singleton
+    * groups are plain BM25. Group-summed tf has no per-term upper bound, so
+    * this is the exhaustive-pruned family, not WAND.
     */
   def synonymTopK(spark: SparkSession, root: String,
       groups: Seq[Seq[String]], k: Int): DataFrame = {
-    import spark.implicits._
     val paths = IndexPaths(root)
     val meta = Indexer.readMeta(spark, root)
     val analyzed = groups.map(g =>
@@ -598,47 +564,8 @@ object SearchEngine {
       Bm25.idf(stats.n_docs, g.map(dfByTerm.getOrElse(_, 0L)).max)).toArray
     val groupOf = analyzed.zipWithIndex
       .flatMap { case (g, i) => g.map(_ -> i) }.toMap
-    val bcGroupOf = spark.sparkContext.broadcast(groupOf)
-    val bcIdfs = spark.sparkContext.broadcast(idfs)
-    val avgdl = stats.avgdl
-
-    val nGroups = idfs.length
-    // pivot to one Long tf-sum column per group: sum(Int) partials are exact
-    // under any combine order, and dl is constant per doc (max = the value)
-    val tfCols = (0 until nGroups).map(i =>
-      sum(when($"g" === i, $"tf")).as(s"tf$i"))
-    queryPostings(spark, paths, analyzed.flatten, meta.buckets)
-      .flatMap { b =>
-        bcGroupOf.value.get(b.term) match {
-          case None => Iterator.empty
-          case Some(g) =>
-            val d = Blocks.decode(b)
-            (0 until d.docs.length).iterator
-              .map(i => (d.docs(i), g, d.tfs(i), d.dls(i)))
-        }
-      }
-      .toDF("doc_id", "g", "tf", "dl")
-      .groupBy($"doc_id")
-      .agg(max($"dl").as("dl"), tfCols: _*)
-      .map { r => // one row per doc; exact scalar BM25 in fixed group order
-        val idf = bcIdfs.value
-        val dl = r.getInt(1).toLong
-        var sc = 0.0
-        var g = 0
-        while (g < idf.length) {
-          if (!r.isNullAt(2 + g)) {
-            val tf = r.getLong(2 + g).toInt
-            if (tf > 0) sc += idf(g) * Bm25.tfNorm(tf, dl, avgdl)
-          }
-          g += 1
-        }
-        (r.getLong(0), sc)
-      }
-      .toDF("doc_id", "score")
-      .transform(df => graft.index.Deletes.filterLive(df, root))
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
-      .transform(rounded)
+    rounded(cut(exhaustive(spark, Seq(Source(root, groupOf, (_, tf, _) => tf)))(
+      bm25(idfs, stats.avgdl)), k))
   }
 
   /** ES `rescore`: re-rank the top-`window` WAND candidates with a secondary
@@ -668,7 +595,7 @@ object SearchEngine {
 
   /** ES `_explain` analog: per-term score breakdown for every top-k doc —
     * (doc_id, term, contribution). The exhaustive kernel's query model and
-    * decode step, restricted to the top-k docIDs (broadcast); contributions
+    * [[decode]] step, restricted to the top-k docIDs; contributions
     * re-derived from the postings exactly as the scorer computes them, so
     * the rows sum to the hit scores bit-for-bit.
     */
@@ -677,19 +604,17 @@ object SearchEngine {
     import spark.implicits._
     val topDocs = topKWand(spark, root, rawTerms, k)
       .select($"doc_id").as[Long].collect().sorted
-    decodedPostings(spark, root, rawTerms, Some(topDocs)) match {
-      case None => spark.emptyDataset[(Long, String, Double)]
-        .toDF("doc_id", "term", "contrib_r6")
-      case Some((bcQm, rows)) =>
-        rows.as[(Long, Int, Int, Int)]
-          .map { case (doc, ti, tf, dl) =>
-            val qmv = bcQm.value
-            (doc, qmv.terms(ti), qmv.idfs(ti) * Bm25.tfNorm(tf, dl.toLong, qmv.avgdl))
-          }
-          .toDF("doc_id", "term", "contrib")
-          .select($"doc_id", $"term", round($"contrib", 6).as("contrib_r6"))
-          .orderBy($"doc_id", $"term")
-    }
+    val qm = indexQueryModel(spark, root, rawTerms)
+    if (qm.isEmpty)
+      return spark.emptyDataset[(Long, String, Double)].toDF("doc_id", "term", "contrib_r6")
+    val contrib = Source(root, qm.terms.zipWithIndex.toMap,
+      (c, tf, dl) => qm.idfs(c) * Bm25.tfNorm(tf, dl.toLong, qm.avgdl))
+    decode(spark, Seq(contrib), Some(topDocs))
+      .select($"doc_id", $"cell", $"v").as[(Long, Int, Double)]
+      .map { case (doc, c, v) => (doc, qm.terms(c), v) }
+      .toDF("doc_id", "term", "contrib")
+      .select($"doc_id", $"term", round($"contrib", 6).as("contrib_r6"))
+      .orderBy($"doc_id", $"term")
   }
 
   /** The driver-contract projection: `(doc_id, score_r4)`, the score

@@ -52,6 +52,12 @@ class PlanSpec extends AnyFunSuite {
       s"cross_fields scoring must be a hash aggregate:\n$p2")
     assert(p2.toLowerCase.contains("partial"),
       s"cross_fields scoring must have a map-side partial pass:\n$p2")
+    val p3 = plan(graft.search.Bm25F.topK(
+      spark, idx.paths.root, ti.paths.root, Seq("join", "window"), 10))
+    assert(p3.contains("HashAggregate") && p3.toLowerCase.contains("partial"),
+      s"BM25F scoring must have a map-side partial pass:\n$p3")
+    assert(!p3.contains("MapGroups"),
+      s"BM25F must not ship raw postings through mapGroups:\n$p3")
   }
 
   test("scoreAllDocs partial-aggregates map-side (no combiner-less object shuffle)") {
@@ -208,33 +214,39 @@ class PlanSpec extends AnyFunSuite {
   test("a warm plain topKWand runs as one Spark job, with no adaptive re-planning") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    def query() = SearchEngine.topKWand(spark, idx.paths.root, Seq("join", "window"), 10)
-    query().collect() // warm: metadata memos and the resolved postings relation
-    val group = s"plan-spec-${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(jobs.add)
+    val root = idx.paths.root
+    def plain() = SearchEngine.topKWand(spark, root, Seq("join", "window"), 10)
+    // must_not docIDs join the shard operator as one more scan child
+    def mustNot() = SearchEngine.topKWand(spark, root, Seq("join", "window"), 10,
+      excludedDocs = SearchEngine.mustNotDocs(spark, root, Seq("vector")))
+    for ((name, query) <- Seq("plain" -> plain _, "must_not" -> mustNot _)) {
+      query().collect() // warm: metadata memos and the resolved postings relation
+      val group = s"plan-spec-${System.nanoTime()}"
+      val sentinel = s"$group-sentinel"
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .foreach(jobs.add)
+      }
+      sc.addSparkListener(listener)
+      try {
+        val df = query()
+        sc.setJobGroup(group, s"warm $name topKWand")
+        try df.collect() finally sc.clearJobGroup()
+        // the listener bus delivers in order: once a later job's start is
+        // seen, every job of the query has been counted
+        sc.setJobGroup(sentinel, "sentinel")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(jobs.contains(sentinel), "listener bus did not deliver the sentinel job")
+        val n = jobs.toArray.count(_ == group)
+        assert(n == 1, s"expected one Spark job per warm $name query, saw $n")
+        assert(!plan(df).contains("AdaptiveSparkPlan"),
+          s"no exchange may be left for adaptive execution to split ($name):\n${plan(df)}")
+      } finally sc.removeSparkListener(listener)
     }
-    sc.addSparkListener(listener)
-    try {
-      val df = query()
-      sc.setJobGroup(group, "warm topKWand")
-      try df.collect() finally sc.clearJobGroup()
-      // the listener bus delivers in order: once a later job's start is
-      // seen, every job of the query has been counted
-      sc.setJobGroup(sentinel, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains(sentinel), "listener bus did not deliver the sentinel job")
-      val n = jobs.toArray.count(_ == group)
-      assert(n == 1, s"expected one Spark job per warm query, saw $n")
-      assert(!plan(df).contains("AdaptiveSparkPlan"),
-        s"no exchange may be left for adaptive execution to split:\n${plan(df)}")
-    } finally sc.removeSparkListener(listener)
   }
 
   test("wildcard expansion scan is bucket-pruned with term pushdown") {

@@ -73,6 +73,19 @@ class EnglishIndexSpec extends AnyFunSuite {
     } finally graft.io.Fs.delete(new java.io.File(copy).getParent)
   }
 
+  test("cross_fields and BM25F analyze like the index: one field reduces to plain BM25") {
+    // with the index as both fields, tie_breaker 0 and title boost 1,
+    // cross_fields is Σ_t max(x, x) = plain BM25; BM25F with a zero title
+    // weight is too — only if 'joins' stems to the indexed 'join'
+    val root = IndexCache.englishIndex(spark, sfDir).paths.root
+    val q = Seq("joins", "window")
+    val plain = hits(rounded(SearchEngine.topKWand(spark, root, q, 10)))
+    assert(plain.nonEmpty)
+    assert(hits(SearchEngine.multiMatchCrossFields(spark, root, root, q, 10,
+      tieBreaker = 0.0, titleBoost = 1.0)) == plain)
+    assert(hits(Bm25F.topK(spark, root, root, q, 10, wText = 1.0, wTitle = 0.0)) == plain)
+  }
+
   test("surface forms conflate: inflected query equals stemmed query") {
     val idx = IndexCache.englishIndex(spark, sfDir)
     val a = hits(rounded(SearchEngine.topKWand(spark, idx.paths.root, Seq("joins"), 10)))
