@@ -42,6 +42,9 @@ final case class PostingBlock(
 /** A decoded block: parallel arrays (docIDs ascending). */
 final case class DecodedBlock(docs: Array[Long], tfs: Array[Int], dls: Array[Int])
 
+/** One posting of one (term, run): the row the run encoder consumes. */
+final case class RunPosting(term: String, run_id: Int, doc_id: Long, tf: Int, dl: Int)
+
 object Blocks {
   val BlockSize = 128
 
@@ -54,10 +57,8 @@ object Blocks {
   /** Mutable streaming accumulator for one (term, run): feed postings in
     * ascending docID order, collect emitted blocks. O(BlockSize) memory —
     * never materializes the whole posting list (SPIMI discipline, IIR §4.3).
-    * Used by the SPIMI mapPartitions encoder where (term, run) groups arrive
-    * as consecutive sorted rows.
     */
-  final class Accumulator(term: String, runId: Int, avgdl: Double, buckets: Int) {
+  private final class Accumulator(term: String, runId: Int, avgdl: Double, buckets: Int) {
     private val bucket = bucketOf(term, buckets)
     private var blockIdx = 0
     private var n = 0
@@ -111,6 +112,40 @@ object Blocks {
       buckets: Int): Iterator[PostingBlock] = {
     val acc = new Accumulator(term, runId, avgdl, buckets)
     postings.flatMap { case (d, tf, dl) => acc.add(d, tf, dl) } ++ acc.flush()
+  }
+
+  /** The run encoder under every sorted-stream postings writer (the salted
+    * SPIMI shuffle, compaction, both purge paths): `rows` sorted by
+    * (term, run_id, doc_id); a group is cut at each change of (term,
+    * run_id) and encoded through one [[Accumulator]]. Lazy — holds one
+    * partial block and at most two finished ones.
+    */
+  def encodeRuns(rows: Iterator[RunPosting], avgdl: Double,
+      buckets: Int): Iterator[PostingBlock] = new Iterator[PostingBlock] {
+    private val pending = new java.util.ArrayDeque[PostingBlock](4)
+    private var acc: Accumulator = _
+    private var term: String = _
+    private var run = 0
+
+    private def fill(): Unit = {
+      while (pending.isEmpty && rows.hasNext) {
+        val r = rows.next()
+        if (acc == null || r.run_id != run || r.term != term) {
+          if (acc != null) acc.flush().foreach(pending.add)
+          acc = new Accumulator(r.term, r.run_id, avgdl, buckets)
+          term = r.term
+          run = r.run_id
+        }
+        acc.add(r.doc_id, r.tf, r.dl).foreach(pending.add)
+      }
+      if (pending.isEmpty && acc != null) {
+        acc.flush().foreach(pending.add)
+        acc = null
+      }
+    }
+
+    override def hasNext: Boolean = { fill(); !pending.isEmpty }
+    override def next(): PostingBlock = { fill(); pending.poll() }
   }
 
   def decode(b: PostingBlock): DecodedBlock =

@@ -1,9 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 
-import graft.core.{Blocks, PostingBlock}
+import graft.core.{Blocks, PostingBlock, RunPosting}
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
 
@@ -50,74 +50,53 @@ object Compaction {
     val avgdl = Catalog.readCorpusStats(spark, paths).avgdl
     val meta = Indexer.readMeta(spark, root)
 
-    val postingsNew = s"${paths.postingsBase}_staging"
-    Catalog.readPostings(spark, paths)
-      .repartition($"bucket")
-      .sortWithinPartitions($"bucket", $"term", $"first_doc")
-      .mapPartitions(rows => new MergeIterator(rows, avgdl, meta.buckets))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(postingsNew)
-    // keyword rows were carried into the rewrite — forward their markers too
-    Fs.listTopFiles(paths.postings, "_kw_")
-      .foreach(m => Fs.copyDir(m, s"$postingsNew/${new org.apache.hadoop.fs.Path(m).getName}"))
-    Fs.publishVersion(paths.postingsBase, postingsNew)
+    publishPostings(paths, merged(spark, paths, avgdl, meta.buckets, None))
 
     // dictionary from the fresh block headers (df/cf exact: one run per term
     // now, each doc once per term; max_tf_norm freshly recomputed)
-    val dictNew = s"${paths.dictionaryBase}_staging"
-    Indexer.dictionaryOf(spark, paths.postings)
-      .write.mode(SaveMode.Overwrite).parquet(dictNew)
-    Fs.publishVersion(paths.dictionaryBase, dictNew)
+    Fs.publish(paths.dictionaryBase)(
+      Indexer.dictionaryOf(spark, paths.postings).write.mode(SaveMode.Overwrite).parquet(_))
 
     // bounds are fresh against the current avgdl again: exact block-max
     // skipping is safe until the next append flips `incremental` back on
-    val metaNew = s"${paths.metaBase}_staging"
-    Seq(meta.copy(incremental = false)).toDS()
-      .write.mode(SaveMode.Overwrite).parquet(metaNew)
-    Fs.publishVersion(paths.metaBase, metaNew)
+    Fs.publish(paths.metaBase)(
+      Seq(meta.copy(incremental = false)).toDS().write.mode(SaveMode.Overwrite).parquet(_))
   }
 
-  /** Streaming per-partition merge: input blocks sorted by (bucket, term,
-    * first_doc); a term never spans buckets (bucket = hash(term)), so term
-    * groups are contiguous. Decode each group in order, feed one
-    * run-0 Accumulator — O(BlockSize) memory. `deleted` (sorted, may be
-    * empty) is the tombstone set an expunge merge drops ([[Deletes.purge]]).
+  /** The merge rewrite under [[compact]] and the broadcast purge
+    * ([[Deletes.purge]]): the live postings re-encoded as ONE run (run 0) of
+    * full blocks per term, with bounds against `avgdl`, dropping the docs of
+    * `deleted` (sorted). One exchange (repartition by bucket; a term never
+    * spans buckets, so its blocks arrive contiguous, sorted by first_doc),
+    * then each block decoded lazily into the run encoder — O(block) memory
+    * per task.
     */
-  private[index] final class MergeIterator(
-      rows: Iterator[PostingBlock],
-      avgdl: Double,
-      buckets: Int,
-      deleted: Array[Long] = Array.emptyLongArray) extends Iterator[PostingBlock] {
-
-    private val pending = new java.util.ArrayDeque[PostingBlock](4)
-    private var acc: Blocks.Accumulator = _
-    private var curTerm: String = _
-
-    private def fill(): Unit = {
-      while (pending.isEmpty && rows.hasNext) {
-        val b = rows.next()
-        if (acc == null || b.term != curTerm) {
-          if (acc != null) acc.flush().foreach(pending.add)
-          acc = new Blocks.Accumulator(b.term, 0, avgdl, buckets)
-          curTerm = b.term
+  private[index] def merged(spark: SparkSession, paths: IndexPaths, avgdl: Double,
+      buckets: Int, deleted: Option[Broadcast[Array[Long]]]): Dataset[PostingBlock] = {
+    import spark.implicits._
+    Catalog.readPostings(spark, paths)
+      .repartition($"bucket")
+      .sortWithinPartitions($"bucket", $"term", $"first_doc")
+      .mapPartitions { blocks =>
+        val del = deleted.fold(Array.emptyLongArray)(_.value)
+        val rows = blocks.flatMap { b =>
+          val d = Blocks.decode(b)
+          (0 until d.docs.length).iterator
+            .filter(i => del.length == 0 || java.util.Arrays.binarySearch(del, d.docs(i)) < 0)
+            .map(i => RunPosting(b.term, 0, d.docs(i), d.tfs(i), d.dls(i)))
         }
-        val d = Blocks.decode(b)
-        var i = 0
-        while (i < d.docs.length) {
-          if (deleted.length == 0 ||
-              java.util.Arrays.binarySearch(deleted, d.docs(i)) < 0)
-            acc.add(d.docs(i), d.tfs(i), d.dls(i)).foreach(pending.add)
-          i += 1
-        }
+        Blocks.encodeRuns(rows, avgdl, buckets)
       }
-      if (pending.isEmpty && !rows.hasNext && acc != null) {
-        acc.flush().foreach(pending.add)
-        acc = null
-      }
-    }
-
-    override def hasNext: Boolean = { fill(); !pending.isEmpty }
-    override def next(): PostingBlock = { fill(); pending.poll() }
   }
+
+  /** Publish `blocks` as the next postings generation. The keyword rows ride
+    * every rewrite, so their `_kw_` markers are forwarded with them.
+    */
+  private[index] def publishPostings(paths: IndexPaths,
+      blocks: Dataset[PostingBlock]): Unit =
+    Fs.publish(paths.postingsBase) { staging =>
+      blocks.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(staging)
+      Fs.listTopFiles(paths.postings, "_kw_")
+        .foreach(m => Fs.copyDir(m, s"$staging/${new org.apache.hadoop.fs.Path(m).getName}"))
+    }
 }

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Blocks
+import graft.core.{Blocks, RunPosting}
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
 import graft.search.Booleans
@@ -84,9 +84,8 @@ object Deletes {
     val merged =
       if (hasDeletes(paths)) matched.union(spark.read.parquet(paths.deletes)).distinct()
       else matched
-    val staging = s"${paths.deletesBase}_staging"
-    merged.select($"doc_id").write.mode(SaveMode.Overwrite).parquet(staging)
-    Fs.publishVersion(paths.deletesBase, staging)
+    Fs.publish(paths.deletesBase)(
+      merged.select($"doc_id").write.mode(SaveMode.Overwrite).parquet(_))
     spark.read.parquet(paths.deletes).count()
   }
 
@@ -183,22 +182,17 @@ object Deletes {
     publishMeta(spark, paths, meta.copy(incremental = true))
 
     // merge pass: drop tombstoned docs, re-encode full blocks, bounds
-    // against the LIVE avgdl. Broadcast path streams blocks directly;
-    // join path explodes to posting rows, anti-joins the tombstones
-    // (distributed — no driver set), and re-encodes per (term, docID cell)
-    // in ascending docID order — within one cell EXACTLY the row stream
-    // MergeIterator sees after its membership skip, so single-cell corpora
-    // produce bit-identical output (DeletesSpec pins a majority-dead index
-    // through this path) and multi-cell corpora produce the standard
-    // disjoint-ascending salted-run layout with no per-term straggler.
-    val postingsNew = s"${paths.postingsBase}_staging"
+    // against the LIVE avgdl. Broadcast path: Compaction's merge rewrite
+    // with the tombstones dropped. Join path: explode to posting rows,
+    // anti-join the tombstones (distributed — no driver set), and re-encode
+    // per (term, docID cell) in ascending docID order — within one cell
+    // EXACTLY the row stream the broadcast path encodes, so single-cell
+    // corpora produce bit-identical output (DeletesSpec pins a
+    // majority-dead index through this path) and multi-cell corpora produce
+    // the standard disjoint-ascending salted-run layout with no per-term
+    // straggler.
     val merged =
-      if (useBroadcast)
-        Catalog.readPostings(spark, paths)
-          .repartition($"bucket")
-          .sortWithinPartitions($"bucket", $"term", $"first_doc")
-          .mapPartitions(rows =>
-            new Compaction.MergeIterator(rows, avgdl, meta.buckets, bcDel.value))
+      if (useBroadcast) Compaction.merged(spark, paths, avgdl, meta.buckets, Some(bcDel))
       else {
         // Re-encode keyed by (term, docID cell), run_id = cell index: a head
         // term ('the' at corpus scale) splits across doc_id_space/cellDocs
@@ -218,84 +212,36 @@ object Deletes {
           }
           .toDF("term", "doc_id", "tf", "dl")
           .join(delDf, Seq("doc_id"), "left_anti")
-          .withColumn("cell", (col("doc_id") / cellDocs).cast("int"))
-          .repartition($"term", $"cell")
-          .sortWithinPartitions($"term", $"cell", $"doc_id")
-          // the join moved doc_id first; tuple encoders bind positionally
-          .select($"term", $"cell", $"doc_id", $"tf", $"dl")
-          .as[(String, Int, Long, Int, Int)]
-          .mapPartitions(rows => new ReencodeIterator(rows, avgdl, meta.buckets))
+          .withColumn("run_id", (col("doc_id") / cellDocs).cast("int"))
+          .repartition($"term", $"run_id")
+          .sortWithinPartitions($"term", $"run_id", $"doc_id")
+          .as[RunPosting]
+          .mapPartitions(rows => Blocks.encodeRuns(rows, avgdl, meta.buckets))
       }
-    merged
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(postingsNew)
-    // keyword rows survive the rewrite — forward their markers too
-    Fs.listTopFiles(paths.postings, "_kw_")
-      .foreach(m => Fs.copyDir(m, s"$postingsNew/${new org.apache.hadoop.fs.Path(m).getName}"))
-    Fs.publishVersion(paths.postingsBase, postingsNew)
+    Compaction.publishPostings(paths, merged)
 
-    val statsNew = s"${paths.corpusStatsBase}_staging"
-    Seq(graft.model.CorpusStats(nDocs, totalTokens, avgdl)).toDS()
-      .write.mode(SaveMode.Overwrite).parquet(statsNew)
-    Fs.publishVersion(paths.corpusStatsBase, statsNew)
+    Fs.publish(paths.corpusStatsBase)(
+      Seq(graft.model.CorpusStats(nDocs, totalTokens, avgdl)).toDS()
+        .write.mode(SaveMode.Overwrite).parquet(_))
 
     // dictionary over live postings only (terms whose docs all died vanish)
-    val dictNew = s"${paths.dictionaryBase}_staging"
-    Indexer.dictionaryOf(spark, paths.postings)
-      .write.mode(SaveMode.Overwrite).parquet(dictNew)
-    Fs.publishVersion(paths.dictionaryBase, dictNew)
+    Fs.publish(paths.dictionaryBase)(
+      Indexer.dictionaryOf(spark, paths.postings).write.mode(SaveMode.Overwrite).parquet(_))
 
     // exact stored bounds are trustworthy again (fresh against live avgdl)
     publishMeta(spark, paths, meta.copy(incremental = false))
 
     // clear tombstones LAST (no-op against the new postings; still correct
     // against the old for in-flight readers)
-    val emptyNew = s"${paths.deletesBase}_staging"
-    spark.emptyDataset[Long].toDF("doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(emptyNew)
-    Fs.publishVersion(paths.deletesBase, emptyNew)
+    Fs.publish(paths.deletesBase)(
+      spark.emptyDataset[Long].toDF("doc_id").write.mode(SaveMode.Overwrite).parquet(_))
     if (bcDel != null) bcDel.destroy()
     spark.sparkContext.setJobDescription(null)
   }
 
-  /** Stream (term, doc, tf, dl) rows — sorted by (term, doc) within the
-    * partition, each term wholly in one partition — into run-0 Accumulators:
-    * the same encoder MergeIterator feeds post-skip, so both purge paths
-    * produce identical blocks.
-    */
-  private final class ReencodeIterator(
-      rows: Iterator[(String, Int, Long, Int, Int)],
-      avgdl: Double,
-      buckets: Int) extends Iterator[graft.core.PostingBlock] {
-    private val pending = new java.util.ArrayDeque[graft.core.PostingBlock](4)
-    private var acc: Blocks.Accumulator = _
-    private var curTerm: String = _
-    private var curCell: Int = -1
-    private def fill(): Unit = {
-      while (pending.isEmpty && rows.hasNext) {
-        val (t, cell, doc, tf, dl) = rows.next()
-        if (acc == null || t != curTerm || cell != curCell) {
-          if (acc != null) acc.flush().foreach(pending.add)
-          acc = new Blocks.Accumulator(t, cell, avgdl, buckets)
-          curTerm = t
-          curCell = cell
-        }
-        acc.add(doc, tf, dl).foreach(pending.add)
-      }
-      if (pending.isEmpty && !rows.hasNext && acc != null) {
-        acc.flush().foreach(pending.add)
-        acc = null
-      }
-    }
-    override def hasNext: Boolean = { fill(); !pending.isEmpty }
-    override def next(): graft.core.PostingBlock = { fill(); pending.poll() }
-  }
-
   private def publishMeta(spark: SparkSession, paths: IndexPaths, m: IndexMeta): Unit = {
     import spark.implicits._
-    val staging = s"${paths.metaBase}_staging"
-    Seq(m).toDS().write.mode(SaveMode.Overwrite).parquet(staging)
-    Fs.publishVersion(paths.metaBase, staging)
+    Fs.publish(paths.metaBase)(
+      Seq(m).toDS().write.mode(SaveMode.Overwrite).parquet(_))
   }
 }

@@ -33,11 +33,12 @@ import graft.model._
   *                    stats (avgdl must precede encoding — block-max bounds
   *                    need it) ride the assignment's own histogram pass, so
   *                    no separate stats read exists.
-  *   S2 spimi         NO exchange: per-cell in-memory SPIMI inversion runs
-  *                    on a (doc_id, text)-pruned, split-disabled scan of
-  *                    corpus_sorted itself (cells are part-aligned docID
-  *                    ranges — Spimi.cellStarts — so each cell is whole
-  *                    inside one file). Skew-free by construction: cell key
+  *   S2 spimi         NO exchange: Spimi.invert (per-cell in-memory SPIMI
+  *                    inversion) runs on a (doc_id, text)-pruned,
+  *                    split-disabled scan of corpus_sorted itself (cells
+  *                    are part-aligned docID ranges — Spimi.cellStarts —
+  *                    so each cell is whole inside one file). Skew-free by
+  *                    construction: cell key
   *                    = doc range, never the term (the docID-range salting
   *                    of the north star applied at the corpus exchange).
   *                    Cold and RESUMED builds take the identical read, so
@@ -46,6 +47,8 @@ import graft.model._
   *                    re-exchange.
   *   S3 finalize      the term-keyed merge: metadata-only groupBy over block
   *                    headers (payloads pruned) → dictionary, meta
+  *   keywords         (optional) every --keyword-field in one salted pass
+  *                    appended to one staged postings copy (KeywordIndex)
   */
 object IndexBuildJob {
 
@@ -211,21 +214,36 @@ object IndexBuildJob {
       }
       val (offsets, starts) = Catalog.readGridBounds(spark, paths)
       if (legacyGeometry) {
+        // co-locate each cell: one exchange keyed by the (docID-derived,
+        // content-determined) part index, as a short codegen-safe chain
+        // (P terms, P = partitions); pruned to (doc_id, text) BEFORE the
+        // exchange, so it ships ~half the corpus bytes the full rows would
+        val part = (1 until offsets.length - 1).foldLeft(lit(0)) { (acc, p) =>
+          acc + when($"doc_id" >= lit(offsets(p)), 1).otherwise(0)
+        }
+        val rows = Catalog.readNumbered(spark, paths)
+          .select($"doc_id", $"text")
+          .repartition(parts, part)
+          .sortWithinPartitions($"doc_id")
         Catalog.writePostings(
-          Spimi.buildBlocksAlignedExchange(Catalog.readNumbered(spark, paths),
-            offsets, starts, stats.avgdl, a.buckets, parts, a.analyzer), paths)
+          Spimi.invert(rows, starts, stats.avgdl, a.buckets, a.analyzer), paths)
       } else {
-        // never split a file: a row-group split would cut a SPIMI cell
-        // across two tasks (see Spimi.buildBlocksAlignedParquet). Scoped
-        // around the consuming action — scan partitions are planned at
-        // execution, not at read()
+        // S1 wrote one file per exchange partition, each holding whole
+        // `__part` groups sorted by docID, and cells never cross a part
+        // boundary (Spimi.cellStarts) — so each cell is whole and
+        // row-contiguous inside exactly one file, as long as the scan never
+        // SPLITS a file (a row-group split would cut a cell across two
+        // tasks → two half-runs colliding on run_id/block_idx). Whole files
+        // may still pack into one task in any order: the inverter re-seats
+        // on any cell jump. Scoped around the consuming action — scan
+        // partitions are planned at execution, not at read()
         val maxFile = graft.io.Fs.listDataFiles(paths.corpusSorted)
           .map(_._2).maxOption.getOrElse(1L)
         val key = "spark.sql.files.maxPartitionBytes"
         val prev = spark.conf.get(key)
         spark.conf.set(key, (maxFile + 1L).toString)
         try Catalog.writePostings(
-          Spimi.buildBlocksAlignedParquet(spark, paths.corpusSorted, starts,
+          Spimi.invert(spark.read.parquet(paths.corpusSorted), starts,
             stats.avgdl, a.buckets, a.analyzer), paths)
         finally spark.conf.set(key, prev)
       }
@@ -272,9 +290,10 @@ object IndexBuildJob {
 
     // ---- optional keyword-field filter postings (after compact: they are
     // appended segments and would otherwise just be re-merged) -------------
-    a.keywordFields.foreach { f =>
-      stage(s"kw_$f", s1Fp + "+" + f, paths.postings) {
-        KeywordIndex.add(spark, a.output, Catalog.readNumbered(spark, paths).toDF(), f)
+    if (a.keywordFields.nonEmpty) {
+      stage("keywords", s1Fp + "+" + a.keywordFields.mkString(","), paths.postings) {
+        KeywordIndex.add(spark, a.output, Catalog.readNumbered(spark, paths).toDF(),
+          a.keywordFields: _*)
       }
     }
 

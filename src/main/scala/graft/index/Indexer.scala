@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -24,16 +24,21 @@ final case class IndexMeta(buckets: Int, target_run: Long, doc_id_space: Long,
     incremental: Boolean = false, last_batch_id: Long = -1L,
     analyzer: String = "standard", synonyms: Boolean = false)
 
-/** Index construction orchestration (SURVEY.md §3.1, stages S2–S4 over an
-  * already doc-keyed corpus; DocIds.assign is stage S1 for transcript input).
+/** Index construction over an already doc-keyed corpus (SURVEY.md §3.1);
+  * transcript input goes through [[IndexBuildJob]], whose S1 assigns the
+  * docIDs.
   *
-  * Shuffle census (the whole scaling story — SURVEY.md §3.1):
-  *   1. df/cf groupBy(term) — partial aggregation absorbs head-term skew;
-  *   2. the salted repartition(term, salt) — THE skew-critical exchange,
-  *      bounded per-group by SaltPlan;
-  * plus, for transcripts, the S1 range partition. The dictionary "merge" is
-  * metadata-only: postings are re-read with the binary payload columns
-  * pruned away, so heavy terms never cross a shuffle uncompressed.
+  * Shuffle census of [[buildFromDocs]] (the whole scaling story — SURVEY.md
+  * §3.1):
+  *   1. the equal-width docID range exchange ([[gridExchange]]) — the
+  *      build's one corpus exchange, skew-free by construction (the key is
+  *      a doc range, never the term); [[Spimi.invert]] then inverts each
+  *      cell in place;
+  *   2. the bucket repartition of the compressed blocks at the postings
+  *      write (Catalog.writePostings);
+  *   3. the dictionary groupBy(term) — metadata-only: postings are re-read
+  *      with the binary payload columns pruned away, so heavy terms never
+  *      cross a shuffle uncompressed.
   */
 object Indexer {
 
@@ -45,7 +50,6 @@ object Indexer {
       buckets: Int = 16,
       targetRun: Long = 1 << 20,
       numPartitionsOpt: Option[Int] = None,
-      statsOpt: Option[CorpusStats] = None,
       analyzer: String = "standard",
       synonyms: Map[String, String] = Map.empty): BuildResult = {
     val spark = docs.sparkSession
@@ -53,56 +57,52 @@ object Indexer {
     val numPartitions = numPartitionsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
     val paths = IndexPaths(root)
 
-    // S2: doc lengths + corpus stats (includes empty docs in N / avgdl);
-    // avgdl must precede encoding (block-max bounds need it). Callers that
-    // already computed stats during docID assignment (buildFromTurns —
-    // dense 0..N−1 ids, so doc_id_space == n_docs) pass them in and this
-    // whole corpus pass is skipped.
-    val (stats, docIdSpace) = statsOpt match {
-      case Some(st) => (st, st.n_docs)
-      case None =>
-        val dls = TermFreqs.docLengths(docs, analyzer).persist(StorageLevel.MEMORY_AND_DISK)
-        val st = TermFreqs.corpusStats(dls)
-        val ds = {
-          val r = dls.toDF("doc_id", "dl").agg(max($"doc_id")).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0) + 1L
-        }
-        dls.unpersist(blocking = false)
-        (st, ds)
+    // doc lengths + corpus stats (includes empty docs in N / avgdl); avgdl
+    // must precede encoding (block-max bounds need it)
+    val dls = TermFreqs.docLengths(docs, analyzer).persist(StorageLevel.MEMORY_AND_DISK)
+    val stats = TermFreqs.corpusStats(dls)
+    val docIdSpace = {
+      val r = dls.toDF("doc_id", "dl").agg(max($"doc_id")).head()
+      if (r.isNullAt(0)) 0L else r.getLong(0) + 1L
     }
+    dls.unpersist(blocking = false)
 
-    // S3: grid SPIMI — one doc-range exchange of the corpus, in-memory
-    // inversion per grid cell, compressed runs out (Spimi.buildBlocksGrid).
-    // Grid count ties run size to targetRun when docs are dense (≈1 posting
+    // one doc-range exchange of the corpus, in-memory inversion per cell.
+    // Cell count ties run size to targetRun when docs are dense (≈1 posting
     // per doc per term worst case), floored at 2× parallelism for balance.
     val grids = math.max(numPartitions * 2,
       math.min(1 << 20, (docIdSpace / math.max(1L, targetRun)).toInt + 1))
-    val blocks = Spimi.buildBlocksGrid(docs, stats.avgdl, buckets, grids,
-      docIdSpace, numPartitions, analyzer, synonyms)
-    Catalog.writePostings(blocks, paths)
+    val (rows, starts) = gridExchange(docs, grids, docIdSpace, numPartitions)
+    Catalog.writePostings(
+      Spimi.invert(rows, starts, stats.avgdl, buckets, analyzer, synonyms), paths)
 
-    // S4: the term-keyed merge (dictionary) + stats + meta
+    // the term-keyed merge (dictionary) + stats + meta
     if (synonyms.nonEmpty) Catalog.writeSynonyms(spark, paths, synonyms)
-    finalizeIndex(spark, paths, stats, buckets, targetRun, docIdSpace, analyzer,
-      synonyms.nonEmpty)
-  }
-
-  /** Shared finalize: dictionary from block headers (metadata-only
-    * aggregation, payloads pruned at the scan), corpus stats, meta — ONE
-    * definition for both build paths so the aggregation can never drift
-    * between them.
-    */
-  private def finalizeIndex(spark: SparkSession, paths: IndexPaths,
-      stats: CorpusStats, buckets: Int, targetRun: Long,
-      docIdSpace: Long, analyzer: String = "standard",
-      synonyms: Boolean = false): BuildResult = {
-    import spark.implicits._
     Catalog.writeDictionary(dictionaryOf(spark, paths.postings), paths)
     Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(paths.corpusStats)
     val meta = IndexMeta(buckets, targetRun, docIdSpace, analyzer = analyzer,
-      synonyms = synonyms)
+      synonyms = synonyms.nonEmpty)
     Seq(meta).toDS().write.mode(SaveMode.Overwrite).parquet(paths.meta)
     BuildResult(paths, stats, meta)
+  }
+
+  /** The equal-width docID range exchange under [[buildFromDocs]] and
+    * [[PositionalIndex.build]]: cell i = [i·width, (i+1)·width) with
+    * width = ⌈docIdSpace / grids⌉, range-partitioned on the cell
+    * (`doc_id DIV width`) and doc-sorted within partitions, so every cell
+    * lies whole and ascending in one partition. Returns the
+    * (grid, doc_id, text) rows and the cell starts i·width.
+    */
+  private[index] def gridExchange(docs: Dataset[Doc], grids: Int,
+      docIdSpace: Long, numPartitions: Int): (DataFrame, Array[Long]) = {
+    import docs.sparkSession.implicits._
+    val width = math.max(1L, (docIdSpace + grids - 1) / grids)
+    val rows = docs.toDF()
+      .withColumn("grid", expr(s"CAST(doc_id DIV $width AS INT)"))
+      .repartitionByRange(numPartitions, $"grid")
+      .sortWithinPartitions($"grid", $"doc_id")
+      .select($"grid", $"doc_id", $"text")
+    (rows, Array.tabulate(grids)(_ * width))
   }
 
   /** The dictionary from the postings at `postings`: per term df = Σ n_docs,
@@ -123,33 +123,6 @@ object Indexer {
         max($"max_tf_norm").as("max_tf_norm"))
       .select($"term", $"df", $"cf", $"max_tf_norm")
       .as[DictEntry]
-  }
-
-  /** Transcript-corpus build: S1 docID assignment first, docid_map written
-    * alongside the segments. Like IndexBuildJob, the assignment's exchange is
-    * the build's ONLY corpus exchange — SPIMI inverts the persisted
-    * post-assignment partitions in place (part-aligned cells, round 4).
-    */
-  def buildFromTurns(
-      turns: Dataset[Turn],
-      root: String,
-      buckets: Int = 16,
-      targetRun: Long = 1 << 20,
-      numPartitionsOpt: Option[Int] = None): BuildResult = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val numPartitions = numPartitionsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val (assigned, stats, offsets) = DocIds.assignWithStatsOffsets(turns, numPartitions)
-    val numbered = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-    val paths = IndexPaths(root)
-    Catalog.writeDocidMap(DocIds.toDocidMap(numbered), paths)
-
-    val starts = Spimi.cellStarts(offsets, targetRun)
-    Catalog.writePostings(
-      Spimi.buildBlocksAligned(numbered, starts, stats.avgdl, buckets), paths)
-    val res = finalizeIndex(spark, paths, stats, buckets, targetRun, stats.n_docs)
-    numbered.unpersist(blocking = false)
-    res
   }
 
   // per-JVM memo keyed by (resolved path, fingerprint) — published meta

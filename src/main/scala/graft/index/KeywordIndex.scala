@@ -32,29 +32,35 @@ object KeywordIndex {
 
   def fieldTerm(field: String, value: String): String = s"$field:$value"
 
-  /** Index one keyword column: `docs` must carry (doc_id, <field>).
+  /** Index keyword columns: `docs` must carry (doc_id, <field>…). Every
+    * field not yet indexed goes through ONE salt/shuffle/write appended to
+    * ONE staged postings copy — salts are per term and the `field:value`
+    * terms of different fields are disjoint, so the rows are exactly those
+    * of one pass per field.
     *
-    * The idempotency marker lives INSIDE the resolved postings generation
-    * (`_`-prefixed: invisible to Spark scans and to the fingerprint): a
-    * postings rebuild wipes it, so the field re-indexes instead of silently
-    * vanishing from filters (the old root-level marker survived rebuilds).
-    * Compaction and purge rewrite postings but carry the keyword ROWS
-    * forward, so they forward the markers too; snapshots copy them with
-    * the dir.
+    * The idempotency markers (`_kw_<field>`) live INSIDE the resolved
+    * postings generation (`_`-prefixed: invisible to Spark scans and to the
+    * fingerprint): a postings rebuild wipes them, so the field re-indexes
+    * instead of silently vanishing from filters (the old root-level marker
+    * survived rebuilds). Compaction and purge rewrite postings but carry
+    * the keyword ROWS forward, so they forward the markers too; snapshots
+    * copy them with the dir.
     */
-  def add(spark: SparkSession, root: String, docs: DataFrame, field: String): Unit = {
+  def add(spark: SparkSession, root: String, docs: DataFrame, fields: String*): Unit = {
     import spark.implicits._
     val paths = IndexPaths(root)
-    val marker = s"${paths.postings}/_kw_$field"
-    if (Fs.exists(marker)) return
+    val todo = fields.distinct.filterNot(f => Fs.exists(s"${paths.postings}/_kw_$f"))
+    if (todo.isEmpty) return
     val meta = Indexer.readMeta(spark, root)
     val parts = spark.sessionState.conf.numShufflePartitions
 
     val tf = docs
-      .select($"doc_id".cast("long"), col(field).cast("string").as("v"))
-      .filter($"v".isNotNull)
-      .as[(Long, String)]
-      .map { case (d, v) => TermFreqRow(d, fieldTerm(field, v), 1, 1) }
+      .select($"doc_id".cast("long") +: todo.map(f => col(f).cast("string")): _*)
+      .flatMap { r =>
+        val d = r.getLong(0)
+        todo.indices.iterator.filter(i => !r.isNullAt(i + 1))
+          .map(i => TermFreqRow(d, fieldTerm(todo(i), r.getString(i + 1)), 1, 1))
+      }
     val heavy = SaltPlan.heavyTerms(TermFreqs.termStats(tf), meta.target_run)
     val salted = SaltPlan.saltRange(tf, heavy, 0L, math.max(1L, meta.doc_id_space))
     // stage a NEW postings generation (copy + append) and flip it atomically
@@ -62,13 +68,12 @@ object KeywordIndex {
     // immutability Snapshots.create and concurrent filtered queries assume:
     // a reader racing the append could observe a partial keyword segment
     // (ADVICE r3). Copy cost is admin-time, like compaction/purge.
-    val staging = s"${paths.postingsBase}_staging"
-    Fs.delete(staging)
-    Fs.copyDir(paths.postings, staging)
-    Spimi.buildBlocks(salted, avgdl = 1.0, meta.buckets, parts)
-      .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(staging)
-    Fs.touch(s"$staging/_kw_$field")
-    Fs.publishVersion(paths.postingsBase, staging)
+    Fs.publish(paths.postingsBase) { staging =>
+      Fs.copyDir(paths.postings, staging)
+      Spimi.buildBlocks(salted, avgdl = 1.0, meta.buckets, parts)
+        .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
+        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(staging)
+      todo.foreach(f => Fs.touch(s"$staging/_kw_$f"))
+    }
   }
 }

@@ -50,21 +50,16 @@ object PositionalIndex {
       root: String): org.apache.spark.sql.DataFrame =
     spark.read.schema(posSchema).parquet(pathOf(root))
 
-  /** Grid SPIMI over (term → [(doc, positions)]), mirroring
-    * Spimi.buildBlocksGrid's invariants (disjoint contiguous grid runs).
+  /** Grid SPIMI over (term → [(doc, positions)]) on the same equal-width
+    * docID range exchange as Indexer.buildFromDocs (disjoint contiguous
+    * grid runs).
     */
   def build(docs: Dataset[Doc], root: String, buckets: Int, grids: Int,
       docIdSpace: Long, numPartitions: Int): Unit = {
     import docs.sparkSession.implicits._
-    val width = math.max(1L, (docIdSpace + grids - 1) / grids)
-    val blocks = docs.toDF()
-      .withColumn("grid", expr(s"CAST(doc_id DIV $width AS INT)"))
-      .repartitionByRange(numPartitions, $"grid")
-      .sortWithinPartitions($"grid", $"doc_id")
-      .select($"grid", $"doc_id", $"text")
+    Indexer.gridExchange(docs, grids, docIdSpace, numPartitions)._1
       .as[(Int, Long, String)]
       .mapPartitions(rows => new PosGridIterator(rows, buckets))
-    blocks
       .repartition($"bucket")
       .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
       .write.mode(SaveMode.Overwrite)

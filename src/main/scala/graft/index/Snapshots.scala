@@ -97,23 +97,17 @@ object Snapshots {
     // artifact set is mixed, restore payloads, then the snapshot meta last
     val curMeta = if (Fs.exists(paths.meta)) Some(Indexer.readMeta(spark, root)) else None
     curMeta.foreach { m =>
-      val staging = s"${paths.metaBase}_staging"
-      Seq(m.copy(incremental = true)).toDS()
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-      Fs.publishVersion(paths.metaBase, staging)
+      Fs.publish(paths.metaBase)(
+        Seq(m.copy(incremental = true)).toDS()
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
     }
     for (name <- Seq("postings", "dictionary", "corpus_stats", "deletes", "meta")) {
-      if (manifest.contains(name)) {
-        val staging = s"${basePath(paths, name)}_staging"
-        Fs.delete(staging)
-        Fs.copyDir(s"$snapDir/$name", staging)
-        Fs.publishVersion(basePath(paths, name), staging)
-      } else if (name == "deletes" && Fs.exists(paths.deletes)) {
-        val staging = s"${paths.deletesBase}_staging"
-        spark.emptyDataset[Long].toDF("doc_id")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-        Fs.publishVersion(paths.deletesBase, staging)
-      }
+      if (manifest.contains(name))
+        Fs.publish(basePath(paths, name))(Fs.copyDir(s"$snapDir/$name", _))
+      else if (name == "deletes" && Fs.exists(paths.deletes))
+        Fs.publish(paths.deletesBase)(
+          spark.emptyDataset[Long].toDF("doc_id")
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
     }
   }
 

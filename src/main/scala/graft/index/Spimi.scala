@@ -3,11 +3,8 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Blocks, PostingBlock}
+import graft.core.{Blocks, PostingBlock, RunPosting}
 import graft.model.TermFreqRow
-
-/** A TF row with its doc-range salt (SURVEY.md §2 row 9). */
-final case class SaltedTf(term: String, salt: Int, doc_id: Long, tf: Int, dl: Int)
 
 /** Head-term salt planner. Exact df (already computed by TermFreqs.termStats)
   * drives a per-term fan-out s(t) = ceil(df/targetRun); the salt is
@@ -33,23 +30,18 @@ object SaltPlan {
       .as[HeavyTerm]
   }
 
-  /** Attach salts. `docIdSpace` = max(doc_id)+1 (dense corpora: = nDocs). */
-  def salt(
-      tf: Dataset[TermFreqRow],
-      heavy: Dataset[HeavyTerm],
-      docIdSpace: Long): Dataset[SaltedTf] = saltRange(tf, heavy, 0L, docIdSpace)
-
-  /** Range-aware salting for a docID slice [lo, hi) — the streaming path:
-    * a delta segment's doc_ids all lie in the batch's slice, so salting
-    * against [0, hi) would map every row to fanout−1 and collapse the
-    * skew bound the salt exists for (ADVICE r1). Salting over the
-    * batch-local range preserves disjoint ascending sub-runs per term.
+  /** Salt every TF row over the docID slice [lo, hi); the salt is the run
+    * id. The streaming path salts over its batch's slice: a delta segment's
+    * doc_ids all lie in it, so salting against [0, hi) would map every row
+    * to fanout−1 and collapse the skew bound the salt exists for (ADVICE
+    * r1). Salting over the batch-local range preserves disjoint ascending
+    * sub-runs per term.
     */
   def saltRange(
       tf: Dataset[TermFreqRow],
       heavy: Dataset[HeavyTerm],
       lo: Long,
-      hi: Long): Dataset[SaltedTf] = {
+      hi: Long): Dataset[RunPosting] = {
     import tf.sparkSession.implicits._
     val span = math.max(1L, hi - lo)
     tf.join(broadcast(heavy), Seq("term"), "left")
@@ -58,119 +50,56 @@ object SaltPlan {
         when($"fanout".isNull, lit(0))
           .otherwise(least($"fanout" - 1,
             (($"doc_id" - lit(lo)) * $"fanout" / lit(span)).cast("int")))
-          .cast("int").as("salt"),
+          .cast("int").as("run_id"),
         $"doc_id", $"tf", $"dl")
-      .as[SaltedTf]
+      .as[RunPosting]
   }
 }
 
-/** SPIMI-style per-partition posting-run construction (SURVEY.md §2 row 10;
-  * IIR §4.3): one salted shuffle keyed by (term, salt), partition-local sort
-  * on (term, salt, doc_id), then a streaming O(block)-memory encoder. Heavy
-  * terms cross any later stage pre-compressed.
+/** SPIMI posting-run construction (SURVEY.md §2 row 10; IIR §4.3). Two
+  * writers, and the only exchanges they add:
+  *
+  *  - [[invert]] — the batch path (IndexBuildJob S2, its legacy resume,
+  *    Indexer.buildFromDocs): in-memory inversion of doc-range cells. It adds
+  *    NO exchange of its own; the caller hands it rows already co-located
+  *    per cell — the S1 docID-assignment partitions (zero extra exchanges),
+  *    the legacy part-key exchange, or Indexer's equal-width range exchange
+  *    (one corpus exchange each).
+  *  - [[buildBlocks]] — the salted path (StreamingIngest, KeywordIndex): one
+  *    exchange of TF rows keyed by (term, salt), then the run encoder
+  *    [[Blocks.encodeRuns]].
+  *
+  * Either way a term's runs cover disjoint ascending docID ranges — the
+  * WAND/merge invariant — and heavy terms cross any later stage
+  * pre-compressed.
   */
 object Spimi {
 
+  /** The salted path: one shuffle keyed by (term, run_id), partition-local
+    * sort on (term, run_id, doc_id), then the streaming O(block)-memory run
+    * encoder.
+    */
   def buildBlocks(
-      salted: Dataset[SaltedTf],
+      salted: Dataset[RunPosting],
       avgdl: Double,
       buckets: Int,
-      numPartitions: Int,
-      analyzer: String = "standard"): Dataset[PostingBlock] = {
+      numPartitions: Int): Dataset[PostingBlock] = {
     import salted.sparkSession.implicits._
     salted
-      .repartition(numPartitions, $"term", $"salt")
-      .sortWithinPartitions($"term", $"salt", $"doc_id")
-      .mapPartitions(rows => new SpimiIterator(rows, avgdl, buckets))
-  }
-
-  /** Lazy per-partition encoder: detects (term, salt) group boundaries in the
-    * sorted row stream and feeds a Blocks.Accumulator; never holds more than
-    * one partial block + a ≤2-element pending queue in memory.
-    */
-  private final class SpimiIterator(
-      rows: Iterator[SaltedTf],
-      avgdl: Double,
-      buckets: Int) extends Iterator[PostingBlock] {
-
-    private val pending = new java.util.ArrayDeque[PostingBlock](4)
-    private var acc: Blocks.Accumulator = _
-    private var curTerm: String = _
-    private var curSalt: Int = -1
-
-    private def fill(): Unit = {
-      while (pending.isEmpty && rows.hasNext) {
-        val r = rows.next()
-        if (acc == null || r.term != curTerm || r.salt != curSalt) {
-          if (acc != null) acc.flush().foreach(pending.add)
-          acc = new Blocks.Accumulator(r.term, r.salt, avgdl, buckets)
-          curTerm = r.term
-          curSalt = r.salt
-        }
-        acc.add(r.doc_id, r.tf, r.dl).foreach(pending.add)
-      }
-      if (pending.isEmpty && !rows.hasNext && acc != null) {
-        acc.flush().foreach(pending.add)
-        acc = null
-      }
-    }
-
-    override def hasNext: Boolean = { fill(); !pending.isEmpty }
-    override def next(): PostingBlock = { fill(); pending.poll() }
-  }
-
-  /** Grid SPIMI — the high-throughput batch path (IndexBuildJob S3).
-    *
-    * Instead of shuffling raw TF rows keyed by (term, salt) (≈ 40×
-    * compressed size), the CORPUS is exchanged once, range-partitioned on a
-    * fixed docID grid (`grid = doc_id div width`), and each grid cell is
-    * inverted in memory (classic SPIMI: per-partition in-memory index,
-    * flushed as sorted compressed runs). Properties:
-    *
-    *  - run_id = grid ⇒ a term's runs cover disjoint contiguous docID
-    *    ranges — the WAND/merge invariant — independent of partitioning;
-    *  - block layout depends only on grid content ⇒ resumed builds are
-    *    content-identical to cold builds even though range-partitioner
-    *    boundary sampling varies;
-    *  - skew-free by construction: the exchange key is the doc-range grid
-    *    (uniform), never the term; head terms simply appear in every cell
-    *    (the doc-range salting of SaltPlan, applied at the corpus exchange);
-    *  - memory = one grid cell's postings (grid count scales with the
-    *    corpus, cell size stays bounded — SPIMI discipline);
-    *  - the term-keyed "merge" downstream degenerates to a metadata-only
-    *    aggregation (dictionary df/cf/maxima from block headers).
-    */
-  def buildBlocksGrid(
-      docs: org.apache.spark.sql.Dataset[graft.model.Doc],
-      avgdl: Double,
-      buckets: Int,
-      grids: Int,
-      docIdSpace: Long,
-      numPartitions: Int,
-      analyzer: String = "standard",
-      synonyms: Map[String, String] = Map.empty): Dataset[PostingBlock] = {
-    import docs.sparkSession.implicits._
-    val width = math.max(1L, (docIdSpace + grids - 1) / grids)
-    docs.toDF()
-      .withColumn("grid", expr(s"CAST(doc_id DIV $width AS INT)"))
-      .repartitionByRange(numPartitions, $"grid") // equal grid => same partition
-      .sortWithinPartitions($"grid", $"doc_id")
-      .select($"grid", $"doc_id", $"text")
-      .as[(Int, Long, String)]
-      .mapPartitions(rows => new GridSpimiIterator(rows, avgdl, buckets, analyzer, synonyms))
+      .repartition(numPartitions, $"term", $"run_id")
+      .sortWithinPartitions($"term", $"run_id", $"doc_id")
+      .mapPartitions(rows => Blocks.encodeRuns(rows, avgdl, buckets))
   }
 
   /** Part-aligned SPIMI cell boundaries: each docID-assignment part
     * [offsets(p), offsets(p+1)) is sub-divided into ≥2 equal-width cells of
     * ≤ `targetRun` docs. Cells never cross a part boundary, so every cell is
     * wholly contained — and contiguous, key-sorted — inside one partition of
-    * the post-assignment exchange ([[DocIds.assignWithStatsOffsets]]): the
-    * inversion can run directly on those partitions with NO second corpus
-    * exchange. run_id = global cell index ⇒ a term's runs still cover
-    * disjoint ascending docID ranges (the WAND/merge invariant), exactly as
-    * with the equal-width grid of [[buildBlocksGrid]]. Pure driver
-    * arithmetic over the P-entry offsets array — content-determined, so
-    * resumed builds re-derive identical cells.
+    * the post-assignment exchange ([[DocIds.assignWithStatsOffsets]]) and
+    * so inside one corpus_sorted file: [[invert]] runs on those partitions
+    * with NO second corpus exchange. Pure driver arithmetic over the P-entry
+    * offsets array — content-determined, so resumed builds re-derive
+    * identical cells.
     */
   def cellStarts(offsets: Array[Long], targetRun: Long): Array[Long] = {
     val out = scala.collection.mutable.ArrayBuffer[Long]()
@@ -189,81 +118,30 @@ object Spimi {
     out.toArray
   }
 
-  /** Inversion WITHOUT a corpus exchange: `numbered` must already have each
-    * docID-aligned cell whole and contiguous within its partitions with
-    * doc_ids ascending (the persisted output of DocIds.assignWithStatsOffsets
-    * satisfies this: partitions hold whole part groups sorted by (part, key),
-    * and part order = docID order). The cell pointer advances monotonically;
-    * a jump (hash-scattered part boundaries) re-seats via binary search.
+  /** The one text inverter. Cell i is the docID range
+    * [starts(i), starts(i+1)); its run_id is i, so a term's runs cover
+    * disjoint ascending docID ranges however the rows are partitioned.
+    * Each cell is inverted in memory (classic SPIMI: a per-cell term →
+    * postings map flushed as sorted compressed runs) — memory is one cell's
+    * postings, and the work is skew-free: the cell key is a doc range,
+    * never the term, so head terms simply appear in every cell.
+    *
+    * Precondition: `rows` (doc_id, text) holds each cell's rows contiguous
+    * in one partition, in ascending docID order. Partitions may hold many
+    * cells in any order — the cell pointer advances monotonically and a
+    * jump re-seats it by binary search.
     */
-  def buildBlocksAligned(
-      numbered: Dataset[graft.model.NumberedTurn],
+  def invert(
+      rows: DataFrame,
       starts: Array[Long],
       avgdl: Double,
       buckets: Int,
-      analyzer: String = "standard"): Dataset[PostingBlock] = {
-    import numbered.sparkSession.implicits._
-    val bc = numbered.sparkSession.sparkContext.broadcast(starts)
-    // prune to (doc_id, text) BEFORE the typed boundary: the inversion never
-    // touches conv_id/role/tool/ts, and InMemoryTableScan prunes columnar
-    // cache buffers per-column — decoding the full NumberedTurn here cost
-    // ~2× the 8-core inversion wall in the round-4 scaling runs (the cache
-    // holds all 8 columns for the corpus_sorted write; this scan reads 2).
-    // select is narrow: partition layout and row order are preserved.
-    numbered.toDF()
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val cs = bc.value
-        var cur = 0
-        val cells = it.map { case (doc, text) =>
-          val in = cur < cs.length && doc >= cs(cur) &&
-            (cur + 1 >= cs.length || doc < cs(cur + 1))
-          if (!in) {
-            val i = java.util.Arrays.binarySearch(cs, doc)
-            cur = if (i >= 0) i else -i - 2
-          }
-          (cur, doc, text)
-        }
-        new GridSpimiIterator(cells, avgdl, buckets, analyzer)
-      }
-  }
-
-  /** Inversion from the part-aligned corpus_sorted PARQUET itself — no
-    * corpus exchange AND no cache bridge (round 5: the DISK_ONLY persist
-    * that used to carry the S1→S2 boundary doubled the bytes over the bus;
-    * the durable write is now the only materialization). Correctness rests
-    * on two file-layout facts:
-    *
-    *  1. S1 writes one parquet file per exchange partition (plain
-    *     `df.write`, no maxRecordsPerFile), and each partition holds whole
-    *     `__part` groups sorted by (part, key) — so every SPIMI cell
-    *     (cells never cross part boundaries, [[cellStarts]]) is whole and
-    *     row-contiguous inside exactly one file;
-    *  2. the scan back must therefore never SPLIT a file (a row-group split
-    *     would cut a cell across two tasks → two half-runs colliding on
-    *     run_id/block_idx). The caller scopes
-    *     `spark.sql.files.maxPartitionBytes` ≥ the largest data file around
-    *     the consuming action ([[IndexBuildJob]]); whole files may still
-    *     PACK together into one task in any order — harmless, since cells
-    *     never span files and the iterator re-seats on any grid jump via
-    *     binary search.
-    *
-    * The scan prunes to (doc_id, text): the inversion reads ~the text
-    * column's compressed bytes, not the 8-column corpus.
-    */
-  def buildBlocksAlignedParquet(
-      spark: org.apache.spark.sql.SparkSession,
-      corpusSortedPath: String,
-      starts: Array[Long],
-      avgdl: Double,
-      buckets: Int,
-      analyzer: String = "standard"): Dataset[PostingBlock] = {
+      analyzer: String = "standard",
+      synonyms: Map[String, String] = Map.empty): Dataset[PostingBlock] = {
+    val spark = rows.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(starts)
-    spark.read.parquet(corpusSortedPath)
-      .select(col("doc_id"), col("text"))
+    rows.select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val cs = bc.value
@@ -277,51 +155,7 @@ object Spimi {
           }
           (cur, doc, text)
         }
-        new GridSpimiIterator(cells, avgdl, buckets, analyzer)
-      }
-  }
-
-  /** Fallback inversion from a corpus_sorted whose file layout is NOT known
-    * to match grid_bounds (legacy pre-r4 indexes resumed without stored
-    * geometry): one exchange keyed by the (docID-derived,
-    * content-determined) part index co-locates each cell, then the aligned
-    * iterator applies.
-    */
-  def buildBlocksAlignedExchange(
-      numbered: Dataset[graft.model.NumberedTurn],
-      offsets: Array[Long],
-      starts: Array[Long],
-      avgdl: Double,
-      buckets: Int,
-      numPartitions: Int,
-      analyzer: String = "standard"): Dataset[PostingBlock] = {
-    import numbered.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, lit, when}
-    // part index as a short codegen-safe chain (P terms, P = partitions);
-    // prune to (doc_id, text) BEFORE the exchange — the resume path then
-    // ships ~half the corpus bytes the full rows would
-    val partCol = (1 until offsets.length - 1).foldLeft(lit(0)) { (acc, p) =>
-      acc + when(col("doc_id") >= lit(offsets(p)), 1).otherwise(0)
-    }
-    val bc = numbered.sparkSession.sparkContext.broadcast(starts)
-    numbered.toDF()
-      .select(col("doc_id"), col("text"))
-      .repartition(numPartitions, partCol)
-      .sortWithinPartitions(col("doc_id"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val cs = bc.value
-        var cur = 0
-        val cells = it.map { case (doc, text) =>
-          val in = cur < cs.length && doc >= cs(cur) &&
-            (cur + 1 >= cs.length || doc < cs(cur + 1))
-          if (!in) {
-            val i = java.util.Arrays.binarySearch(cs, doc)
-            cur = if (i >= 0) i else -i - 2
-          }
-          (cur, doc, text)
-        }
-        new GridSpimiIterator(cells, avgdl, buckets, analyzer)
+        new GridSpimiIterator(cells, avgdl, buckets, analyzer, synonyms)
       }
   }
 
@@ -347,8 +181,8 @@ object Spimi {
       rows: Iterator[(Int, Long, String)],
       avgdl: Double,
       buckets: Int,
-      analyzer: String = "standard",
-      synonyms: Map[String, String] = Map.empty) extends Iterator[PostingBlock] {
+      analyzer: String,
+      synonyms: Map[String, String]) extends Iterator[PostingBlock] {
 
     private val pending = new java.util.ArrayDeque[PostingBlock]()
     private val inv = new java.util.HashMap[String, PostingBuf]()
@@ -362,7 +196,7 @@ object Spimi {
         var i = 0
         while (i < terms.length) {
           val t = terms(i)
-          graft.core.Blocks.build(t, curGrid, inv.get(t).iterator, avgdl, buckets)
+          Blocks.build(t, curGrid, inv.get(t).iterator, avgdl, buckets)
             .foreach(pending.add)
           i += 1
         }

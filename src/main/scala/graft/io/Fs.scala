@@ -143,6 +143,17 @@ object Fs {
     if (n > 2) fs.delete(new Path(s"${base}_v${n - 2}"), true): Unit
   }
 
+  /** The one publish step: clear any leftover `${base}_staging` (a crashed
+    * earlier publish), let `write` fill it, then publish it as the next
+    * version of `base` ([[publishVersion]]).
+    */
+  def publish(base: String)(write: String => Unit): Unit = {
+    val staging = s"${base}_staging"
+    delete(staging)
+    write(staging)
+    publishVersion(base, staging)
+  }
+
   /** Top-level files of `dir` whose names start with `prefix` (marker
     * forwarding across postings rewrites).
     */

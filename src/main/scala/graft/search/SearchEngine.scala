@@ -157,7 +157,8 @@ object SearchEngine {
   /** The kernel's decode step: per source, one bucket-pruned,
     * term-pushed-down postings scan and one [[Blocks.decode]] per block,
     * giving one (doc_id, cell, v, dl) row per posting — restricted to the
-    * sorted `docs` when given.
+    * sorted `docs` when given, where a block whose [first_doc, last_doc]
+    * holds none of them is skipped undecoded.
     */
   private def decode(spark: SparkSession, sources: Seq[Source],
       docs: Option[Array[Long]]): DataFrame = {
@@ -166,12 +167,20 @@ object SearchEngine {
       postingsOf(spark, IndexPaths(root), cellOf.keys.toSeq,
           Indexer.readMeta(spark, root).buckets).as[PostingBlock]
         .flatMap { b =>
-          val c = cellOf(b.term)
-          val d = Blocks.decode(b)
-          val idx = (0 until d.docs.length).iterator
-          docs.fold(idx)(ds =>
-            idx.filter(i => java.util.Arrays.binarySearch(ds, d.docs(i)) >= 0))
-            .map(i => (d.docs(i), c, value(c, d.tfs(i), d.dls(i)), d.dls(i)))
+          val hit = docs.forall { ds =>
+            val i = java.util.Arrays.binarySearch(ds, b.first_doc)
+            val ins = if (i >= 0) i else -i - 1
+            ins < ds.length && ds(ins) <= b.last_doc
+          }
+          if (!hit) Iterator.empty
+          else {
+            val c = cellOf(b.term)
+            val d = Blocks.decode(b)
+            val idx = (0 until d.docs.length).iterator
+            docs.fold(idx)(ds =>
+              idx.filter(i => java.util.Arrays.binarySearch(ds, d.docs(i)) >= 0))
+              .map(i => (d.docs(i), c, value(c, d.tfs(i), d.dls(i)), d.dls(i)))
+          }
         }
     }.reduce(_ union _).toDF("doc_id", "cell", "v", "dl")
   }

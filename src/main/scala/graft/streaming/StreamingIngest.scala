@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.index._
-import graft.io.Catalog
+import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
 import graft.model._
 
@@ -47,7 +47,7 @@ object StreamingIngest {
     val spark = batch.sparkSession
     import spark.implicits._
     val paths = IndexPaths(root)
-    val exists = graft.io.Fs.exists(paths.meta)
+    val exists = Fs.exists(paths.meta)
     val (off, n0, tot0, last0) =
       if (exists) {
         val m = Indexer.readMeta(spark, root)
@@ -92,21 +92,20 @@ object StreamingIngest {
       .groupBy($"term").agg(sum($"df").as("df"), sum($"cf").as("cf"))
     val blockAgg = spark.read.parquet(paths.postings)
       .groupBy($"term").agg(max($"max_tf_norm").as("max_tf_norm"))
-    mergedStats.join(blockAgg, Seq("term"))
-      .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry]
-      .write.mode(SaveMode.Overwrite).parquet(s"${paths.dictionaryBase}_staging")
-    graft.io.Fs.publishVersion(paths.dictionaryBase, s"${paths.dictionaryBase}_staging")
+    Fs.publish(paths.dictionaryBase)(
+      mergedStats.join(blockAgg, Seq("term"))
+        .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry]
+        .write.mode(SaveMode.Overwrite).parquet(_))
 
     val stats = CorpusStats(nNew, totNew, avgdlNew)
-    Seq(stats).toDS().write.mode(SaveMode.Overwrite)
-      .parquet(s"${paths.corpusStatsBase}_staging")
-    graft.io.Fs.publishVersion(paths.corpusStatsBase, s"${paths.corpusStatsBase}_staging")
+    Fs.publish(paths.corpusStatsBase)(
+      Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(_))
     // meta LAST (readers read it first — same ordering invariant as
     // Compaction.compact) and carrying the batch idempotency cursor
-    Seq(IndexMeta(buckets, targetRun, off + batchStats.n_docs,
-        incremental = true, last_batch_id = math.max(batchId, last0)))
-      .toDS().write.mode(SaveMode.Overwrite).parquet(s"${paths.metaBase}_staging")
-    graft.io.Fs.publishVersion(paths.metaBase, s"${paths.metaBase}_staging")
+    Fs.publish(paths.metaBase)(
+      Seq(IndexMeta(buckets, targetRun, off + batchStats.n_docs,
+          incremental = true, last_batch_id = math.max(batchId, last0)))
+        .toDS().write.mode(SaveMode.Overwrite).parquet(_))
     stats
   }
 

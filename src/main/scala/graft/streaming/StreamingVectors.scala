@@ -72,19 +72,18 @@ object StreamingVectors {
     val cur = listsPath(root)
     val alreadyAppended = batchId >= 0 && Fs.exists(s"$cur/_batch_$batchId")
     if (!alreadyAppended) {
-      val staging = s"${listsBase(root)}_staging"
-      Fs.delete(staging)
-      if (Fs.exists(cur)) Fs.copyDir(cur, staging)
-      Ivf.assignLists(batch, centroids)
-        .write.mode(SaveMode.Append).partitionBy("list_id")
-        .parquet(staging)
-      if (batchId >= 0) Fs.touch(s"$staging/_batch_$batchId")
-      Fs.publishVersion(listsBase(root), staging)
+      Fs.publish(listsBase(root)) { staging =>
+        if (Fs.exists(cur)) Fs.copyDir(cur, staging)
+        Ivf.assignLists(batch, centroids)
+          .write.mode(SaveMode.Append).partitionBy("list_id")
+          .parquet(staging)
+        if (batchId >= 0) Fs.touch(s"$staging/_batch_$batchId")
+      }
     }
     // cursor LAST (readers of the cursor decide replay, not the append)
-    Seq(VecMeta(centroids.length, math.max(batchId, last))).toDS()
-      .write.mode(SaveMode.Overwrite).parquet(s"${metaBase(root)}_staging")
-    Fs.publishVersion(metaBase(root), s"${metaBase(root)}_staging")
+    Fs.publish(metaBase(root))(
+      Seq(VecMeta(centroids.length, math.max(batchId, last))).toDS()
+        .write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   /** Merge each list's delta files into one file per list and publish the
@@ -97,12 +96,11 @@ object StreamingVectors {
     import spark.implicits._
     val cur = listsPath(root)
     if (!Fs.exists(cur)) return
-    val staging = s"${listsBase(root)}_staging"
-    spark.read.parquet(cur)
-      .repartition($"list_id")
-      .sortWithinPartitions($"list_id", $"vec_id")
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id").parquet(staging)
-    Fs.publishVersion(listsBase(root), staging)
+    Fs.publish(listsBase(root))(
+      spark.read.parquet(cur)
+        .repartition($"list_id")
+        .sortWithinPartitions($"list_id", $"vec_id")
+        .write.mode(SaveMode.Overwrite).partitionBy("list_id").parquet(_))
   }
 
   /** Structured Streaming entry: watch a directory of embedding parquet

@@ -41,10 +41,9 @@ class MemoSpec extends AnyFunSuite {
       assert(hits(SearchEngine.topKWand(spark, root, Seq(gone), 10)).nonEmpty)
 
       // next generation: the same postings without one term
-      val staging = s"$root/postings_staging"
-      first.filter($"term" =!= gone).write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket").parquet(staging)
-      Fs.publishVersion(paths.postingsBase, staging)
+      Fs.publish(paths.postingsBase)(
+        first.filter($"term" =!= gone).write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket").parquet(_))
 
       val second = Catalog.readPostings(spark, paths)
       assert(!(second eq first), "a published generation must resolve anew")

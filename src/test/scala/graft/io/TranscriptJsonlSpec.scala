@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.index.Indexer
+import graft.index.IndexBuildJob
 import graft.search.{BruteForce, SearchEngine}
 
 /** Realistic JSONL ingest smoke over whatever live agent-session transcript
@@ -39,13 +39,14 @@ class TranscriptJsonlSpec extends AnyFunSuite {
     assert(collected.exists(_.text.nonEmpty))
 
     val root = s"/tmp/graft-jsonl-${System.nanoTime()}"
-    val res = Indexer.buildFromTurns(turns, root, buckets = 4, targetRun = 1 << 16)
-    assert(res.stats.n_docs == collected.length)
+    val res = IndexBuildJob.run(spark, IndexBuildJob.Args(input = snap.toString,
+      format = "transcript", output = root, buckets = 4, targetRun = 1 << 16))
+    assert(res.nTurns == collected.length)
 
     // pick a token that actually occurs and verify engine vs brute force
     val term = graft.core.Analyzer.tokenize(
       collected.map(_.text).find(_.nonEmpty).get).head
-    val numbered = Catalog.readDocidMap(spark, res.paths).toDF()
+    val numbered = Catalog.readDocidMap(spark, Catalog.IndexPaths(root)).toDF()
       .join(turns.toDF(), Seq("conv_id", "turn_idx"))
       .select($"doc_id", $"text")
     val w = SearchEngine.topKWand(spark, root, Seq(term), 5)

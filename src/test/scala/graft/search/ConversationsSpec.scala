@@ -3,8 +3,7 @@ package graft.search
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Fixtures, TestSpark}
-import graft.index.Indexer
+import graft.{Fixtures, TestIndex, TestSpark}
 import graft.io.Catalog
 import graft.io.Catalog.IndexPaths
 
@@ -18,7 +17,7 @@ class ConversationsSpec extends AnyFunSuite {
   private lazy val (root, convOf) = {
     import spark.implicits._
     val r = s"/tmp/graft-conv-${java.util.UUID.randomUUID().toString.take(8)}"
-    Indexer.buildFromTurns(Fixtures.sfTest.toDS(), r, buckets = 8, targetRun = 512)
+    TestIndex.build(Fixtures.sfTest.toDS(), r, buckets = 8, targetRun = 512)
     val m = Catalog.readDocidMap(spark, IndexPaths(r))
       .collect().map(e => e.doc_id -> e.conv_id).toMap
     (r, m)

@@ -3,8 +3,7 @@ package graft.search
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Fixtures, IndexCache, TestSpark}
-import graft.index.Indexer
+import graft.{Fixtures, IndexCache, TestIndex, TestSpark}
 import graft.io.Catalog
 import graft.search.SearchEngine.rounded
 
@@ -52,8 +51,8 @@ class WandSpec extends AnyFunSuite {
     import spark.implicits._
     val turns = Fixtures.sfTest.toDS()
     val root = s"/tmp/graft-test-wandmm-${System.nanoTime()}"
-    val res = Indexer.buildFromTurns(turns, root, buckets = 8, targetRun = 512)
-    assert(res.stats.n_docs == 5000)
+    val res = TestIndex.build(turns, root, buckets = 8, targetRun = 512)
+    assert(res.nTurns == 5000)
     for (q <- Fixtures.refQueries.filter(_.size >= 2); mm <- 2 to 3) {
       val w = hits(SearchEngine.topKWand(spark, root, q, 10, minMatch = mm))
       val e = hits(SearchEngine.topKExhaustive(spark, root, q, 10, _ => mm))
@@ -123,10 +122,10 @@ class WandSpec extends AnyFunSuite {
     val turns = Fixtures.sfTest.toDS()
     val root = s"/tmp/graft-test-wand-${System.nanoTime()}"
     // targetRun=512 => head terms (df≈thousands) salt into many runs
-    val res = Indexer.buildFromTurns(turns, root, buckets = 8, targetRun = 512)
-    assert(res.stats.n_docs == 5000)
+    val res = TestIndex.build(turns, root, buckets = 8, targetRun = 512)
+    assert(res.nTurns == 5000)
 
-    val numberedDocs = Catalog.readDocidMap(spark, res.paths).toDF()
+    val numberedDocs = Catalog.readDocidMap(spark, Catalog.IndexPaths(root)).toDF()
       .join(turns.toDF(), Seq("conv_id", "turn_idx"))
       .select($"doc_id", $"text")
 

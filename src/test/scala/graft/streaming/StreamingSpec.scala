@@ -120,7 +120,7 @@ class StreamingSpec extends AnyFunSuite {
     val base = s"/tmp/graft-swap-${System.nanoTime()}"
     val root = s"$base/idx"
     val turns = Fixtures.turns(20, 25).toDS()
-    graft.index.Indexer.buildFromTurns(turns, root, buckets = 4, targetRun = 256)
+    graft.TestIndex.build(turns, root, buckets = 4, targetRun = 256)
 
     val q = Seq(Fixtures.term(0), Fixtures.term(3))
     val ref = hits(SearchEngine.topKWand(spark, root, q, 10))

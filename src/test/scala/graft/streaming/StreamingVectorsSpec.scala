@@ -130,11 +130,9 @@ class StreamingVectorsSpec extends AnyFunSuite {
 
     // simulate the crash window: lists generation for batch 1 is live
     // (with its _batch_1 marker) but the cursor still says 0
-    Seq(StreamingVectors.VecMeta(centroids.length, 0L)).toDS()
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${StreamingVectors.metaBase(root)}_staging")
-    graft.io.Fs.publishVersion(StreamingVectors.metaBase(root),
-      s"${StreamingVectors.metaBase(root)}_staging")
+    graft.io.Fs.publish(StreamingVectors.metaBase(root))(
+      Seq(StreamingVectors.VecMeta(centroids.length, 0L)).toDS()
+        .write.mode(SaveMode.Overwrite).parquet(_))
 
     // the streaming replay of batch 1: marker catches it — no re-append,
     // cursor re-advances
