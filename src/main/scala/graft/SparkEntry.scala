@@ -645,7 +645,7 @@ object SparkEntry {
     "decontaminate" -> ((s, dir) => Hygiene.decontaminate(s, dir)),
     "split_hash" -> ((s, dir) => Hygiene.splitHash(s, dir)),
     "stratified_sample" -> ((s, dir) => Hygiene.stratifiedSample(s, dir)),
-    // ES _msearch: 3 queries, ONE pruned postings scan + shard exchange,
+    // ES _msearch: 3 queries, ONE pruned postings read per shard,
     // independent per-shard WAND passes per query (the batch-scoring shape)
     "msearch" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)

@@ -201,6 +201,32 @@ object Catalog {
     }
   }
 
+  /** The resolved postings generation and its data files as Spark's file
+    * index reads them — what [[readPostings]]' relation scans — from the
+    * same [[Fs.listDataFiles]] listing [[readPostings]] fingerprints, made
+    * once. Spark skips every file under a
+    * directory whose name starts with `.`, or with `_` and holds no `=`
+    * (`_temporary` of an in-flight append), and every `._COPYING_` file.
+    */
+  def postingsFiles(paths: IndexPaths): (String, Seq[PostingsFile]) = {
+    val p = paths.postings
+    val rootPrefix = new org.apache.hadoop.fs.Path(p).toUri.getPath + "/"
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    val files = Fs.listDataFiles(p).flatMap { case (f, len, _) =>
+      val parts = f.stripPrefix(rootPrefix).split('/')
+      if (parts.exists(hidden) || f.endsWith("._COPYING_")) None
+      else {
+        val bucket = parts.init.collectFirst {
+          case d if d.startsWith("bucket=") => d.stripPrefix("bucket=").toInt
+        }
+        require(bucket.isDefined, s"postings file outside a bucket= directory: $f")
+        Some(PostingsFile(f, len, bucket.get))
+      }
+    }
+    (p, files)
+  }
+
   def writeDictionary(dict: Dataset[DictEntry], paths: IndexPaths): Unit =
     dict.write.mode(SaveMode.Overwrite).parquet(paths.dictionary)
 
@@ -236,9 +262,10 @@ object Catalog {
     val p = paths.dictionary
     val gate = spark.conf.getOption("spark.graft.dict.cacheMaxBytes")
       .map(_.toLong).getOrElse(DefaultDictCacheMaxBytes)
-    val bytes = Fs.listDataFiles(p).map(_._2).sum
-    if (bytes > gate) None
-    else Some(dictMemo(paths.dictionaryBase, (p, fingerprint(p)))(
+    // one listing serves the byte gate and the memo key
+    val files = Fs.listDataFiles(p)
+    if (files.map(_._2).sum > gate) None
+    else Some(dictMemo(paths.dictionaryBase, (p, fingerprintOf(p, files)))(
       spark.read.parquet(p).as[DictEntry].collect()).toSeq)
   }
 
@@ -297,8 +324,10 @@ object Catalog {
     * returned "absent" for every remote path, which a stale manifest could
     * match — "absent" is now rejected by Manifests.isComplete).
     */
-  def fingerprint(path: String): String = {
-    val entries = Fs.listDataFiles(path)
+  def fingerprint(path: String): String = fingerprintOf(path, Fs.listDataFiles(path))
+
+  /** [[fingerprint]] of `path` from its [[Fs.listDataFiles]] listing. */
+  private def fingerprintOf(path: String, entries: Seq[(String, Long, Long)]): String = {
     if (entries.isEmpty && !Fs.exists(path)) return "absent"
     val rootPrefix = new org.apache.hadoop.fs.Path(path).toUri.getPath
     val desc = entries

@@ -10,13 +10,13 @@ import graft.io.Catalog.IndexPaths
 /** ES `_msearch`: a BATCH of queries answered in one index pass.
   *
   * ES's msearch is a transport-level batching (each sub-search still runs
-  * its own scan per shard). On Spark the batch can share real work: one
-  * bucket-pruned, term-pushed-down postings scan for the UNION of all
-  * queries' terms, one docID-range shard exchange, and then — inside each
-  * shard task — an independent Block-Max WAND pass per query over that
-  * shard's already-fetched blocks. Q queries cost one scan + one shuffle
-  * instead of Q of each; the per-query WAND passes reuse the same decoded
-  * term→blocks map and skip blocks exactly as the single-query path does
+  * its own scan per shard). On Spark the batch can share real work: each
+  * docID-range shard task reads its bucket-pruned, term-pushed-down blocks
+  * for the UNION of all queries' terms once, then runs an independent
+  * Block-Max WAND pass per query over those already-fetched blocks. Q
+  * queries cost one read per shard instead of Q; the per-query WAND
+  * passes reuse the same decoded term→blocks map and skip blocks exactly
+  * as the single-query path does
   * (fresh cursors per query keep the rank-safety argument of
   * [[Wand.scoreShard]] untouched).
   *
@@ -48,7 +48,7 @@ object MSearch {
     if (models.isEmpty) return emptyResult(spark)
     val robust = meta.incremental
 
-    // one scan + one shard exchange for the union of all queries' terms
+    // one shard read for the union of all queries' terms
     val allTerms = models.flatMap(_._2.terms).distinct.sorted
     val candidates = SearchEngine.perShard(spark, root, meta, allTerms, shardsOpt) { sh =>
       models.iterator.flatMap { case (qid, qm) =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.index.{IndexMeta, Indexer}
-import graft.io.Catalog
+import graft.io.{Catalog, PostingsScan}
 import graft.io.Catalog.IndexPaths
 import graft.model.Hit
 
@@ -55,8 +55,7 @@ object SearchEngine {
   }
 
   /** Postings scan restricted to the given terms (bucket pruning + term
-    * pushdown), as untyped rows: the shard operator needs no typed
-    * Dataset's encoder resolution.
+    * pushdown).
     */
   private def postingsOf(spark: SparkSession, paths: IndexPaths,
       terms: Seq[String], buckets: Int): DataFrame = {
@@ -85,17 +84,18 @@ object SearchEngine {
 
   /** The docID-shard executor under [[topKWand]], [[MSearch.msearch]] and
     * [[Booleans.andBitmap]]. The index is term-bucketed on disk (scan
-    * pruning) but these run document-at-a-time, so the `terms`' matching
-    * blocks are re-grouped into docID-range shards: every term's postings
-    * for shard s meet in one task and `f` runs once per shard holding
-    * blocks. One Catalyst operator ([[graft.sql.PerShard]]) does it: the
-    * pruned postings scan, the excluded docIDs (tombstones ∪
-    * `excludedDocs`) and the `allowedDocs` are its children, each moved into
-    * the shards by its own exchange inside the operator. Only the terms'
-    * (compressed) blocks and the aux doc_ids are shuffled; the salted runs
-    * are already range-disjoint so per-shard block lists stay
-    * sorted-by-first_doc after a local sort. Shard count scales with
-    * parallelism (`shardsOpt`, default the shuffle partitions).
+    * pruning) but these run document-at-a-time, so every term's blocks for
+    * docID-range shard s meet in one task and `f` runs once per shard
+    * holding blocks. One Catalyst operator ([[graft.sql.PerShard]]) does it:
+    * shard s's task reads the blocks of `terms` overlapping its doc range
+    * straight from the terms' bucket files (term and doc-range pushdown to
+    * row groups, pages and records), so no postings are shuffled; the
+    * excluded docIDs (tombstones ∪ `excludedDocs`) and the `allowedDocs`
+    * are its children, each moved into the shards by its own exchange
+    * inside the operator. The salted runs are already range-disjoint, so
+    * per-shard block lists stay sorted-by-first_doc after a local sort.
+    * Shard count scales with parallelism (`shardsOpt`, default the shuffle
+    * partitions).
     */
   private[search] def perShard[T: Encoder](spark: SparkSession, root: String,
       meta: IndexMeta, terms: Seq[String], shardsOpt: Option[Int],
@@ -112,8 +112,16 @@ object SearchEngine {
       ((if (!graft.index.Deletes.hasDeletes(paths)) None
         else Some(Catalog.readParquet(spark, paths.deletes))) ++ excludedDocs)
         .map(docIds).reduceOption(_ union _)
-    graft.sql.PerShard.dataset(spark, shards, width,
-      postingsOf(spark, paths, terms, meta.buckets), excluded, allowedDocs.map(docIds))(f)
+    graft.sql.PerShard.dataset(spark, shards, width, postingsScan(paths, terms, meta.buckets),
+      excluded, allowedDocs.map(docIds))(f)
+  }
+
+  /** The shard reads' postings: the files of the `terms`' buckets. */
+  private[graft] def postingsScan(paths: IndexPaths, terms: Seq[String],
+      buckets: Int): PostingsScan = {
+    val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct.sorted
+    val (location, files) = Catalog.postingsFiles(paths)
+    PostingsScan(location, files.filter(f => qBuckets.contains(f.bucket)), qBuckets, terms)
   }
 
   /** Exhaustive index scorer: [[scoreAllDocs]] cut to the global top-k.

@@ -36,8 +36,8 @@ object FullTextMatch {
       AttributeReference("score_r4", DoubleType, nullable = true)()))
 }
 
-/** Physical leaf: delegates to the engine's WAND pipeline (bucket-pruned
-  * postings scan → per-shard block-max WAND → TakeOrderedAndProject) and
+/** Physical leaf: delegates to the engine's WAND pipeline (per-shard
+  * bucket-pruned postings read → block-max WAND → TakeOrderedAndProject) and
   * exposes its InternalRow RDD — the inner query is ordinary distributed
   * execution, not a driver-side collect.
   */

@@ -206,8 +206,8 @@ class PlanSpec extends AnyFunSuite {
     val deleted = SearchEngine.topKWand(spark, del.paths.root, q, 10)
     val both = SearchEngine.topKWand(spark, del.paths.root, q, 10,
       excludedDocs = SearchEngine.mustNotDocs(spark, del.paths.root, Seq("vector")))
-    assert(shardExchanges(deleted) == 2, s"postings + tombstones:\n${plan(deleted)}")
-    assert(shardExchanges(both) == 2,
+    assert(shardExchanges(deleted) == 1, s"tombstones only:\n${plan(deleted)}")
+    assert(shardExchanges(both) == 1,
       s"tombstones ∪ must_not must be one shard input:\n${plan(both)}")
   }
 
@@ -245,6 +245,9 @@ class PlanSpec extends AnyFunSuite {
         assert(n == 1, s"expected one Spark job per warm $name query, saw $n")
         assert(!plan(df).contains("AdaptiveSparkPlan"),
           s"no exchange may be left for adaptive execution to split ($name):\n${plan(df)}")
+        if (name == "plain")
+          assert(!plan(df).contains("ShardExchange") && !plan(df).contains("Scan parquet"),
+            s"shard tasks read the postings themselves: no scan, no exchange:\n${plan(df)}")
       } finally sc.removeSparkListener(listener)
     }
   }

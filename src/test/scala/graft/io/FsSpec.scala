@@ -80,6 +80,32 @@ class FsSpec extends AnyFunSuite {
     } finally Fs.delete(base)
   }
 
+  test("postingsFiles are the files the memoized postings relation reads") {
+    spark
+    val base = s"/tmp/graft-fs-postings-${System.nanoTime()}"
+    val p = s"$base/postings"
+    try {
+      write(s"$p/bucket=0/part-00000.parquet", 10)
+      write(s"$p/bucket=0/.part-00000.parquet.crc", 3)
+      write(s"$p/bucket=1/part-00001.parquet", 20)
+      write(s"$p/bucket=1/_committed", 1)
+      write(s"$p/_SUCCESS", 0)
+      write(s"$p/._SUCCESS.crc", 0)
+      write(s"$p/_temporary/0/bucket=2/part-00009.parquet", 30)
+      write(s"$p/bucket=1/_temporary/0/_temporary/attempt/part-00010.parquet", 40)
+      write(s"$p/bucket=1/.hidden/part-00011.parquet", 50)
+      write(s"$p/.hidden/bucket=3/part-00012.parquet", 60)
+      val paths = Catalog.IndexPaths(base)
+      val (location, files) = Catalog.postingsFiles(paths)
+      val input = Catalog.readPostings(spark, paths).inputFiles
+        .map(new Path(_).toUri.getPath).toSeq.sorted
+      assert(location == p)
+      assert(files.map(_.path).sorted == input)
+      assert(files.map(f => (new Path(f.path).getName, f.length, f.bucket)).sorted ==
+        Seq(("part-00000.parquet", 10L, 0), ("part-00001.parquet", 20L, 1)))
+    } finally Fs.delete(base)
+  }
+
   test("resolveVersioned gives up on an unreadable pointer with its path") {
     spark
     val base = s"/tmp/graft-fs-ptr-${System.nanoTime()}/art"

@@ -1,0 +1,153 @@
+package graft.sql
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{Fixtures, TestSpark}
+import graft.core.PostingBlock
+import graft.index.{Compaction, Deletes, Indexer, KeywordIndex}
+import graft.io.{Catalog, Fs}
+import graft.io.Catalog.IndexPaths
+import graft.search.SearchEngine
+import graft.streaming.StreamingIngest
+
+/** The shard tasks' own postings reads: shard s reads exactly the blocks
+  * the docID-shard exchange used to route to it, and the reads show in the
+  * task input metrics and the operator's SQL metrics.
+  */
+class PerShardSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = TestSpark.session
+
+  private val q = Seq(Fixtures.term(0), Fixtures.term(5), Fixtures.term(40))
+
+  /** `body` over a fresh index of 400 fixture turns with small runs (so
+    * head terms are salted into several), removed afterwards.
+    */
+  private def withIndex(body: String => Unit): Unit = {
+    import spark.implicits._
+    val root = s"/tmp/graft-pershard-${System.nanoTime()}/idx"
+    try {
+      val docs = Fixtures.turns(20, 20).zipWithIndex
+        .map { case (t, i) => graft.model.Doc(i.toLong, t.text) }
+      Indexer.buildFromDocs(docs.toDS(), root, buckets = 4, targetRun = 64)
+      body(root)
+    } finally Fs.delete(new java.io.File(root).getParent)
+  }
+
+  // a block's fields, its payloads by content hash (keeps failures readable)
+  private def key(b: PostingBlock): String = {
+    import java.util.Arrays.{hashCode => h}
+    (b.term, b.bucket, b.run_id, b.block_idx, b.first_doc, b.last_doc, b.n_docs, b.max_tf,
+      b.min_dl, b.sum_tf, b.max_tf_norm, h(b.doc_deltas_vb), h(b.tfs_vb), h(b.dls_vb)).toString
+  }
+
+  /** The blocks of `terms` per shard by the exchange rule: a block goes to
+    * shards ⌊first_doc/w⌋ … ⌊last_doc/w⌋, those past the last folded into it.
+    */
+  private def routed(root: String, terms: Seq[String], shards: Int,
+      width: Long): IndexedSeq[Seq[PostingBlock]] = {
+    import spark.implicits._
+    val blocks = Catalog.readPostings(spark, IndexPaths(root))
+      .filter(col("term").isin(terms: _*)).as[PostingBlock].collect().toSeq
+    val last = shards - 1L
+    (0 until shards).map(s => blocks.filter(b =>
+      math.min(b.first_doc / width, last) <= s && s <= math.min(b.last_doc / width, last)))
+  }
+
+  /** Every shard's read equals its routed blocks, at the operator's width
+    * and at a width that folds the upper half of the docs into the last
+    * shard.
+    */
+  private def assertRouting(name: String, root: String, terms: Seq[String]): Unit = {
+    val meta = Indexer.readMeta(spark, root)
+    val scan = SearchEngine.postingsScan(IndexPaths(root), terms, meta.buckets)
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (shards <- Seq(1, 3, 4, 7)) {
+      val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
+      for (w <- Seq(width, math.max(1L, meta.doc_id_space / (2L * shards)))) {
+        val expected = routed(root, terms, shards, w)
+        assert(expected.map(_.length).sum > 0, s"$name: no blocks for $terms")
+        if (shards > 1 && w < width)
+          assert(expected.last.exists(_.first_doc >= shards * w),
+            s"$name: the fold into the last shard is not exercised")
+        expected.zipWithIndex.foreach { case (exp, s) =>
+          val (lo, hi) = PerShard.range(s, shards, w)
+          assert(scan.read(lo, hi, conf).map(key).sorted.toSeq == exp.map(key).sorted,
+            s"$name: shard $s of $shards (width $w)")
+        }
+      }
+    }
+  }
+
+  test("each shard reads exactly the blocks the exchange routed to it") {
+    import spark.implicits._
+    withIndex { root =>
+      assertRouting("clean", root, q)
+      KeywordIndex.add(spark, root,
+        (0L until 400L).map(d => (d, s"src${d % 5}")).toDF("doc_id", "source"), "source")
+      assertRouting("keyword-filtered", root, q :+ "source:src3")
+      assert(Deletes.deleteByQuery(spark, root, Seq(Fixtures.term(7))) > 0L)
+      assertRouting("tombstoned", root, q)
+    }
+
+    val root = s"/tmp/graft-pershard-stream-${System.nanoTime()}/idx"
+    val all = Fixtures.turns(20, 20)
+    try {
+      (0 until 4).foreach { i =>
+        val batch = all.filter(t => t.conv_id >= f"c${5 * i}%06d" && t.conv_id < f"c${5 * i + 5}%06d")
+        StreamingIngest.ingestBatch(batch.toDS(), root, buckets = 4, targetRun = 64,
+          batchId = i.toLong)
+      }
+      assertRouting("streaming-grown", root, q)
+      Compaction.compact(spark, root)
+      assertRouting("compacted", root, q)
+    } finally Fs.delete(new java.io.File(root).getParent)
+  }
+
+  test("a warm topKWand reports its postings reads as task input and SQL metrics") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    withIndex { root =>
+      val meta = Indexer.readMeta(spark, root)
+      val terms = SearchEngine.queryModel(spark, IndexPaths(root), q, 10).terms.toSeq
+      SearchEngine.topKWand(spark, root, q, 10).collect() // warm
+      val sc = spark.sparkContext
+      val group = s"pershard-spec-${System.nanoTime()}"
+      val sentinel = s"$group-sentinel"
+      val groupStages = new java.util.concurrent.ConcurrentHashMap[Int, String]
+      val inputBytes = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .foreach(g => e.stageIds.foreach(groupStages.put(_, g)))
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          inputBytes.put(e.stageInfo.stageId, e.stageInfo.taskMetrics.inputMetrics.bytesRead)
+      }
+      sc.addSparkListener(listener)
+      try {
+        val df = SearchEngine.topKWand(spark, root, q, 10)
+        sc.setJobGroup(group, "warm topKWand")
+        try df.collect() finally sc.clearJobGroup()
+        // the listener bus delivers in order: once a later job's start is
+        // seen, every stage of the query has completed
+        sc.setJobGroup(sentinel, "sentinel")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!groupStages.containsValue(sentinel) && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(groupStages.containsValue(sentinel), "listener bus did not deliver the sentinel job")
+        var bytes = 0L
+        groupStages.forEach((stage, g) => if (g == group) bytes += inputBytes.getOrDefault(stage, 0L))
+        assert(bytes > 0L, "the shard reads must report their input bytes")
+
+        val exec = df.queryExecution.executedPlan.collectFirst { case p: PerShardExec => p }.get
+        val shards = spark.sessionState.conf.numShufflePartitions
+        val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
+        assert(exec.metrics("blocksRead").value ==
+          routed(root, terms, shards, width).map(_.length).sum)
+        assert(exec.metrics("filesRead").value > 0L)
+      } finally sc.removeSparkListener(listener)
+    }
+  }
+}
