@@ -549,10 +549,10 @@ object SparkEntry {
       graft.index.PositionalIndex.phraseTopK(s, idx.paths.root,
         Seq("join", "hash"), K, idx.meta.buckets)
     }),
-    // --- bitmap boolean path (same semantics as bool_and, bitmap execution) --
+    // --- the bitmap boolean path: bool_and's query under its own name ------
     "bool_and_bitmap" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)
-      Booleans.andBitmap(s, idx.paths.root, Seq("join", "hash"))
+      Booleans.and(s, idx.paths.root, Seq("join", "hash"))
     }),
     "bool_or" -> ((s, dir) => {
       val idx = IndexCache.documentsIndex(s, dir)

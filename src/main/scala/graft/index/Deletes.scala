@@ -52,12 +52,12 @@ object Deletes {
   def hasDeletes(paths: IndexPaths): Boolean = Fs.exists(paths.deletes)
 
   /** Drop tombstoned docIDs from a (doc_id, …) DataFrame — the exclusion
-    * every non-scored query path applies (ES filter/boolean/phrase queries
-    * never return deleted docs either). No-op when the index has no
-    * tombstones; otherwise a broadcast left-anti join against the tiny
-    * tombstone table (small in steady state — purge's scaladoc covers the
-    * degenerate mostly-dead case). The scored WAND path excludes inside
-    * the shard scorer instead (cogrouped, no broadcast).
+    * the positional query paths apply (ES phrase/span queries never return
+    * deleted docs either). No-op when the index has no tombstones;
+    * otherwise a broadcast left-anti join against the tiny tombstone table
+    * (small in steady state — purge's scaladoc covers the degenerate
+    * mostly-dead case). The docID-shard paths (WAND, the exhaustive kernel,
+    * the boolean ops) exclude inside the shard task (cogrouped).
     */
   def filterLive(df: org.apache.spark.sql.DataFrame, root: String)
       : org.apache.spark.sql.DataFrame = {

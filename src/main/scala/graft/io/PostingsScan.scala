@@ -22,10 +22,12 @@ final case class PostingsFile(path: String, length: Long, bucket: Int)
 /** The posting blocks of `terms` in the postings `files` of `buckets`
   * (under `location`), read straight from parquet by the task that needs
   * them — no Spark scan, no shuffle. [[read]] pushes the term set and a
-  * docID range down to row groups, pages and records.
+  * docID range down to row groups, pages and records, and reads only the
+  * `columns` (of [[PostingsScan.Columns]], with `term`, `first_doc` and
+  * `last_doc`); the fields of the others stay 0 or null.
   */
 final case class PostingsScan(location: String, files: Seq[PostingsFile],
-    buckets: Seq[Int], terms: Seq[String]) {
+    buckets: Seq[Int], terms: Seq[String], columns: Seq[String]) {
 
   /** The blocks of `terms` overlapping docs `[lo, hi)`: `last_doc >= lo`
     * and, unless `hi` is `Long.MaxValue` (an open-ended range), `first_doc < hi`.
@@ -38,7 +40,7 @@ final case class PostingsScan(location: String, files: Seq[PostingsFile],
       val reader = new ParquetReader.Builder[PostingBlock](
           HadoopInputFile.fromStatus(status, conf)) {
         override protected def getReadSupport: ReadSupport[PostingBlock] =
-          new PostingsScan.BlockReadSupport(f.bucket)
+          new PostingsScan.BlockReadSupport(f.bucket, columns)
       }.withFilter(filter).useStatsFilter().useDictionaryFilter()
         .useColumnIndexFilter().useRecordFilter().build()
       try {
@@ -54,15 +56,16 @@ final case class PostingsScan(location: String, files: Seq[PostingsFile],
     s"Location: $location [${files.length} files]",
     s"PartitionFilters: [bucket IN (${buckets.mkString(",")})]",
     s"PushedFilters: [In(term, [${terms.mkString(",")}]), " +
-      "GreaterThanOrEqual(last_doc,shard.lo), LessThan(first_doc,shard.hi)]")
+      "GreaterThanOrEqual(last_doc,shard.lo), LessThan(first_doc,shard.hi)]",
+    s"ReadSchema: [${columns.mkString(",")}]")
 }
 
 object PostingsScan {
 
-  /** The postings columns a [[PostingBlock]] reads, in its field order;
+  /** The postings columns a [[PostingBlock]] holds, in its field order;
     * `bucket` comes from the directory name.
     */
-  private val Columns = Seq("term", "run_id", "block_idx", "first_doc", "last_doc",
+  val Columns: Seq[String] = Seq("term", "run_id", "block_idx", "first_doc", "last_doc",
     "n_docs", "max_tf", "min_dl", "sum_tf", "max_tf_norm", "doc_deltas_vb",
     "tfs_vb", "dls_vb")
 
@@ -76,24 +79,26 @@ object PostingsScan {
       FilterApi.longColumn("first_doc"), hi))
   }
 
-  private final class BlockReadSupport(bucket: Int) extends ReadSupport[PostingBlock] {
+  private final class BlockReadSupport(bucket: Int, columns: Seq[String])
+      extends ReadSupport[PostingBlock] {
     override def init(ctx: InitContext): ReadSupport.ReadContext = {
       val file = ctx.getFileSchema
       new ReadSupport.ReadContext(
         new MessageType(file.getName,
-          Columns.map(c => file.getType(file.getFieldIndex(c))).asJava))
+          columns.map(c => file.getType(file.getFieldIndex(c))).asJava))
     }
 
     override def prepareForRead(conf: Configuration, meta: java.util.Map[String, String],
         fileSchema: MessageType, ctx: ReadSupport.ReadContext): RecordMaterializer[PostingBlock] =
-      new BlockMaterializer(bucket)
+      new BlockMaterializer(bucket, columns)
   }
 
   /** Assembles one [[PostingBlock]] per record. The block is built only for
     * a record the pushed filter keeps ([[getCurrentRecord]] is not called
     * for the others), so a skipped record copies no payload bytes.
     */
-  private final class BlockMaterializer(bucket: Int) extends RecordMaterializer[PostingBlock] {
+  private final class BlockMaterializer(bucket: Int, columns: Seq[String])
+      extends RecordMaterializer[PostingBlock] {
     private var term, deltas, tfs, dls: Binary = _
     private var runId, blockIdx, nDocs, maxTf, minDl = 0
     private var firstDoc, lastDoc, sumTf = 0L
@@ -109,12 +114,12 @@ object PostingsScan {
       override def addBinary(v: Binary): Unit = set(v)
     }
 
-    private val fields: Array[Converter] = Array(
+    private val fields: Array[Converter] = columns.map(Columns.zip(Seq[Converter](
       binaries(term = _), ints(runId = _), ints(blockIdx = _), longs(firstDoc = _),
       longs(lastDoc = _), ints(nDocs = _), ints(maxTf = _), ints(minDl = _),
       longs(sumTf = _),
       new PrimitiveConverter { override def addDouble(v: Double): Unit = maxTfNorm = v },
-      binaries(deltas = _), binaries(tfs = _), binaries(dls = _))
+      binaries(deltas = _), binaries(tfs = _), binaries(dls = _))).toMap).toArray
 
     private val root = new GroupConverter {
       override def getConverter(i: Int): Converter = fields(i)

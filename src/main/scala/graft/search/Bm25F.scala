@@ -22,7 +22,7 @@ import graft.search.SearchEngine.{Source, cut, exhaustive, rounded}
   *
   * Shape: each posting's share of s(t,d) is row-local (its own tf, its own
   * field's dl and avgdl), so no cross-field join is needed — the
-  * [[SearchEngine.exhaustive]] kernel over both fields' pruned scans, one
+  * [[SearchEngine.exhaustive]] kernel over both fields' shard reads, one
   * cell per term holding the two field shares. An aggregation-class
   * computation over the query terms' postings (the cross-field saturation
   * makes per-field WAND bounds non-trivial; a bound-safe BM25F WAND is

@@ -1,104 +1,79 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
-import graft.core.{Blocks, Codec}
+import graft.core.Codec
 import graft.index.Indexer
-import graft.io.Catalog
 import graft.io.Catalog.IndexPaths
 
 /** Boolean (unscored filter-context) set operations over the inverted index
   * (SURVEY.md §2 row 14; ES bool-query semantics).
   *
-  * Posting blocks decode straight to docID sets; AND/NOT become
-  * intersect/except over those sets. Only the `doc_deltas_vb` payload is
-  * decoded — column pruning drops the tf/dl streams at the scan.
+  * Every op is one function over the docID-shard executor
+  * ([[SearchEngine.perShard]]): per shard, each term's blocks decode to a
+  * Roaring64 bitmap of its docs in the shard, the op combines the bitmaps,
+  * the shard's tombstones are removed and only the surviving docIDs leave
+  * the shard — no join, no distinct, no docID-set shuffle (RoaringBitmap
+  * ships with Spark). The shard read is column-pruned to the docID payload:
+  * the tf/dl streams are never read.
   */
 object Booleans {
 
-  /** DocIDs containing `term` — bucket-pruned, term-pushed-down scan. */
-  def docsOf(spark: SparkSession, root: String, term: String): DataFrame =
-    liveDocs(spark, root, Seq(term))
-
-  /** DocIDs of every posting of `terms` (one per posting, tombstoned docs
-    * included): ONE bucket-pruned, term-pushed-down scan decoding only the
-    * docID payloads.
+  /** The postings columns a boolean op reads: the pushed-down filter
+    * columns and the docID payload.
     */
-  private[search] def postingDocs(spark: SparkSession, root: String,
-      terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val meta = Indexer.readMeta(spark, root)
-    val qBuckets = terms.map(Blocks.bucketOf(_, meta.buckets)).distinct
-    Catalog.readParquet(spark, IndexPaths(root).postings)
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
-      .select($"n_docs", $"doc_deltas_vb")
-      .as[(Int, Array[Byte])]
-      .flatMap { case (n, deltas) => Codec.decodeDeltas(deltas, n) }
-      .toDF("doc_id")
-  }
+  private val DocColumns = Seq("term", "first_doc", "last_doc", "n_docs", "doc_deltas_vb")
 
-  /** [[postingDocs]] without the tombstoned docs. */
-  private def liveDocs(spark: SparkSession, root: String,
-      terms: Seq[String]): DataFrame =
-    postingDocs(spark, root, terms).transform(graft.index.Deletes.filterLive(_, root))
+  /** DocIDs containing `term`. */
+  def docsOf(spark: SparkSession, root: String, term: String): DataFrame =
+    bitmaps(spark, root, Seq(term))(_.head)
 
-  /** Docs containing ALL terms (conjunction): left-semi chain. */
+  /** Docs containing ALL terms (conjunction). */
   def and(spark: SparkSession, root: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty)
-    import spark.implicits._
-    terms.map(docsOf(spark, root, _))
-      .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-      .orderBy($"doc_id")
+    sorted(bitmaps(spark, root, terms)(_.reduce { (a, b) => a.and(b); a }))
   }
 
-  /** Docs containing ANY term (disjunction, unscored): one scan for all
-    * the terms (dictionary expansions reach dozens), distinct. No terms
-    * match no docs.
+  /** Docs containing ANY term (disjunction, unscored): one shard read for
+    * all the terms (dictionary expansions reach dozens). No terms match no
+    * docs.
     */
   def or(spark: SparkSession, root: String, terms: Seq[String]): DataFrame = {
     import spark.implicits._
     if (terms.isEmpty) spark.emptyDataset[Long].toDF("doc_id")
-    else liveDocs(spark, root, terms).distinct().orderBy($"doc_id")
+    else sorted(bitmaps(spark, root, terms)(_.reduce { (a, b) => a.or(b); a }))
   }
 
-  /** Docs containing `pos` but not `neg` (left-anti). */
-  def andNot(spark: SparkSession, root: String, pos: String, neg: String): DataFrame = {
-    import spark.implicits._
-    docsOf(spark, root, pos)
-      .join(docsOf(spark, root, neg), Seq("doc_id"), "left_anti")
-      .orderBy($"doc_id")
-  }
+  /** Docs containing `pos` but not `neg`. */
+  def andNot(spark: SparkSession, root: String, pos: String, neg: String): DataFrame =
+    sorted(bitmaps(spark, root, Seq(pos, neg)) { bs => bs(0).andNot(bs(1)); bs(0) })
 
-  /** Bitmap conjunction: per docID-range shard ([[SearchEngine.perShard]]),
-    * decode each term's blocks into a Roaring64 bitmap, intersect, and drop
-    * the shard's tombstones — the scale path for boolean filters
-    * (RoaringBitmap ships with Spark). Equivalent to [[and]]; the set ops
-    * run partition-local at bitmap speed and only the surviving docIDs
-    * leave the shard, instead of shuffling full docID sets through
-    * semi-joins.
+  private def sorted(df: DataFrame): DataFrame = df.orderBy("doc_id")
+
+  /** The shard function under every op: per docID-range shard, one bitmap
+    * per term (in `terms` order; empty when the shard holds none of its
+    * postings) of its docs in `[lo, hi)` — a block can straddle shards —
+    * then `op` over them, minus the shard's tombstones.
     */
-  def andBitmap(spark: SparkSession, root: String, terms: Seq[String],
-      shardsOpt: Option[Int] = None): DataFrame = {
-    require(terms.nonEmpty)
+  private def bitmaps(spark: SparkSession, root: String, terms: Seq[String])(
+      op: Seq[Roaring64NavigableMap] => Roaring64NavigableMap): DataFrame = {
     import spark.implicits._
     val meta = Indexer.readMeta(spark, root)
-    SearchEngine.perShard(spark, root, meta, terms, shardsOpt) { sh =>
-      if (!terms.forall(sh.byTerm.contains)) Iterator.empty
-      else {
-        val result = terms.map { t =>
-          val bm = new Roaring64NavigableMap()
-          sh.byTerm(t).foreach(b => Codec.decodeDeltas(b.doc_deltas_vb, b.n_docs)
+    val scan = SearchEngine.postingsScan(IndexPaths(root), terms.distinct, meta.buckets,
+      DocColumns)
+    SearchEngine.perShard(spark, root, meta, Seq(scan), None) { sh =>
+      val result = op(terms.map { t =>
+        val bm = new Roaring64NavigableMap()
+        sh.byTerm.getOrElse(t, Array.empty).foreach(b =>
+          Codec.decodeDeltas(b.doc_deltas_vb, b.n_docs)
             .foreach(d => if (d >= sh.lo && d < sh.hi) bm.addLong(d)))
-          bm
-        }.reduce { (a, b) => a.and(b); a }
-        if (sh.deleted != null) sh.deleted.foreach(result.removeLong)
-        result.toArray.iterator
-      }
+        bm
+      })
+      if (sh.deleted != null) sh.deleted.foreach(result.removeLong)
+      result.toArray.iterator
     }
       .toDF("doc_id")
-      .orderBy($"doc_id")
   }
 }

@@ -50,7 +50,8 @@ object MSearch {
 
     // one shard read for the union of all queries' terms
     val allTerms = models.flatMap(_._2.terms).distinct.sorted
-    val candidates = SearchEngine.perShard(spark, root, meta, allTerms, shardsOpt) { sh =>
+    val candidates = SearchEngine.perShard(spark, root, meta,
+        Seq(SearchEngine.postingsScan(IndexPaths(root), allTerms, meta.buckets)), shardsOpt) { sh =>
       models.iterator.flatMap { case (qid, qm) =>
         Wand.scoreShard(sh.cursors(qm, robust), sh.lo, k, deleted = sh.deleted)
           .iterator.map(h => (qid, h.doc_id, h.score))

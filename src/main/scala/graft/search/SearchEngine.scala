@@ -15,13 +15,15 @@ import graft.model.Hit
   *   1. driver: analyze query (same Analyzer as indexing), load dictionary
   *      rows for the query terms + corpus stats (a few rows), compute idf,
   *      ship the QueryModel with the tasks;
-  *   2. executors: postings scan pruned to the query terms' buckets
-  *      (partition pruning on the `bucket` dir column) and `term ∈ terms`
-  *      (predicate pushdown to Parquet row groups — postings are written
-  *      term-sorted within files);
-  *   3. score (exhaustive decode here; Wand adds block-max skipping);
+  *   2. executors: one task per docID-range shard ([[perShard]]) reads the
+  *      query terms' posting blocks overlapping its docs straight from
+  *      their bucket files (term and doc-range pushdown) — no postings scan
+  *      in Spark, no shuffle;
+  *   3. the task scores its shard: Block-Max WAND ([[topKWand]]) or the
+  *      exhaustive kernel ([[exhaustive]]);
   *   4. global `orderBy(score DESC, doc_id ASC).limit(k)` —
-  *      TakeOrderedAndProjectExec, ≤ partitions·k rows cross to the driver.
+  *      TakeOrderedAndProjectExec over ≤ shards·k rows (WAND) or the
+  *      shards' scored docs (exhaustive).
   */
 object SearchEngine {
 
@@ -54,25 +56,17 @@ object SearchEngine {
     queries.map(QueryModel.build(_, stats.n_docs, dfByTerm, stats.avgdl, k, qAnalyzer, syn))
   }
 
-  /** Postings scan restricted to the given terms (bucket pruning + term
-    * pushdown).
-    */
-  private def postingsOf(spark: SparkSession, paths: IndexPaths,
-      terms: Seq[String], buckets: Int): DataFrame = {
-    val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct
-    Catalog.readPostings(spark, paths).toDF()
-      .filter(col("bucket").isin(qBuckets: _*) && col("term").isin(terms: _*))
-  }
-
   /** One docID-range shard of a [[perShard]] scan: the shard's posting
-    * blocks by term, each term's sorted by first_doc, and its sorted slices
-    * of the excluded docs (tombstones ∪ `excludedDocs`) and of the allowed
-    * docs — null when the slice is empty or no range filter is active, as
-    * [[Wand.scoreShard]] expects.
+    * blocks per source (in the scans' order) by term, each term's sorted by
+    * first_doc, and its sorted slices of the excluded docs (tombstones ∪
+    * `excludedDocs`) and of the allowed docs — null when the slice is empty
+    * or no range filter is active, as [[Wand.scoreShard]] expects.
     */
   private[graft] final case class Shard(lo: Long, hi: Long,
-      byTerm: Map[String, Array[PostingBlock]], deleted: Array[Long],
+      blocks: IndexedSeq[Map[String, Array[PostingBlock]]], deleted: Array[Long],
       allowed: Array[Long]) {
+    /** The first source's blocks by term. */
+    def byTerm: Map[String, Array[PostingBlock]] = blocks(0)
 
     /** Scoring cursors for the query terms with postings in this shard, in
       * the model's (sorted) term order.
@@ -82,23 +76,22 @@ object SearchEngine {
         new Wand.TermCursor(qm.idfs(ti), bs, qm.avgdl, hi, robust))).toArray
   }
 
-  /** The docID-shard executor under [[topKWand]], [[MSearch.msearch]] and
-    * [[Booleans.andBitmap]]. The index is term-bucketed on disk (scan
-    * pruning) but these run document-at-a-time, so every term's blocks for
-    * docID-range shard s meet in one task and `f` runs once per shard
-    * holding blocks. One Catalyst operator ([[graft.sql.PerShard]]) does it:
-    * shard s's task reads the blocks of `terms` overlapping its doc range
-    * straight from the terms' bucket files (term and doc-range pushdown to
-    * row groups, pages and records), so no postings are shuffled; the
-    * excluded docIDs (tombstones ∪ `excludedDocs`) and the `allowedDocs`
-    * are its children, each moved into the shards by its own exchange
-    * inside the operator. The salted runs are already range-disjoint, so
-    * per-shard block lists stay sorted-by-first_doc after a local sort.
-    * Shard count scales with parallelism (`shardsOpt`, default the shuffle
-    * partitions).
+  /** The docID-shard executor under every postings read of a query but
+    * must_not's: [[topKWand]], [[MSearch.msearch]], the [[exhaustive]]
+    * kernel and [[Booleans]]. Every term's blocks for docID-range shard s
+    * meet in one task, and `f` runs once per shard holding blocks. One
+    * Catalyst operator ([[graft.sql.PerShard]]): shard s's task reads the
+    * blocks overlapping its doc range through each of the `scans` (one per
+    * source index; cross_fields and BM25F read the text and title indexes,
+    * which share the docID space), so no postings are shuffled; the
+    * excluded docIDs (`root`'s tombstones ∪ `excludedDocs`) and the
+    * `allowedDocs` are its children, each moved into the shards by its own
+    * exchange inside the operator. A block can straddle shards: `f` keeps
+    * the docs in `[lo, hi)`. Shard count scales with parallelism
+    * (`shardsOpt`, default the shuffle partitions).
     */
   private[search] def perShard[T: Encoder](spark: SparkSession, root: String,
-      meta: IndexMeta, terms: Seq[String], shardsOpt: Option[Int],
+      meta: IndexMeta, scans: Seq[PostingsScan], shardsOpt: Option[Int],
       excludedDocs: Option[DataFrame] = None,
       allowedDocs: Option[DataFrame] = None)(f: Shard => Iterator[T]): Dataset[T] = {
     val paths = IndexPaths(root)
@@ -112,16 +105,17 @@ object SearchEngine {
       ((if (!graft.index.Deletes.hasDeletes(paths)) None
         else Some(Catalog.readParquet(spark, paths.deletes))) ++ excludedDocs)
         .map(docIds).reduceOption(_ union _)
-    graft.sql.PerShard.dataset(spark, shards, width, postingsScan(paths, terms, meta.buckets),
-      excluded, allowedDocs.map(docIds))(f)
+    graft.sql.PerShard.dataset(spark, shards, width, scans, excluded,
+      allowedDocs.map(docIds))(f)
   }
 
-  /** The shard reads' postings: the files of the `terms`' buckets. */
-  private[graft] def postingsScan(paths: IndexPaths, terms: Seq[String],
-      buckets: Int): PostingsScan = {
+  /** A shard read of the `terms`' postings (their buckets' files) and `columns`. */
+  private[graft] def postingsScan(paths: IndexPaths, terms: Seq[String], buckets: Int,
+      columns: Seq[String] = PostingsScan.Columns): PostingsScan = {
     val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct.sorted
     val (location, files) = Catalog.postingsFiles(paths)
-    PostingsScan(location, files.filter(f => qBuckets.contains(f.bucket)), qBuckets, terms)
+    PostingsScan(location, files.filter(f => qBuckets.contains(f.bucket)), qBuckets, terms,
+      columns)
   }
 
   /** Exhaustive index scorer: [[scoreAllDocs]] cut to the global top-k.
@@ -155,42 +149,37 @@ object SearchEngine {
   }
 
   /** One input of the [[exhaustive]] kernel: an index root, the cell each
-    * term it reads fills (cells count from 0; the kernel pivots every cell
+    * term it reads fills (cells count from 0; the kernel fills every cell
     * up to the largest of any source), and a posting's value in its cell
     * from (cell, tf, dl).
     */
-  private[search] final case class Source(root: String, cellOf: Map[String, Int],
+  private[graft] final case class Source(root: String, cellOf: Map[String, Int],
       value: (Int, Int, Int) => Double)
 
-  /** The kernel's decode step: per source, one bucket-pruned,
-    * term-pushed-down postings scan and one [[Blocks.decode]] per block,
-    * giving one (doc_id, cell, v, dl) row per posting — restricted to the
-    * sorted `docs` when given, where a block whose [first_doc, last_doc]
-    * holds none of them is skipped undecoded.
+  /** `f` over the docID shards of the `sources`' postings: one shard read
+    * per source, and the first source's tombstones as `Shard.deleted`.
     */
-  private def decode(spark: SparkSession, sources: Seq[Source],
-      docs: Option[Array[Long]]): DataFrame = {
-    import spark.implicits._
-    sources.map { case Source(root, cellOf, value) =>
-      postingsOf(spark, IndexPaths(root), cellOf.keys.toSeq,
-          Indexer.readMeta(spark, root).buckets).as[PostingBlock]
-        .flatMap { b =>
-          val hit = docs.forall { ds =>
-            val i = java.util.Arrays.binarySearch(ds, b.first_doc)
-            val ins = if (i >= 0) i else -i - 1
-            ins < ds.length && ds(ins) <= b.last_doc
-          }
-          if (!hit) Iterator.empty
-          else {
-            val c = cellOf(b.term)
-            val d = Blocks.decode(b)
-            val idx = (0 until d.docs.length).iterator
-            docs.fold(idx)(ds =>
-              idx.filter(i => java.util.Arrays.binarySearch(ds, d.docs(i)) >= 0))
-              .map(i => (d.docs(i), c, value(c, d.tfs(i), d.dls(i)), d.dls(i)))
-          }
-        }
-    }.reduce(_ union _).toDF("doc_id", "cell", "v", "dl")
+  private def overSources[T: Encoder](spark: SparkSession, sources: Seq[Source])(
+      f: Shard => Iterator[T]): Dataset[T] = {
+    val metas = sources.map(s => Indexer.readMeta(spark, s.root))
+    val scans = sources.zip(metas).map { case (s, m) =>
+      postingsScan(IndexPaths(s.root), s.cellOf.keys.toSeq, m.buckets) }
+    perShard(spark, sources.head.root, metas.head, scans, None)(f)
+  }
+
+  /** One doc's cells in a shard: each cell's sum of posting values, which
+    * cells hold a posting and how many, and the doc's dl (the max over
+    * sources).
+    */
+  private[graft] final class DocCells(n: Int) {
+    val sums = new Array[Double](n)
+    val filled = new Array[Boolean](n)
+    var matched, dl = 0
+    def add(c: Int, v: Double, d: Int): Unit = {
+      sums(c) += v
+      if (!filled(c)) { filled(c) = true; matched += 1 }
+      if (d > dl) dl = d
+    }
   }
 
   /** The one exhaustive BM25 kernel, under [[scoreAllDocs]],
@@ -199,48 +188,65 @@ object SearchEngine {
     * fill: one (doc_id, score) row per live doc of the first source's index
     * with at least `minMatch(doc_id)` non-empty cells.
     *
-    * Plan: the [[decode]] step, then the pivot
-    * `groupBy(doc_id).agg(max(dl), sum(when(cell === c, v))…)` — a codegen'd
-    * HashAggregate whose MAP-SIDE PARTIALS absorb a doc's postings before
-    * the exchange, so ONE row per doc crosses instead of one per posting (a
-    * groupByKey shape has no combiner and ships df-proportional rows). A
-    * (term, doc) pair lives in exactly one block per index, so a cell sums
-    * one posting per (term, source) it holds: integer tfs (exact in a
-    * Double) or at most two Double addends (commutative) — one sum under any
-    * combine order. Then `combine(dl, cells)` runs once per doc over the
-    * cells in ascending order, a cell the doc has no posting in being 0.0;
-    * dl is the max over sources, constant per doc within one index.
+    * A shard function ([[cells]]) over [[perShard]], so no exchange or
+    * join sits under it: `combine(dl, cells)` runs once per doc over the
+    * cells in ascending order, a cell the doc has no posting in being 0.0.
+    * A (term, doc) pair lives in one block per index, so a cell sums one
+    * posting per (term, source): integer tfs (exact in a Double) or at most
+    * two Double addends (commutative) — one sum in any order.
     */
   private[search] def exhaustive(spark: SparkSession, sources: Seq[Source],
       minMatch: Long => Int = _ => 1, docs: Option[Array[Long]] = None)(
       combine: (Long, Array[Double]) => Double): DataFrame = {
     import spark.implicits._
+    overSources(spark, sources)(cells(sources, minMatch, docs)((doc, d) =>
+      Iterator.single(Hit(doc, combine(d.dl.toLong, d.sums))))).toDF()
+  }
+
+  /** The kernel's shard function: every posting of each source's terms
+    * with its doc in `[lo, hi)` (a block can straddle shards) — and in the
+    * sorted `docs` when given, where a block whose [first_doc, last_doc]
+    * holds none of them is skipped undecoded — adds its value to its doc's
+    * cell; then `out` runs once per doc that is not a tombstone of the
+    * shard and has at least `minMatch(doc_id)` filled cells.
+    */
+  private[graft] def cells[T](sources: Seq[Source], minMatch: Long => Int,
+      docs: Option[Array[Long]])(out: (Long, DocCells) => Iterator[T]): Shard => Iterator[T] = {
+    import java.util.Arrays.binarySearch
     val nCells = sources.flatMap(_.cellOf.values).max + 1
-    val cellCols = (0 until nCells).map(c => sum(when($"cell" === c, $"v")).as(s"c$c"))
-    decode(spark, sources, docs)
-      .groupBy($"doc_id")
-      .agg(max($"dl").as("dl"), cellCols: _*)
-      .flatMap { r =>
-        val doc = r.getLong(0)
-        val cells = new Array[Double](nCells)
-        var matched = 0
-        var c = 0
-        while (c < nCells) {
-          if (!r.isNullAt(2 + c)) { cells(c) = r.getDouble(2 + c); matched += 1 }
-          c += 1
+    val ds = docs.orNull
+    sh => {
+      val byDoc = new scala.collection.mutable.LongMap[DocCells]()
+      sources.zip(sh.blocks).foreach { case (Source(_, cellOf, value), byTerm) =>
+        byTerm.foreach { case (term, blocks) =>
+          val c = cellOf(term)
+          blocks.foreach { b =>
+            val at = if (ds == null) 0 else binarySearch(ds, b.first_doc)
+            if (ds == null || at >= 0 || ~at < ds.length && ds(~at) <= b.last_doc) {
+              val d = Blocks.decode(b)
+              for (j <- d.docs.indices) {
+                val doc = d.docs(j)
+                if (doc >= sh.lo && doc < sh.hi && (ds == null || binarySearch(ds, doc) >= 0))
+                  byDoc.getOrElseUpdate(doc, new DocCells(nCells))
+                    .add(c, value(c, d.tfs(j), d.dls(j)), d.dls(j))
+              }
+            }
+          }
         }
-        if (matched < minMatch(doc)) Iterator.empty
-        else Iterator.single(Hit(doc, combine(r.getInt(1).toLong, cells)))
       }
-      .toDF()
-      .transform(graft.index.Deletes.filterLive(_, sources.head.root))
+      byDoc.iterator.flatMap { case (doc, d) =>
+        if (d.matched < minMatch(doc) ||
+            (sh.deleted != null && binarySearch(sh.deleted, doc) >= 0)) Iterator.empty
+        else out(doc, d)
+      }
+    }
   }
 
   /** BM25 over tf cells: Σ idf·[[Bm25.tfNorm]] in ascending cell order —
     * the exact scalar ops of the WAND path, so scores are bit-identical to
     * it (WandSpec's shadow equality pins it).
     */
-  private def bm25(idfs: Array[Double], avgdl: Double): (Long, Array[Double]) => Double =
+  private[graft] def bm25(idfs: Array[Double], avgdl: Double): (Long, Array[Double]) => Double =
     (dl, tfs) => {
       var s = 0.0
       var c = 0
@@ -274,8 +280,8 @@ object SearchEngine {
     * A per-doc threshold breaks WAND's global mm-pivot (the pivot needs one
     * corpus-wide mm), so this is the exhaustive-pruned family by necessity —
     * Lucene's CoveringQuery scores exhaustively for the same reason. The
-    * scan is still bucket-pruned + term-pushed-down; only the QUERY terms'
-    * postings are decoded, one row per doc crosses the exchange.
+    * shard reads are still bucket-pruned + term-pushed-down; only the QUERY
+    * terms' postings are decoded, and nothing is shuffled.
     */
   def termsSetTopK(spark: SparkSession, root: String, rawTerms: Seq[String],
       k: Int): DataFrame =
@@ -324,8 +330,8 @@ object SearchEngine {
     // robust bounds are mandatory there, independent of the caller's flag
     val robust = robustBounds || meta.incremental
 
-    perShard(spark, root, meta, qm.terms.toSeq ++ filterTerms, shardsOpt,
-        excludedDocs, allowedDocs) { sh =>
+    val scan = postingsScan(IndexPaths(root), qm.terms.toSeq ++ filterTerms, meta.buckets)
+    perShard(spark, root, meta, Seq(scan), shardsOpt, excludedDocs, allowedDocs) { sh =>
       // a shard missing any filter term's postings holds no matching docs
       if (!filterTerms.forall(sh.byTerm.contains)) Iterator.empty
       else {
@@ -344,7 +350,8 @@ object SearchEngine {
 
   /** ES `bool: {must_not: …}` doc set: the docID of every posting of the
     * must_not terms, analyzed like the query terms (the index's analyzer and
-    * synonyms), from their pruned postings (never a corpus scan). Pass it to
+    * synonyms), from ONE bucket-pruned, term-pushed-down Spark scan decoding
+    * only the docID payloads (never a corpus scan). Pass it to
     * [[topKWand]] as `excludedDocs`: it is the same shard input as
     * tombstones — exact eval-time rejection, θ-driven skips stay rank-safe,
     * scoring stats untouched (ES must_not never scores). The set is neither
@@ -355,8 +362,19 @@ object SearchEngine {
     */
   def mustNotDocs(spark: SparkSession, root: String,
       mustNotTerms: Seq[String]): Option[DataFrame] = {
+    import spark.implicits._
     val terms = analyzeLikeIndex(spark, root, mustNotTerms)
-    if (terms.isEmpty) None else Some(Booleans.postingDocs(spark, root, terms))
+    if (terms.isEmpty) None
+    else {
+      val buckets = Indexer.readMeta(spark, root).buckets
+      val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct
+      Some(Catalog.readParquet(spark, IndexPaths(root).postings)
+        .filter($"bucket".isin(qBuckets: _*) && $"term".isin(terms: _*))
+        .select($"n_docs", $"doc_deltas_vb")
+        .as[(Int, Array[Byte])]
+        .flatMap { case (n, deltas) => Codec.decodeDeltas(deltas, n) }
+        .toDF("doc_id"))
+    }
   }
 
   /** `rawTerms` analyzed as the index at `root` analyzes queries: its
@@ -376,7 +394,7 @@ object SearchEngine {
     * (filter context — sorting never scores, so the match is the unscored
     * index path, over the terms analyzed like the index) joined to the
     * metadata column, top-k by the field. Plan:
-    * pruned postings decode → broadcast-ready semi-join against the
+    * [[Booleans.or]]'s docID set → join against the
     * column-pruned metadata scan → TakeOrderedAndProject — no corpus sort,
     * no score computation (ES skips scoring for field sorts too).
     */
@@ -474,8 +492,8 @@ object SearchEngine {
         // unknown (nonzero!) score there; a zero-fill understates it (the
         // dis_max case is immune: max only needs the ranking field). Fill
         // the missing side with a targeted exact lookup over the candidate
-        // docID set (the exhaustive kernel restricted to a broadcast set:
-        // pruned scan ∩ set, only the set's rows leave).
+        // docID set (the exhaustive kernel restricted to the set: a block
+        // holding none of it is skipped undecoded, only the set's rows leave).
         def exact(root: String, docs: Set[Long]): Map[Long, Double] =
           if (docs.isEmpty) Map.empty
           else scoreDocs(spark, root, rawTerms, _ => 1, Some(docs.toArray.sorted))
@@ -517,7 +535,7 @@ object SearchEngine {
     * exactly why ES recommends it for first_name/last_name-style splits.
     * Terms analyze like the text index.
     *
-    * The [[exhaustive]] kernel over both fields' pruned scans, one cell per
+    * The [[exhaustive]] kernel over both fields' shard reads, one cell per
     * (term, field). Term-centric blending couples the fields per term, so
     * per-field WAND windows cannot bound the combined score.
     */
@@ -612,7 +630,7 @@ object SearchEngine {
 
   /** ES `_explain` analog: per-term score breakdown for every top-k doc —
     * (doc_id, term, contribution). The exhaustive kernel's query model and
-    * [[decode]] step, restricted to the top-k docIDs; contributions
+    * shard [[cells]], restricted to the top-k docIDs; contributions
     * re-derived from the postings exactly as the scorer computes them, so
     * the rows sum to the hit scores bit-for-bit.
     */
@@ -626,9 +644,8 @@ object SearchEngine {
       return spark.emptyDataset[(Long, String, Double)].toDF("doc_id", "term", "contrib_r6")
     val contrib = Source(root, qm.terms.zipWithIndex.toMap,
       (c, tf, dl) => qm.idfs(c) * Bm25.tfNorm(tf, dl.toLong, qm.avgdl))
-    decode(spark, Seq(contrib), Some(topDocs))
-      .select($"doc_id", $"cell", $"v").as[(Long, Int, Double)]
-      .map { case (doc, c, v) => (doc, qm.terms(c), v) }
+    overSources(spark, Seq(contrib))(cells(Seq(contrib), _ => 1, Some(topDocs))((doc, d) =>
+      qm.terms.indices.iterator.filter(d.filled).map(c => (doc, qm.terms(c), d.sums(c)))))
       .toDF("doc_id", "term", "contrib")
       .select($"doc_id", $"term", round($"contrib", 6).as("contrib_r6"))
       .orderBy($"doc_id", $"term")

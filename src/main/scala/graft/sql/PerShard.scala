@@ -21,22 +21,23 @@ import graft.search.SearchEngine.Shard
   *
   * Shard `s` holds docs `[s·width, (s+1)·width)`; the last shard is
   * open-ended ([[PerShard.range]]). Each shard task reads its own posting
-  * blocks with `postings` ([[PostingsScan.read]] over the shard's doc
-  * range): no postings scan runs in Spark and none are shuffled. The
-  * children are the excluded docID set (tombstones ∪ must_not) and the
-  * allowed docID set (a range filter) when present, each one long `doc_id`
-  * column; [[PerShardStrategy]] plans each under its own
-  * [[ShardExchangeExec]], which moves its rows into the shard partitions,
-  * and [[PerShardExec]] zips those partitions with the shard reads and runs
-  * `f` once per shard holding blocks. No Spark `Exchange` sits under the final top-k, so
-  * adaptive execution does not split the query into one job per shuffle.
+  * blocks, one [[PostingsScan.read]] per source over the shard's doc range
+  * (the sources share one docID space): no postings scan runs in Spark and
+  * none are shuffled. The children are the excluded docID set (tombstones
+  * ∪ must_not) and the allowed docID set (a range filter) when present,
+  * each one long `doc_id` column; [[PerShardStrategy]] plans each under its
+  * own [[ShardExchangeExec]], which moves its rows into the shard
+  * partitions, and [[PerShardExec]] zips those partitions with the shard
+  * reads and runs `f` once per shard holding blocks. No Spark `Exchange`
+  * sits under the final top-k, so adaptive execution does not split the
+  * query into one job per shuffle.
   *
   * `f`'s output rows are serialized by `encoder`, whose attributes are the
   * node's output — held in the constructor like [[FullTextMatch]]'s.
   */
 final case class PerShard(shards: Int, width: Long, f: Shard => Iterator[Any],
     encoder: ExpressionEncoder[Any], override val output: Seq[Attribute],
-    postings: PostingsScan, excluded: Option[LogicalPlan], allowed: Option[LogicalPlan])
+    postings: Seq[PostingsScan], excluded: Option[LogicalPlan], allowed: Option[LogicalPlan])
     extends LogicalPlan {
   override def children: Seq[LogicalPlan] = excluded.toSeq ++ allowed
   // every input column feeds the shard function: none may be pruned
@@ -52,11 +53,11 @@ final case class PerShard(shards: Int, width: Long, f: Shard => Iterator[Any],
 
 object PerShard {
 
-  /** `f` over the docID shards of the `postings` blocks, as a Dataset over
-    * one [[PerShard]] node.
+  /** `f` over the docID shards of the blocks of each `postings` source, as
+    * a Dataset over one [[PerShard]] node.
     */
   def dataset[T: Encoder](spark: SparkSession, shards: Int, width: Long,
-      postings: PostingsScan, excluded: Option[DataFrame],
+      postings: Seq[PostingsScan], excluded: Option[DataFrame],
       allowed: Option[DataFrame])(f: Shard => Iterator[T]): Dataset[T] = {
     inject(spark, PerShardStrategy)
     val enc = encoderFor[T].asInstanceOf[ExpressionEncoder[Any]]
@@ -134,13 +135,13 @@ object ShardExchangeExec {
   }
 }
 
-/** Runs one task per shard: it reads the shard's posting blocks, zips the
-  * shard partitions of its [[ShardExchangeExec]] children (see [[PerShard]]
-  * for the child order) and runs the shard function when the shard holds
-  * blocks. Its explain prints the postings read like a file scan's.
+/** Runs one task per shard: it reads the shard's posting blocks of every
+  * source, zips the shard partitions of its [[ShardExchangeExec]] children
+  * (see [[PerShard]] for the child order) and runs the shard function when
+  * the shard holds blocks. Its explain prints each read like a file scan's.
   */
 final case class PerShardExec(shards: Int, width: Long, f: Shard => Iterator[Any],
-    encoder: ExpressionEncoder[Any], output: Seq[Attribute], postings: PostingsScan,
+    encoder: ExpressionEncoder[Any], output: Seq[Attribute], postings: Seq[PostingsScan],
     excluded: Option[SparkPlan], allowed: Option[SparkPlan]) extends SparkPlan {
   override def children: Seq[SparkPlan] = excluded.toSeq ++ allowed
   override def outputPartitioning: Partitioning = UnknownPartitioning(shards)
@@ -151,15 +152,15 @@ final case class PerShardExec(shards: Int, width: Long, f: Shard => Iterator[Any
     "blocksRead" -> SQLMetrics.createMetric(sparkContext, "blocks read"))
 
   override def simpleString(maxFields: Int): String =
-    (super.simpleString(maxFields) +: postings.explain).mkString(", ")
+    (super.simpleString(maxFields) +: postings.flatMap(_.explain)).mkString(", ")
 
   override def verboseStringWithOperatorId(): String =
     (Seq("", formattedNodeName, ExplainUtils.generateFieldString("Output", output),
-      s"Arguments: $shards, $width") ++ postings.explain).mkString("", "\n", "\n")
+      s"Arguments: $shards, $width") ++ postings.flatMap(_.explain)).mkString("", "\n", "\n")
 
   override protected def doExecute(): RDD[InternalRow] = {
     // each task deserializes its own copy of the (stateful) serializer
-    val (n, w, hasEx, range, fn, toRow, scan) = (shards, width, excluded.isDefined,
+    val (n, w, hasEx, range, fn, toRow, scans) = (shards, width, excluded.isDefined,
       allowed.isDefined, f, encoder.createSerializer(), postings)
     val (filesRead, blocksRead) = (longMetric("filesRead"), longMetric("blocksRead"))
     val conf = PerShardExec.hadoopConf(session)
@@ -171,16 +172,16 @@ final case class PerShardExec(shards: Int, width: Long, f: Shard => Iterator[Any
       if (range && allowed.isEmpty) Iterator.empty
       else {
         val (lo, hi) = PerShard.range(shard, n, w)
-        val blocks = GraftDatasetFactory.meteredRead {
-          val bs = scan.read(lo, hi, conf.value.get)
-          (bs, bs.length.toLong)
+        val reads = GraftDatasetFactory.meteredRead {
+          val bs = scans.map(_.read(lo, hi, conf.value.get))
+          (bs, bs.map(_.length.toLong).sum)
         }
-        filesRead.add(scan.files.length.toLong)
-        blocksRead.add(blocks.length.toLong)
-        if (blocks.isEmpty) Iterator.empty
+        filesRead.add(scans.map(_.files.length.toLong).sum)
+        blocksRead.add(reads.map(_.length.toLong).sum)
+        if (reads.forall(_.isEmpty)) Iterator.empty
         else {
-          val byTerm = blocks.groupBy(_.term).view.mapValues(_.sortBy(_.first_doc)).toMap
-          fn(Shard(lo, hi, byTerm, excluded, allowed)).map(toRow)
+          val blocks = reads.map(_.groupBy(_.term).view.mapValues(_.sortBy(_.first_doc)).toMap)
+          fn(Shard(lo, hi, blocks.toIndexedSeq, excluded, allowed)).map(toRow)
         }
       }
     })

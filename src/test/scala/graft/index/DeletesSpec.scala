@@ -108,11 +108,13 @@ class DeletesSpec extends AnyFunSuite {
     val orDel = ids(graft.search.Booleans.or(spark, del.paths.root, Seq("join", "hash")))
     assert(orDel == orClean -- dead, "boolean OR must exclude tombstones")
     for (terms <- Seq(Seq("join", "hash"), Seq("window", "vector"))) {
-      val and = graft.search.Booleans.and(spark, del.paths.root, terms)
-      val bitmap = graft.search.Booleans.andBitmap(spark, del.paths.root, terms)
-      assert(ids(bitmap) == ids(and) && ids(and).nonEmpty,
-        s"bitmap AND must drop tombstones like AND for $terms")
+      val andDel = ids(graft.search.Booleans.and(spark, del.paths.root, terms))
+      assert(andDel == ids(graft.search.Booleans.and(spark, clean.paths.root, terms)) -- dead &&
+        andDel.nonEmpty, s"boolean AND must exclude tombstones for $terms")
     }
+    val notDel = ids(graft.search.Booleans.andNot(spark, del.paths.root, "join", "window"))
+    assert(notDel == ids(graft.search.Booleans.andNot(spark, clean.paths.root,
+      "join", "window")) -- dead && notDel.nonEmpty, "boolean AND NOT must exclude tombstones")
 
     val wcClean = ids(graft.search.TermQueries.wildcard(spark, clean.paths.root, "*or*"))
     val wcDel = ids(graft.search.TermQueries.wildcard(spark, del.paths.root, "*or*"))

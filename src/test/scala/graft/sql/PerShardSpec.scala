@@ -4,19 +4,24 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Fixtures, TestSpark}
+import graft.{Fixtures, IndexCache, TestSpark}
 import graft.core.PostingBlock
 import graft.index.{Compaction, Deletes, Indexer, KeywordIndex}
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
+import graft.model.Hit
 import graft.search.SearchEngine
 import graft.streaming.StreamingIngest
 
 /** The shard tasks' own postings reads: shard s reads exactly the blocks
-  * the docID-shard exchange used to route to it, and the reads show in the
-  * task input metrics and the operator's SQL metrics.
+  * the docID-shard exchange used to route to it, from each source, and the
+  * reads show in the task input metrics and the operator's SQL metrics.
+  * It is the check on routing in the shard reader that WAND and its
+  * exhaustive shadow share: their bit-identity (WandSpec) cannot see a
+  * fault common to both.
   */
 class PerShardSpec extends AnyFunSuite {
+  import PerShardSpec.key
 
   lazy val spark: SparkSession = TestSpark.session
 
@@ -36,13 +41,6 @@ class PerShardSpec extends AnyFunSuite {
     } finally Fs.delete(new java.io.File(root).getParent)
   }
 
-  // a block's fields, its payloads by content hash (keeps failures readable)
-  private def key(b: PostingBlock): String = {
-    import java.util.Arrays.{hashCode => h}
-    (b.term, b.bucket, b.run_id, b.block_idx, b.first_doc, b.last_doc, b.n_docs, b.max_tf,
-      b.min_dl, b.sum_tf, b.max_tf_norm, h(b.doc_deltas_vb), h(b.tfs_vb), h(b.dls_vb)).toString
-  }
-
   /** The blocks of `terms` per shard by the exchange rule: a block goes to
     * shards ⌊first_doc/w⌋ … ⌊last_doc/w⌋, those past the last folded into it.
     */
@@ -56,27 +54,30 @@ class PerShardSpec extends AnyFunSuite {
       math.min(b.first_doc / width, last) <= s && s <= math.min(b.last_doc / width, last)))
   }
 
-  /** Every shard's read equals its routed blocks, at the operator's width
-    * and at a width that folds the upper half of the docs into the last
-    * shard.
+  /** The (shards, width) layouts checked over a doc space: 1, 3, 4 and 7
+    * shards, each at the operator's width and at the width that folds the
+    * upper half of the docs into the last shard.
     */
+  private def layouts(space: Long): Seq[(Int, Long)] =
+    for (shards <- Seq(1, 3, 4, 7);
+         w <- Seq(math.max(1L, (space + shards - 1) / shards), math.max(1L, space / (2L * shards))))
+      yield (shards, w)
+
+  /** Every shard's read equals its routed blocks at every layout. */
   private def assertRouting(name: String, root: String, terms: Seq[String]): Unit = {
     val meta = Indexer.readMeta(spark, root)
     val scan = SearchEngine.postingsScan(IndexPaths(root), terms, meta.buckets)
     val conf = spark.sparkContext.hadoopConfiguration
-    for (shards <- Seq(1, 3, 4, 7)) {
-      val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
-      for (w <- Seq(width, math.max(1L, meta.doc_id_space / (2L * shards)))) {
-        val expected = routed(root, terms, shards, w)
-        assert(expected.map(_.length).sum > 0, s"$name: no blocks for $terms")
-        if (shards > 1 && w < width)
-          assert(expected.last.exists(_.first_doc >= shards * w),
-            s"$name: the fold into the last shard is not exercised")
-        expected.zipWithIndex.foreach { case (exp, s) =>
-          val (lo, hi) = PerShard.range(s, shards, w)
-          assert(scan.read(lo, hi, conf).map(key).sorted.toSeq == exp.map(key).sorted,
-            s"$name: shard $s of $shards (width $w)")
-        }
+    for ((shards, w) <- layouts(meta.doc_id_space)) {
+      val expected = routed(root, terms, shards, w)
+      assert(expected.map(_.length).sum > 0, s"$name: no blocks for $terms")
+      if (shards > 1 && w * shards < meta.doc_id_space)
+        assert(expected.last.exists(_.first_doc >= shards * w),
+          s"$name: the fold into the last shard is not exercised")
+      expected.zipWithIndex.foreach { case (exp, s) =>
+        val (lo, hi) = PerShard.range(s, shards, w)
+        assert(scan.read(lo, hi, conf).map(key).sorted.toSeq == exp.map(key).sorted,
+          s"$name: shard $s of $shards (width $w)")
       }
     }
   }
@@ -149,5 +150,73 @@ class PerShardSpec extends AnyFunSuite {
         assert(exec.metrics("filesRead").value > 0L)
       } finally sc.removeSparkListener(listener)
     }
+  }
+
+  private val sfDir = "/root/testdata/sf0.001"
+  private val sfTerms = Seq("join", "window", "stream")
+
+  test("a two-source shard holds each source's blocks the exchange routed to it") {
+    import spark.implicits._
+    val roots = Seq(IndexCache.documentsIndex(spark, sfDir), IndexCache.titleIndex(spark, sfDir))
+      .map(_.paths.root)
+    val metas = roots.map(Indexer.readMeta(spark, _))
+    val scans = roots.zip(metas).map { case (root, meta) =>
+      SearchEngine.postingsScan(IndexPaths(root), sfTerms, meta.buckets)
+    }
+    for ((shards, w) <- layouts(metas.head.doc_id_space)) {
+      // (shard, source, block) for every block a shard task holds
+      val held = PerShard.dataset(spark, shards, w, scans, None, None) { sh =>
+        sh.blocks.iterator.zipWithIndex.flatMap { case (byTerm, src) =>
+          byTerm.valuesIterator.flatten.map(b => ((sh.lo / w).toInt, src, key(b)))
+        }
+      }.collect()
+      roots.zipWithIndex.foreach { case (root, src) =>
+        val expected = routed(root, sfTerms, shards, w)
+        assert(expected.map(_.length).sum > 0, s"source $src: no blocks for $sfTerms")
+        expected.zipWithIndex.foreach { case (exp, s) =>
+          assert(held.collect { case (`s`, `src`, k) => k }.sorted.toSeq == exp.map(key).sorted,
+            s"source $src: shard $s of $shards (width $w)")
+        }
+      }
+    }
+  }
+
+  test("scoreAllDocs is bit-identical at a width whose blocks straddle shards") {
+    import spark.implicits._
+    val root = IndexCache.documentsIndex(spark, sfDir).paths.root
+    val meta = Indexer.readMeta(spark, root)
+    val qm = SearchEngine.queryModel(spark, IndexPaths(root), sfTerms, 1, meta.analyzer,
+      meta.synonyms)
+    // scoreAllDocs's shard function, run at a chosen layout
+    val scan = Seq(SearchEngine.postingsScan(IndexPaths(root), qm.terms.toSeq, meta.buckets))
+    val bm25 = SearchEngine.bm25(qm.idfs, qm.avgdl)
+    val kernel = SearchEngine.cells(
+      Seq(SearchEngine.Source(root, qm.terms.zipWithIndex.toMap, (_, tf, _) => tf)),
+      _ => 1, None)((doc, d) => Iterator.single(Hit(doc, bm25(d.dl.toLong, d.sums))))
+    def bits(hits: Array[Hit]) =
+      hits.map(h => (h.doc_id, java.lang.Double.doubleToLongBits(h.score))).sorted.toSeq
+    def scores(shards: Int, w: Long) =
+      bits(PerShard.dataset(spark, shards, w, scan, None, None)(kernel).collect())
+    val one = scores(1, meta.doc_id_space)
+    assert(one.nonEmpty)
+    assert(bits(SearchEngine.scoreAllDocs(spark, root, sfTerms).as[Hit].collect()) == one,
+      "scoreAllDocs != its shard function at one shard")
+    for (shards <- Seq(3, 4, 7)) {
+      val w = meta.doc_id_space / (2L * shards)
+      val last = shards - 1L
+      assert(routed(root, qm.terms.toSeq, shards, w).flatten.exists(b =>
+        math.min(b.first_doc / w, last) != math.min(b.last_doc / w, last)),
+        s"no block straddles a shard at $shards shards (width $w)")
+      assert(scores(shards, w) == one, s"scores differ at $shards shards (width $w)")
+    }
+  }
+}
+
+object PerShardSpec {
+  // a block's fields, its payloads by content hash (keeps failures readable)
+  def key(b: PostingBlock): String = {
+    import java.util.Arrays.{hashCode => h}
+    (b.term, b.bucket, b.run_id, b.block_idx, b.first_doc, b.last_doc, b.n_docs, b.max_tf,
+      b.min_dl, b.sum_tf, b.max_tf_norm, h(b.doc_deltas_vb), h(b.tfs_vb), h(b.dls_vb)).toString
   }
 }
