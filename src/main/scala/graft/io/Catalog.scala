@@ -245,7 +245,16 @@ object Catalog {
   // never cached: postings scans and scoring run from parquet per query.
   // Each memo keeps the current and previous generation per artifact base.
   private[graft] val statsMemo = new GenerationMemo[CorpusStats]
-  private[graft] val dictMemo = new GenerationMemo[Array[DictEntry]]
+  private[graft] val dictMemo = new GenerationMemo[Dictionary]
+
+  /** A memoized dictionary generation: its rows in read order, and each
+    * row by term, so a lookup costs the looked-up terms, not the vocabulary.
+    */
+  private[graft] final class Dictionary(val entries: Seq[DictEntry]) {
+    private val byTerm = new java.util.HashMap[String, DictEntry](entries.length * 2)
+    entries.foreach(e => byTerm.put(e.term, e))
+    def get(term: String): Option[DictEntry] = Option(byTerm.get(term))
+  }
 
   /** Dictionaries at or under this many parquet bytes are served from the
     * per-JVM memo (as a driver-local relation — lookups and expansions scan
@@ -255,9 +264,8 @@ object Catalog {
     */
   val DefaultDictCacheMaxBytes: Long = 8L << 20
 
-  /** The dictionary rows when the byte gate admits them, else None. */
-  def dictEntriesCached(spark: SparkSession,
-      paths: IndexPaths): Option[Seq[DictEntry]] = {
+  /** The dictionary when the byte gate admits it, else None. */
+  private def dictCached(spark: SparkSession, paths: IndexPaths): Option[Dictionary] = {
     import spark.implicits._
     val p = paths.dictionary
     val gate = spark.conf.getOption("spark.graft.dict.cacheMaxBytes")
@@ -266,20 +274,19 @@ object Catalog {
     val files = Fs.listDataFiles(p)
     if (files.map(_._2).sum > gate) None
     else Some(dictMemo(paths.dictionaryBase, (p, fingerprintOf(p, files)))(
-      spark.read.parquet(p).as[DictEntry].collect()).toSeq)
+      new Dictionary(spark.read.parquet(p).as[DictEntry].collect().toSeq)))
   }
 
   /** Document frequency of each of `terms` found in the dictionary. The
-    * lookup costs zero Spark jobs when the byte gate admits the dictionary
-    * ([[dictEntriesCached]]); above it, one filtered parquet scan.
+    * lookup costs zero Spark jobs and one hash probe per term when the byte
+    * gate admits the dictionary ([[dictCached]]); above it, one filtered
+    * parquet scan.
     */
   def docFreqs(spark: SparkSession, paths: IndexPaths,
       terms: Seq[String]): Map[String, Long] = {
     import spark.implicits._
-    val termSet = terms.toSet
-    dictEntriesCached(spark, paths) match {
-      case Some(entries) =>
-        entries.iterator.filter(e => termSet(e.term)).map(e => e.term -> e.df).toMap
+    dictCached(spark, paths) match {
+      case Some(dict) => terms.iterator.flatMap(t => dict.get(t).map(t -> _.df)).toMap
       case None => spark.read.parquet(paths.dictionary).as[DictEntry]
         .filter($"term".isin(terms: _*))
         .collect().map(d => d.term -> d.df).toMap
@@ -288,8 +295,8 @@ object Catalog {
 
   def readDictionary(spark: SparkSession, paths: IndexPaths): Dataset[DictEntry] = {
     import spark.implicits._
-    dictEntriesCached(spark, paths) match {
-      case Some(entries) => spark.createDataset(entries) // local relation
+    dictCached(spark, paths) match {
+      case Some(dict) => spark.createDataset(dict.entries) // local relation
       case None => spark.read.parquet(paths.dictionary).as[DictEntry]
     }
   }

@@ -1,6 +1,7 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
@@ -50,6 +51,8 @@ object Booleans {
   def andNot(spark: SparkSession, root: String, pos: String, neg: String): DataFrame =
     sorted(bitmaps(spark, root, Seq(pos, neg)) { bs => bs(0).andNot(bs(1)); bs(0) })
 
+  private val DocRows = ExpressionEncoder[Long]()
+
   private def sorted(df: DataFrame): DataFrame = df.orderBy("doc_id")
 
   /** The shard function under every op: per docID-range shard, one bitmap
@@ -59,11 +62,10 @@ object Booleans {
     */
   private def bitmaps(spark: SparkSession, root: String, terms: Seq[String])(
       op: Seq[Roaring64NavigableMap] => Roaring64NavigableMap): DataFrame = {
-    import spark.implicits._
     val meta = Indexer.readMeta(spark, root)
     val scan = SearchEngine.postingsScan(IndexPaths(root), terms.distinct, meta.buckets,
       DocColumns)
-    SearchEngine.perShard(spark, root, meta, Seq(scan), None) { sh =>
+    SearchEngine.perShard(spark, root, meta, Seq(scan), None, DocRows) { sh =>
       val result = op(terms.map { t =>
         val bm = new Roaring64NavigableMap()
         sh.byTerm.getOrElse(t, Array.empty).foreach(b =>

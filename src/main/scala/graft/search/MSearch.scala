@@ -1,6 +1,7 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,7 +52,8 @@ object MSearch {
     // one shard read for the union of all queries' terms
     val allTerms = models.flatMap(_._2.terms).distinct.sorted
     val candidates = SearchEngine.perShard(spark, root, meta,
-        Seq(SearchEngine.postingsScan(IndexPaths(root), allTerms, meta.buckets)), shardsOpt) { sh =>
+        Seq(SearchEngine.postingsScan(IndexPaths(root), allTerms, meta.buckets)), shardsOpt,
+        CandidateRows) { sh =>
       models.iterator.flatMap { case (qid, qm) =>
         Wand.scoreShard(sh.cursors(qm, robust), sh.lo, k, deleted = sh.deleted)
           .iterator.map(h => (qid, h.doc_id, h.score))
@@ -69,6 +71,8 @@ object MSearch {
       .select($"query_id", $"doc_id", round($"score", 4).as("score_r4"))
       .orderBy($"query_id".asc, $"score_r4".desc, $"doc_id".asc)
   }
+
+  private val CandidateRows = ExpressionEncoder[(String, Long, Double)]()
 
   private def emptyResult(spark: SparkSession): DataFrame = {
     import spark.implicits._

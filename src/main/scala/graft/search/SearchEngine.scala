@@ -1,6 +1,7 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -21,11 +22,14 @@ import graft.model.Hit
   *      in Spark, no shuffle;
   *   3. the task scores its shard: Block-Max WAND ([[topKWand]]) or the
   *      exhaustive kernel ([[exhaustive]]);
-  *   4. global `orderBy(score DESC, doc_id ASC).limit(k)` —
-  *      TakeOrderedAndProjectExec over ≤ shards·k rows (WAND) or the
-  *      shards' scored docs (exhaustive).
+  *   4. global `orderBy(score DESC, doc_id ASC).limit(k)` ([[cut]]) —
+  *      [[graft.sql.PerShardTopKExec]]: each shard task keeps its k best
+  *      rows, and the driver merges ≤ shards·k of them in one job.
   */
 object SearchEngine {
+
+  /** The row encoder of a scored shard's hits, built once per JVM. */
+  private[search] val HitRows: ExpressionEncoder[Hit] = ExpressionEncoder[Hit]()
 
   /** Load per-term stats and build the broadcastable query model.
     * `analyzer` must be the index's recorded analyzer (IndexMeta) — the
@@ -88,12 +92,13 @@ object SearchEngine {
     * `allowedDocs` are its children, each moved into the shards by its own
     * exchange inside the operator. A block can straddle shards: `f` keeps
     * the docs in `[lo, hi)`. Shard count scales with parallelism
-    * (`shardsOpt`, default the shuffle partitions).
+    * (`shardsOpt`, default the shuffle partitions). `rows` serializes `f`'s
+    * rows: pass an encoder built once, not one derived per query.
     */
-  private[search] def perShard[T: Encoder](spark: SparkSession, root: String,
+  private[search] def perShard[T](spark: SparkSession, root: String,
       meta: IndexMeta, scans: Seq[PostingsScan], shardsOpt: Option[Int],
-      excludedDocs: Option[DataFrame] = None,
-      allowedDocs: Option[DataFrame] = None)(f: Shard => Iterator[T]): Dataset[T] = {
+      rows: ExpressionEncoder[T], excludedDocs: Option[DataFrame] = None,
+      allowedDocs: Option[DataFrame] = None)(f: Shard => Iterator[T]): DataFrame = {
     val paths = IndexPaths(root)
     val shards = shardsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
     val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
@@ -105,8 +110,8 @@ object SearchEngine {
       ((if (!graft.index.Deletes.hasDeletes(paths)) None
         else Some(Catalog.readParquet(spark, paths.deletes))) ++ excludedDocs)
         .map(docIds).reduceOption(_ union _)
-    graft.sql.PerShard.dataset(spark, shards, width, scans, excluded,
-      allowedDocs.map(docIds))(f)
+    graft.sql.PerShard.frame(spark, shards, width, scans, excluded,
+      allowedDocs.map(docIds), rows)(f)
   }
 
   /** A shard read of the `terms`' postings (their buckets' files) and `columns`. */
@@ -137,7 +142,9 @@ object SearchEngine {
       minMatch: Long => Int = _ => 1): DataFrame =
     scoreDocs(spark, root, rawTerms, minMatch, None)
 
-  /** Global top-k by (score DESC, doc_id ASC): TakeOrderedAndProject. */
+  /** Global top-k by (score DESC, doc_id ASC): over a [[perShard]] frame,
+    * [[graft.sql.PerShardTopKExec]]; elsewhere TakeOrderedAndProject.
+    */
   private[search] def cut(df: DataFrame, k: Int): DataFrame =
     df.orderBy(col("score").desc, col("doc_id").asc).limit(k)
 
@@ -159,12 +166,12 @@ object SearchEngine {
   /** `f` over the docID shards of the `sources`' postings: one shard read
     * per source, and the first source's tombstones as `Shard.deleted`.
     */
-  private def overSources[T: Encoder](spark: SparkSession, sources: Seq[Source])(
-      f: Shard => Iterator[T]): Dataset[T] = {
+  private def overSources[T](spark: SparkSession, sources: Seq[Source],
+      rows: ExpressionEncoder[T])(f: Shard => Iterator[T]): DataFrame = {
     val metas = sources.map(s => Indexer.readMeta(spark, s.root))
     val scans = sources.zip(metas).map { case (s, m) =>
       postingsScan(IndexPaths(s.root), s.cellOf.keys.toSeq, m.buckets) }
-    perShard(spark, sources.head.root, metas.head, scans, None)(f)
+    perShard(spark, sources.head.root, metas.head, scans, None, rows)(f)
   }
 
   /** One doc's cells in a shard: each cell's sum of posting values, which
@@ -197,11 +204,9 @@ object SearchEngine {
     */
   private[search] def exhaustive(spark: SparkSession, sources: Seq[Source],
       minMatch: Long => Int = _ => 1, docs: Option[Array[Long]] = None)(
-      combine: (Long, Array[Double]) => Double): DataFrame = {
-    import spark.implicits._
-    overSources(spark, sources)(cells(sources, minMatch, docs)((doc, d) =>
-      Iterator.single(Hit(doc, combine(d.dl.toLong, d.sums))))).toDF()
-  }
+      combine: (Long, Array[Double]) => Double): DataFrame =
+    overSources(spark, sources, HitRows)(cells(sources, minMatch, docs)((doc, d) =>
+      Iterator.single(Hit(doc, combine(d.dl.toLong, d.sums)))))
 
   /** The kernel's shard function: every posting of each source's terms
     * with its doc in `[lo, hi)` (a block can straddle shards) — and in the
@@ -291,7 +296,7 @@ object SearchEngine {
     *
     * Runs on the docID-shard executor ([[perShard]]): Wand.scoreShard runs
     * per shard with exact block-max skipping, and only ≤ shards·k candidate
-    * rows reach the global TakeOrderedAndProject.
+    * rows reach the driver's merge ([[graft.sql.PerShardTopKExec]]).
     *
     * Every ES query shape on this path is a parameter of this one call:
     *  - `minMatch`: `minimum_should_match` (= #terms is `match`
@@ -316,7 +321,6 @@ object SearchEngine {
       filters: Seq[String] = Nil,
       allowedDocs: Option[org.apache.spark.sql.DataFrame] = None,
       excludedDocs: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
-    import spark.implicits._
     val meta = Indexer.readMeta(spark, root)
     val qm = queryModel(spark, IndexPaths(root), rawTerms, k, meta.analyzer, meta.synonyms)
     if (qm.isEmpty || qm.terms.length < minMatch) return emptyHits(spark)
@@ -331,7 +335,8 @@ object SearchEngine {
     val robust = robustBounds || meta.incremental
 
     val scan = postingsScan(IndexPaths(root), qm.terms.toSeq ++ filterTerms, meta.buckets)
-    perShard(spark, root, meta, Seq(scan), shardsOpt, excludedDocs, allowedDocs) { sh =>
+    cut(perShard(spark, root, meta, Seq(scan), shardsOpt, HitRows, excludedDocs,
+        allowedDocs) { sh =>
       // a shard missing any filter term's postings holds no matching docs
       if (!filterTerms.forall(sh.byTerm.contains)) Iterator.empty
       else {
@@ -342,10 +347,7 @@ object SearchEngine {
         Wand.scoreShard(scoring ++ filtering, sh.lo, qm.k, minMatch, afterScore,
           afterDoc, required, sh.deleted, sh.allowed).iterator
       }
-    }
-      .toDF()
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
+    }, k)
   }
 
   /** ES `bool: {must_not: …}` doc set: the docID of every posting of the
@@ -644,12 +646,14 @@ object SearchEngine {
       return spark.emptyDataset[(Long, String, Double)].toDF("doc_id", "term", "contrib_r6")
     val contrib = Source(root, qm.terms.zipWithIndex.toMap,
       (c, tf, dl) => qm.idfs(c) * Bm25.tfNorm(tf, dl.toLong, qm.avgdl))
-    overSources(spark, Seq(contrib))(cells(Seq(contrib), _ => 1, Some(topDocs))((doc, d) =>
-      qm.terms.indices.iterator.filter(d.filled).map(c => (doc, qm.terms(c), d.sums(c)))))
+    overSources(spark, Seq(contrib), ContribRows)(cells(Seq(contrib), _ => 1, Some(topDocs))(
+      (doc, d) => qm.terms.indices.iterator.filter(d.filled).map(c => (doc, qm.terms(c), d.sums(c)))))
       .toDF("doc_id", "term", "contrib")
       .select($"doc_id", $"term", round($"contrib", 6).as("contrib_r6"))
       .orderBy($"doc_id", $"term")
   }
+
+  private val ContribRows = ExpressionEncoder[(Long, String, Double)]()
 
   /** The driver-contract projection: `(doc_id, score_r4)`, the score
     * rounded to 4 decimals (see BruteForce.topKRounded).

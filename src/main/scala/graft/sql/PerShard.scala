@@ -6,12 +6,17 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, GraftDatasetFactory, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BindReferences,
+  InterpretedOrdering, InterpretedUnsafeProjection, IntegerLiteral, NamedExpression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Limit, LimitAndOffset, LogicalPlan,
+  OffsetAndLimit, Project, ReturnAnswer, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition,
+  UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.{ExplainUtils, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{ExplainUtils, OrderPreservingUnaryExecNode, SparkPlan,
+  SparkStrategy, TakeOrderedAndProjectExec, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.io.{PostingsScan, SerializableHadoopConf}
 import graft.search.SearchEngine.Shard
@@ -30,7 +35,9 @@ import graft.search.SearchEngine.Shard
   * partitions, and [[PerShardExec]] zips those partitions with the shard
   * reads and runs `f` once per shard holding blocks. No Spark `Exchange`
   * sits under the final top-k, so adaptive execution does not split the
-  * query into one job per shuffle.
+  * query into one job per shuffle; a global top-k straight over the node
+  * is [[PerShardTopKExec]], whose collect cuts each shard's rows in its
+  * task and merges ≤ shards·k of them on the driver.
   *
   * `f`'s output rows are serialized by `encoder`, whose attributes are the
   * node's output — held in the constructor like [[FullTextMatch]]'s.
@@ -54,19 +61,26 @@ final case class PerShard(shards: Int, width: Long, f: Shard => Iterator[Any],
 object PerShard {
 
   /** `f` over the docID shards of the blocks of each `postings` source, as
-    * a Dataset over one [[PerShard]] node.
+    * a DataFrame over one [[PerShard]] node whose rows `rows` serializes.
+    * Build `rows` once per row type: deriving an encoder per query costs
+    * more driver time than planning the query.
     */
-  def dataset[T: Encoder](spark: SparkSession, shards: Int, width: Long,
-      postings: Seq[PostingsScan], excluded: Option[DataFrame],
-      allowed: Option[DataFrame])(f: Shard => Iterator[T]): Dataset[T] = {
+  def frame[T](spark: SparkSession, shards: Int, width: Long,
+      postings: Seq[PostingsScan], excluded: Option[DataFrame], allowed: Option[DataFrame],
+      rows: ExpressionEncoder[T])(f: Shard => Iterator[T]): DataFrame = {
     inject(spark, PerShardStrategy)
-    val enc = encoderFor[T].asInstanceOf[ExpressionEncoder[Any]]
+    val enc = rows.asInstanceOf[ExpressionEncoder[Any]]
     def analyzed(df: DataFrame) = df.queryExecution.analyzed
     GraftDatasetFactory.ofRows(spark,
       PerShard(shards, width, f, enc, DataTypeUtils.toAttributes(enc.schema),
         postings, excluded.map(analyzed), allowed.map(analyzed)))
-      .as[T]
   }
+
+  /** [[frame]] as a typed Dataset. */
+  def dataset[T: Encoder](spark: SparkSession, shards: Int, width: Long,
+      postings: Seq[PostingsScan], excluded: Option[DataFrame],
+      allowed: Option[DataFrame])(f: Shard => Iterator[T]): Dataset[T] =
+    frame(spark, shards, width, postings, excluded, allowed, encoderFor[T])(f).as[T]
 
   /** Shard `s`'s docs `[lo, hi)`: `[s·width, (s+1)·width)`, except that the
     * last shard is open-ended (`hi` = `Long.MaxValue`) — docs past it, as a
@@ -231,15 +245,102 @@ private object ZipShardsRDD {
   final case class Part(index: Int, parents: Seq[Partition]) extends Partition
 }
 
+/** The global top-k of a [[PerShard]] node's rows: the least `limit` rows
+  * under `sortOrder`, less the first `offset`, projected by `projectList`
+  * — what Spark's `TakeOrderedAndProjectExec` computes, and what
+  * [[doExecute]] delegates to for consumers of its RDD.
+  *
+  * A collect ([[executeCollect]]) runs one job over the shard tasks with
+  * named task and result functions (Spark's `takeOrdered` re-runs its
+  * closure cleaner over the `RDD` class on every call): each shard task
+  * keeps its `limit` least rows in a bounded heap, and the driver merges
+  * the at most shards × `limit` candidates and projects them. Ordering and
+  * projection are interpreted, so a query generates no code.
+  */
+final case class PerShardTopKExec(limit: Int, sortOrder: Seq[SortOrder],
+    projectList: Seq[NamedExpression], child: SparkPlan, offset: Int)
+    extends OrderPreservingUnaryExecNode {
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+  override def outputPartitioning: Partitioning = SinglePartition
+  override protected def outputExpressions: Seq[NamedExpression] = projectList
+  override protected def orderingExpressions: Seq[SortOrder] = sortOrder
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "candidateRows" -> SQLMetrics.createMetric(sparkContext, "candidate rows"))
+
+  override def executeCollect(): Array[InternalRow] = {
+    val rdd = child.execute()
+    val ord = new InterpretedOrdering(sortOrder, child.output)
+    val merge = new PerShardTopKExec.Merge(rdd.partitions.length)
+    sparkContext.runJob(rdd, new PerShardTopKExec.Least(limit, ord, longMetric("candidateRows")),
+      rdd.partitions.indices, merge)
+    val project = InterpretedUnsafeProjection.createProjection(
+      BindReferences.bindReferences(projectList, child.output))
+    project.initialize(0)
+    merge.rows.flatten.sorted(ord).slice(offset, limit).map(project(_).copy())
+  }
+
+  override protected def doExecute(): RDD[InternalRow] =
+    TakeOrderedAndProjectExec(limit, sortOrder, projectList, child, offset).execute()
+
+  override protected def withNewChildInternal(newChild: SparkPlan): PerShardTopKExec =
+    copy(child = newChild)
+}
+
+object PerShardTopKExec {
+  /** A shard task: its `k` least rows, copied, least first. */
+  private final class Least(k: Int, ord: Ordering[InternalRow], candidates: SQLMetric)
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    override def apply(tc: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = {
+      // a heap of the k least rows so far, greatest on top: the next to go
+      val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
+      rows.foreach { r =>
+        if (heap.size < k) heap.add(r.copy())
+        else if (k > 0 && ord.lt(r, heap.peek())) { heap.poll(); heap.add(r.copy()) }
+      }
+      candidates.add(heap.size)
+      heap.toArray(new Array[InternalRow](heap.size)).sorted(ord)
+    }
+  }
+
+  /** Holds each shard task's rows by partition. */
+  private final class Merge(partitions: Int)
+      extends ((Int, Array[InternalRow]) => Unit) with Serializable {
+    val rows = new Array[Array[InternalRow]](partitions)
+    override def apply(partition: Int, shardRows: Array[InternalRow]): Unit =
+      rows(partition) = shardRows
+  }
+}
+
 /** Plans [[PerShard]]: one [[ShardExchangeExec]] per aux child, keyed by its
-  * doc_id.
+  * doc_id; and a global top-k straight over it ([[PerShardTopKExec]]), in
+  * the shapes Spark's `SpecialLimits` plans as `TakeOrderedAndProjectExec`
+  * (this strategy runs before it).
   */
 object PerShardStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case ReturnAnswer(root) => topK(root).toSeq
     case p: PerShard =>
       def byDoc(c: LogicalPlan) = ShardExchangeExec(c.output.head, p.shards, p.width, planLater(c))
       PerShardExec(p.shards, p.width, p.f, p.encoder, p.output, p.postings,
         p.excluded.map(byDoc), p.allowed.map(byDoc)) :: Nil
-    case _ => Nil
+    case other => topK(other).toSeq
+  }
+
+  private def topK(plan: LogicalPlan): Option[SparkPlan] = {
+    def over(limit: Int, offset: Int, child: LogicalPlan) = child match {
+      case _ if limit >= SQLConf.get.topKSortFallbackThreshold => None
+      case Sort(order, true, p: PerShard, _) =>
+        Some(PerShardTopKExec(limit, order, p.output, planLater(p), offset))
+      case Project(list, Sort(order, true, p: PerShard, _)) =>
+        Some(PerShardTopKExec(limit, order, list, planLater(p), offset))
+      case _ => None
+    }
+    plan match {
+      case LimitAndOffset(limit, offset, child) => over(limit, offset, child)
+      case OffsetAndLimit(offset, limit, child) => over(offset + limit, offset, child)
+      case Limit(IntegerLiteral(limit), child) => over(limit, 0, child)
+      case _ => None
+    }
   }
 }

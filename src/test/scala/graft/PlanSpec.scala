@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
 import graft.search.SearchEngine
 import graft.search.SearchEngine.rounded
+import graft.sql.PerShardTopKExec
 
 /** Physical-plan audit: the plans we designed for are the plans Catalyst
   * actually produces (pushdown, pruning, broadcast, top-k operator).
@@ -20,6 +22,17 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** The plan's global top-k over the shard operator, with no Sort and no
+    * Spark Exchange under it: the shard tasks cut and the driver merges.
+    */
+  private def shardTopK(name: String, df: DataFrame): PerShardTopKExec = {
+    val top = df.queryExecution.executedPlan.collectFirst { case t: PerShardTopKExec => t }
+    assert(top.isDefined, s"$name must end in the shard top-k operator:\n${plan(df)}")
+    assert(top.get.child.collect { case s: SortExec => s; case e: Exchange => e }.isEmpty,
+      s"$name: no Sort or Exchange may sit under the top-k:\n${plan(df)}")
+    top.get
+  }
 
   test("facet top_hits is bounded partial aggregation, not a window sort") {
     // VERDICT r3: row_number().over(partitionBy(source)) shuffled every
@@ -48,10 +61,7 @@ class PlanSpec extends AnyFunSuite {
           spark, idx.paths.root, ti.paths.root, Seq("join", "window"), 10),
         "BM25F" -> graft.search.Bm25F.topK(
           spark, idx.paths.root, ti.paths.root, Seq("join", "window"), 10))) {
-      val top = df.queryExecution.executedPlan
-        .collectFirst { case t: TakeOrderedAndProjectExec => t }
-      assert(top.isDefined, s"$name must end in a TakeOrderedAndProject:\n${plan(df)}")
-      val nodes = top.get.collect { case n => n.nodeName }
+      val nodes = shardTopK(name, df).collect { case n => n.nodeName }
       assert(nodes.contains("PerShard"),
         s"$name scoring must run in the shard operator:\n${plan(df)}")
       for (bad <- Seq("Exchange", "HashAggregate", "MapGroups"))
@@ -140,22 +150,22 @@ class PlanSpec extends AnyFunSuite {
       s"boolean path must not read tf/dl payloads:\n${p.take(2000)}")
   }
 
-  test("global top-k is TakeOrderedAndProject, not a full sort") {
-    val p = plan(SearchEngine.topKWand(spark, idx.paths.root, Seq("join"), 10))
-    assert(p.contains("TakeOrderedAndProject"), s"expected top-k operator in:\n${p.take(2000)}")
+  test("global top-k is the shard top-k operator, not a full sort") {
+    shardTopK("topKWand", SearchEngine.topKWand(spark, idx.paths.root, Seq("join"), 10))
   }
 
   test("filtered search adds NO exchange: filter terms ride the same pruned scan") {
     IndexCache.keywordField(spark, sfDir, "source")
     val plain = plan(SearchEngine.topKWand(spark, idx.paths.root, Seq("join", "window"), 10))
-    val filtered = plan(SearchEngine.topKWand(spark, idx.paths.root,
-      Seq("join", "window"), 10, filters = Seq("source:src3")))
+    val filteredDf = SearchEngine.topKWand(spark, idx.paths.root,
+      Seq("join", "window"), 10, filters = Seq("source:src3"))
+    val filtered = plan(filteredDf)
     def exchanges(p: String) = p.linesIterator.count(_.contains("Exchange"))
     assert(exchanges(filtered) == exchanges(plain),
       s"filter context must not add a shuffle:\n${filtered.take(2000)}")
     assert(filtered.contains("source:src3"),
       s"filter term must be pushed into the postings scan:\n${filtered.take(2000)}")
-    assert(filtered.contains("TakeOrderedAndProject"))
+    shardTopK("filtered search", filteredDf)
   }
 
   test("dimension joins broadcast") {
@@ -198,10 +208,11 @@ class PlanSpec extends AnyFunSuite {
   test("soft-deleted search keeps pushdown/pruning and adds only the tombstone exchange") {
     val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
     val plain = plan(SearchEngine.topKWand(spark, idx.paths.root, Seq("join", "window"), 10))
-    val p = plan(SearchEngine.topKWand(spark, del.paths.root, Seq("join", "window"), 10))
+    val deleted = SearchEngine.topKWand(spark, del.paths.root, Seq("join", "window"), 10)
+    val p = plan(deleted)
     assert(p.contains("PushedFilters") && p.contains("term"),
       s"tombstone path must keep term pushdown:\n${p.take(2000)}")
-    assert(p.contains("TakeOrderedAndProject"))
+    shardTopK("soft-deleted search", deleted)
     def exchanges(s: String) = s.linesIterator.count(_.contains("Exchange"))
     assert(exchanges(p) == exchanges(plain) + 1,
       s"expected exactly one extra (tiny tombstone) exchange:\n${p.take(2000)}")

@@ -56,6 +56,34 @@ class MemoSpec extends AnyFunSuite {
     } finally Fs.delete(new java.io.File(root).getParent)
   }
 
+  test("docFreqs from the memoized dictionary equals the parquet path and follows republishes") {
+    import spark.implicits._
+    val root = s"/tmp/graft-memo-dict-${System.nanoTime()}/idx"
+    val gate = "spark.graft.dict.cacheMaxBytes"
+    try {
+      val docs = Fixtures.turns(10, 20).zipWithIndex
+        .map { case (t, i) => graft.model.Doc(i.toLong, t.text) }
+      Indexer.buildFromDocs(docs.toDS(), root, buckets = 4, targetRun = 256)
+      val paths = IndexPaths(root)
+      // present, absent and repeated terms
+      val terms = Seq(Fixtures.term(0), Fixtures.term(3), "no-such-term", Fixtures.term(0))
+      def viaParquet() = {
+        spark.conf.set(gate, "0")
+        try Catalog.docFreqs(spark, paths, terms) finally spark.conf.unset(gate)
+      }
+      val memo = Catalog.docFreqs(spark, paths, terms)
+      assert(memo.keySet == Set(Fixtures.term(0), Fixtures.term(3)))
+      assert(memo == viaParquet())
+
+      // next generation: every df one higher
+      Fs.publish(paths.dictionaryBase)(Catalog.readDictionary(spark, paths)
+        .map(e => e.copy(df = e.df + 1)).write.mode(SaveMode.Overwrite).parquet(_))
+      val next = Catalog.docFreqs(spark, paths, terms)
+      assert(next == memo.view.mapValues(_ + 1).toMap, "a republished dictionary served stale")
+      assert(next == viaParquet())
+    } finally Fs.delete(new java.io.File(root).getParent)
+  }
+
   test("six ingest batches: memos keep ≤ 2 generations per base, results stay exact") {
     import spark.implicits._
     val root = s"/tmp/graft-memo-stream-${System.nanoTime()}/idx"
