@@ -1,5 +1,13 @@
 package graft.core
 
+/** A block of one term's postings, ordered by its first docID: what a
+  * shard read groups by term and orders ([[graft.io.PostingsScan]]).
+  */
+trait TermBlock {
+  def term: String
+  def first_doc: Long
+}
+
 /** One compressed posting block: ≤ [[Blocks.BlockSize]] postings of a single
   * (term, run) in ascending docID order (SURVEY.md §1.2).
   *
@@ -37,7 +45,7 @@ final case class PostingBlock(
     max_tf_norm: Double,
     doc_deltas_vb: Array[Byte],
     tfs_vb: Array[Byte],
-    dls_vb: Array[Byte])
+    dls_vb: Array[Byte]) extends TermBlock
 
 /** A decoded block: parallel arrays (docIDs ascending). */
 final case class DecodedBlock(docs: Array[Long], tfs: Array[Int], dls: Array[Int])

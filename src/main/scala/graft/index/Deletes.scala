@@ -51,25 +51,6 @@ object Deletes {
 
   def hasDeletes(paths: IndexPaths): Boolean = Fs.exists(paths.deletes)
 
-  /** Drop tombstoned docIDs from a (doc_id, …) DataFrame — the exclusion
-    * the positional query paths apply (ES phrase/span queries never return
-    * deleted docs either). No-op when the index has no tombstones;
-    * otherwise a broadcast left-anti join against the tiny tombstone table
-    * (small in steady state — purge's scaladoc covers the degenerate
-    * mostly-dead case). The docID-shard paths (WAND, the exhaustive kernel,
-    * the boolean ops) exclude inside the shard task (cogrouped).
-    */
-  def filterLive(df: org.apache.spark.sql.DataFrame, root: String)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val paths = IndexPaths(root)
-    if (!hasDeletes(paths)) df
-    else df.join(
-      org.apache.spark.sql.functions.broadcast(
-        graft.io.Catalog.readParquet(spark, paths.deletes).select("doc_id")),
-      Seq("doc_id"), "left_anti")
-  }
-
   /** ES `_delete_by_query` with a match-any (OR) query over the terms
     * analyzed like the index (its analyzer and synonyms): tombstone every
     * doc containing any of them. Idempotent (set union); returns the live

@@ -25,11 +25,12 @@ import graft.core.Analyzer
   * matches.
   *
   * Evaluation is per doc in the one positional kernel every other
-  * positional operator uses (PositionalIndex.perDoc): postings filtered to
-  * the expression's terms (bucket + term pushdown), one groupBy(doc)
-  * shuffle of those terms' position lists, then a purely local combinator
-  * walk — O(Σ positions · sources) per doc, output only matching doc_ids.
-  * Filter context, like the span family ES builds on the same machinery.
+  * positional operator uses (PositionalIndex.perDoc): each docID shard's
+  * task reads the expression's terms' positional blocks (bucket, term and
+  * doc-range pushdown) and runs a purely local combinator walk over each of
+  * its docs — O(Σ positions · sources) per doc, no row shuffled, output
+  * only matching doc_ids. Filter context, like the span family ES builds on
+  * the same machinery.
   */
 object Intervals {
 
@@ -205,12 +206,10 @@ object Intervals {
   }
 
   /** Filter-context evaluation: live doc_ids with ≥ 1 interval, ordered —
-    * the [[PositionalIndex.docsWhere]] kernel with [[eval]] per doc.
+    * the [[PositionalIndex.docsWhere]] kernel with [[eval]] per doc. The
+    * shard function carries the (query-sized) `src` tree itself.
     */
   def filterDocs(spark: SparkSession, root: String, src: Source,
-      buckets: Int): DataFrame = {
-    val bcSrc = spark.sparkContext.broadcast(src)
-    PositionalIndex.docsWhere(spark, root, src.terms, buckets)(
-      eval(bcSrc.value, _).nonEmpty)
-  }
+      buckets: Int): DataFrame =
+    PositionalIndex.docsWhere(spark, root, src.terms, buckets)(eval(src, _).nonEmpty)
 }

@@ -1,10 +1,17 @@
 package graft.index
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Analyzer, Blocks, Bm25, Codec}
+import graft.core.{Analyzer, Blocks, Bm25, Codec, PostingBlock, TermBlock}
+import graft.io.{BlockLayout, Catalog, PostingsScan}
 import graft.model.Doc
+import graft.search.SearchEngine
+import graft.search.SearchEngine.Shard
 
 /** Positional posting block: per (term, grid-run), docIDs ascending, with
   * each doc's in-document token positions (ascending) as a concatenated
@@ -23,17 +30,19 @@ final case class PosBlock(
     n_docs: Int,
     doc_deltas_vb: Array[Byte],
     pos_lens_vb: Array[Byte],
-    pos_deltas_vb: Array[Byte])
+    pos_deltas_vb: Array[Byte]) extends TermBlock
 
 /** Positional index build + index-backed phrase matching (SURVEY.md §2
   * row 25 — the index-side `match_phrase`; the relational twin is
   * operators/Phrase).
   *
   * Every positional query — phrase, span and [[Intervals]] — runs through
-  * one kernel, [[perDoc]] (scan, decode, group by doc, per-doc function over
-  * the position map); an operator is only its query analysis, its
-  * `require`s and that per-doc function. [[docsWhere]] is the kernel's
-  * filter-context form.
+  * one kernel, [[perDoc]]: a shard function on the docID-shard executor
+  * every indexed query shares (`SearchEngine.perShard`), which reads the
+  * query terms' positional blocks in each shard's task, decodes them and
+  * runs a per-doc function over each doc's position map; no row is
+  * shuffled. An operator is only its query analysis, its `require`s and
+  * that per-doc function. [[docsWhere]] is the kernel's filter-context form.
   */
 object PositionalIndex {
 
@@ -41,14 +50,21 @@ object PositionalIndex {
 
   def pathOf(root: String): String = s"$root/pos_postings"
 
-  // explicit read schema: skips per-query footer schema inference (the
-  // Catalog.readPostings rationale); `bucket` is the partition dir column
-  private lazy val posSchema =
-    org.apache.spark.sql.Encoders.product[PosBlock].schema
+  /** The positional block record, as [[PostingsScan]] reads it. */
+  private val Layout: BlockLayout[PosBlock] = BlockLayout(
+    Seq("term", "run_id", "block_idx", "first_doc", "last_doc", "n_docs", "doc_deltas_vb",
+      "pos_lens_vb", "pos_deltas_vb"),
+    (bucket, r) => PosBlock(r.string(0), bucket, r.int(1), r.int(2), r.long(3), r.long(4),
+      r.int(5), r.bytes(6), r.bytes(7), r.bytes(8)))
 
-  private def readRaw(spark: SparkSession,
-      root: String): org.apache.spark.sql.DataFrame =
-    spark.read.schema(posSchema).parquet(pathOf(root))
+  /** A shard read of the `terms`' positional blocks (their buckets' files). */
+  private[graft] def positionsScan(root: String, terms: Seq[String],
+      buckets: Int): PostingsScan[PosBlock] =
+    PostingsScan.of(pathOf(root), terms, buckets, Layout, Layout.columns)
+
+  private val DocRows = ExpressionEncoder[Long]()
+  // (doc_id, ptf, dl, scored)
+  private val PhraseRows = ExpressionEncoder[(Long, Int, Int, Boolean)]()
 
   /** Grid SPIMI over (term → [(doc, positions)]) on the same equal-width
     * docID range exchange as Indexer.buildFromDocs (disjoint contiguous
@@ -68,8 +84,8 @@ object PositionalIndex {
   }
 
   private final class PosBuf {
-    val docs = new scala.collection.mutable.ArrayBuffer[Long](8)
-    val posLists = new scala.collection.mutable.ArrayBuffer[Array[Int]](8)
+    val docs = new mutable.ArrayBuffer[Long](8)
+    val posLists = new mutable.ArrayBuffer[Array[Int]](8)
   }
 
   private final class PosGridIterator(
@@ -124,11 +140,11 @@ object PositionalIndex {
       val toks = Analyzer.tokenize(text)
       if (toks.nonEmpty) {
         // positions per term (ascending by construction)
-        val byTerm = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
+        val byTerm = new java.util.HashMap[String, mutable.ArrayBuffer[Int]]()
         var p = 0
         while (p < toks.length) {
           var lst = byTerm.get(toks(p))
-          if (lst == null) { lst = new scala.collection.mutable.ArrayBuffer[Int](4); byTerm.put(toks(p), lst) }
+          if (lst == null) { lst = new mutable.ArrayBuffer[Int](4); byTerm.put(toks(p), lst) }
           lst += p
           p += 1
         }
@@ -184,36 +200,39 @@ object PositionalIndex {
     }
   }
 
-  /** The one positional pipeline every phrase, span and intervals operator
-    * runs: positional postings scan pruned to the buckets of `terms` with
-    * `term ∈ terms` pushdown, decode, one groupBy(doc) shuffle of only those
-    * terms' (doc, positions) rows, then `f` over the doc's term → ascending
-    * positions map (absent = term not in doc). Emits `(doc_id, n)` for each
-    * doc where `n = f(positions) > 0` — output is tiny (matching docs only).
+  /** The one positional kernel every phrase, span and intervals operator
+    * runs: a shard function over [[SearchEngine.perShard]]. Each docID
+    * shard's task reads the positional blocks of `terms` overlapping its
+    * docs (bucket, term and doc-range pushdown), and the blocks of the
+    * `more` sources, and `f` runs once per shard over the shard and its docs
+    * in `[lo, hi)` holding any of the terms, ascending, each with its term →
+    * ascending positions map (absent = term not in doc). No row is shuffled.
     *
-    * Tombstones are NOT removed here: phrase df counts deleted docs like
+    * Tombstoned docs are among the docs: phrase df counts deleted docs like
     * every other df (see [[Deletes]]); [[docsWhere]] and [[phraseScores]]
-    * drop them from their results.
+    * drop `sh.isDeleted` docs from their results.
     */
-  private def perDoc(spark: SparkSession, root: String, terms: Seq[String],
-      buckets: Int)(f: collection.Map[String, Array[Int]] => Int): DataFrame = {
-    import spark.implicits._
-    val distinctTerms = terms.distinct
-    val qBuckets = distinctTerms.map(Blocks.bucketOf(_, buckets)).distinct
-    readRaw(spark, root)
-      .select("term", "bucket", "run_id", "block_idx", "first_doc", "last_doc",
-        "n_docs", "doc_deltas_vb", "pos_lens_vb", "pos_deltas_vb")
-      .filter($"bucket".isin(qBuckets: _*) && $"term".isin(distinctTerms: _*))
-      .as[PosBlock]
-      .flatMap(b => decode(b).map { case (doc, ps) => (doc, b.term, ps) })
-      .groupByKey(_._1)
-      .flatMapGroups { (doc, it) =>
-        val byTerm = scala.collection.mutable.Map[String, Array[Int]]()
-        it.foreach { case (_, t, ps) => byTerm(t) = ps }
-        val n = f(byTerm)
-        if (n > 0) Iterator.single((doc, n)) else Iterator.empty
-      }
-      .toDF("doc_id", "n")
+  private def perDoc[T](spark: SparkSession, root: String, terms: Seq[String], buckets: Int,
+      rows: ExpressionEncoder[T], more: Seq[PostingsScan[_ <: TermBlock]] = Nil)(
+      f: (Shard, Iterator[(Long, collection.Map[String, Array[Int]])]) => Iterator[T])
+      : DataFrame = {
+    val scan = positionsScan(root, terms.distinct, buckets)
+    SearchEngine.perShard(spark, root, Indexer.readMeta(spark, root), scan +: more, None,
+      rows)(sh => f(sh, docPositions(sh)))
+  }
+
+  /** The docs in `[lo, hi)` of a shard whose first source is positional,
+    * ascending, each with its term → positions map. A block can straddle
+    * shards; a doc lies in one block per term.
+    */
+  private def docPositions(sh: Shard): Iterator[(Long, collection.Map[String, Array[Int]])] = {
+    val byDoc = mutable.LongMap.empty[mutable.HashMap[String, Array[Int]]]
+    sh.source[PosBlock](0).foreach { case (term, blocks) =>
+      blocks.foreach(b => decode(b).foreach { case (doc, ps) =>
+        if (doc >= sh.lo && doc < sh.hi) byDoc.getOrElseUpdate(doc, mutable.HashMap.empty)(term) = ps
+      })
+    }
+    byDoc.keys.toArray.sorted.iterator.map(doc => (doc, byDoc(doc)))
   }
 
   /** Filter context over [[perDoc]]: live doc_ids whose positions satisfy
@@ -222,9 +241,9 @@ object PositionalIndex {
   private[index] def docsWhere(spark: SparkSession, root: String,
       terms: Seq[String], buckets: Int)(
       pred: collection.Map[String, Array[Int]] => Boolean): DataFrame =
-    perDoc(spark, root, terms, buckets)(m => if (pred(m)) 1 else 0)
-      .select("doc_id")
-      .transform(Deletes.filterLive(_, root))
+    perDoc(spark, root, terms, buckets, DocRows)((sh, docs) =>
+      docs.collect { case (doc, m) if !sh.isDeleted(doc) && pred(m) => doc })
+      .toDF("doc_id")
       .orderBy("doc_id")
 
   /** Shared per-doc exact-phrase span starts: positions p0 where the whole
@@ -241,17 +260,6 @@ object PositionalIndex {
       }
     }
   }
-
-  /** Per-doc phrase term frequency `(doc_id, ptf)` of the analyzed `terms`:
-    * the number of positions p0 at which the whole phrase matches
-    * consecutively (ES/Lucene's phrase freq — what a scored `match_phrase`
-    * uses as tf). Docs with zero matches are absent; tombstoned docs are
-    * present (they count in df).
-    */
-  private def phraseTf(spark: SparkSession, root: String, terms: Seq[String],
-      buckets: Int): DataFrame =
-    perDoc(spark, root, terms, buckets)(phraseStarts(terms, _).length)
-      .toDF("doc_id", "ptf")
 
   /** Index-backed phrase match (unscored filter context): matching doc_ids,
     * ordered. Sloppy and unordered phrases (ES `match_phrase` slop, Lucene
@@ -287,7 +295,7 @@ object PositionalIndex {
     * overlap any exclude-phrase span widened by `pre` positions before and
     * `post` after (SpanNotQuery's pre/post). A doc with include matches and
     * no exclude matches keeps all its spans. Filter context: matching
-    * doc_ids, ordered. One pruned scan over BOTH phrases' terms.
+    * doc_ids, ordered. One shard read of BOTH phrases' terms.
     */
   def spanNot(spark: SparkSession, root: String, includePhrase: Seq[String],
       excludePhrase: Seq[String], pre: Int, post: Int,
@@ -367,7 +375,7 @@ object PositionalIndex {
     * max_expansions contract — ES defaults to 50). An empty expansion set
     * matches nothing (no term can occupy the final slot), as in ES.
     *
-    * One positional scan over the leading terms + expansions; the expansion
+    * One shard read of the leading terms + expansions; the expansion
     * is the driver-side ≤maxExpansions dictionary read the prefix term
     * queries use.
     */
@@ -390,13 +398,8 @@ object PositionalIndex {
   }
 
   /** Scored `match_phrase` (ES analog): BM25 top-k treating the phrase as a
-    * single pseudo-term — tf = phrase frequency ([[phraseTf]]), df = number
-    * of docs containing the phrase, dl/avgdl from the scored index.
-    *
-    * dl comes from the scored postings of the phrase's first term (every
-    * matching doc contains all phrase terms, so that pruned scan covers all
-    * candidates) — no extra doc-lengths artifact and no corpus-wide join;
-    * everything after the positional pass touches only phrase-term postings.
+    * single pseudo-term — tf = phrase frequency, df = number of docs
+    * containing the phrase, dl/avgdl from the scored index ([[phraseScores]]).
     */
   def phraseTopK(spark: SparkSession, root: String, phrase: Seq[String],
       k: Int, buckets: Int): DataFrame = {
@@ -404,39 +407,44 @@ object PositionalIndex {
     phraseScores(spark, root, phrase, buckets)
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-      .transform(graft.search.SearchEngine.rounded)
+      .transform(SearchEngine.rounded)
   }
 
   /** Un-truncated phrase scores `(doc_id, score)` — the composable form
     * [[phraseTopK]] cuts to k, and what a compound query (e.g.
     * search.QueryString) sums with its other clauses BEFORE any truncation.
-    * df counts tombstoned docs (N does too), so surviving scores do not move
-    * after a delete; the tombstones leave only the scored rows.
+    *
+    * tf is the phrase frequency: the number of positions at which the whole
+    * phrase matches consecutively (ES/Lucene's phrase freq). dl comes from a
+    * second source of the same shards: the scored postings of the phrase's
+    * first term, which every matching doc holds — no doc-lengths artifact
+    * and no join. df counts tombstoned docs (N does too), so surviving
+    * scores do not move after a delete; the tombstones leave only the scored
+    * rows. That count over the shard rows is the query's one global step.
     */
   def phraseScores(spark: SparkSession, root: String, phrase: Seq[String],
       buckets: Int): DataFrame = {
     import spark.implicits._
     val terms = phrase.flatMap(Analyzer.tokenize(_))
     require(terms.nonEmpty, "empty phrase")
-    val stats = graft.io.Catalog.readCorpusStats(spark, graft.io.Catalog.IndexPaths(root))
-    val ptf = phraseTf(spark, root, terms, buckets)
-    val dfp = ptf.agg(count(lit(1)).as("dfp"))
-
-    // (doc_id, dl) for all candidate docs from the first term's scored
-    // postings (bucket-pruned + term-pushdown scan; runs disjoint ⇒ one row
-    // per doc)
+    val paths = Catalog.IndexPaths(root)
+    val stats = Catalog.readCorpusStats(spark, paths)
     val t0 = terms.head
-    val paths = graft.io.Catalog.IndexPaths(root)
-    val dls = graft.io.Catalog.readPostings(spark, paths)
-      .filter($"bucket" === Blocks.bucketOf(t0, buckets) && $"term" === t0)
-      .flatMap { b =>
-        val d = Blocks.decode(b)
-        (0 until d.docs.length).iterator.map(i => (d.docs(i), d.dls(i)))
+    val dlScan = SearchEngine.postingsScan(paths, Seq(t0), buckets)
+    perDoc(spark, root, terms, buckets, PhraseRows, Seq(dlScan)) { (sh, docs) =>
+      // t0's runs are disjoint: one dl per doc
+      val dls = sh.source[PostingBlock](1).getOrElse(t0, Array.empty).iterator
+        .map(Blocks.decode).flatMap(d => d.docs.iterator.zip(d.dls.iterator)).toMap
+      docs.flatMap { case (doc, m) =>
+        val ptf = phraseStarts(terms, m).length
+        // a doc without a dl counts in df but is not scored
+        if (ptf == 0) None
+        else Some((doc, ptf, dls.getOrElse(doc, 0), dls.contains(doc) && !sh.isDeleted(doc)))
       }
-      .toDF("doc_id", "dl")
-
-    Deletes.filterLive(ptf, root).join(dls, "doc_id")
-      .crossJoin(broadcast(dfp))
+    }
+      .toDF("doc_id", "ptf", "dl", "scored")
+      .withColumn("dfp", count(lit(1)).over(Window.partitionBy()))
+      .filter($"scored")
       .select($"doc_id",
         (log(lit(1.0) + (lit(stats.n_docs.toDouble) - $"dfp" + lit(0.5)) / ($"dfp" + lit(0.5))) *
           ($"ptf" / ($"ptf" + lit(Bm25.K1) * (lit(1.0 - Bm25.B) + lit(Bm25.B) * $"dl" / lit(stats.avgdl)))))

@@ -201,15 +201,14 @@ object Catalog {
     }
   }
 
-  /** The resolved postings generation and its data files as Spark's file
-    * index reads them — what [[readPostings]]' relation scans — from the
-    * same [[Fs.listDataFiles]] listing [[readPostings]] fingerprints, made
-    * once. Spark skips every file under a
-    * directory whose name starts with `.`, or with `_` and holds no `=`
-    * (`_temporary` of an in-flight append), and every `._COPYING_` file.
+  /** A postings directory — the resolved postings generation or the
+    * positional index — and its data files as Spark's file index reads
+    * them: for the postings, what [[readPostings]]' relation scans. Spark
+    * skips every file under a directory whose name starts with `.`, or with
+    * `_` and holds no `=` (`_temporary` of an in-flight append), and every
+    * `._COPYING_` file.
     */
-  def postingsFiles(paths: IndexPaths): (String, Seq[PostingsFile]) = {
-    val p = paths.postings
+  def postingsFiles(p: String): (String, Seq[PostingsFile]) = {
     val rootPrefix = new org.apache.hadoop.fs.Path(p).toUri.getPath + "/"
     def hidden(name: String) =
       (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")

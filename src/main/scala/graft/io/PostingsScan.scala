@@ -1,6 +1,7 @@
 package graft.io
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -12,35 +13,58 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.MessageType
 
-import graft.core.PostingBlock
+import graft.core.{Blocks, TermBlock}
 
 /** One postings data file: its path, its length and the bucket its
   * `bucket=N` directory names.
   */
 final case class PostingsFile(path: String, length: Long, bucket: Int)
 
-/** The posting blocks of `terms` in the postings `files` of `buckets`
-  * (under `location`), read straight from parquet by the task that needs
-  * them — no Spark scan, no shuffle. [[read]] pushes the term set and a
-  * docID range down to row groups, pages and records, and reads only the
-  * `columns` (of [[PostingsScan.Columns]], with `term`, `first_doc` and
-  * `last_doc`); the fields of the others stay 0 or null.
+/** The records of a postings directory as blocks: its `columns`, in record
+  * field order (`term`, `first_doc` and `last_doc` among them), and the
+  * block `record` makes of one record's values and its bucket.
   */
-final case class PostingsScan(location: String, files: Seq[PostingsFile],
-    buckets: Seq[Int], terms: Seq[String], columns: Seq[String]) {
+final case class BlockLayout[B <: TermBlock](columns: Seq[String],
+    record: (Int, BlockLayout.Fields) => B)(implicit val tag: ClassTag[B])
+
+object BlockLayout {
+  /** One record's values by their column's index in the layout; a column
+    * not read holds 0 or null.
+    */
+  final class Fields private[io] (n: Int) {
+    private[io] val ints = new Array[Int](n)
+    private[io] val longs = new Array[Long](n)
+    private[io] val doubles = new Array[Double](n)
+    private[io] val binaries = new Array[Binary](n)
+    def int(i: Int): Int = ints(i)
+    def long(i: Int): Long = longs(i)
+    def double(i: Int): Double = doubles(i)
+    def bytes(i: Int): Array[Byte] = if (binaries(i) == null) null else binaries(i).getBytes
+    def string(i: Int): String = binaries(i).toStringUsingUTF8
+  }
+}
+
+/** The blocks of `terms` in the postings `files` of `buckets` (under
+  * `location`), read straight from parquet by the task that needs them —
+  * no Spark scan, no shuffle. [[read]] pushes the term set and a docID
+  * range down to row groups, pages and records, and reads only the
+  * `columns` (of the `layout`'s, with `term`, `first_doc` and `last_doc`);
+  * the fields of the others stay 0 or null.
+  */
+final case class PostingsScan[B <: TermBlock](location: String, files: Seq[PostingsFile],
+    buckets: Seq[Int], terms: Seq[String], layout: BlockLayout[B], columns: Seq[String]) {
 
   /** The blocks of `terms` overlapping docs `[lo, hi)`: `last_doc >= lo`
     * and, unless `hi` is `Long.MaxValue` (an open-ended range), `first_doc < hi`.
     */
-  def read(lo: Long, hi: Long, conf: Configuration): Array[PostingBlock] = {
+  def read(lo: Long, hi: Long, conf: Configuration): Array[B] = {
     val filter = FilterCompat.get(PostingsScan.predicate(terms, lo, hi))
-    val out = Array.newBuilder[PostingBlock]
+    val out = Array.newBuilder[B](layout.tag)
     files.foreach { f =>
       val status = new FileStatus(f.length, false, 0, 0L, 0L, new Path(f.path))
-      val reader = new ParquetReader.Builder[PostingBlock](
-          HadoopInputFile.fromStatus(status, conf)) {
-        override protected def getReadSupport: ReadSupport[PostingBlock] =
-          new PostingsScan.BlockReadSupport(f.bucket, columns)
+      val reader = new ParquetReader.Builder[B](HadoopInputFile.fromStatus(status, conf)) {
+        override protected def getReadSupport: ReadSupport[B] =
+          new PostingsScan.BlockReadSupport(f.bucket, layout, columns)
       }.withFilter(filter).useStatsFilter().useDictionaryFilter()
         .useColumnIndexFilter().useRecordFilter().build()
       try {
@@ -62,12 +86,16 @@ final case class PostingsScan(location: String, files: Seq[PostingsFile],
 
 object PostingsScan {
 
-  /** The postings columns a [[PostingBlock]] holds, in its field order;
-    * `bucket` comes from the directory name.
+  /** The `columns` of the `terms`' blocks in the postings directory `dir`:
+    * the files of the terms' buckets.
     */
-  val Columns: Seq[String] = Seq("term", "run_id", "block_idx", "first_doc", "last_doc",
-    "n_docs", "max_tf", "min_dl", "sum_tf", "max_tf_norm", "doc_deltas_vb",
-    "tfs_vb", "dls_vb")
+  def of[B <: TermBlock](dir: String, terms: Seq[String], buckets: Int, layout: BlockLayout[B],
+      columns: Seq[String]): PostingsScan[B] = {
+    val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct.sorted
+    val (location, files) = Catalog.postingsFiles(dir)
+    PostingsScan(location, files.filter(f => qBuckets.contains(f.bucket)), qBuckets, terms,
+      layout, columns)
+  }
 
   private def predicate(terms: Seq[String], lo: Long, hi: Long): FilterPredicate = {
     val inTerms = FilterApi.in[Binary, Operators.BinaryColumn](
@@ -79,8 +107,8 @@ object PostingsScan {
       FilterApi.longColumn("first_doc"), hi))
   }
 
-  private final class BlockReadSupport(bucket: Int, columns: Seq[String])
-      extends ReadSupport[PostingBlock] {
+  private final class BlockReadSupport[B <: TermBlock](bucket: Int, layout: BlockLayout[B],
+      columns: Seq[String]) extends ReadSupport[B] {
     override def init(ctx: InitContext): ReadSupport.ReadContext = {
       val file = ctx.getFileSchema
       new ReadSupport.ReadContext(
@@ -89,50 +117,38 @@ object PostingsScan {
     }
 
     override def prepareForRead(conf: Configuration, meta: java.util.Map[String, String],
-        fileSchema: MessageType, ctx: ReadSupport.ReadContext): RecordMaterializer[PostingBlock] =
-      new BlockMaterializer(bucket, columns)
+        fileSchema: MessageType, ctx: ReadSupport.ReadContext): RecordMaterializer[B] =
+      new BlockMaterializer(bucket, layout, columns)
   }
 
-  /** Assembles one [[PostingBlock]] per record. The block is built only for
-    * a record the pushed filter keeps ([[getCurrentRecord]] is not called
-    * for the others), so a skipped record copies no payload bytes.
+  /** Assembles one block per record. The block is built only for a record
+    * the pushed filter keeps ([[getCurrentRecord]] is not called for the
+    * others), so a skipped record copies no payload bytes.
     */
-  private final class BlockMaterializer(bucket: Int, columns: Seq[String])
-      extends RecordMaterializer[PostingBlock] {
-    private var term, deltas, tfs, dls: Binary = _
-    private var runId, blockIdx, nDocs, maxTf, minDl = 0
-    private var firstDoc, lastDoc, sumTf = 0L
-    private var maxTfNorm = 0.0
+  private final class BlockMaterializer[B <: TermBlock](bucket: Int, layout: BlockLayout[B],
+      columns: Seq[String]) extends RecordMaterializer[B] {
+    private val fields = new BlockLayout.Fields(layout.columns.length)
 
-    private def ints(set: Int => Unit): Converter = new PrimitiveConverter {
-      override def addInt(v: Int): Unit = set(v)
-    }
-    private def longs(set: Long => Unit): Converter = new PrimitiveConverter {
-      override def addLong(v: Long): Unit = set(v)
-    }
-    private def binaries(set: Binary => Unit): Converter = new PrimitiveConverter {
-      override def addBinary(v: Binary): Unit = set(v)
-    }
-
-    private val fields: Array[Converter] = columns.map(Columns.zip(Seq[Converter](
-      binaries(term = _), ints(runId = _), ints(blockIdx = _), longs(firstDoc = _),
-      longs(lastDoc = _), ints(nDocs = _), ints(maxTf = _), ints(minDl = _),
-      longs(sumTf = _),
-      new PrimitiveConverter { override def addDouble(v: Double): Unit = maxTfNorm = v },
-      binaries(deltas = _), binaries(tfs = _), binaries(dls = _))).toMap).toArray
+    // column i of the read lands in its layout slot, whatever its type
+    private val converters: Array[Converter] = columns.map { c =>
+      val i = layout.columns.indexOf(c)
+      new PrimitiveConverter {
+        override def addInt(v: Int): Unit = fields.ints(i) = v
+        override def addLong(v: Long): Unit = fields.longs(i) = v
+        override def addDouble(v: Double): Unit = fields.doubles(i) = v
+        override def addBinary(v: Binary): Unit = fields.binaries(i) = v
+      }: Converter
+    }.toArray
 
     private val root = new GroupConverter {
-      override def getConverter(i: Int): Converter = fields(i)
-      override def start(): Unit = { term = null; deltas = null; tfs = null; dls = null }
+      override def getConverter(i: Int): Converter = converters(i)
+      override def start(): Unit =
+        java.util.Arrays.fill(fields.binaries.asInstanceOf[Array[AnyRef]], null)
       override def end(): Unit = ()
     }
 
     override def getRootConverter: GroupConverter = root
 
-    private def bytes(b: Binary): Array[Byte] = if (b == null) null else b.getBytes
-
-    override def getCurrentRecord: PostingBlock = PostingBlock(term.toStringUsingUTF8,
-      bucket, runId, blockIdx, firstDoc, lastDoc, nDocs, maxTf, minDl, sumTf, maxTfNorm,
-      bytes(deltas), bytes(tfs), bytes(dls))
+    override def getCurrentRecord: B = layout.record(bucket, fields)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.index.{IndexMeta, Indexer}
-import graft.io.{Catalog, PostingsScan}
+import graft.io.{BlockLayout, Catalog, PostingsScan}
 import graft.io.Catalog.IndexPaths
 import graft.model.Hit
 
@@ -60,17 +60,29 @@ object SearchEngine {
     queries.map(QueryModel.build(_, stats.n_docs, dfByTerm, stats.avgdl, k, qAnalyzer, syn))
   }
 
-  /** One docID-range shard of a [[perShard]] scan: the shard's posting
-    * blocks per source (in the scans' order) by term, each term's sorted by
-    * first_doc, and its sorted slices of the excluded docs (tombstones ∪
+  /** One docID-range shard of a [[perShard]] scan: the shard's blocks per
+    * source (in the scans' order) by term, each term's sorted by first_doc,
+    * and its sorted slices of the excluded docs (tombstones ∪
     * `excludedDocs`) and of the allowed docs — null when the slice is empty
     * or no range filter is active, as [[Wand.scoreShard]] expects.
     */
   private[graft] final case class Shard(lo: Long, hi: Long,
-      blocks: IndexedSeq[Map[String, Array[PostingBlock]]], deleted: Array[Long],
+      reads: IndexedSeq[Map[String, Array[_ <: TermBlock]]], deleted: Array[Long],
       allowed: Array[Long]) {
-    /** The first source's blocks by term. */
-    def byTerm: Map[String, Array[PostingBlock]] = blocks(0)
+    /** Source `i`'s blocks by term; `B` is the block type of its scan's layout. */
+    def source[B <: TermBlock](i: Int): Map[String, Array[B]] =
+      reads(i).asInstanceOf[Map[String, Array[B]]]
+
+    /** Every source's blocks by term, every source being a postings scan. */
+    def blocks: IndexedSeq[Map[String, Array[PostingBlock]]] =
+      reads.indices.map(source[PostingBlock])
+
+    /** The first source's blocks by term, it being a postings scan. */
+    def byTerm: Map[String, Array[PostingBlock]] = source[PostingBlock](0)
+
+    /** Whether `doc` is excluded (tombstoned or must_not). */
+    def isDeleted(doc: Long): Boolean =
+      deleted != null && java.util.Arrays.binarySearch(deleted, doc) >= 0
 
     /** Scoring cursors for the query terms with postings in this shard, in
       * the model's (sorted) term order.
@@ -82,21 +94,23 @@ object SearchEngine {
 
   /** The docID-shard executor under every postings read of a query but
     * must_not's: [[topKWand]], [[MSearch.msearch]], the [[exhaustive]]
-    * kernel and [[Booleans]]. Every term's blocks for docID-range shard s
-    * meet in one task, and `f` runs once per shard holding blocks. One
-    * Catalyst operator ([[graft.sql.PerShard]]): shard s's task reads the
-    * blocks overlapping its doc range through each of the `scans` (one per
-    * source index; cross_fields and BM25F read the text and title indexes,
-    * which share the docID space), so no postings are shuffled; the
-    * excluded docIDs (`root`'s tombstones ∪ `excludedDocs`) and the
-    * `allowedDocs` are its children, each moved into the shards by its own
-    * exchange inside the operator. A block can straddle shards: `f` keeps
-    * the docs in `[lo, hi)`. Shard count scales with parallelism
+    * kernel, [[Booleans]] and the positional kernel (phrase, span and
+    * intervals: `graft.index.PositionalIndex.perDoc`). Every term's blocks
+    * for docID-range shard s meet in one task, and `f` runs once per shard
+    * holding blocks. One Catalyst operator ([[graft.sql.PerShard]]): shard
+    * s's task reads the blocks overlapping its doc range through each of the
+    * `scans` (one per source; cross_fields and BM25F read the text and title
+    * indexes, and a scored phrase the positional and text indexes, which
+    * share the docID space), so no postings are shuffled; the excluded
+    * docIDs (`root`'s tombstones ∪ `excludedDocs`) and the `allowedDocs` are
+    * its children, each moved into the shards by its own exchange inside
+    * the operator. A block can straddle shards: `f` keeps the docs in
+    * `[lo, hi)`. Shard count scales with parallelism
     * (`shardsOpt`, default the shuffle partitions). `rows` serializes `f`'s
     * rows: pass an encoder built once, not one derived per query.
     */
-  private[search] def perShard[T](spark: SparkSession, root: String,
-      meta: IndexMeta, scans: Seq[PostingsScan], shardsOpt: Option[Int],
+  private[graft] def perShard[T](spark: SparkSession, root: String,
+      meta: IndexMeta, scans: Seq[PostingsScan[_ <: TermBlock]], shardsOpt: Option[Int],
       rows: ExpressionEncoder[T], excludedDocs: Option[DataFrame] = None,
       allowedDocs: Option[DataFrame] = None)(f: Shard => Iterator[T]): DataFrame = {
     val paths = IndexPaths(root)
@@ -114,14 +128,18 @@ object SearchEngine {
       allowedDocs.map(docIds), rows)(f)
   }
 
+  /** The postings block record, as [[PostingsScan]] reads it. */
+  private[graft] val Postings: BlockLayout[PostingBlock] = BlockLayout(
+    Seq("term", "run_id", "block_idx", "first_doc", "last_doc", "n_docs", "max_tf", "min_dl",
+      "sum_tf", "max_tf_norm", "doc_deltas_vb", "tfs_vb", "dls_vb"),
+    (bucket, r) => PostingBlock(r.string(0), bucket, r.int(1), r.int(2), r.long(3), r.long(4),
+      r.int(5), r.int(6), r.int(7), r.long(8), r.double(9), r.bytes(10), r.bytes(11),
+      r.bytes(12)))
+
   /** A shard read of the `terms`' postings (their buckets' files) and `columns`. */
   private[graft] def postingsScan(paths: IndexPaths, terms: Seq[String], buckets: Int,
-      columns: Seq[String] = PostingsScan.Columns): PostingsScan = {
-    val qBuckets = terms.map(Blocks.bucketOf(_, buckets)).distinct.sorted
-    val (location, files) = Catalog.postingsFiles(paths)
-    PostingsScan(location, files.filter(f => qBuckets.contains(f.bucket)), qBuckets, terms,
-      columns)
-  }
+      columns: Seq[String] = Postings.columns): PostingsScan[PostingBlock] =
+    PostingsScan.of(paths.postings, terms, buckets, Postings, columns)
 
   /** Exhaustive index scorer: [[scoreAllDocs]] cut to the global top-k.
     * The WAND path beats this by skipping blocks; this one is its always-on
@@ -240,8 +258,7 @@ object SearchEngine {
         }
       }
       byDoc.iterator.flatMap { case (doc, d) =>
-        if (d.matched < minMatch(doc) ||
-            (sh.deleted != null && binarySearch(sh.deleted, doc) >= 0)) Iterator.empty
+        if (d.matched < minMatch(doc) || sh.isDeleted(doc)) Iterator.empty
         else out(doc, d)
       }
     }

@@ -18,22 +18,26 @@ import org.apache.spark.sql.execution.{ExplainUtils, OrderPreservingUnaryExecNod
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.internal.SQLConf
 
+import graft.core.TermBlock
 import graft.io.{PostingsScan, SerializableHadoopConf}
 import graft.search.SearchEngine.Shard
 
 /** The docID-shard executor as one Catalyst operator
-  * ([[graft.search.SearchEngine.perShard]] builds it).
+  * ([[graft.search.SearchEngine.perShard]] builds it), under every indexed
+  * query's postings reads but must_not's: scored, boolean, phrase, span and
+  * intervals.
   *
   * Shard `s` holds docs `[s·width, (s+1)·width)`; the last shard is
-  * open-ended ([[PerShard.range]]). Each shard task reads its own posting
-  * blocks, one [[PostingsScan.read]] per source over the shard's doc range
-  * (the sources share one docID space): no postings scan runs in Spark and
-  * none are shuffled. The children are the excluded docID set (tombstones
-  * ∪ must_not) and the allowed docID set (a range filter) when present,
-  * each one long `doc_id` column; [[PerShardStrategy]] plans each under its
-  * own [[ShardExchangeExec]], which moves its rows into the shard
-  * partitions, and [[PerShardExec]] zips those partitions with the shard
-  * reads and runs `f` once per shard holding blocks. No Spark `Exchange`
+  * open-ended ([[PerShard.range]]). Each shard task reads its own blocks,
+  * one [[PostingsScan.read]] per source over the shard's doc range (the
+  * sources share one docID space; a source's layout is postings or
+  * positions): no postings scan runs in Spark and none are shuffled. The
+  * children are the excluded docID set (tombstones ∪ must_not) and the
+  * allowed docID set (a range filter) when present, each one long `doc_id`
+  * column; [[PerShardStrategy]] plans each under its own
+  * [[ShardExchangeExec]], which moves its rows into the shard partitions,
+  * and [[PerShardExec]] zips those partitions with the shard reads and runs
+  * `f` once per shard holding blocks. No Spark `Exchange`
   * sits under the final top-k, so adaptive execution does not split the
   * query into one job per shuffle; a global top-k straight over the node
   * is [[PerShardTopKExec]], whose collect cuts each shard's rows in its
@@ -44,8 +48,8 @@ import graft.search.SearchEngine.Shard
   */
 final case class PerShard(shards: Int, width: Long, f: Shard => Iterator[Any],
     encoder: ExpressionEncoder[Any], override val output: Seq[Attribute],
-    postings: Seq[PostingsScan], excluded: Option[LogicalPlan], allowed: Option[LogicalPlan])
-    extends LogicalPlan {
+    postings: Seq[PostingsScan[_ <: TermBlock]], excluded: Option[LogicalPlan],
+    allowed: Option[LogicalPlan]) extends LogicalPlan {
   override def children: Seq[LogicalPlan] = excluded.toSeq ++ allowed
   // every input column feeds the shard function: none may be pruned
   override def references: AttributeSet = AttributeSet(children.flatMap(_.output))
@@ -66,8 +70,8 @@ object PerShard {
     * more driver time than planning the query.
     */
   def frame[T](spark: SparkSession, shards: Int, width: Long,
-      postings: Seq[PostingsScan], excluded: Option[DataFrame], allowed: Option[DataFrame],
-      rows: ExpressionEncoder[T])(f: Shard => Iterator[T]): DataFrame = {
+      postings: Seq[PostingsScan[_ <: TermBlock]], excluded: Option[DataFrame],
+      allowed: Option[DataFrame], rows: ExpressionEncoder[T])(f: Shard => Iterator[T]): DataFrame = {
     inject(spark, PerShardStrategy)
     val enc = rows.asInstanceOf[ExpressionEncoder[Any]]
     def analyzed(df: DataFrame) = df.queryExecution.analyzed
@@ -78,7 +82,7 @@ object PerShard {
 
   /** [[frame]] as a typed Dataset. */
   def dataset[T: Encoder](spark: SparkSession, shards: Int, width: Long,
-      postings: Seq[PostingsScan], excluded: Option[DataFrame],
+      postings: Seq[PostingsScan[_ <: TermBlock]], excluded: Option[DataFrame],
       allowed: Option[DataFrame])(f: Shard => Iterator[T]): Dataset[T] =
     frame(spark, shards, width, postings, excluded, allowed, encoderFor[T])(f).as[T]
 
@@ -155,8 +159,9 @@ object ShardExchangeExec {
   * the shard holds blocks. Its explain prints each read like a file scan's.
   */
 final case class PerShardExec(shards: Int, width: Long, f: Shard => Iterator[Any],
-    encoder: ExpressionEncoder[Any], output: Seq[Attribute], postings: Seq[PostingsScan],
-    excluded: Option[SparkPlan], allowed: Option[SparkPlan]) extends SparkPlan {
+    encoder: ExpressionEncoder[Any], output: Seq[Attribute],
+    postings: Seq[PostingsScan[_ <: TermBlock]], excluded: Option[SparkPlan],
+    allowed: Option[SparkPlan]) extends SparkPlan {
   override def children: Seq[SparkPlan] = excluded.toSeq ++ allowed
   override def outputPartitioning: Partitioning = UnknownPartitioning(shards)
   override protected def stringArgs: Iterator[Any] = Iterator(shards, width)
@@ -194,8 +199,8 @@ final case class PerShardExec(shards: Int, width: Long, f: Shard => Iterator[Any
         blocksRead.add(reads.map(_.length.toLong).sum)
         if (reads.forall(_.isEmpty)) Iterator.empty
         else {
-          val blocks = reads.map(_.groupBy(_.term).view.mapValues(_.sortBy(_.first_doc)).toMap)
-          fn(Shard(lo, hi, blocks.toIndexedSeq, excluded, allowed)).map(toRow)
+          fn(Shard(lo, hi, reads.map(PerShardExec.byTerm(_)).toIndexedSeq, excluded,
+            allowed)).map(toRow)
         }
       }
     })
@@ -209,6 +214,10 @@ final case class PerShardExec(shards: Int, width: Long, f: Shard => Iterator[Any
 }
 
 object PerShardExec {
+  /** A shard read's blocks by term, each term's ordered by first_doc. */
+  private def byTerm[B <: TermBlock](blocks: Array[B]): Map[String, Array[B]] =
+    blocks.groupBy(_.term).view.mapValues(_.sortBy(_.first_doc)).toMap
+
   // one Hadoop conf broadcast per session, shared by every query's tasks
   private val confs =
     new java.util.WeakHashMap[SparkSession, Broadcast[SerializableHadoopConf]]()

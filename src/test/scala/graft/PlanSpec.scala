@@ -1,20 +1,22 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SortExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
 import graft.search.SearchEngine
 import graft.search.SearchEngine.rounded
-import graft.sql.PerShardTopKExec
+import graft.sql.{PerShardExec, PerShardTopKExec}
 
 /** Physical-plan audit: the plans we designed for are the plans Catalyst
   * actually produces (pushdown, pruning, broadcast, top-k operator).
   * Guards against silent plan regressions that would only show up at scale.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = TestSpark.session
   lazy val sfDir = "/root/testdata/sf0.001"
@@ -90,6 +92,36 @@ class PlanSpec extends AnyFunSuite {
       val p = plan(df)
       assert(p.contains("PerShard"), s"$name must run in the shard operator:\n$p")
       assert(!p.contains("Join"), s"$name must not join docID sets:\n$p")
+    }
+  }
+
+  test("positional operators run in the shard tasks") {
+    // the positional kernel was a postings scan, a groupByKey(doc) shuffle
+    // (AppendColumns + MapGroups), a tombstone anti-join and, for a scored
+    // phrase, a second scan joined on doc_id for dl. Now each shard task
+    // reads its positional (and dl) blocks; a scored phrase's one global
+    // step is its df count, over a single-partition exchange.
+    import graft.index.{Intervals, PositionalIndex}
+    val pos = IndexCache.positionalIndex(spark, sfDir)
+    val (root, buckets) = (pos.paths.root, pos.meta.buckets)
+    for ((name, df) <- Seq(
+        "phraseMatch" -> PositionalIndex.phraseMatch(spark, root, Seq("join", "hash"), buckets),
+        "spanNot" -> PositionalIndex.spanNot(spark, root, Seq("join"), Seq("hash"), 1, 1,
+          buckets),
+        "intervals" -> Intervals.filterDocs(spark, root,
+          Intervals.IMatch("join hash", maxGaps = 2, ordered = true), buckets),
+        "phraseTopK" -> PositionalIndex.phraseTopK(spark, root, Seq("join", "hash"), 10,
+          buckets))) {
+      val top = df.queryExecution.executedPlan
+      assert(collect(top) { case p: PerShardExec => p }.length == 1,
+        s"$name must read in one shard operator:\n${plan(df)}")
+      for (bad <- Seq("MapGroups", "AppendColumns", "Join"))
+        assert(collect(top) { case n if n.nodeName.contains(bad) => n }.isEmpty,
+          s"$name must not plan a $bad:\n${plan(df)}")
+      val byDoc = collect(top) { case e: ShuffleExchangeExec => e.outputPartitioning }.collect {
+        case h: HashPartitioning if h.expressions.exists(_.references.exists(_.name == "doc_id")) => h
+      }
+      assert(byDoc.isEmpty, s"$name must not hash-shuffle by doc_id:\n${plan(df)}")
     }
   }
 

@@ -96,7 +96,7 @@ class FsSpec extends AnyFunSuite {
       write(s"$p/bucket=1/.hidden/part-00011.parquet", 50)
       write(s"$p/.hidden/bucket=3/part-00012.parquet", 60)
       val paths = Catalog.IndexPaths(base)
-      val (location, files) = Catalog.postingsFiles(paths)
+      val (location, files) = Catalog.postingsFiles(paths.postings)
       val input = Catalog.readPostings(spark, paths).inputFiles
         .map(new Path(_).toUri.getPath).toSeq.sorted
       assert(location == p)

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Fixtures, IndexCache, TestSpark}
 import graft.core.PostingBlock
-import graft.index.{Compaction, Deletes, Indexer, KeywordIndex}
+import graft.index.{Compaction, Deletes, Indexer, Intervals, KeywordIndex, PosBlock,
+  PositionalIndex}
 import graft.io.{Catalog, Fs}
 import graft.io.Catalog.IndexPaths
 import graft.model.Hit
@@ -14,14 +15,15 @@ import graft.search.SearchEngine
 import graft.streaming.StreamingIngest
 
 /** The shard tasks' own postings reads: shard s reads exactly the blocks
-  * the docID-shard exchange used to route to it, from each source, and the
-  * reads show in the task input metrics and the operator's SQL metrics.
-  * It is the check on routing in the shard reader that WAND and its
-  * exhaustive shadow share: their bit-identity (WandSpec) cannot see a
-  * fault common to both.
+  * the docID-shard exchange used to route to it, from each source — the
+  * positional index's too — and the reads show in the task input metrics
+  * and the operator's SQL metrics. It is the check on routing in the shard
+  * reader that WAND and its exhaustive shadow share, and that the positional
+  * operators share: their bit-identity (WandSpec) and their twins
+  * (PositionalIndexSpec, IntervalsSpec) cannot see a fault common to both.
   */
 class PerShardSpec extends AnyFunSuite {
-  import PerShardSpec.key
+  import PerShardSpec.{key, posKey}
 
   lazy val spark: SparkSession = TestSpark.session
 
@@ -210,6 +212,79 @@ class PerShardSpec extends AnyFunSuite {
       assert(scores(shards, w) == one, s"scores differ at $shards shards (width $w)")
     }
   }
+
+  // the phrase, span and intervals shapes of the positional checks
+  private val posPhrase = Seq("join", "hash")
+  private val posTerms = Seq("join", "hash", "merge", "sort")
+  private val posSource = Intervals.IAnyOf(Seq(Intervals.IMatch("join hash", 0, ordered = true),
+    Intervals.IMatch("merge sort", 0, ordered = true)))
+
+  /** The positional blocks of `terms` per shard by the exchange rule, from
+    * Spark's own read of the positional index.
+    */
+  private def routedPositions(root: String, terms: Seq[String], shards: Int,
+      width: Long): IndexedSeq[Seq[PosBlock]] = {
+    import spark.implicits._
+    val blocks = spark.read.parquet(PositionalIndex.pathOf(root))
+      .filter(col("term").isin(terms: _*)).as[PosBlock].collect().toSeq
+    val last = shards - 1L
+    (0 until shards).map(s => blocks.filter(b =>
+      math.min(b.first_doc / width, last) <= s && s <= math.min(b.last_doc / width, last)))
+  }
+
+  test("each shard reads exactly the positional blocks the exchange routed to it") {
+    val idx = IndexCache.positionalIndex(spark, sfDir)
+    val root = idx.paths.root
+    val scan = PositionalIndex.positionsScan(root, posTerms, idx.meta.buckets)
+    val conf = spark.sparkContext.hadoopConfiguration
+    for ((shards, w) <- layouts(idx.meta.doc_id_space)) {
+      val expected = routedPositions(root, posTerms, shards, w)
+      assert(expected.map(_.length).sum > 0, s"no positional blocks for $posTerms")
+      if (shards > 1 && w * shards < idx.meta.doc_id_space)
+        assert(expected.last.exists(_.first_doc >= shards * w),
+          "the fold into the last shard is not exercised")
+      expected.zipWithIndex.foreach { case (exp, s) =>
+        val (lo, hi) = PerShard.range(s, shards, w)
+        assert(scan.read(lo, hi, conf).map(posKey).sorted.toSeq == exp.map(posKey).sorted,
+          s"shard $s of $shards (width $w)")
+      }
+    }
+  }
+
+  test("positional operators are identical at shard counts whose blocks straddle shards") {
+    import spark.implicits._
+    val idx = IndexCache.positionalIndex(spark, sfDir)
+    val (root, buckets) = (idx.paths.root, idx.meta.buckets)
+    def results() = Seq(
+      "phraseScores" -> PositionalIndex.phraseScores(spark, root, posPhrase, buckets)
+        .as[(Long, Double)].collect()
+        .map { case (d, score) => (d, java.lang.Double.doubleToLongBits(score)) }.sorted.toSeq,
+      "phraseMatch" -> PositionalIndex.phraseMatch(spark, root, posPhrase, buckets)
+        .as[Long].collect().toSeq,
+      "spanNot" -> PositionalIndex.spanNot(spark, root, Seq("join"), Seq("hash"), 1, 1, buckets)
+        .as[Long].collect().toSeq,
+      "intervals any_of" -> Intervals.filterDocs(spark, root, posSource, buckets)
+        .as[Long].collect().toSeq)
+    // the operators shard by the session's shuffle partitions
+    def at[A](shards: Int)(body: => A): A = {
+      val key = "spark.sql.shuffle.partitions"
+      val before = spark.conf.get(key)
+      spark.conf.set(key, shards.toString)
+      try body finally spark.conf.set(key, before)
+    }
+    val one = at(1)(results())
+    one.foreach { case (name, rows) => assert(rows.nonEmpty, s"$name matches nothing") }
+    for (shards <- Seq(3, 7)) {
+      val w = (idx.meta.doc_id_space + shards - 1) / shards
+      val last = shards - 1L
+      assert(routedPositions(root, posTerms, shards, w).flatten.exists(b =>
+        math.min(b.first_doc / w, last) != math.min(b.last_doc / w, last)),
+        s"no positional block straddles a shard at $shards shards (width $w)")
+      at(shards)(results()).zip(one).foreach { case ((name, got), (_, want)) =>
+        assert(got == want, s"$name differs at $shards shards from its 1-shard run")
+      }
+    }
+  }
 }
 
 object PerShardSpec {
@@ -218,5 +293,11 @@ object PerShardSpec {
     import java.util.Arrays.{hashCode => h}
     (b.term, b.bucket, b.run_id, b.block_idx, b.first_doc, b.last_doc, b.n_docs, b.max_tf,
       b.min_dl, b.sum_tf, b.max_tf_norm, h(b.doc_deltas_vb), h(b.tfs_vb), h(b.dls_vb)).toString
+  }
+
+  def posKey(b: PosBlock): String = {
+    import java.util.Arrays.{hashCode => h}
+    (b.term, b.bucket, b.run_id, b.block_idx, b.first_doc, b.last_doc, b.n_docs,
+      h(b.doc_deltas_vb), h(b.pos_lens_vb), h(b.pos_deltas_vb)).toString
   }
 }
