@@ -7,7 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetReader}
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
@@ -56,13 +56,18 @@ final case class PostingsScan[B <: TermBlock](location: String, files: Seq[Posti
 
   /** The blocks of `terms` overlapping docs `[lo, hi)`: `last_doc >= lo`
     * and, unless `hi` is `Long.MaxValue` (an open-ended range), `first_doc < hi`.
+    * Column chunks are read without Hadoop's vectored IO, whose reads the
+    * file system statistics miss: the task's input bytes then count the
+    * pages read, not only the footers and page indexes.
     */
   def read(lo: Long, hi: Long, conf: Configuration): Array[B] = {
     val filter = FilterCompat.get(PostingsScan.predicate(terms, lo, hi))
+    val readConf = new Configuration(conf)
+    readConf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
     val out = Array.newBuilder[B](layout.tag)
     files.foreach { f =>
       val status = new FileStatus(f.length, false, 0, 0L, 0L, new Path(f.path))
-      val reader = new ParquetReader.Builder[B](HadoopInputFile.fromStatus(status, conf)) {
+      val reader = new ParquetReader.Builder[B](HadoopInputFile.fromStatus(status, readConf)) {
         override protected def getReadSupport: ReadSupport[B] =
           new PostingsScan.BlockReadSupport(f.bucket, layout, columns)
       }.withFilter(filter).useStatsFilter().useDictionaryFilter()
@@ -97,7 +102,8 @@ object PostingsScan {
       layout, columns)
   }
 
-  private def predicate(terms: Seq[String], lo: Long, hi: Long): FilterPredicate = {
+  /** The pushed filter of a read of `terms` over docs `[lo, hi)`. */
+  private[io] def predicate(terms: Seq[String], lo: Long, hi: Long): FilterPredicate = {
     val inTerms = FilterApi.in[Binary, Operators.BinaryColumn](
       FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava)
     val fromLo = FilterApi.and(inTerms, FilterApi.gtEq[java.lang.Long, Operators.LongColumn](

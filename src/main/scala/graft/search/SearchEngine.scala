@@ -19,7 +19,10 @@ import graft.model.Hit
   *   2. executors: one task per docID-range shard ([[perShard]]) reads the
   *      query terms' posting blocks overlapping its docs straight from
   *      their bucket files (term and doc-range pushdown) — no postings scan
-  *      in Spark, no shuffle;
+  *      in Spark, no shuffle; each shard covers at least AQE's minimum
+  *      partition size of the bytes the query opens, up to the shuffle
+  *      partitions ([[graft.sql.PerShard.count]]), so a small query is one
+  *      task;
   *   3. the task scores its shard: Block-Max WAND ([[topKWand]]) or the
   *      exhaustive kernel ([[exhaustive]]);
   *   4. global `orderBy(score DESC, doc_id ASC).limit(k)` ([[cut]]) —
@@ -105,16 +108,20 @@ object SearchEngine {
     * docIDs (`root`'s tombstones ∪ `excludedDocs`) and the `allowedDocs` are
     * its children, each moved into the shards by its own exchange inside
     * the operator. A block can straddle shards: `f` keeps the docs in
-    * `[lo, hi)`. Shard count scales with parallelism
-    * (`shardsOpt`, default the shuffle partitions). `rows` serializes `f`'s
-    * rows: pass an encoder built once, not one derived per query.
+    * `[lo, hi)`. The shard count is `shardsOpt` when given, else sized by
+    * the postings bytes the scans open ([[graft.sql.PerShard.count]]): at
+    * Spark's defaults a query opening under 1 MB runs as one shard task,
+    * and one opening at least P MB as P, the shuffle partitions. `rows`
+    * serializes `f`'s rows: pass an encoder built once, not one derived
+    * per query.
     */
   private[graft] def perShard[T](spark: SparkSession, root: String,
       meta: IndexMeta, scans: Seq[PostingsScan[_ <: TermBlock]], shardsOpt: Option[Int],
       rows: ExpressionEncoder[T], excludedDocs: Option[DataFrame] = None,
       allowedDocs: Option[DataFrame] = None)(f: Shard => Iterator[T]): DataFrame = {
     val paths = IndexPaths(root)
-    val shards = shardsOpt.getOrElse(spark.sessionState.conf.numShufflePartitions)
+    val shards = graft.sql.PerShard.count(shardsOpt,
+      scans.map(_.files.map(_.length).sum).sum, spark.sessionState.conf)
     val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
     def docIds(df: DataFrame) = df.select(col("doc_id").cast("long"))
     // exclusions: live tombstones ∪ ES bool.must_not doc sets — the scorer

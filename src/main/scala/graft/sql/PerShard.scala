@@ -28,8 +28,12 @@ import graft.search.SearchEngine.Shard
   * intervals.
   *
   * Shard `s` holds docs `[s·width, (s+1)·width)`; the last shard is
-  * open-ended ([[PerShard.range]]). Each shard task reads its own blocks,
-  * one [[PostingsScan.read]] per source over the shard's doc range (the
+  * open-ended ([[PerShard.range]]). The shard count is sized by the
+  * postings bytes the query opens ([[PerShard.count]]): at least AQE's
+  * minimum partition size per shard, at most the shuffle partitions, so a
+  * query over small postings runs as one task (and its aux exchanges have
+  * one reduce partition). Each shard task reads its own blocks, one
+  * [[PostingsScan.read]] per source over the shard's doc range (the
   * sources share one docID space; a source's layout is postings or
   * positions): no postings scan runs in Spark and none are shuffled. The
   * children are the excluded docID set (tombstones ∪ must_not) and the
@@ -85,6 +89,23 @@ object PerShard {
       postings: Seq[PostingsScan[_ <: TermBlock]], excluded: Option[DataFrame],
       allowed: Option[DataFrame])(f: Shard => Iterator[T]): Dataset[T] =
     frame(spark, shards, width, postings, excluded, allowed, encoderFor[T])(f).as[T]
+
+  /** The shard count of a query whose scans open `bytes` of postings files:
+    * `shardsOpt` when given; else `⌊bytes / min⌋` clamped to
+    * `[1, spark.sql.shuffle.partitions]`, where `min` is
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
+    * default) — the partition count adaptive execution's
+    * `CoalesceShufflePartitions` gives a shuffle of that size under Spark's
+    * defaults, which this operator's own exchanges never reach. With
+    * adaptive execution or its partition coalescing off, the shuffle
+    * partitions, as Spark's shuffles keep then.
+    */
+  def count(shardsOpt: Option[Int], bytes: Long, conf: SQLConf): Int = shardsOpt.getOrElse {
+    val p = conf.numShufflePartitions
+    if (!conf.adaptiveExecutionEnabled || !conf.coalesceShufflePartitionsEnabled) p
+    else (bytes / conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+      .max(1L).min(p.toLong).toInt
+  }
 
   /** Shard `s`'s docs `[lo, hi)`: `[s·width, (s+1)·width)`, except that the
     * last shard is open-ended (`hi` = `Long.MaxValue`) — docs past it, as a

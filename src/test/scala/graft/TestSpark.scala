@@ -15,4 +15,29 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Adaptive partition coalescing off: the docID-shard operator then plans
+    * the session's shuffle partitions as shards, whatever the query's
+    * postings bytes (`graft.sql.PerShard.count`).
+    */
+  val NoCoalescing: (String, String) = "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+
+  /** `body` with the session conf `settings` set, each restored after. */
+  def withConf[A](settings: (String, String)*)(body: => A): A = {
+    val before = settings.map { case (k, _) => k -> session.conf.getOption(k) }
+    settings.foreach { case (k, v) => session.conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
+    }
+  }
+
+  /** `body` at the shard count the query's size gives (one shard at test
+    * sizes), then again at the session's shuffle partitions, so a check
+    * covers the shard exchanges with several reduce partitions too.
+    */
+  def atEachShardCount(body: => Unit): Unit = {
+    body
+    withConf(NoCoalescing)(body)
+  }
 }

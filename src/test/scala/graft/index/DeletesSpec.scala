@@ -79,16 +79,18 @@ class DeletesSpec extends AnyFunSuite {
   }
 
   test("msearch excludes tombstones, query by query as topKWand") {
-    val root = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm)).paths.root
-    val queries = Seq("a" -> q, "b" -> Seq("hash", "stream"), "c" -> Seq(delTerm))
-    val batch = graft.search.MSearch.msearch(spark, root, queries, 10).collect()
-    for ((qid, raw) <- queries) {
-      val got = batch.filter(_.getString(0) == qid)
-        .map(r => (r.getLong(1), r.getDouble(2))).toSeq
-      // msearch presents ties in rounded-score order; re-sort the same way
-      val want = hits(rounded(SearchEngine.topKWand(spark, root, raw, 10)))
-        .sortBy { case (doc, s) => (-s, doc) }
-      assert(got == want, s"msearch != topKWand on the deleted index for $qid")
+    TestSpark.atEachShardCount {
+      val root = IndexCache.deletedIndex(spark, sfDir, Seq(delTerm)).paths.root
+      val queries = Seq("a" -> q, "b" -> Seq("hash", "stream"), "c" -> Seq(delTerm))
+      val batch = graft.search.MSearch.msearch(spark, root, queries, 10).collect()
+      for ((qid, raw) <- queries) {
+        val got = batch.filter(_.getString(0) == qid)
+          .map(r => (r.getLong(1), r.getDouble(2))).toSeq
+        // msearch presents ties in rounded-score order; re-sort the same way
+        val want = hits(rounded(SearchEngine.topKWand(spark, root, raw, 10)))
+          .sortBy { case (doc, s) => (-s, doc) }
+        assert(got == want, s"msearch != topKWand on the deleted index for $qid")
+      }
     }
   }
 
@@ -100,58 +102,60 @@ class DeletesSpec extends AnyFunSuite {
   }
 
   test("unscored paths exclude tombstones: boolean, wildcard, phrase") {
-    val clean = IndexCache.documentsIndex(spark, sfDir)
-    val del = delWithPositions
-    val dead = Deletes.read(spark, IndexPaths(del.paths.root)).toSet
+    TestSpark.atEachShardCount {
+      val clean = IndexCache.documentsIndex(spark, sfDir)
+      val del = delWithPositions
+      val dead = Deletes.read(spark, IndexPaths(del.paths.root)).toSet
 
-    val orClean = ids(graft.search.Booleans.or(spark, clean.paths.root, Seq("join", "hash")))
-    val orDel = ids(graft.search.Booleans.or(spark, del.paths.root, Seq("join", "hash")))
-    assert(orDel == orClean -- dead, "boolean OR must exclude tombstones")
-    for (terms <- Seq(Seq("join", "hash"), Seq("window", "vector"))) {
-      val andDel = ids(graft.search.Booleans.and(spark, del.paths.root, terms))
-      assert(andDel == ids(graft.search.Booleans.and(spark, clean.paths.root, terms)) -- dead &&
-        andDel.nonEmpty, s"boolean AND must exclude tombstones for $terms")
+      val orClean = ids(graft.search.Booleans.or(spark, clean.paths.root, Seq("join", "hash")))
+      val orDel = ids(graft.search.Booleans.or(spark, del.paths.root, Seq("join", "hash")))
+      assert(orDel == orClean -- dead, "boolean OR must exclude tombstones")
+      for (terms <- Seq(Seq("join", "hash"), Seq("window", "vector"))) {
+        val andDel = ids(graft.search.Booleans.and(spark, del.paths.root, terms))
+        assert(andDel == ids(graft.search.Booleans.and(spark, clean.paths.root, terms)) -- dead &&
+          andDel.nonEmpty, s"boolean AND must exclude tombstones for $terms")
+      }
+      val notDel = ids(graft.search.Booleans.andNot(spark, del.paths.root, "join", "window"))
+      assert(notDel == ids(graft.search.Booleans.andNot(spark, clean.paths.root,
+        "join", "window")) -- dead && notDel.nonEmpty, "boolean AND NOT must exclude tombstones")
+
+      val wcClean = ids(graft.search.TermQueries.wildcard(spark, clean.paths.root, "*or*"))
+      val wcDel = ids(graft.search.TermQueries.wildcard(spark, del.paths.root, "*or*"))
+      assert(wcDel == wcClean -- dead, "wildcard must exclude tombstones")
+
+      val phClean = ids(graft.operators.Phrase.phraseMatch(spark, sfDir, Seq("join", "hash")))
+      val phDel = ids(PositionalIndex.phraseMatch(spark, del.paths.root,
+        Seq("join", "hash"), del.meta.buckets))
+      assert(phDel == phClean -- dead, "phrase match must exclude tombstones")
+
+      // every other positional filter, against the clean positional index
+      import Intervals.{IAnyOf, IMatch}
+      val pos = IndexCache.positionalIndex(spark, sfDir)
+      val ops: Seq[(String, (String, Int) => org.apache.spark.sql.DataFrame)] = Seq(
+        "span_first" -> ((r, b) =>
+          PositionalIndex.spanFirst(spark, r, Seq("join", "hash"), 40, b)),
+        "span_not" -> ((r, b) =>
+          PositionalIndex.spanNot(spark, r, Seq("join"), Seq("hash"), 1, 1, b)),
+        "span_within" -> ((r, b) =>
+          PositionalIndex.spanWithin(spark, r, Seq("hash"), "join", "scan", 6, b)),
+        "phrase_prefix" -> ((r, b) =>
+          PositionalIndex.phrasePrefixMatch(spark, r, Seq("join"), "h", b)),
+        "slop" -> ((r, b) => Intervals.filterDocs(spark, r,
+          IMatch("join hash", maxGaps = 2, ordered = true), b)),
+        "span_near" -> ((r, b) => Intervals.filterDocs(spark, r,
+          IMatch("join hash", maxGaps = 2, ordered = false), b)),
+        "span_or" -> ((r, b) => Intervals.filterDocs(spark, r,
+          IAnyOf(Seq(IMatch("join hash", maxGaps = 0, ordered = true),
+            IMatch("merge sort", maxGaps = 0, ordered = true))), b)))
+      var tombstonedMatches = 0
+      for ((name, op) <- ops) {
+        val c = ids(op(pos.paths.root, pos.meta.buckets))
+        val d = ids(op(del.paths.root, del.meta.buckets))
+        assert(d == c -- dead, s"$name must exclude tombstones")
+        tombstonedMatches += c.count(dead)
+      }
+      assert(tombstonedMatches > 0, "some clean match must be tombstoned")
     }
-    val notDel = ids(graft.search.Booleans.andNot(spark, del.paths.root, "join", "window"))
-    assert(notDel == ids(graft.search.Booleans.andNot(spark, clean.paths.root,
-      "join", "window")) -- dead && notDel.nonEmpty, "boolean AND NOT must exclude tombstones")
-
-    val wcClean = ids(graft.search.TermQueries.wildcard(spark, clean.paths.root, "*or*"))
-    val wcDel = ids(graft.search.TermQueries.wildcard(spark, del.paths.root, "*or*"))
-    assert(wcDel == wcClean -- dead, "wildcard must exclude tombstones")
-
-    val phClean = ids(graft.operators.Phrase.phraseMatch(spark, sfDir, Seq("join", "hash")))
-    val phDel = ids(PositionalIndex.phraseMatch(spark, del.paths.root,
-      Seq("join", "hash"), del.meta.buckets))
-    assert(phDel == phClean -- dead, "phrase match must exclude tombstones")
-
-    // every other positional filter, against the clean positional index
-    import Intervals.{IAnyOf, IMatch}
-    val pos = IndexCache.positionalIndex(spark, sfDir)
-    val ops: Seq[(String, (String, Int) => org.apache.spark.sql.DataFrame)] = Seq(
-      "span_first" -> ((r, b) =>
-        PositionalIndex.spanFirst(spark, r, Seq("join", "hash"), 40, b)),
-      "span_not" -> ((r, b) =>
-        PositionalIndex.spanNot(spark, r, Seq("join"), Seq("hash"), 1, 1, b)),
-      "span_within" -> ((r, b) =>
-        PositionalIndex.spanWithin(spark, r, Seq("hash"), "join", "scan", 6, b)),
-      "phrase_prefix" -> ((r, b) =>
-        PositionalIndex.phrasePrefixMatch(spark, r, Seq("join"), "h", b)),
-      "slop" -> ((r, b) => Intervals.filterDocs(spark, r,
-        IMatch("join hash", maxGaps = 2, ordered = true), b)),
-      "span_near" -> ((r, b) => Intervals.filterDocs(spark, r,
-        IMatch("join hash", maxGaps = 2, ordered = false), b)),
-      "span_or" -> ((r, b) => Intervals.filterDocs(spark, r,
-        IAnyOf(Seq(IMatch("join hash", maxGaps = 0, ordered = true),
-          IMatch("merge sort", maxGaps = 0, ordered = true))), b)))
-    var tombstonedMatches = 0
-    for ((name, op) <- ops) {
-      val c = ids(op(pos.paths.root, pos.meta.buckets))
-      val d = ids(op(del.paths.root, del.meta.buckets))
-      assert(d == c -- dead, s"$name must exclude tombstones")
-      tombstonedMatches += c.count(dead)
-    }
-    assert(tombstonedMatches > 0, "some clean match must be tombstoned")
   }
 
   test("phrase scores: df counts tombstones, so surviving scores do not move") {

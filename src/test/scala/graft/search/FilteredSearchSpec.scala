@@ -76,57 +76,59 @@ class FilteredSearchSpec extends AnyFunSuite {
   }
 
   test("range filter equals exhaustive shadow; composes with keyword filters and deletes") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val q = Seq("join", "window", "vector")
-    val docs = Catalog.readTable(spark, sfDir, "documents")
+    TestSpark.atEachShardCount {
+      import org.apache.spark.sql.functions._
+      import spark.implicits._
+      val q = Seq("join", "window", "vector")
+      val docs = Catalog.readTable(spark, sfDir, "documents")
 
-    def rangeShadow(lo: Long, hi: Long, k: Int): Seq[(Long, Double)] = {
-      val allowed = docs.filter($"n_chars".between(lo, hi)).select($"doc_id")
-      hits(SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue)
-        .join(allowed, "doc_id")
-        .orderBy($"score".desc, $"doc_id".asc).limit(k)
+      def rangeShadow(lo: Long, hi: Long, k: Int): Seq[(Long, Double)] = {
+        val allowed = docs.filter($"n_chars".between(lo, hi)).select($"doc_id")
+        hits(SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue)
+          .join(allowed, "doc_id")
+          .orderBy($"score".desc, $"doc_id".asc).limit(k)
+          .select($"doc_id", round($"score", 4).as("score_r4")))
+      }
+
+      for ((lo, hi, k) <- Seq((250L, 330L, 10), (0L, 10000L, 10), (200L, 260L, 3))) {
+        val allowed = docs.filter($"n_chars".between(lo, hi)).select($"doc_id")
+        val w = hits(rounded(SearchEngine.topKWand(spark, root, q, k, allowedDocs = Some(allowed))))
+        assert(w == rangeShadow(lo, hi, k), s"range WAND != shadow for [$lo,$hi] k=$k")
+        assert(w.nonEmpty)
+      }
+      // empty range → empty result (rangeActive with empty allowed slices)
+      assert(hits(rounded(SearchEngine.topKWand(spark, root, q, 10,
+        allowedDocs = Some(docs.filter($"n_chars" < 0).select($"doc_id"))))).isEmpty)
+
+      // range ∧ keyword filter: both contexts applied
+      val allowed = docs.filter($"n_chars".between(250L, 330L)).select($"doc_id")
+      val both = hits(SearchEngine.topKWand(spark, root, q, 10,
+        filters = Seq("source:src3"), allowedDocs = Some(allowed))
         .select($"doc_id", round($"score", 4).as("score_r4")))
-    }
+      val shadowBoth = {
+        val ids = docs.filter($"n_chars".between(250L, 330L) && $"source" === "src3")
+          .select($"doc_id")
+        hits(SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue)
+          .join(ids, "doc_id")
+          .orderBy($"score".desc, $"doc_id".asc).limit(10)
+          .select($"doc_id", round($"score", 4).as("score_r4")))
+      }
+      assert(both == shadowBoth, "range ∧ keyword filter != shadow")
 
-    for ((lo, hi, k) <- Seq((250L, 330L, 10), (0L, 10000L, 10), (200L, 260L, 3))) {
-      val allowed = docs.filter($"n_chars".between(lo, hi)).select($"doc_id")
-      val w = hits(rounded(SearchEngine.topKWand(spark, root, q, k, allowedDocs = Some(allowed))))
-      assert(w == rangeShadow(lo, hi, k), s"range WAND != shadow for [$lo,$hi] k=$k")
-      assert(w.nonEmpty)
-    }
-    // empty range → empty result (rangeActive with empty allowed slices)
-    assert(hits(rounded(SearchEngine.topKWand(spark, root, q, 10,
-      allowedDocs = Some(docs.filter($"n_chars" < 0).select($"doc_id"))))).isEmpty)
-
-    // range ∧ keyword filter: both contexts applied
-    val allowed = docs.filter($"n_chars".between(250L, 330L)).select($"doc_id")
-    val both = hits(SearchEngine.topKWand(spark, root, q, 10,
-      filters = Seq("source:src3"), allowedDocs = Some(allowed))
-      .select($"doc_id", round($"score", 4).as("score_r4")))
-    val shadowBoth = {
-      val ids = docs.filter($"n_chars".between(250L, 330L) && $"source" === "src3")
-        .select($"doc_id")
-      hits(SearchEngine.topKExhaustive(spark, root, q, Int.MaxValue)
-        .join(ids, "doc_id")
+      // range filter composes with live tombstones (aux cogroup carries both)
+      val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
+      val dead = graft.index.Deletes.read(spark,
+        graft.io.Catalog.IndexPaths(del.paths.root)).toSet
+      val rangeDel = hits(rounded(SearchEngine.topKWand(spark, del.paths.root,
+        q, 10, allowedDocs = Some(allowed))))
+      val shadowDel = hits(SearchEngine.topKExhaustive(spark, del.paths.root, q, Int.MaxValue)
+        .join(allowed, "doc_id")
+        .filter(!$"doc_id".isin(dead.toSeq: _*))
         .orderBy($"score".desc, $"doc_id".asc).limit(10)
         .select($"doc_id", round($"score", 4).as("score_r4")))
+      assert(rangeDel == shadowDel, "range filter over tombstoned index != shadow")
+      assert(rangeDel.map(_._1).toSet.intersect(dead).isEmpty)
     }
-    assert(both == shadowBoth, "range ∧ keyword filter != shadow")
-
-    // range filter composes with live tombstones (aux cogroup carries both)
-    val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
-    val dead = graft.index.Deletes.read(spark,
-      graft.io.Catalog.IndexPaths(del.paths.root)).toSet
-    val rangeDel = hits(rounded(SearchEngine.topKWand(spark, del.paths.root,
-      q, 10, allowedDocs = Some(allowed))))
-    val shadowDel = hits(SearchEngine.topKExhaustive(spark, del.paths.root, q, Int.MaxValue)
-      .join(allowed, "doc_id")
-      .filter(!$"doc_id".isin(dead.toSeq: _*))
-      .orderBy($"score".desc, $"doc_id".asc).limit(10)
-      .select($"doc_id", round($"score", 4).as("score_r4")))
-    assert(rangeDel == shadowDel, "range filter over tombstoned index != shadow")
-    assert(rangeDel.map(_._1).toSet.intersect(dead).isEmpty)
   }
 
   test("must_not and terms-OR filter equal their exhaustive shadows") {
@@ -164,23 +166,25 @@ class FilteredSearchSpec extends AnyFunSuite {
   }
 
   test("must_not composes with tombstones: both exclusions apply") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val q = Seq("join", "window", "vector")
-    val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
-    val dead = graft.index.Deletes.read(spark, Catalog.IndexPaths(del.paths.root)).toSet
-    val got = hits(rounded(SearchEngine.topKWand(spark, del.paths.root, q, 10,
-      excludedDocs = SearchEngine.mustNotDocs(spark, del.paths.root, Seq("window")))))
-    val excluded = Catalog.readDocuments(spark, sfDir)
-      .filter(d => graft.core.Analyzer.tokenize(d.text).contains("window"))
-      .select($"doc_id")
-    val want = hits(SearchEngine.topKExhaustive(spark, del.paths.root, q, Int.MaxValue)
-      .join(excluded, Seq("doc_id"), "left_anti")
-      .filter(!$"doc_id".isin(dead.toSeq: _*))
-      .orderBy($"score".desc, $"doc_id".asc).limit(10)
-      .select($"doc_id", round($"score", 4).as("score_r4")))
-    assert(got == want, "must_not over a tombstoned index != shadow")
-    assert(got.nonEmpty && got.map(_._1).toSet.intersect(dead).isEmpty)
+    TestSpark.atEachShardCount {
+      import org.apache.spark.sql.functions._
+      import spark.implicits._
+      val q = Seq("join", "window", "vector")
+      val del = IndexCache.deletedIndex(spark, sfDir, Seq("stream"))
+      val dead = graft.index.Deletes.read(spark, Catalog.IndexPaths(del.paths.root)).toSet
+      val got = hits(rounded(SearchEngine.topKWand(spark, del.paths.root, q, 10,
+        excludedDocs = SearchEngine.mustNotDocs(spark, del.paths.root, Seq("window")))))
+      val excluded = Catalog.readDocuments(spark, sfDir)
+        .filter(d => graft.core.Analyzer.tokenize(d.text).contains("window"))
+        .select($"doc_id")
+      val want = hits(SearchEngine.topKExhaustive(spark, del.paths.root, q, Int.MaxValue)
+        .join(excluded, Seq("doc_id"), "left_anti")
+        .filter(!$"doc_id".isin(dead.toSeq: _*))
+        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+        .select($"doc_id", round($"score", 4).as("score_r4")))
+      assert(got == want, "must_not over a tombstoned index != shadow")
+      assert(got.nonEmpty && got.map(_._1).toSet.intersect(dead).isEmpty)
+    }
   }
 
   test("filter context never changes scores") {

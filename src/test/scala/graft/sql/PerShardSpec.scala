@@ -1,6 +1,7 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -112,7 +113,6 @@ class PerShardSpec extends AnyFunSuite {
   test("a warm topKWand reports its postings reads as task input and SQL metrics") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
     withIndex { root =>
-      val meta = Indexer.readMeta(spark, root)
       val terms = SearchEngine.queryModel(spark, IndexPaths(root), q, 10).terms.toSeq
       SearchEngine.topKWand(spark, root, q, 10).collect() // warm
       val sc = spark.sparkContext
@@ -145,10 +145,8 @@ class PerShardSpec extends AnyFunSuite {
         assert(bytes > 0L, "the shard reads must report their input bytes")
 
         val exec = df.queryExecution.executedPlan.collectFirst { case p: PerShardExec => p }.get
-        val shards = spark.sessionState.conf.numShufflePartitions
-        val width = math.max(1L, (meta.doc_id_space + shards - 1) / shards)
         assert(exec.metrics("blocksRead").value ==
-          routed(root, terms, shards, width).map(_.length).sum)
+          routed(root, terms, exec.shards, exec.width).map(_.length).sum)
         assert(exec.metrics("filesRead").value > 0L)
       } finally sc.removeSparkListener(listener)
     }
@@ -265,13 +263,16 @@ class PerShardSpec extends AnyFunSuite {
         .as[Long].collect().toSeq,
       "intervals any_of" -> Intervals.filterDocs(spark, root, posSource, buckets)
         .as[Long].collect().toSeq)
-    // the operators shard by the session's shuffle partitions
-    def at[A](shards: Int)(body: => A): A = {
-      val key = "spark.sql.shuffle.partitions"
-      val before = spark.conf.get(key)
-      spark.conf.set(key, shards.toString)
-      try body finally spark.conf.set(key, before)
-    }
+    // without partition coalescing the operators plan the session's
+    // shuffle partitions as shards, whatever their postings bytes
+    def at[A](shards: Int)(body: => A): A =
+      TestSpark.withConf("spark.sql.shuffle.partitions" -> shards.toString,
+        TestSpark.NoCoalescing) {
+        val planned = PerShardSpec.shardsOf(
+          PositionalIndex.phraseMatch(spark, root, posPhrase, buckets))
+        assert(planned == Seq(shards), s"planned $planned shards, not $shards")
+        body
+      }
     val one = at(1)(results())
     one.foreach { case (name, rows) => assert(rows.nonEmpty, s"$name matches nothing") }
     for (shards <- Seq(3, 7)) {
@@ -287,7 +288,11 @@ class PerShardSpec extends AnyFunSuite {
   }
 }
 
-object PerShardSpec {
+object PerShardSpec extends AdaptiveSparkPlanHelper {
+  /** The shard count of each docID-shard operator `df` plans. */
+  def shardsOf(df: DataFrame): Seq[Int] =
+    collect(df.queryExecution.executedPlan) { case p: PerShardExec => p.shards }
+
   // a block's fields, its payloads by content hash (keeps failures readable)
   def key(b: PostingBlock): String = {
     import java.util.Arrays.{hashCode => h}
