@@ -126,30 +126,21 @@ object Indexer {
   }
 
   // per-JVM memo keyed by (resolved path, fingerprint) — published meta
-  // generations are immutable (Catalog's artifact-memo contract); before
-  // this every indexed query paid a one-row parquet job for the meta read
+  // generations are immutable (Catalog's artifact-memo contract)
   private[graft] val metaMemo = new graft.io.GenerationMemo[IndexMeta]
 
+  /** The index's meta, read on the driver once per published generation
+    * (`Catalog.readOne`: no Spark job; a meta other than one record fails,
+    * naming its path). A meta written before a column existed reads that
+    * column's [[IndexMeta]] default: `last_batch_id` −1, `analyzer`
+    * "standard", `synonyms` false.
+    */
   def readMeta(spark: SparkSession, root: String): IndexMeta = {
     val paths = IndexPaths(root)
-    val p = paths.meta
-    metaMemo(paths.metaBase, (p, graft.io.Catalog.fingerprint(p)))(
-      readMetaUncached(spark, p))
-  }
-
-  private def readMetaUncached(spark: SparkSession, resolved: String): IndexMeta = {
-    import spark.implicits._
-    val df = spark.read.parquet(resolved)
-    // older meta parquet lacks later columns — default them (pre-r3:
-    // last_batch_id; pre-r5: analyzer)
-    var full = df
-    if (!full.columns.contains("last_batch_id"))
-      full = full.withColumn("last_batch_id", lit(-1L))
-    if (!full.columns.contains("analyzer"))
-      full = full.withColumn("analyzer", lit("standard"))
-    if (!full.columns.contains("synonyms"))
-      full = full.withColumn("synonyms", lit(false))
-    full.select($"buckets", $"target_run", $"doc_id_space", $"incremental",
-      $"last_batch_id", $"analyzer", $"synonyms").as[IndexMeta].head()
+    val d = IndexMeta(0, 0L, 0L)
+    Catalog.readOne(metaMemo, paths.metaBase, paths.meta, Seq("buckets", "target_run",
+        "doc_id_space", "incremental", "last_batch_id", "analyzer", "synonyms"))(
+      r => IndexMeta(r.int(0), r.long(1), r.long(2), r.boolean(3),
+        r.long(4, d.last_batch_id), r.string(5, d.analyzer), r.boolean(6, d.synonyms)))
   }
 }

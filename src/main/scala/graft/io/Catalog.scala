@@ -1,5 +1,8 @@
 package graft.io
 
+import scala.reflect.ClassTag
+
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
 import graft.core.PostingBlock
@@ -66,13 +69,16 @@ object Catalog {
       .parquet(paths.synonyms)
   }
 
-  def readSynonyms(spark: SparkSession, paths: IndexPaths): Map[String, String] = {
-    import spark.implicits._
-    if (!Fs.exists(paths.synonyms)) Map.empty
-    else spark.read.parquet(paths.synonyms)
-      .select($"token", $"canonical").as[(String, String)]
-      .collect().toMap
-  }
+  // per-JVM memo of the synonym map, keyed like the artifact memos below
+  private[graft] val synonymsMemo = new GenerationMemo[Map[String, String]]
+
+  /** The index-time synonym map (token → canonical); empty when the index
+    * has none. Read on the driver ([[records]]) once per (path, fingerprint).
+    */
+  def readSynonyms(spark: SparkSession, paths: IndexPaths): Map[String, String] =
+    memoized(synonymsMemo, paths.synonyms, paths.synonyms)(files =>
+      records(paths.synonyms, files, Seq("token", "canonical"))(
+        r => r.string(0) -> r.string(1)).toMap)
 
   /** S1's docID-partition/cell geometry: `kind` ∈ {part, cell}, ascending
     * start docIDs (part offsets carry the sentinel end entry last).
@@ -203,28 +209,67 @@ object Catalog {
 
   /** A postings directory — the resolved postings generation or the
     * positional index — and its data files as Spark's file index reads
-    * them: for the postings, what [[readPostings]]' relation scans. Spark
-    * skips every file under a directory whose name starts with `.`, or with
-    * `_` and holds no `=` (`_temporary` of an in-flight append), and every
-    * `._COPYING_` file.
+    * them ([[visible]]): for the postings, what [[readPostings]]' relation
+    * scans.
     */
   def postingsFiles(p: String): (String, Seq[PostingsFile]) = {
     val rootPrefix = new org.apache.hadoop.fs.Path(p).toUri.getPath + "/"
-    def hidden(name: String) =
-      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
-    val files = Fs.listDataFiles(p).flatMap { case (f, len, _) =>
-      val parts = f.stripPrefix(rootPrefix).split('/')
-      if (parts.exists(hidden) || f.endsWith("._COPYING_")) None
-      else {
-        val bucket = parts.init.collectFirst {
-          case d if d.startsWith("bucket=") => d.stripPrefix("bucket=").toInt
-        }
-        require(bucket.isDefined, s"postings file outside a bucket= directory: $f")
-        Some(PostingsFile(f, len, bucket.get))
+    val files = visible(p, Fs.listDataFiles(p)).map { case (f, len) =>
+      val bucket = f.stripPrefix(rootPrefix).split('/').init.collectFirst {
+        case d if d.startsWith("bucket=") => d.stripPrefix("bucket=").toInt
       }
+      require(bucket.isDefined, s"postings file outside a bucket= directory: $f")
+      PostingsFile(f, len, bucket.get)
     }
     (p, files)
   }
+
+  /** The (path, length) of the files of the [[Fs.listDataFiles]] `listing`
+    * of `p` that Spark's file index reads: it skips every file under a
+    * directory whose name starts with `.`, or with `_` and holds no `=`
+    * (`_temporary` of an in-flight write), and every `._COPYING_` file.
+    */
+  private def visible(p: String, listing: Seq[(String, Long, Long)]): Seq[(String, Long)] = {
+    val rootPrefix = new org.apache.hadoop.fs.Path(p).toUri.getPath + "/"
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    listing.collect {
+      case (f, len, _) if !f.stripPrefix(rootPrefix).split('/').exists(hidden) &&
+          !f.endsWith("._COPYING_") => (f, len)
+    }
+  }
+
+  /** The records of the small artifact `p` — from its [[Fs.listDataFiles]]
+    * `listing` — read on the driver ([[Records.read]]: no Spark job, no
+    * schema inference): each the value `make` builds of the `columns`' values,
+    * where a column a file lacks keeps its default.
+    */
+  private def records[R: ClassTag](p: String, listing: Seq[(String, Long, Long)],
+      columns: Seq[String])(make: Fields => R): Array[R] =
+    Records.read(visible(p, listing), columns, columns, FilterCompat.NOOP, Fs.conf())(
+      (_, r) => make(r))
+
+  /** `read` of the artifact generation `p`'s listing, memoized in `memo`
+    * under `base` by (p, fingerprint): one listing serves the key and the read.
+    */
+  private def memoized[V](memo: GenerationMemo[V], base: String, p: String)(
+      read: Seq[(String, Long, Long)] => V): V = {
+    val listing = Fs.listDataFiles(p)
+    memo(base, (p, fingerprintOf(p, listing)))(read(listing))
+  }
+
+  /** The one record of the single-record artifact generation `p` (meta,
+    * corpus stats), [[memoized]] under `base`; any other count fails,
+    * naming `p`.
+    */
+  private[graft] def readOne[V: ClassTag](memo: GenerationMemo[V], base: String,
+      p: String, columns: Seq[String])(make: Fields => V): V =
+    memoized(memo, base, p) { listing =>
+      val rows = records(p, listing, columns)(make)
+      if (rows.length != 1)
+        throw new IllegalStateException(s"$p holds ${rows.length} records, expected exactly 1")
+      rows(0)
+    }
 
   def writeDictionary(dict: Dataset[DictEntry], paths: IndexPaths): Unit =
     dict.write.mode(SaveMode.Overwrite).parquet(paths.dictionary)
@@ -233,16 +278,18 @@ object Catalog {
   // Published artifact generations are IMMUTABLE (the versioned-pointer
   // protocol above: a republish stages a new _vN and flips the pointer, it
   // never rewrites a resolved dir in place), so tiny per-query metadata
-  // reads — corpus stats (1 row), meta (1 row), and a byte-gated dictionary
-  // — memoize safely per JVM, keyed by (resolved path, file fingerprint):
-  // a republish resolves to a new path, an in-place rewrite (tests, crash
-  // debris) changes the fingerprint; either way the memo misses and
-  // re-reads. Before this, every indexed query paid one Spark job per
-  // artifact read — pure fixed overhead repeated ~70× per bench run
-  // (an ES node holds exactly this state — segment dictionaries and
-  // stats — resident per segment for the same reason). Query RESULTS are
-  // never cached: postings scans and scoring run from parquet per query.
-  // Each memo keeps the current and previous generation per artifact base.
+  // reads — corpus stats (1 row), meta (1 row), synonyms and a byte-gated
+  // dictionary — memoize safely per JVM, keyed by (resolved path, file
+  // fingerprint): a republish resolves to a new path, an in-place rewrite
+  // (tests, crash debris) changes the fingerprint; either way the memo
+  // misses and re-reads. A miss reads the artifact's files on the driver
+  // with parquet-hadoop ([[records]]), so the first query after a publish
+  // runs no Spark job for it; a Spark read cost two jobs per artifact (a
+  // schema inference, then the collect). An ES node likewise holds
+  // segment dictionaries and stats resident per segment, read once in its
+  // own process. Query RESULTS are never cached: postings scans and
+  // scoring run from parquet per query. Each memo keeps the current and
+  // previous generation per artifact base.
   private[graft] val statsMemo = new GenerationMemo[CorpusStats]
   private[graft] val dictMemo = new GenerationMemo[Dictionary]
 
@@ -265,15 +312,15 @@ object Catalog {
 
   /** The dictionary when the byte gate admits it, else None. */
   private def dictCached(spark: SparkSession, paths: IndexPaths): Option[Dictionary] = {
-    import spark.implicits._
     val p = paths.dictionary
     val gate = spark.conf.getOption("spark.graft.dict.cacheMaxBytes")
       .map(_.toLong).getOrElse(DefaultDictCacheMaxBytes)
-    // one listing serves the byte gate and the memo key
-    val files = Fs.listDataFiles(p)
-    if (files.map(_._2).sum > gate) None
-    else Some(dictMemo(paths.dictionaryBase, (p, fingerprintOf(p, files)))(
-      new Dictionary(spark.read.parquet(p).as[DictEntry].collect().toSeq)))
+    // one listing serves the byte gate, the memo key and the read
+    val listing = Fs.listDataFiles(p)
+    if (listing.map(_._2).sum > gate) None
+    else Some(dictMemo(paths.dictionaryBase, (p, fingerprintOf(p, listing)))(
+      new Dictionary(records(p, listing, Seq("term", "df", "cf", "max_tf_norm"))(
+        r => DictEntry(r.string(0), r.long(1), r.long(2), r.double(3))).toSeq)))
   }
 
   /** Document frequency of each of `terms` found in the dictionary. The
@@ -303,12 +350,11 @@ object Catalog {
   def writeCorpusStats(stats: Dataset[CorpusStats], paths: IndexPaths): Unit =
     stats.write.mode(SaveMode.Overwrite).parquet(paths.corpusStats)
 
-  def readCorpusStats(spark: SparkSession, paths: IndexPaths): CorpusStats = {
-    import spark.implicits._
-    val p = paths.corpusStats
-    statsMemo(paths.corpusStatsBase, (p, fingerprint(p)))(
-      spark.read.parquet(p).as[CorpusStats].head())
-  }
+  /** The corpus stats, read on the driver once per generation ([[readOne]]). */
+  def readCorpusStats(spark: SparkSession, paths: IndexPaths): CorpusStats =
+    readOne(statsMemo, paths.corpusStatsBase, paths.corpusStats,
+      Seq("n_docs", "total_tokens", "avgdl"))(
+      r => CorpusStats(r.long(0), r.long(1), r.double(2)))
 
   /** S1 output: the docID-numbered, range-sorted corpus. */
   def readNumbered(spark: SparkSession, paths: IndexPaths): Dataset[NumberedTurn] = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -87,10 +87,11 @@ object StreamingIngest {
     numbered.unpersist(blocking = false)
 
     // refresh merged dictionary (df/cf additive over segments; max_tf_norm
-    // from a payload-pruned metadata scan)
-    val mergedStats = spark.read.parquet(paths.termStats)
+    // from a payload-pruned metadata scan); both read with their known
+    // schemas, so neither runs a schema-inference job
+    val mergedStats = spark.read.schema(Encoders.product[TermStat].schema).parquet(paths.termStats)
       .groupBy($"term").agg(sum($"df").as("df"), sum($"cf").as("cf"))
-    val blockAgg = spark.read.parquet(paths.postings)
+    val blockAgg = Catalog.readPostings(spark, paths)
       .groupBy($"term").agg(max($"max_tf_norm").as("max_tf_norm"))
     Fs.publish(paths.dictionaryBase)(
       mergedStats.join(blockAgg, Seq("term"))
@@ -118,7 +119,7 @@ object StreamingIngest {
       checkpoint: String, buckets: Int = 8, targetRun: Long = 1 << 16,
       compactEvery: Int = 0): StreamingQuery = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[Turn].schema
+    val schema = Encoders.product[Turn].schema
     var batches = 0L
     spark.readStream
       .schema(schema)

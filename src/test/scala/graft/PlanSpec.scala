@@ -264,8 +264,6 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a warm plain topKWand runs as one Spark job, with no adaptive re-planning") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     val root = idx.paths.root
     def plain() = SearchEngine.topKWand(spark, root, Seq("join", "window"), 10)
     // must_not docIDs join the shard operator as one more scan child
@@ -273,34 +271,14 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       excludedDocs = SearchEngine.mustNotDocs(spark, root, Seq("vector")))
     for ((name, query) <- Seq("plain" -> plain _, "must_not" -> mustNot _)) {
       query().collect() // warm: metadata memos and the resolved postings relation
-      val group = s"plan-spec-${System.nanoTime()}"
-      val sentinel = s"$group-sentinel"
-      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-            .foreach(jobs.add)
-      }
-      sc.addSparkListener(listener)
-      try {
-        val df = query()
-        sc.setJobGroup(group, s"warm $name topKWand")
-        try df.collect() finally sc.clearJobGroup()
-        // the listener bus delivers in order: once a later job's start is
-        // seen, every job of the query has been counted
-        sc.setJobGroup(sentinel, "sentinel")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(jobs.contains(sentinel), "listener bus did not deliver the sentinel job")
-        val n = jobs.toArray.count(_ == group)
-        assert(n == 1, s"expected one Spark job per warm $name query, saw $n")
-        assert(!plan(df).contains("AdaptiveSparkPlan"),
-          s"no exchange may be left for adaptive execution to split ($name):\n${plan(df)}")
-        if (name == "plain")
-          assert(!plan(df).contains("ShardExchange") && !plan(df).contains("Scan parquet"),
-            s"shard tasks read the postings themselves: no scan, no exchange:\n${plan(df)}")
-      } finally sc.removeSparkListener(listener)
+      val df = query()
+      val n = TestSpark.jobCount(df.collect())
+      assert(n == 1, s"expected one Spark job per warm $name query, saw $n")
+      assert(!plan(df).contains("AdaptiveSparkPlan"),
+        s"no exchange may be left for adaptive execution to split ($name):\n${plan(df)}")
+      if (name == "plain")
+        assert(!plan(df).contains("ShardExchange") && !plan(df).contains("Scan parquet"),
+          s"shard tasks read the postings themselves: no scan, no exchange:\n${plan(df)}")
     }
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (UTC, small shuffle width). */
@@ -39,5 +40,33 @@ object TestSpark {
   def atEachShardCount(body: => Unit): Unit = {
     body
     withConf(NoCoalescing)(body)
+  }
+
+  /** The Spark jobs `body` runs, counted by a listener on the jobs of a
+    * fresh job group (jobs `body` starts on other threads are not counted).
+    */
+  def jobCount(body: => Unit): Int = {
+    val sc = session.sparkContext
+    val group = s"job-count-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      // the listener bus delivers in order: once a later job's start is
+      // seen, every job of `body` has been counted
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      require(jobs.contains(sentinel), "listener bus did not deliver the sentinel job")
+      jobs.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
   }
 }

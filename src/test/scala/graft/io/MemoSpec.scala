@@ -23,7 +23,7 @@ class MemoSpec extends AnyFunSuite {
   private def memoSizes: Seq[(String, String, Int)] =
     Seq("schema" -> Catalog.schemaMemo, "stats" -> Catalog.statsMemo,
       "dict" -> Catalog.dictMemo, "postings" -> Catalog.postingsMemo,
-      "meta" -> Indexer.metaMemo)
+      "meta" -> Indexer.metaMemo, "synonyms" -> Catalog.synonymsMemo)
       .flatMap { case (name, m) => m.sizes.map { case (b, n) => (name, b, n) } }
 
   test("readPostings reuses the resolved relation until a new generation is published") {
@@ -115,6 +115,25 @@ class MemoSpec extends AnyFunSuite {
           "dict" -> paths.dictionaryBase, "meta" -> paths.metaBase,
           "postings" -> paths.postingsBase))
         assert(mine.contains((name, base, 2)), s"$name memo of $base: $mine")
+    } finally Fs.delete(new java.io.File(root).getParent)
+  }
+
+  test("a warm topKWand on a synonym index runs one Spark job") {
+    import spark.implicits._
+    val root = s"/tmp/graft-memo-syn-${System.nanoTime()}/idx"
+    try {
+      val docs = Seq(graft.model.Doc(0L, "alpha gamma"), graft.model.Doc(1L, "beta gamma"),
+        graft.model.Doc(2L, "alpha beta delta"))
+      Indexer.buildFromDocs(docs.toDS(), root, buckets = 4, targetRun = 16,
+        synonyms = Map("beta" -> "alpha"))
+      def query() = hits(SearchEngine.topKWand(spark, root, Seq("beta"), 10))
+      val cold = query()
+      assert(cold.map(_._1).toSet == Set(0L, 1L, 2L), "beta canonicalizes to alpha")
+      var warm = Seq.empty[(Long, Double)]
+      val n = graft.TestSpark.jobCount { warm = query() }
+      assert(n == 1, s"a warm synonym-index query ran $n Spark jobs")
+      assert(warm == cold)
+      assert(Catalog.synonymsMemo.sizes(IndexPaths(root).synonyms) == 1)
     } finally Fs.delete(new java.io.File(root).getParent)
   }
 }
