@@ -21,7 +21,8 @@ import graft.io.Catalog.IndexPaths
   * docIDs) and re-encoded as ONE run of full 128-doc blocks, with
   * `max_tf_norm` recomputed against the CURRENT avgdl — so the compacted
   * segments' stored bounds are fresh again. One exchange (repartition by
-  * bucket), streaming O(block) memory per task, one file per bucket out.
+  * bucket) feeds the merge, streaming O(block) memory per task; the postings
+  * sink's own bucket exchange writes one file per bucket.
   *
   * Query results are unchanged (StreamingSpec asserts identity); only the
   * physical layout and bound tightness improve.
@@ -44,7 +45,6 @@ object Compaction {
     * postings blocks, not the dictionary.
     */
   def compact(spark: SparkSession, root: String): Unit = {
-    import spark.implicits._
     val paths = IndexPaths(root)
     if (!Fs.exists(paths.postings)) return
     val avgdl = Catalog.readCorpusStats(spark, paths).avgdl
@@ -55,12 +55,11 @@ object Compaction {
     // dictionary from the fresh block headers (df/cf exact: one run per term
     // now, each doc once per term; max_tf_norm freshly recomputed)
     Fs.publish(paths.dictionaryBase)(
-      Indexer.dictionaryOf(spark, paths.postings).write.mode(SaveMode.Overwrite).parquet(_))
+      Catalog.writeDictionary(Indexer.dictionaryOf(spark, paths.postings), _))
 
     // bounds are fresh against the current avgdl again: exact block-max
     // skipping is safe until the next append flips `incremental` back on
-    Fs.publish(paths.metaBase)(
-      Seq(meta.copy(incremental = false)).toDS().write.mode(SaveMode.Overwrite).parquet(_))
+    Fs.publish(paths.metaBase)(Indexer.writeMeta(spark, meta.copy(incremental = false), _))
   }
 
   /** The merge rewrite under [[compact]] and the broadcast purge
@@ -95,7 +94,7 @@ object Compaction {
   private[index] def publishPostings(paths: IndexPaths,
       blocks: Dataset[PostingBlock]): Unit =
     Fs.publish(paths.postingsBase) { staging =>
-      blocks.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(staging)
+      Catalog.writePostings(blocks, staging, SaveMode.Overwrite)
       Fs.listTopFiles(paths.postings, "_kw_")
         .foreach(m => Fs.copyDir(m, s"$staging/${new org.apache.hadoop.fs.Path(m).getName}"))
     }

@@ -160,7 +160,7 @@ object Deletes {
 
     // transition meta: robust bounds are self-consistent against any mix of
     // old/new postings and stats a concurrent reader can resolve mid-purge
-    publishMeta(spark, paths, meta.copy(incremental = true))
+    Fs.publish(paths.metaBase)(Indexer.writeMeta(spark, meta.copy(incremental = true), _))
 
     // merge pass: drop tombstoned docs, re-encode full blocks, bounds
     // against the LIVE avgdl. Broadcast path: Compaction's merge rewrite
@@ -201,16 +201,15 @@ object Deletes {
       }
     Compaction.publishPostings(paths, merged)
 
-    Fs.publish(paths.corpusStatsBase)(
-      Seq(graft.model.CorpusStats(nDocs, totalTokens, avgdl)).toDS()
-        .write.mode(SaveMode.Overwrite).parquet(_))
+    Fs.publish(paths.corpusStatsBase)(Catalog.writeCorpusStats(spark,
+      graft.model.CorpusStats(nDocs, totalTokens, avgdl), _))
 
     // dictionary over live postings only (terms whose docs all died vanish)
     Fs.publish(paths.dictionaryBase)(
-      Indexer.dictionaryOf(spark, paths.postings).write.mode(SaveMode.Overwrite).parquet(_))
+      Catalog.writeDictionary(Indexer.dictionaryOf(spark, paths.postings), _))
 
     // exact stored bounds are trustworthy again (fresh against live avgdl)
-    publishMeta(spark, paths, meta.copy(incremental = false))
+    Fs.publish(paths.metaBase)(Indexer.writeMeta(spark, meta.copy(incremental = false), _))
 
     // clear tombstones LAST (no-op against the new postings; still correct
     // against the old for in-flight readers)
@@ -218,11 +217,5 @@ object Deletes {
       spark.emptyDataset[Long].toDF("doc_id").write.mode(SaveMode.Overwrite).parquet(_))
     if (bcDel != null) bcDel.destroy()
     spark.sparkContext.setJobDescription(null)
-  }
-
-  private def publishMeta(spark: SparkSession, paths: IndexPaths, m: IndexMeta): Unit = {
-    import spark.implicits._
-    Fs.publish(paths.metaBase)(
-      Seq(m).toDS().write.mode(SaveMode.Overwrite).parquet(_))
   }
 }

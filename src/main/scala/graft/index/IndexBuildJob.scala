@@ -179,7 +179,7 @@ object IndexBuildJob {
       // (3 narrow columns) instead of re-running the assignment pipeline
       Catalog.writeDocidMap(DocIds.toDocidMap(Catalog.readNumbered(spark, paths)), paths)
       // corpus stats came from the assignment's own passes — no extra read
-      Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(paths.corpusStats)
+      Catalog.writeCorpusStats(spark, stats, paths.corpusStats)
       Catalog.writeGridBounds(spark, paths, offsets, Spimi.cellStarts(offsets, a.targetRun))
     }
 
@@ -225,8 +225,8 @@ object IndexBuildJob {
           .select($"doc_id", $"text")
           .repartition(parts, part)
           .sortWithinPartitions($"doc_id")
-        Catalog.writePostings(
-          Spimi.invert(rows, starts, stats.avgdl, a.buckets, a.analyzer), paths)
+        Catalog.writePostings(Spimi.invert(rows, starts, stats.avgdl, a.buckets, a.analyzer),
+          paths.postings, SaveMode.Overwrite)
       } else {
         // S1 wrote one file per exchange partition, each holding whole
         // `__part` groups sorted by docID, and cells never cross a part
@@ -244,7 +244,7 @@ object IndexBuildJob {
         spark.conf.set(key, (maxFile + 1L).toString)
         try Catalog.writePostings(
           Spimi.invert(spark.read.parquet(paths.corpusSorted), starts,
-            stats.avgdl, a.buckets, a.analyzer), paths)
+            stats.avgdl, a.buckets, a.analyzer), paths.postings, SaveMode.Overwrite)
         finally spark.conf.set(key, prev)
       }
     }
@@ -254,9 +254,9 @@ object IndexBuildJob {
     stage("finalize", s3Fp, paths.dictionary) {
       // a --resume rerun can see keyword `field:value` postings appended by
       // a previous run's kw stage — dictionaryOf keeps them out
-      Catalog.writeDictionary(Indexer.dictionaryOf(spark, paths.postings), paths)
-      Seq(IndexMeta(a.buckets, a.targetRun, docIdSpace, analyzer = a.analyzer))
-        .toDS().write.mode(SaveMode.Overwrite).parquet(paths.meta)
+      Catalog.writeDictionary(Indexer.dictionaryOf(spark, paths.postings), paths.dictionary)
+      Indexer.writeMeta(spark, IndexMeta(a.buckets, a.targetRun, docIdSpace,
+        analyzer = a.analyzer), paths.meta)
     }
 
     // ---- S4 (optional): segment compaction ----------------------------------

@@ -73,16 +73,16 @@ object Indexer {
     val grids = math.max(numPartitions * 2,
       math.min(1 << 20, (docIdSpace / math.max(1L, targetRun)).toInt + 1))
     val (rows, starts) = gridExchange(docs, grids, docIdSpace, numPartitions)
-    Catalog.writePostings(
-      Spimi.invert(rows, starts, stats.avgdl, buckets, analyzer, synonyms), paths)
+    Catalog.writePostings(Spimi.invert(rows, starts, stats.avgdl, buckets, analyzer, synonyms),
+      paths.postings, SaveMode.Overwrite)
 
     // the term-keyed merge (dictionary) + stats + meta
     if (synonyms.nonEmpty) Catalog.writeSynonyms(spark, paths, synonyms)
-    Catalog.writeDictionary(dictionaryOf(spark, paths.postings), paths)
-    Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(paths.corpusStats)
+    Catalog.writeDictionary(dictionaryOf(spark, paths.postings), paths.dictionary)
+    Catalog.writeCorpusStats(spark, stats, paths.corpusStats)
     val meta = IndexMeta(buckets, targetRun, docIdSpace, analyzer = analyzer,
       synonyms = synonyms.nonEmpty)
-    Seq(meta).toDS().write.mode(SaveMode.Overwrite).parquet(paths.meta)
+    writeMeta(spark, meta, paths.meta)
     BuildResult(paths, stats, meta)
   }
 
@@ -123,6 +123,12 @@ object Indexer {
         max($"max_tf_norm").as("max_tf_norm"))
       .select($"term", $"df", $"cf", $"max_tf_norm")
       .as[DictEntry]
+  }
+
+  /** Write `meta` as the one-record meta generation at `dir`. */
+  def writeMeta(spark: SparkSession, meta: IndexMeta, dir: String): Unit = {
+    import spark.implicits._
+    Seq(meta).toDS().write.mode(SaveMode.Overwrite).parquet(dir)
   }
 
   // per-JVM memo keyed by (resolved path, fingerprint) — published meta

@@ -70,9 +70,8 @@ object KeywordIndex {
     // (ADVICE r3). Copy cost is admin-time, like compaction/purge.
     Fs.publish(paths.postingsBase) { staging =>
       Fs.copyDir(paths.postings, staging)
-      Spimi.buildBlocks(salted, avgdl = 1.0, meta.buckets, parts)
-        .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
-        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(staging)
+      Catalog.writePostings(Spimi.buildBlocks(salted, avgdl = 1.0, meta.buckets, parts),
+        staging, SaveMode.Append)
       todo.foreach(f => Fs.touch(s"$staging/_kw_$f"))
     }
   }

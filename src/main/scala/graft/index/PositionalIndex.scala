@@ -73,14 +73,10 @@ object PositionalIndex {
   def build(docs: Dataset[Doc], root: String, buckets: Int, grids: Int,
       docIdSpace: Long, numPartitions: Int): Unit = {
     import docs.sparkSession.implicits._
-    Indexer.gridExchange(docs, grids, docIdSpace, numPartitions)._1
+    val blocks = Indexer.gridExchange(docs, grids, docIdSpace, numPartitions)._1
       .as[(Int, Long, String)]
       .mapPartitions(rows => new PosGridIterator(rows, buckets))
-      .repartition($"bucket")
-      .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(pathOf(root))
+    Catalog.writePostings(blocks, pathOf(root), SaveMode.Overwrite)
   }
 
   private final class PosBuf {

@@ -96,11 +96,8 @@ object Snapshots {
     // publish order mirrors Deletes.purge: force robust bounds while the
     // artifact set is mixed, restore payloads, then the snapshot meta last
     val curMeta = if (Fs.exists(paths.meta)) Some(Indexer.readMeta(spark, root)) else None
-    curMeta.foreach { m =>
-      Fs.publish(paths.metaBase)(
-        Seq(m.copy(incremental = true)).toDS()
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
-    }
+    curMeta.foreach(m =>
+      Fs.publish(paths.metaBase)(Indexer.writeMeta(spark, m.copy(incremental = true), _)))
     for (name <- Seq("postings", "dictionary", "corpus_stats", "deletes", "meta")) {
       if (manifest.contains(name))
         Fs.publish(basePath(paths, name))(Fs.copyDir(s"$snapDir/$name", _))

@@ -69,6 +69,11 @@ object SaltPlan {
   *    exchange of TF rows keyed by (term, salt), then the run encoder
   *    [[Blocks.encodeRuns]].
   *
+  * Both feed the one postings sink (Catalog.writePostings), whose bucket
+  * exchange of the compressed blocks is the one more exchange every write
+  * pays: it lands each bucket in one task, so a write adds one file per
+  * bucket.
+  *
   * Either way a term's runs cover disjoint ascending docID ranges — the
   * WAND/merge invariant — and heavy terms cross any later stage
   * pre-compressed.

@@ -39,11 +39,6 @@ object TermFreqs {
     }
   }
 
-  def fromTurns(turns: Dataset[NumberedTurn]): Dataset[TermFreqRow] = {
-    import turns.sparkSession.implicits._
-    fromDocs(turns.map(t => Doc(t.doc_id, t.text)))
-  }
-
   /** (doc_id, dl) for every doc — including empty ones (dl = 0), which must
     * still count toward N and avgdl to match the oracle's semantics.
     */

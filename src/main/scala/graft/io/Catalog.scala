@@ -5,7 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
-import graft.core.PostingBlock
+import graft.core.{PostingBlock, TermBlock}
 import graft.model._
 
 /** Table-format abstraction (SURVEY.md §2 rows 1, 13).
@@ -163,23 +163,31 @@ object Catalog {
 
   // ---- index segments ------------------------------------------------------
 
-  /** Postings sink: bucketed by `bucket` (→ query-time partition pruning on
-    * the query terms' buckets), rows sorted by (term, run_id, block_idx)
-    * within partitions so Parquet row-group min/max stats on `term` make the
-    * `term IN (…)` pushdown selective inside each bucket.
+  /** The one postings sink: every writer of scored postings or positional
+    * blocks lays its blocks out here, bucketed by `bucket` (→ query-time
+    * partition pruning on the query terms' buckets), rows sorted by (term,
+    * run_id, block_idx) within partitions so Parquet row-group min/max stats
+    * on `term` make the `term IN (…)` pushdown selective inside each bucket.
+    *
+    * Each bucket is co-located in one task first, so a write adds at most
+    * one file per bucket directory; without it every task writes a file
+    * into every bucket it holds (tasks × buckets small files, each a footer
+    * every later query opens). The exchange moves only compressed blocks.
+    *
+    * `mode` is Overwrite for a fresh generation — the batch builds
+    * (Indexer.buildFromDocs, IndexBuildJob S2), PositionalIndex.build and
+    * Compaction.publishPostings (compaction and both purge paths) — and
+    * Append for a delta segment: StreamingIngest's batch into the live
+    * postings and KeywordIndex's keyword rows into the staged copy.
     */
-  def writePostings(blocks: Dataset[PostingBlock], paths: IndexPaths): Unit = {
+  def writePostings[B <: TermBlock](blocks: Dataset[B], dir: String, mode: SaveMode): Unit = {
     import blocks.sparkSession.implicits._
     blocks
-      // co-locate each bucket in one task: without this every task writes a
-      // file into every bucket dir (tasks x buckets small files — write-side
-      // overhead that grows with parallelism); with it, exactly one file per
-      // bucket. The shuffle moves only compressed blocks.
       .repartition($"bucket")
       .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(mode)
       .partitionBy("bucket")
-      .parquet(paths.postings)
+      .parquet(dir)
   }
 
   // explicit read schema: skips per-query parquet footer schema inference
@@ -271,8 +279,9 @@ object Catalog {
       rows(0)
     }
 
-  def writeDictionary(dict: Dataset[DictEntry], paths: IndexPaths): Unit =
-    dict.write.mode(SaveMode.Overwrite).parquet(paths.dictionary)
+  /** Write `dict` as the dictionary generation at `dir`. */
+  def writeDictionary(dict: Dataset[DictEntry], dir: String): Unit =
+    dict.write.mode(SaveMode.Overwrite).parquet(dir)
 
   // ---- per-JVM artifact-metadata memos ------------------------------------
   // Published artifact generations are IMMUTABLE (the versioned-pointer
@@ -347,8 +356,11 @@ object Catalog {
     }
   }
 
-  def writeCorpusStats(stats: Dataset[CorpusStats], paths: IndexPaths): Unit =
-    stats.write.mode(SaveMode.Overwrite).parquet(paths.corpusStats)
+  /** Write `stats` as the one-record corpus stats generation at `dir`. */
+  def writeCorpusStats(spark: SparkSession, stats: CorpusStats, dir: String): Unit = {
+    import spark.implicits._
+    Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(dir)
+  }
 
   /** The corpus stats, read on the driver once per generation ([[readOne]]). */
   def readCorpusStats(spark: SparkSession, paths: IndexPaths): CorpusStats =

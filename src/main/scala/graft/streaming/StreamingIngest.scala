@@ -77,9 +77,7 @@ object StreamingIngest {
     val blocks = Spimi.buildBlocks(salted, avgdlNew, buckets, parts)
 
     // append the delta segment
-    blocks
-      .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(paths.postings)
+    Catalog.writePostings(blocks, paths.postings, SaveMode.Append)
     numbered.write.mode(SaveMode.Append).parquet(paths.corpusSorted)
     DocIds.toDocidMap(numbered).write.mode(SaveMode.Append).parquet(paths.docidMap)
     tstats.write.mode(SaveMode.Append).parquet(paths.termStats)
@@ -93,20 +91,17 @@ object StreamingIngest {
       .groupBy($"term").agg(sum($"df").as("df"), sum($"cf").as("cf"))
     val blockAgg = Catalog.readPostings(spark, paths)
       .groupBy($"term").agg(max($"max_tf_norm").as("max_tf_norm"))
-    Fs.publish(paths.dictionaryBase)(
+    Fs.publish(paths.dictionaryBase)(Catalog.writeDictionary(
       mergedStats.join(blockAgg, Seq("term"))
-        .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry]
-        .write.mode(SaveMode.Overwrite).parquet(_))
+        .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry], _))
 
     val stats = CorpusStats(nNew, totNew, avgdlNew)
-    Fs.publish(paths.corpusStatsBase)(
-      Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(_))
+    Fs.publish(paths.corpusStatsBase)(Catalog.writeCorpusStats(spark, stats, _))
     // meta LAST (readers read it first — same ordering invariant as
     // Compaction.compact) and carrying the batch idempotency cursor
-    Fs.publish(paths.metaBase)(
-      Seq(IndexMeta(buckets, targetRun, off + batchStats.n_docs,
-          incremental = true, last_batch_id = math.max(batchId, last0)))
-        .toDS().write.mode(SaveMode.Overwrite).parquet(_))
+    Fs.publish(paths.metaBase)(Indexer.writeMeta(spark,
+      IndexMeta(buckets, targetRun, off + batchStats.n_docs,
+        incremental = true, last_batch_id = math.max(batchId, last0)), _))
     stats
   }
 

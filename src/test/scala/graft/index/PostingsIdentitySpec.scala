@@ -15,6 +15,9 @@ import graft.streaming.StreamingIngest
   * binary payloads included — is hashed and compared with a recorded
   * digest. A refactor of the write side that changes no written row keeps
   * every digest; one that moves a single byte of a single block fails here.
+  * The file layout is pinned too: every write goes through the one postings
+  * sink, so each bucket directory holds at most one data file per write
+  * into the generation.
   */
 class PostingsIdentitySpec extends AnyFunSuite {
 
@@ -56,10 +59,19 @@ class PostingsIdentitySpec extends AnyFunSuite {
     (rows.length.toLong, md.digest().map(x => f"${x & 0xff}%02x").mkString)
   }
 
-  private def check(writer: String, path: String, want: (Long, String)): Unit = {
+  /** The rows at `path` hash to `want`, and no bucket directory holds more
+    * data files than the `writes` into that generation.
+    */
+  private def check(writer: String, path: String, want: (Long, String),
+      writes: Int = 1): Unit = {
     val got = digest(path)
     assert(got._1 > 0, s"$writer wrote no rows")
     assert(got == want, s"$writer postings moved: got $got, recorded $want")
+    val perBucket = Catalog.postingsFiles(path)._2.groupBy(_.bucket).map {
+      case (b, fs) => b -> fs.size
+    }
+    assert(perBucket.values.forall(_ <= writes),
+      s"$writer: files per bucket $perBucket, want at most $writes (one per write)")
   }
 
   private def build(out: String, compact: Boolean = false,
@@ -74,14 +86,16 @@ class PostingsIdentitySpec extends AnyFunSuite {
       "every keyword field rides one stage")
     for (f <- Seq("role", "tool"))
       assert(Fs.exists(s"${IndexPaths(s"$base/kw").postings}/_kw_$f"))
+    // the build's write, then the keyword rows appended to its copy
     check("IndexBuildJob", IndexPaths(s"$base/kw").postings,
-      (8272L, "ad017a0f7ebfd259c5a7d2899f6ae66d159cf41c0c169c54cbffb765aec73cc5"))
+      (8272L, "ad017a0f7ebfd259c5a7d2899f6ae66d159cf41c0c169c54cbffb765aec73cc5"), writes = 2)
   }
 
   test("IndexBuildJob --compact with two keyword fields") {
     build(s"$base/kwc", compact = true)
+    // the compaction's write, then the keyword rows appended to its copy
     check("IndexBuildJob --compact", IndexPaths(s"$base/kwc").postings,
-      (1359L, "f82c71a626b0900de934874e09c0001ec0c1a8d4c0a29d44aeeb4bb69c635085"))
+      (1359L, "f82c71a626b0900de934874e09c0001ec0c1a8d4c0a29d44aeeb4bb69c635085"), writes = 2)
   }
 
   test("legacy-geometry resume") {
@@ -131,7 +145,7 @@ class PostingsIdentitySpec extends AnyFunSuite {
     StreamingIngest.ingestBatch(all.filter($"conv_id" < "c000020"), root, 4, 128, 0L)
     StreamingIngest.ingestBatch(all.filter($"conv_id" >= "c000020"), root, 4, 128, 1L)
     check("StreamingIngest", IndexPaths(root).postings,
-      (2268L, "736e34c7ea1faeef89dcba5ac8b908de4b04428e6d8dfaa18c4773b85984110f"))
+      (2268L, "736e34c7ea1faeef89dcba5ac8b908de4b04428e6d8dfaa18c4773b85984110f"), writes = 2)
   }
 
   test("Deletes.purge: broadcast and join paths") {

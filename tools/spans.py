@@ -6,9 +6,11 @@ writes perfbench/out/spans-<workload>-<seed>.jsonl).
 
 One line per op: its id, kind and class, wall ms, pre-job ms (the driver
 time before its first Spark job) and job count; under it one line per Spark
-job: its start offset into the op, wall ms, and the tasks, input bytes and
-input records summed over the job's stages. A closing line per op kind
-gives the op count, wall ms in all and jobs per op.
+job: its start offset into the op, wall ms, and the tasks, input bytes,
+input records, shuffle-write bytes and output bytes summed over the job's
+stages (a write job's output bytes are what it wrote; its shuffle-write
+bytes what its exchanges moved). A closing line per op kind gives the op
+count, wall ms in all and jobs per op.
 """
 import argparse
 import collections
@@ -45,10 +47,13 @@ def main():
             op.get("pre_job_ms", 0.0), len(op_jobs)))
         for j in op_jobs:
             st = stages[j["id"]]
-            print("    %-10s +%8.1f ms  wall %7.1f ms  tasks %3d  input %9d B  %7d records" % (
-                j["id"], j["start_ms"] - op["start_ms"], j["end_ms"] - j["start_ms"],
-                sum(s.get("tasks", 0) for s in st), sum(s.get("input_bytes", 0) for s in st),
-                sum(s.get("input_records", 0) for s in st)))
+            def total(key):
+                return sum(s.get(key, 0) for s in st)
+            print("    %-10s +%8.1f ms  wall %7.1f ms  tasks %3d  input %9d B  %7d records"
+                  "  shuffle-write %9d B  output %9d B" % (
+                      j["id"], j["start_ms"] - op["start_ms"], j["end_ms"] - j["start_ms"],
+                      total("tasks"), total("input_bytes"), total("input_records"),
+                      total("shuffle_write_bytes"), total("output_bytes")))
         t = totals.setdefault(op.get("kind", ""), [0, 0.0, 0])
         t[0] += 1
         t[1] += wall
