@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions.{col, count, lit, size, sum}
 
-import graft.model.{CorpusStats, DocIdEntry, NumberedTurn, Turn}
+import graft.model.{CorpusStats, NumberedTurn, Turn}
 
 /** Dense stable docID assignment (SURVEY.md §2 row 4).
   *
@@ -256,10 +256,5 @@ object DocIds {
     val (df, stats) =
       denseIdsWithStats(turns.toDF(), Seq("conv_id", "turn_idx"), numPartitions, "text")
     (df.withColumnRenamed("rid", "doc_id").as[NumberedTurn], stats)
-  }
-
-  def toDocidMap(numbered: Dataset[NumberedTurn]): Dataset[DocIdEntry] = {
-    import numbered.sparkSession.implicits._
-    numbered.map(n => DocIdEntry(n.doc_id, n.conv_id, n.turn_idx))
   }
 }

@@ -29,7 +29,8 @@ import graft.model._
   *   S1 docid_assign  range-exchange on (conv_id, turn_idx) written STRAIGHT
   *                    to corpus_sorted (one parquet file per exchange
   *                    partition — whole ascending docID ranges per file),
-  *                    plus docid_map, corpus_stats, grid_bounds. Corpus
+  *                    plus corpus_stats, grid_bounds (the docid map is
+  *                    read from corpus_sorted itself). Corpus
   *                    stats (avgdl must precede encoding — block-max bounds
   *                    need it) ride the assignment's own histogram pass, so
   *                    no separate stats read exists.
@@ -175,9 +176,6 @@ object IndexBuildJob {
         .getOrElse("zstd")
       numbered.write.option("compression", corpusCodec)
         .mode(SaveMode.Overwrite).parquet(paths.corpusSorted)
-      // docid_map from the just-written corpus: a column-pruned parquet scan
-      // (3 narrow columns) instead of re-running the assignment pipeline
-      Catalog.writeDocidMap(DocIds.toDocidMap(Catalog.readNumbered(spark, paths)), paths)
       // corpus stats came from the assignment's own passes — no extra read
       Catalog.writeCorpusStats(spark, stats, paths.corpusStats)
       Catalog.writeGridBounds(spark, paths, offsets, Spimi.cellStarts(offsets, a.targetRun))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.io.Catalog
+import graft.core.PostingBlock
+import graft.io.{Catalog, Records}
 import graft.io.Catalog.IndexPaths
 import graft.model._
 
@@ -110,26 +111,45 @@ object Indexer {
     * (payloads pruned at the scan). Keyword-field postings (KeywordIndex
     * `field:value` terms — ':' never appears in an analyzed token) stay
     * out: they carry no idf and the dictionary doubles as the text-term
-    * stats table. The one derivation under every build, compaction and
-    * purge.
+    * stats table. The full derivation under every build, compaction and
+    * purge; a streaming batch adds to the published one ([[dictionaryPlus]]).
     */
-  private[index] def dictionaryOf(spark: SparkSession,
-      postings: String): Dataset[DictEntry] = {
-    import spark.implicits._
-    spark.read.parquet(postings)
-      .filter(!$"term".contains(":"))
+  private[graft] def dictionaryOf(spark: SparkSession,
+      postings: String): Dataset[DictEntry] =
+    merged(headers(spark.read.parquet(postings)))
+
+  /** `prev` ⊕ the dictionary of `blocks`: per term the df and cf added and
+    * the max of max_tf_norm taken, in one aggregation over `prev`'s rows and
+    * the blocks' headers. Blocks, once written, never change, so when `prev`
+    * is the dictionary of the postings `blocks` are appended to, this is
+    * row for row [[dictionaryOf]] of the postings after the append — at the
+    * cost of the dictionary and the new blocks, not of every block.
+    */
+  private[graft] def dictionaryPlus(prev: Option[Dataset[DictEntry]],
+      blocks: Dataset[PostingBlock]): Dataset[DictEntry] = {
+    val rows = headers(blocks.toDF())
+    merged(prev.fold(rows)(_.toDF().unionByName(rows)))
+  }
+
+  // a block's contribution to its term's dictionary row
+  private def headers(blocks: DataFrame): DataFrame =
+    blocks.select(col("term"), col("n_docs").cast("long").as("df"),
+      col("sum_tf").cast("long").as("cf"), col("max_tf_norm"))
+
+  // dictionary rows of the (term, df, cf, max_tf_norm) rows, keyword terms out
+  private def merged(rows: DataFrame): Dataset[DictEntry] = {
+    import rows.sparkSession.implicits._
+    rows.filter(!$"term".contains(":"))
       .groupBy($"term")
-      .agg(sum($"n_docs").as("df"), sum($"sum_tf").as("cf"),
-        max($"max_tf_norm").as("max_tf_norm"))
-      .select($"term", $"df", $"cf", $"max_tf_norm")
+      .agg(sum($"df").as("df"), sum($"cf").as("cf"), max($"max_tf_norm").as("max_tf_norm"))
       .as[DictEntry]
   }
 
-  /** Write `meta` as the one-record meta generation at `dir`. */
-  def writeMeta(spark: SparkSession, meta: IndexMeta, dir: String): Unit = {
-    import spark.implicits._
-    Seq(meta).toDS().write.mode(SaveMode.Overwrite).parquet(dir)
-  }
+  /** Write `meta` as the one-record meta generation at `dir`, on the driver
+    * (`Records.write`: no Spark job).
+    */
+  def writeMeta(spark: SparkSession, meta: IndexMeta, dir: String): Unit =
+    Records.write(dir, Seq(meta), spark.sparkContext.hadoopConfiguration)
 
   // per-JVM memo keyed by (resolved path, fingerprint) — published meta
   // generations are immutable (Catalog's artifact-memo contract)

@@ -18,9 +18,9 @@ import graft.model.TermFreqRow
   *     synthetic terms collide with nothing;
   *   - corpus stats / doc lengths are untouched (no avgdl or N drift);
   *   - the dictionary is untouched (filters need no idf — query-time
-  *     filter cursors carry idf 0), so `term_stats` stays a pure text-term
-  *     table; Compaction's dictionary rebuild excludes ':' terms for the
-  *     same reason;
+  *     filter cursors carry idf 0), so it stays a pure text-term table;
+  *     every dictionary derivation (`Indexer.dictionaryOf`,
+  *     `Indexer.dictionaryPlus`) excludes ':' terms for the same reason;
   *   - stored block bounds of synthetic terms are irrelevant (UB = idf·…
   *     = 0).
   *

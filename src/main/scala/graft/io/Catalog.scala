@@ -3,7 +3,7 @@ package graft.io
 import scala.reflect.ClassTag
 
 import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 
 import graft.core.{PostingBlock, TermBlock}
 import graft.model._
@@ -41,12 +41,10 @@ object Catalog {
     def meta: String = Fs.resolveVersioned(metaBase)
     def deletesBase: String = s"$root/deletes"
     def deletes: String = Fs.resolveVersioned(deletesBase)
-    def docidMap: String = s"$root/docid_map"
     def manifests: String = s"$root/manifests"
     def metrics: String = s"$root/metrics"
     def termFreqs: String = s"$root/term_freqs" // materialized S2 intermediate
     def docLengths: String = s"$root/doc_lengths"
-    def termStats: String = s"$root/term_stats"
     def corpusSorted: String = s"$root/corpus_sorted" // S1 output (numbered turns)
     // part offsets + SPIMI cell starts of the build's docID assignment —
     // the resume path re-derives identical cells (hence identical blocks)
@@ -157,7 +155,7 @@ object Catalog {
   /** JSONL transcript ingest with an explicit (never inferred) schema. */
   def readTurnsJsonl(spark: SparkSession, path: String): Dataset[Turn] = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[Turn].schema
+    val schema = Encoders.product[Turn].schema
     spark.read.schema(schema).json(path).as[Turn]
   }
 
@@ -173,6 +171,10 @@ object Catalog {
     * one file per bucket directory; without it every task writes a file
     * into every bucket it holds (tasks × buckets small files, each a footer
     * every later query opens). The exchange moves only compressed blocks.
+    * Its partition count is the session's shuffle partitions, given
+    * explicitly: adaptive execution then keeps the buckets spread over that
+    * many write tasks instead of coalescing a small write (a streaming
+    * batch's ~0.5 MB) into one task that writes every bucket file in turn.
     *
     * `mode` is Overwrite for a fresh generation — the batch builds
     * (Indexer.buildFromDocs, IndexBuildJob S2), PositionalIndex.build and
@@ -183,7 +185,7 @@ object Catalog {
   def writePostings[B <: TermBlock](blocks: Dataset[B], dir: String, mode: SaveMode): Unit = {
     import blocks.sparkSession.implicits._
     blocks
-      .repartition($"bucket")
+      .repartition(blocks.sparkSession.sessionState.conf.numShufflePartitions, $"bucket")
       .sortWithinPartitions($"bucket", $"term", $"run_id", $"block_idx")
       .write.mode(mode)
       .partitionBy("bucket")
@@ -195,7 +197,7 @@ object Catalog {
   // query before this); the written files come from the same encoder, and
   // `bucket` resolves as the partition directory column as before
   private lazy val postingsSchema =
-    org.apache.spark.sql.Encoders.product[PostingBlock].schema
+    Encoders.product[PostingBlock].schema
 
   // per-JVM memo of the resolved postings relation, keyed by (session,
   // resolved path, fingerprint): resolving it lists the bucket directories
@@ -356,11 +358,11 @@ object Catalog {
     }
   }
 
-  /** Write `stats` as the one-record corpus stats generation at `dir`. */
-  def writeCorpusStats(spark: SparkSession, stats: CorpusStats, dir: String): Unit = {
-    import spark.implicits._
-    Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(dir)
-  }
+  /** Write `stats` as the one-record corpus stats generation at `dir`, on
+    * the driver ([[Records.write]]: no Spark job).
+    */
+  def writeCorpusStats(spark: SparkSession, stats: CorpusStats, dir: String): Unit =
+    Records.write(dir, Seq(stats), spark.sparkContext.hadoopConfiguration)
 
   /** The corpus stats, read on the driver once per generation ([[readOne]]). */
   def readCorpusStats(spark: SparkSession, paths: IndexPaths): CorpusStats =
@@ -374,12 +376,14 @@ object Catalog {
     spark.read.parquet(paths.corpusSorted).as[NumberedTurn]
   }
 
-  def writeDocidMap(m: Dataset[DocIdEntry], paths: IndexPaths): Unit =
-    m.write.mode(SaveMode.Overwrite).parquet(paths.docidMap)
-
+  /** The doc_id → (conv_id, turn_idx) map: three columns of the numbered
+    * corpus, which every transcript build and ingest writes, read with
+    * their known schema (no schema-inference job).
+    */
   def readDocidMap(spark: SparkSession, paths: IndexPaths): Dataset[DocIdEntry] = {
     import spark.implicits._
-    spark.read.parquet(paths.docidMap).as[DocIdEntry]
+    spark.read.schema(Encoders.product[DocIdEntry].schema)
+      .parquet(paths.corpusSorted).as[DocIdEntry]
   }
 
   /** Snapshot fingerprint of an input directory — Iceberg snapshot-id stand-in:

@@ -2,15 +2,22 @@ package graft.io
 
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetReader}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetInputFormat, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordConsumer, RecordMaterializer}
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** One record's values by their column's index in the read's layout. A
   * column the read skips, a file does not hold or a record holds null for
@@ -32,11 +39,14 @@ final class Fields private[io] (n: Int) {
     if (set(i)) binaries(i).toStringUsingUTF8 else default
 }
 
-/** The one parquet record reader: flat records of parquet files read with
+/** The one parquet record reader, and the writer of the one-record catalog
+  * artifacts: flat records of parquet files read or written with
   * parquet-hadoop in the calling thread — no Spark job, no schema
   * inference. A shard task reads its postings blocks with it
   * ([[PostingsScan]]), the driver the small catalog artifacts (meta, corpus
-  * stats, a byte-gated dictionary, synonyms: `Catalog.readOne` and its kin).
+  * stats, a byte-gated dictionary, synonyms: `Catalog.readOne` and its kin)
+  * and writes meta and corpus stats (`Indexer.writeMeta`,
+  * `Catalog.writeCorpusStats`).
   */
 object Records {
 
@@ -67,6 +77,68 @@ object Records {
       } finally reader.close()
     }
     out.result()
+  }
+
+  /** Write `rows` as the one data file of the directory `dir`, replacing
+    * what `dir` held, in the layout Spark's parquet writer gives `T`: its
+    * encoder's schema (primitive fields `required`, strings `optional`),
+    * snappy pages, Spark's row metadata in the footer and a `_SUCCESS`
+    * marker — so Spark and [[read]] read the file as they read one Spark
+    * wrote. Fields may be Int, Long, Double, Boolean or String.
+    */
+  def write[T <: Product: TypeTag](dir: String, rows: Seq[T], conf: Configuration): Unit = {
+    val schema = Encoders.product[T].schema
+    val out = new Path(dir)
+    val fs = out.getFileSystem(conf)
+    fs.delete(out, true)
+    val file = new Path(out, s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
+    val writer = new ProductWriterBuilder(HadoopOutputFile.fromPath(file, conf),
+      new ProductWriteSupport(schema))
+      .withConf(conf).withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach(writer.write) finally writer.close()
+    fs.create(new Path(out, "_SUCCESS"), true).close()
+  }
+
+  private final class ProductWriterBuilder(file: OutputFile,
+      support: WriteSupport[Product]) extends ParquetWriter.Builder[Product, ProductWriterBuilder](file) {
+    override protected def self(): ProductWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[Product] = support
+  }
+
+  /** A product's fields in `schema`'s order as one parquet record; a null
+    * field is left out of the record.
+    */
+  private final class ProductWriteSupport(schema: StructType) extends WriteSupport[Product] {
+    private val names = schema.fieldNames
+    private var consumer: RecordConsumer = _
+
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(new SparkToParquetSchemaConverter(SQLConf.get).convert(schema),
+        Map("org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT,
+          ParquetReadSupport.SPARK_METADATA_KEY -> schema.json).asJava)
+
+    override def prepareForWrite(c: RecordConsumer): Unit = consumer = c
+
+    override def write(row: Product): Unit = {
+      consumer.startMessage()
+      row.productIterator.zipWithIndex.foreach {
+        case (null, _) =>
+        case (v, i) =>
+          consumer.startField(names(i), i)
+          v match {
+            case x: Int => consumer.addInteger(x)
+            case x: Long => consumer.addLong(x)
+            case x: Double => consumer.addDouble(x)
+            case x: Boolean => consumer.addBoolean(x)
+            case x: String => consumer.addBinary(Binary.fromString(x))
+            case x => throw new IllegalArgumentException(
+              s"unsupported field ${names(i)}: ${x.getClass.getName}")
+          }
+          consumer.endField(names(i), i)
+      }
+      consumer.endMessage()
+    }
   }
 
   private final class FieldsReadSupport[R](layout: Seq[String], columns: Seq[String],

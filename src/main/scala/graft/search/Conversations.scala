@@ -25,9 +25,11 @@ import graft.model.Hit
   *     it runs on the exhaustive scorer (the aggregation-class cost, as
   *     ES pays when scoring all children).
   *
-  * The turn→conversation mapping is the index's own docid_map (written by
-  * every transcript build) — a broadcast-joinable (doc_id → conv_id)
-  * table; hits are ≤ w rows, so the join build side is tiny.
+  * The turn→conversation mapping is the index's own docid map (the
+  * doc_id, conv_id, turn_idx columns of the numbered corpus every
+  * transcript build and ingest writes) — a broadcast-joinable
+  * (doc_id → conv_id) table; hits are ≤ w rows, so the join build side is
+  * tiny.
   */
 object Conversations {
 
@@ -38,7 +40,7 @@ object Conversations {
       .select($"doc_id", $"conv_id")
     var w = math.max(k * 4, 64)
     while (true) {
-      // ≤ w hit rows broadcast against the docid_map — the map is never
+      // ≤ w hit rows broadcast against the docid map — the map is never
       // collected; the per-round driver state is the w fused rows
       val turns = broadcast(SearchEngine.topKWand(spark, root, rawTerms, w))
         .join(map, "doc_id")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** ES join-field queries (`has_child`, `has_parent`, `inner_hits`) over a
   * generic (doc_id → parent) mapping — the generalization of
-  * [[Conversations]] (whose mapping is the index's own docid_map) to any
+  * [[Conversations]] (whose mapping is the index's own docid map) to any
   * parent key: a metadata column, a derived group, an application join
   * field.
   *

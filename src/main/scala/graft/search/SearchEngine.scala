@@ -690,16 +690,10 @@ object SearchEngine {
     spark.emptyDataset[Hit].toDF()
   }
 
-  /** Hydration: join top-k hits back to the corpus (broadcast — k rows).
-    * Uses the numbered corpus (role/text/tool) when the index was built by
-    * IndexBuildJob; falls back to the bare docid map.
+  /** Hydration: join top-k hits back to the numbered corpus (conv_id,
+    * turn_idx, role, text, tool, ts) of a transcript index (IndexBuildJob,
+    * StreamingIngest); broadcast — k rows.
     */
-  def hydrate(spark: SparkSession, root: String, hits: DataFrame): DataFrame = {
-    val paths = IndexPaths(root)
-    val m =
-      if (graft.io.Fs.exists(paths.corpusSorted))
-        Catalog.readNumbered(spark, paths).toDF()
-      else Catalog.readDocidMap(spark, paths).toDF()
-    broadcast(hits).join(m, "doc_id")
-  }
+  def hydrate(spark: SparkSession, root: String, hits: DataFrame): DataFrame =
+    broadcast(hits).join(Catalog.readNumbered(spark, IndexPaths(root)).toDF(), "doc_id")
 }

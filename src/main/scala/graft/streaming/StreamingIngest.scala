@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.storage.StorageLevel
 
 import graft.index._
 import graft.io.{Catalog, Fs}
@@ -29,7 +29,17 @@ import graft.model._
 object StreamingIngest {
 
   /** Ingest one micro-batch: assign continued docIDs, build a delta segment,
-    * refresh stats/dictionary/meta. Returns the new corpus stats.
+    * refresh dictionary/stats/meta. Returns the new corpus stats.
+    *
+    * A batch reads and writes what it adds, not the index it grows. Its
+    * blocks are cached, appended to the postings through the one sink
+    * (`Catalog.writePostings`), and aggregated once more for the new
+    * dictionary: the published dictionary ⊕ the batch's blocks — df and cf
+    * added, max_tf_norm maxed (`Indexer.dictionaryPlus`). Older blocks never
+    * change, so this is row for row `Indexer.dictionaryOf` over the grown
+    * postings, which builds, compaction and purge still derive in full; no
+    * older block, corpus row or per-batch term table is read. Corpus stats
+    * and meta are one record each, written on the driver.
     *
     * `batchId` ≥ 0 makes the append idempotent under streaming replay: the
     * id is committed inside the SAME atomic meta swap as the segment, so a
@@ -37,10 +47,10 @@ object StreamingIngest {
     * the streaming checkpoint commit is detected (meta.last_batch_id ≥
     * batchId) and skipped instead of double-appended under fresh docIDs.
     * (A crash BEFORE the meta swap replays a partially-appended segment's
-    * postings files — Overwrite-staged swaps cover dictionary/stats/meta,
-    * and the postings append itself is the remaining non-transactional
-    * window, disclosed; an Iceberg sink closes it with a real snapshot
-    * commit.)
+    * postings and corpus files — Overwrite-staged swaps cover dictionary/
+    * stats/meta, and the appends themselves are the remaining
+    * non-transactional window, disclosed and unchanged by the incremental
+    * dictionary; an Iceberg sink closes it with a real snapshot commit.)
     */
   def ingestBatch(batch: Dataset[Turn], root: String, buckets: Int,
       targetRun: Long, batchId: Long = -1L): CorpusStats = {
@@ -62,38 +72,33 @@ object StreamingIngest {
     val (assigned, batchStats) = DocIds.assignWithStats(batch, parts)
     val numbered = assigned
       .map(t => NumberedTurn(t.doc_id + off, t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     val docs = numbered.map(t => Doc(t.doc_id, t.text))
     val nNew = n0 + batchStats.n_docs
     val totNew = tot0 + batchStats.total_tokens
     val avgdlNew = if (nNew == 0) 0.0 else totNew.toDouble / nNew
 
-    val tf = TermFreqs.fromDocs(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = TermFreqs.fromDocs(docs).persist(StorageLevel.MEMORY_AND_DISK)
     val tstats = TermFreqs.termStats(tf)
     val heavy = SaltPlan.heavyTerms(tstats, targetRun)
     // batch-local salt range: the segment's doc_ids live in [off, off+n)
     val salted = SaltPlan.saltRange(tf, heavy, off, off + batchStats.n_docs)
+    // cached: the postings write and the dictionary step both read them
     val blocks = Spimi.buildBlocks(salted, avgdlNew, buckets, parts)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // append the delta segment
     Catalog.writePostings(blocks, paths.postings, SaveMode.Append)
     numbered.write.mode(SaveMode.Append).parquet(paths.corpusSorted)
-    DocIds.toDocidMap(numbered).write.mode(SaveMode.Append).parquet(paths.docidMap)
-    tstats.write.mode(SaveMode.Append).parquet(paths.termStats)
     tf.unpersist(blocking = false)
     numbered.unpersist(blocking = false)
 
-    // refresh merged dictionary (df/cf additive over segments; max_tf_norm
-    // from a payload-pruned metadata scan); both read with their known
-    // schemas, so neither runs a schema-inference job
-    val mergedStats = spark.read.schema(Encoders.product[TermStat].schema).parquet(paths.termStats)
-      .groupBy($"term").agg(sum($"df").as("df"), sum($"cf").as("cf"))
-    val blockAgg = Catalog.readPostings(spark, paths)
-      .groupBy($"term").agg(max($"max_tf_norm").as("max_tf_norm"))
-    Fs.publish(paths.dictionaryBase)(Catalog.writeDictionary(
-      mergedStats.join(blockAgg, Seq("term"))
-        .select($"term", $"df", $"cf", $"max_tf_norm").as[DictEntry], _))
+    // the new dictionary: the published one ⊕ this segment's blocks
+    val prev = if (exists) Some(Catalog.readDictionary(spark, paths)) else None
+    Fs.publish(paths.dictionaryBase)(
+      Catalog.writeDictionary(Indexer.dictionaryPlus(prev, blocks), _))
+    blocks.unpersist(blocking = false)
 
     val stats = CorpusStats(nNew, totNew, avgdlNew)
     Fs.publish(paths.corpusStatsBase)(Catalog.writeCorpusStats(spark, stats, _))
